@@ -303,12 +303,7 @@ def q_kg_neighborhood(spark, sf_dir):
 def q_kg_k_hop(spark, sf_dir):
     """k-hop BFS distances from a start entity (iterative frontier
     joins; oracle = recursive-CTE shortest undirected hop in DuckDB)."""
-    return A.k_hop(
-        KG.kg_edges(spark, sf_dir),
-        "customer:1",
-        k=2,
-        pairs=KG.kg_pairs(spark, sf_dir),
-    )
+    return A.k_hop(KG.kg_pairs(spark, sf_dir), "customer:1", k=2)
 
 
 def q_kg_pagerank(spark, sf_dir):
@@ -318,7 +313,6 @@ def q_kg_pagerank(spark, sf_dir):
     via DuckDB, no Spark), materialized as expected-result parquet."""
     from kgw_spark.operators import pagerank as PR
 
-    edges = KG.kg_edges(spark, sf_dir)
     tag = _sf_tag(sf_dir)
     if tag in _ORACLED_SFS:
         import duckdb
@@ -339,7 +333,7 @@ def q_kg_pagerank(spark, sf_dir):
             pd.DataFrame(top, columns=["id", "rank_scaled"]),
         )
     return (
-        PR.pagerank(KG.kg_edges2(spark, sf_dir), iters=3, pre_materialized=True)
+        PR.pagerank(KG.kg_edges2(spark, sf_dir), iters=3)
         .orderBy(F.desc("rank_scaled"), F.asc("id"))
         .limit(20)
     )
@@ -355,9 +349,8 @@ def q_kg_label_prop(spark, sf_dir):
 
     labels = min_label_propagation(
         KG.kg_nodes(spark, sf_dir),
-        KG.kg_edges(spark, sf_dir),
+        KG.kg_pairs(spark, sf_dir),
         rounds=3,
-        pairs=KG.kg_pairs(spark, sf_dir),
         # TPC-H referential integrity: every edge endpoint is a tagged
         # entity present in kg_nodes (verified by the oracle replay,
         # which brute-forces the same label domain from nodes alone)
@@ -377,7 +370,6 @@ def q_kg_kcore(spark, sf_dir):
     (fetched via DuckDB, no Spark), cached as expected-result parquet."""
     from kgw_spark.operators import kcore as KC
 
-    edges = KG.kg_edges(spark, sf_dir)
     tag = _sf_tag(sf_dir)
     if tag in _ORACLED_SFS:
         import duckdb
@@ -396,7 +388,7 @@ def q_kg_kcore(spark, sf_dir):
             f"kg_kcore_{tag}",
             pd.DataFrame(sorted(expected.items()), columns=["id", "degree"]),
         )
-    return KC.k_core(edges, k=3, pairs=KG.kg_pairs(spark, sf_dir))
+    return KC.k_core(KG.kg_pairs(spark, sf_dir), k=3)
 
 
 def q_kg_triple_dedup(spark, sf_dir):
@@ -981,12 +973,7 @@ def q_kg_common_neighbors(spark, sf_dir):
     (count DESC, u, v) cut, so exactly oracle-able."""
     from kgw_spark.operators.linkpred import common_neighbors
 
-    return common_neighbors(
-        KG.kg_edges(spark, sf_dir),
-        deg_cap=32,
-        top=20,
-        pairs=KG.kg_pairs(spark, sf_dir),
-    )
+    return common_neighbors(KG.kg_pairs(spark, sf_dir), deg_cap=32, top=20)
 
 
 def q_kg_degree_histogram(spark, sf_dir):
@@ -1422,11 +1409,12 @@ def q_docs_similarity_triangles(spark, sf_dir):
     deterministic orientation + wedge-close over the exact all-pairs
     Jaccard graph in SQL (LSH recall 1.0 is certified by
     docs_minhash_lsh)."""
+    from kgw_spark.operators.pairs import canonical_pairs
     from kgw_spark.operators.triangles import triangle_count
 
     docs = _tp(spark, sf_dir, "documents")
     pairs = DD.minhash_lsh_pairs(docs, n=3, num_perm=64, bands=16, threshold=0.2)
-    return triangle_count(pairs)
+    return triangle_count(canonical_pairs(pairs, "a", "b"))
 
 
 def q_emb_cosine_topk(spark, sf_dir):

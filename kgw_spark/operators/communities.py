@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators.pairs import both_directions
+
 # same gate as pagerank: a (string id, string lbl) row is ~2x a rank
 # row, so halve the node budget
 _BCAST_MAX_NODES = 1_500_000
@@ -75,48 +77,27 @@ def _order_rank(ids_raw: DataFrame, parts: int) -> DataFrame:
 
 def min_label_propagation(
     nodes: DataFrame,
-    edges: DataFrame,
+    pairs: DataFrame,
     rounds: int = 3,
-    id_col: str = "id",
-    src_col: str = "source_id",
-    dst_col: str = "target_id",
-    dict_encode: bool | None = None,
-    pairs: DataFrame | None = None,
     endpoints_covered: bool = False,
 ) -> DataFrame:
     """Labels ``(id, label)`` after ``rounds`` synchronous min-label
     updates: ``label_0(v) = v``, ``label_i(v) = min(label_{i-1}(v),
-    min over undirected neighbors u of label_{i-1}(u))``. Direction,
-    multi-edges, and self-loops are collapsed (none can change a min);
-    isolated nodes keep their own id. ``dict_encode`` forces the
-    dictionary-encoded long path (True) or the direct string path
-    (False); default auto-selects by the broadcast gate. Both paths
-    return identical rows (equivalence-tested). ``pairs`` optionally
-    supplies the canonical ``u < v`` distinct pair list as a
-    MATERIALIZED frame (shared-derived-view contract, see
-    kcore.k_core). ``endpoints_covered=True`` asserts every edge
-    endpoint appears in ``nodes`` (referential integrity the caller
-    vouches for — true for any store-built KG, whose node table is
-    derived from the edge endpoints): the label domain is then
-    ``distinct(nodes)`` alone and the 2|E|-row endpoint-union distinct
-    is skipped. An endpoint missing from ``nodes`` under this flag
-    would silently receive no label, so only set it where the
-    invariant genuinely holds."""
+    min over undirected neighbors u of label_{i-1}(u))``, over the
+    node frame ``nodes`` (column ``id``) and the canonical pair list
+    ``pairs`` (``pairs.canonical_pairs``); isolated nodes keep their
+    own id. The dictionary-encoded path runs while the node set fits
+    ``_BCAST_MAX_NODES``, the string path past it; both return
+    identical rows (equivalence-tested). ``endpoints_covered=True``
+    asserts every edge endpoint appears in ``nodes`` (referential
+    integrity the caller vouches for — true for any store-built KG,
+    whose node table is derived from the edge endpoints): the label
+    domain is then ``distinct(nodes)`` alone and the 2|E|-row
+    endpoint-union distinct is skipped. An endpoint missing from
+    ``nodes`` under this flag would silently receive no label, so only
+    set it where the invariant genuinely holds."""
     if rounds < 1:
         raise ValueError(f"min_label_propagation needs rounds >= 1, got {rounds}")
-    if pairs is None:
-        s, d = F.col(src_col), F.col(dst_col)
-        # canonical u<v pair list, ONE distinct over |E| rows (half the
-        # rows of dedup-ing the both-directions list — same trade
-        # measured in linkpred.common_neighbors), materialized once:
-        # every round's join re-reads it, so multi-edge fan-in is paid
-        # once, not per round
-        pairs = (
-            edges.filter(s != d)
-            .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
     # label domain = nodes ∪ edge endpoints, every id starting with its
     # own label (the pure-Python replica's convention; endpoints absent
     # from the node frame would otherwise never carry a self-label and
@@ -126,29 +107,17 @@ def min_label_propagation(
     # range-shuffle (_order_rank dedups in place), materialized once:
     # the gate count, round-0 labels, and the decode all re-read it —
     # the string path simply ignores the rank column.
-    ids_raw = nodes.select(F.col(id_col).alias("id"))
+    ids_raw = nodes.select("id")
     if not endpoints_covered:
         ids_raw = ids_raw.union(pairs.select(F.col("u").alias("id"))).union(
             pairs.select(F.col("v").alias("id"))
         )
     parts = pairs.sparkSession.sparkContext.defaultParallelism
     rank = _order_rank(ids_raw, parts).localCheckpoint(eager=True)
-    n_nodes = rank.count()
-    use_dict = dict_encode if dict_encode is not None else (
-        n_nodes <= _BCAST_MAX_NODES
-    )
-    if use_dict:
+    if rank.count() <= _BCAST_MAX_NODES:
         return _dict_rounds(pairs, rank, rounds)
     labels = rank.select("id").withColumn("label", F.col("id"))
-    return _string_rounds(pairs, labels, rounds, bcast=n_nodes <= _BCAST_MAX_NODES)
-
-
-def _swap_union(pairs: DataFrame) -> DataFrame:
-    """Both-directions neighbor relation (x, y): the swap-union of a
-    distinct u<v list is dedup-free (disjoint branches), no shuffle."""
-    return pairs.select(F.col("u").alias("x"), F.col("v").alias("y")).union(
-        pairs.select(F.col("v").alias("x"), F.col("u").alias("y"))
-    )
+    return _rounds_loop(both_directions(pairs), labels, rounds, bcast=False)
 
 
 def _rounds_loop(und: DataFrame, labels: DataFrame, rounds: int, bcast: bool) -> DataFrame:
@@ -173,10 +142,6 @@ def _rounds_loop(und: DataFrame, labels: DataFrame, rounds: int, bcast: bool) ->
     return labels
 
 
-def _string_rounds(pairs: DataFrame, labels: DataFrame, rounds: int, bcast: bool) -> DataFrame:
-    return _rounds_loop(_swap_union(pairs), labels, rounds, bcast)
-
-
 def _dict_rounds(pairs: DataFrame, rank: DataFrame, rounds: int) -> DataFrame:
     """Dictionary-encoded rounds — r6 shape: only the LABEL payload is
     encoded to order-preserving longs; node keys stay strings. The
@@ -190,7 +155,7 @@ def _dict_rounds(pairs: DataFrame, rank: DataFrame, rounds: int) -> DataFrame:
     # label_0 = own rank, for EVERY ranked id (nodes ∪ endpoints) —
     # matches the string path's output domain exactly
     labels_i = rank.select("id", F.col("r").alias("label"))
-    out = _rounds_loop(_swap_union(pairs), labels_i, rounds, bcast=True)
+    out = _rounds_loop(both_directions(pairs), labels_i, rounds, bcast=True)
     dec_lb = rank.select(F.col("r").alias("label"), F.col("id").alias("_lb_s"))
     return out.join(F.broadcast(dec_lb), "label").select(
         "id", F.col("_lb_s").alias("label")

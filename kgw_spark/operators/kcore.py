@@ -17,7 +17,8 @@ pair list stays at ~1.33M rows, >99% untouched). The peel recurrence
 only needs the DELTA: when frontier L is removed, a surviving neighbor
 v loses one degree per (L, v) edge. So:
 
-- the canonical u<v pair list is materialized ONCE and never rewritten;
+- the canonical u<v pair list (``pairs.canonical_pairs``, materialized
+  by the caller) is never rewritten unless the removed-set gate overflows;
 - degrees are aggregated ONCE (map-side-combined groupBy; the shuffle
   carries <= |V| rows regardless of |E|), then maintained per round by
   joining the checkpointed pairs against the broadcast frontier (a
@@ -31,21 +32,19 @@ v loses one degree per (L, v) edge. So:
 - termination = an empty frontier (the frontier count rides the same
   <=|V|-row materialization that updates the degree vector).
 
-The r5 dictionary-encoded path is GONE: degree counting is
-count-by-key, which hash-aggregates fine on string keys (unlike
-label-prop's ``min(<string>)``, which is why communities.py still
-encodes) — A/B at sf0.1/32 lanes the encoded path lost on wall every
+Node ids stay strings: degree counting is count-by-key, which
+hash-aggregates fine on string keys (unlike label-prop's
+``min(<string>)``, which is why communities.py encodes) — A/B at
+sf0.1/32 lanes a dictionary-encoded variant lost on wall every
 interleaved trial (7.2-7.9 s vs 3.6-5.9 s warm) because its ~6 fixed
 encode/decode jobs cannot amortize over a 3-round peel.
-``dict_encode`` is retained as a parameter for API compatibility and
-ignored (both values produce the identical single path).
 
 Rounds are data-bounded (the peel depth, a.k.a. degeneracy diameter),
 not fixed: ``max_rounds`` is a runaway guard, and hitting it raises
 rather than returning a non-core.
 
-At 100 TB: the one pair-sized shuffle is the initial distinct; every
-round after that shuffles only frontier-incident decrements (<= frontier
+At 100 TB: the one pair-sized shuffle is the caller's distinct; every
+round shuffles only frontier-incident decrements (<= frontier
 degree sum) and re-materializes <=|V| degree rows. Skewed hubs cost one
 counted key, not a buffered group; gate overflows degrade to bounded
 anti-join rewrites, never an unbounded broadcast.
@@ -56,53 +55,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators.pairs import degrees
+
 # cumulative-removed-set broadcast gate: past this many peeled ids the
 # pair list is compacted (anti-join rewrite) and the set reset, so no
 # broadcast ever exceeds ~tens of MB of ids
 _BCAST_MAX_PEELED = 2_000_000
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src_col: str = "source_id",
-    dst_col: str = "target_id",
-    max_rounds: int = 100,
-    dict_encode: bool | None = None,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Nodes of the k-core of the undirected simple graph induced by
-    ``edges`` (direction, multi-edges, and self-loops collapsed), as
+def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
+    """Nodes of the k-core of the undirected simple graph given by the
+    canonical pair list ``pairs`` (``pairs.canonical_pairs``), as
     ``(id, degree)`` with ``degree`` counted WITHIN the core. Empty
-    result when no k-core exists. ``dict_encode`` is accepted for
-    compatibility and ignored (see module docstring). ``pairs``
-    optionally supplies the canonical ``u < v`` distinct pair list as a
-    MATERIALIZED (persisted/checkpointed) frame — callers running
-    several undirected analytics share one pair list instead of paying
-    the |E|-row distinct per operator; it must equal exactly what this
-    function derives from ``edges`` itself."""
+    result when no k-core exists."""
     if k < 1:
         raise ValueError(f"k_core needs k >= 1, got {k}")
-    del dict_encode  # single execution path since r6 (module docstring)
-    if pairs is None:
-        s, d = F.col(src_col), F.col(dst_col)
-        # canonical u<v pair list: ONE distinct over |E| rows,
-        # materialized once — never rewritten unless the gate overflows
-        pairs = (
-            edges.filter(s != d)
-            .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    # full degree aggregation, exactly once: map-side partial count
-    # bounds the shuffle at <=|V| rows regardless of |E|
-    deg = (
-        pairs.select(F.col("u").alias("id"))
-        .union(pairs.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=True)
-    )
+    deg = degrees(pairs).localCheckpoint(eager=True)
     removed: DataFrame | None = None  # cumulative peeled ids (broadcast side)
     n_removed = 0
     for _ in range(max_rounds):

@@ -21,49 +21,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators.pairs import both_directions, degrees
 
-def common_neighbors(
-    edges: DataFrame,
-    src_col: str = "source_id",
-    dst_col: str = "target_id",
-    deg_cap: int = 32,
-    top: int = 20,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
+
+def common_neighbors(pairs: DataFrame, deg_cap: int = 32, top: int = 20) -> DataFrame:
     """Top ``top`` non-adjacent pairs ``(u, v, n_common)`` (``u < v``)
     by count of shared neighbors of degree ≤ ``deg_cap``, over the
-    undirected simple graph induced by ``edges`` (direction, edge type,
-    multi-edges, and self-loops collapsed). ``pairs`` optionally
-    supplies the canonical ``u < v`` distinct pair list as a
-    MATERIALIZED frame (shared-derived-view contract, see
-    kcore.k_core)."""
+    undirected simple graph given by the canonical pair list ``pairs``
+    (``pairs.canonical_pairs``)."""
     if deg_cap < 1 or top < 1:
         raise ValueError(f"common_neighbors needs deg_cap/top >= 1, got {deg_cap}/{top}")
-    if pairs is None:
-        s, d = F.col(src_col), F.col(dst_col)
-        e = edges.filter(s != d)
-        # canonical (u<v) pair list: ONE distinct over |E| rows — half
-        # the rows of dedup-ing the both-directions list — materialized
-        # once and re-read by its three consumers (degree agg, wedge
-        # grouping, adjacency anti-join). A/B on the bench host: this
-        # beats both the 2|E|-row distinct-then-checkpoint and the
-        # no-checkpoint recompute at every paired trial (the earlier
-        # und-sized checkpoint lost because it materialized twice the
-        # rows to save the same work).
-        pairs = (
-            e.select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    # both-directions neighbor relation: the swap-union of a distinct
-    # u<v list is dedup-free (the two branches are disjoint), no shuffle
-    und = pairs.select(F.col("u").alias("x"), F.col("v").alias("y")).union(
-        pairs.select(F.col("v").alias("x"), F.col("u").alias("y"))
-    )
     # degree pre-filter BEFORE collect_list: a hub never reaches a
     # reducer's buffer, so per-group state is bounded by deg_cap
-    low = und.join(
-        und.groupBy("x").agg(F.count(F.lit(1)).alias("d")).filter(F.col("d") <= deg_cap),
+    low = both_directions(pairs).join(
+        degrees(pairs).filter(F.col("degree") <= deg_cap).select(F.col("id").alias("x")),
         "x",
     )
     # wedge pairs expanded per intermediate node with JVM higher-order
@@ -83,3 +54,26 @@ def common_neighbors(
     # canonical half-size list
     nonadj = cn.join(pairs, ["u", "v"], "left_anti")
     return nonadj.orderBy(F.desc("n_common"), "u", "v").limit(top)
+
+
+def common_neighbors_py(
+    edge_list: list[tuple[str, str]], deg_cap: int = 32, top: int = 20
+) -> list[tuple[str, str, int]]:
+    """Pure-Python brute-force replica of ``common_neighbors`` over a raw
+    edge list — the independent oracle (all-pairs wedge enumeration
+    through every intermediate of degree ≤ ``deg_cap``)."""
+    import itertools
+
+    adj: dict[str, set[str]] = {}
+    for u, v in edge_list:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    cn: dict[tuple[str, str], int] = {}
+    for ns in adj.values():
+        if len(ns) <= deg_cap:
+            for u, v in itertools.combinations(sorted(ns), 2):
+                cn[(u, v)] = cn.get((u, v), 0) + 1
+    rows = [(u, v, n) for (u, v), n in cn.items() if v not in adj[u]]
+    rows.sort(key=lambda r: (-r[2], r[0], r[1]))
+    return rows[:top]

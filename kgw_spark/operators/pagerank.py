@@ -26,8 +26,8 @@ Plan shape per iteration: one join edges⋈ranks on the source id, one
 groupBy target, one left join back to the node set; each iteration
 ``localCheckpoint``-ed. The out-degree rides inside the rank vector
 (8 bytes/node) instead of being pre-joined onto the edge list — the
-edge table is scanned as-checkpointed every iteration and never
-materializes a third copy (A/B at sf0.1/32 cores: median 3.3 s vs
+caller's materialized edge frame is scanned as-is every iteration and
+no second copy is materialized (A/B at sf0.1/32 cores: median 3.3 s vs
 4.4 s for the pre-joined-links plan, every interleaved trial
 disjoint).
 """
@@ -74,22 +74,14 @@ def pagerank(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 10**12,
-    pre_materialized: bool = False,
 ) -> DataFrame:
-    """Returns ``(id, rank_scaled)`` after ``iters`` exact iterations.
-    ``pre_materialized=True`` declares that ``edges`` is ALREADY a
-    materialized (persisted/checkpointed) 2-column
-    (source_id, target_id) frame — e.g. a session-shared derived view —
-    so the internal checkpoint is skipped; multi-edges must be intact
-    (out-degree and contributions count edge instances)."""
-    # materialize the 2-column edge projection ONCE: `edges` is usually
-    # an expensive derivation (the KG construction joins), and without
-    # this both the node set and the contribution joins would recompute
-    # it; it is the ONLY edge-sized materialization in the whole run
-    if not pre_materialized:
-        edges = edges.select("source_id", "target_id").localCheckpoint(eager=True)
-    else:
-        edges = edges.select("source_id", "target_id")
+    """Returns ``(id, rank_scaled)`` after ``iters`` exact iterations
+    over ``edges``, a caller-materialized directed ``(source_id,
+    target_id)`` frame with multi-edges intact (out-degree and
+    contributions count edge instances) — e.g. ``tpch_kg.kg_edges2``;
+    it is scanned every iteration and never materialized here (input
+    contract: ``pairs`` module docstring)."""
+    edges = edges.select("source_id", "target_id")
     nodes = _graph_parts(edges).localCheckpoint(eager=True)
     n_nodes = nodes.count()
     scale = effective_scale(n_nodes, scale, damping_num)

@@ -1,0 +1,63 @@
+"""The canonical undirected pair list — the one input of every
+undirected graph operator.
+
+Every KG is one fixed property-graph representation, and its undirected
+simple graph is one fixed derived relation: ``(u, v)`` with ``u < v``,
+self-loops dropped, direction and multi-edges collapsed.
+``canonical_pairs`` is the only place that derives it.
+
+Input contract: the caller materializes; the operator reads. The
+operators (``kcore.k_core``, ``communities.min_label_propagation``,
+``linkpred.common_neighbors``, ``triangles.triangle_count``,
+``analytics.k_hop``) take the output of ``canonical_pairs`` — or a
+session view built by it, such as ``tpch_kg.kg_pairs`` — and scan it
+several times per call, so they never derive, persist or checkpoint
+their input; only their own per-round state is checkpointed.
+``pagerank.pagerank`` follows the same contract over a directed
+``(source_id, target_id)`` frame with multi-edges intact (out-degree
+counts edge instances), such as ``tpch_kg.kg_edges2``.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+
+def canonical_pairs(
+    edges: DataFrame, src: str = "source_id", dst: str = "target_id"
+) -> DataFrame:
+    """Distinct ``(u, v)`` with ``u < v`` over the non-loop edges of
+    ``edges``: ONE |E|-row distinct (half the rows of dedup-ing the
+    both-directions list), materialized by an eager localCheckpoint —
+    every consumer scan reads raw checkpointed rows (cheaper than
+    persist()'s columnar decode, and no encode on build). Eager, not
+    lazy: when ``edges`` is an expensive pipeline (the LSH pairs of
+    ``docs_similarity_triangles``) the lazy form changed that query's
+    job count and wall against the eager checkpoint it replaced."""
+    s, d = F.col(src), F.col(dst)
+    return (
+        edges.filter(s != d)
+        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def both_directions(pairs: DataFrame) -> DataFrame:
+    """Neighbor relation ``(x, y)`` holding each pair both ways: the
+    swap-union of a distinct u<v list is dedup-free (the two branches
+    are disjoint), so it costs no shuffle."""
+    return pairs.select(F.col("u").alias("x"), F.col("v").alias("y")).union(
+        pairs.select(F.col("v").alias("x"), F.col("u").alias("y"))
+    )
+
+
+def degrees(pairs: DataFrame) -> DataFrame:
+    """``(id, degree)`` in the simple graph: map-side partial counts
+    bound the shuffle at <= |V| rows regardless of |E|."""
+    return (
+        both_directions(pairs)
+        .groupBy(F.col("x").alias("id"))
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )

@@ -18,33 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators.pairs import degrees
 
-def triangle_count(pairs: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
+
+def triangle_count(pairs: DataFrame) -> DataFrame:
     """One row ``(n_edges, n_wedges, n_triangles)`` for the undirected
-    simple graph induced by ``pairs`` (self-loops and duplicate /
-    reversed pairs collapsed)."""
-    a, b = F.col(a_col), F.col(b_col)
-    und = (
-        pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # the edge list feeds degree counting, orientation, and the
-        # closing-edge lookup (4 plan references): materialize it once
-        # — when `pairs` is itself an expensive pipeline (an LSH
-        # near-dup join), recomputing it per reference dominates the
-        # whole census. The collapsed pair graph is orders of magnitude
-        # smaller than the corpus that produced it.
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("u").alias("x"))
-        .union(und.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
-    ed = und.join(du, "u").join(dv, "v")
+    simple graph given by the canonical pair list ``pairs``
+    (``pairs.canonical_pairs``), which feeds degree counting,
+    orientation and the closing-edge lookup."""
+    deg = degrees(pairs)
+    du = deg.select(F.col("id").alias("u"), F.col("degree").alias("du"))
+    dv = deg.select(F.col("id").alias("v"), F.col("degree").alias("dv"))
+    ed = pairs.join(du, "u").join(dv, "v")
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
@@ -61,14 +46,14 @@ def triangle_count(pairs: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     # count(matched key) the triangle count — vs the previous
     # count(wedges) + count(left_semi) pair that built the wedge join
     # twice
-    closing = und.select(F.col("u").alias("_cu"), F.col("v").alias("_cv"))
+    closing = pairs.select(F.col("u").alias("_cu"), F.col("v").alias("_cv"))
     closed = wedges.join(
         closing,
         (F.col("_cu") == F.least("b1", "b2"))
         & (F.col("_cv") == F.greatest("b1", "b2")),
         "left",
     )
-    return und.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
+    return pairs.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
         closed.agg(
             F.count(F.lit(1)).alias("n_wedges"),
             F.count("_cu").alias("n_triangles"),

@@ -229,41 +229,22 @@ setInterval(tick, 40);
 """
 
 
-def k_hop(
-    edges: DataFrame, node_id: str, k: int, pairs: DataFrame | None = None
-) -> DataFrame:
-    """BFS distances ≤ k from ``node_id`` over the undirected edge set:
-    ``(id, hop)`` with hop = shortest undirected distance. Iterative
-    frontier expansion — per level, two directional joins against the
-    2-column edge projection (frontier⋈source ∪ frontier⋈target).
+def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
+    """BFS distances ≤ k from ``node_id`` over the undirected simple
+    graph given by the canonical pair list ``pairs``
+    (``pairs.canonical_pairs``): ``(id, hop)`` with hop = shortest
+    undirected distance. Iterative frontier expansion — per level, two
+    directional joins against the pair list (frontier⋈u ∪ frontier⋈v).
 
-    Plan discipline (the r3 de-overhead fix): the 2-col projection is
-    persisted ONCE per query (each of k levels scans the cached
-    columns, not the upstream union/parquet twice); the frontier is
-    force-broadcast behind an explicit count gate — its count is
-    already known from the previous level's emptiness check, so no
-    level ever shuffles the edge set while the frontier is small — and
-    only the per-level frontier is checkpointed (the visited set is a
-    cheap union of those ≤k tiny checkpointed frames, not re-
-    checkpointed every round).
-
-    ``pairs`` (r6): optional MATERIALIZED canonical ``u < v`` distinct
-    pair list (the shared derived view, see kcore.k_core). BFS is
-    direction- and multiplicity-blind — the two directional joins probe
-    both columns and the frontier is distinct-ed — so the canonical
-    list gives the identical frontier sets while skipping this query's
-    own per-call persist of the edge projection (self-loops, which the
-    canonical list drops, only ever re-emit an already-visited node).
+    Plan discipline: every level scans the caller-materialized pair
+    list; the frontier is force-broadcast behind an explicit count
+    gate — its count is already known from the previous level's
+    emptiness check, so no level ever shuffles the pair list while the
+    frontier is small — and only the per-level frontier is
+    checkpointed (the visited set is a cheap union of those ≤k tiny
+    checkpointed frames, not re-checkpointed every round).
     """
-    spark = edges.sparkSession
-    own_persist = pairs is None
-    e = (
-        edges.select(
-            F.col("source_id").alias("u"), F.col("target_id").alias("v")
-        ).persist()
-        if own_persist
-        else pairs
-    )
+    spark = pairs.sparkSession
     from kgw_spark.session import local_df
 
     seed = local_df(spark, [(node_id, 0)], "id string, hop int")
@@ -277,8 +258,8 @@ def k_hop(
         fv = frontier.select(F.col("id").alias("v"))
         if frontier_n <= _NEIGHBOR_BROADCAST_GATE:
             fu, fv = F.broadcast(fu), F.broadcast(fv)
-        fwd = e.join(fu, "u").select(F.col("v").alias("id"))
-        bwd = e.join(fv, "v").select(F.col("u").alias("id"))
+        fwd = pairs.join(fu, "u").select(F.col("v").alias("id"))
+        bwd = pairs.join(fv, "v").select(F.col("u").alias("id"))
         nxt = (
             fwd.union(bwd)
             .distinct()
@@ -294,8 +275,6 @@ def k_hop(
     out = frames[0]
     for fr in frames[1:]:
         out = out.union(fr)
-    if own_persist:
-        e.unpersist()
     return out
 
 

@@ -14,6 +14,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """Driver heap sized from the host: ~40% of ``MemTotal``, capped at
+    48g (the rest holds tmpfs scratch, Python workers and the OS).
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(kb * 2 // 5 // 1024, 48 * 1024)}m"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "kgw_spark",
@@ -40,7 +49,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # small Arrow batches: corpus rows carry multi-KB content, and

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgw_spark.operators.pairs import canonical_pairs
+
 
 def _tag(prefix: str, col: str):
     return F.concat(F.lit(prefix + ":"), F.col(col).cast("string"))
@@ -32,7 +34,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str]) -> dict:
 _VIEW_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def _cached(spark: SparkSession, sf_dir: str, kind: str, build, mat=None) -> DataFrame:
+def _cached(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
+    """One ``build()`` (it materializes) per (SparkContext, sf_dir, kind)."""
     import os
 
     app = spark.sparkContext.applicationId
@@ -41,46 +44,28 @@ def _cached(spark: SparkSession, sf_dir: str, kind: str, build, mat=None) -> Dat
     for k in stale:
         del _VIEW_CACHE[k]
     if key not in _VIEW_CACHE:
-        df = build()
-        _VIEW_CACHE[key] = df.persist() if mat is None else mat(df)
+        _VIEW_CACHE[key] = build()
     return _VIEW_CACHE[key]
 
 
 def kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(spark, sf_dir, "nodes", lambda: _kg_nodes(spark, sf_dir))
+    return _cached(spark, sf_dir, "nodes", lambda: _kg_nodes(spark, sf_dir).persist())
 
 
 def kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(spark, sf_dir, "edges", lambda: _kg_edges(spark, sf_dir))
+    return _cached(spark, sf_dir, "edges", lambda: _kg_edges(spark, sf_dir).persist())
 
 
 def kg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical undirected pair list ``(u, v)`` with ``u < v`` of the
-    KG (self-loops dropped, direction and multi-edges collapsed) — the
-    shared derived view every undirected graph analytic peels from
-    (k-core, label propagation, common neighbors all start with exactly
-    this distinct). Cached per (SparkContext, sf_dir) like
-    kg_nodes/kg_edges: the |E|-row distinct shuffle is paid once per
-    session instead of once per query — the local-mode analog of
-    materializing the pair list as a store table next to the edge
-    table. Recomputed from the parquet inputs by every fresh session.
-    Materialized with a (lazy) localCheckpoint rather than persist():
-    the consumers scan it 3-5 times per query, and raw-row checkpoint
-    scans beat the columnar in-memory-relation decode every interleaved
-    A/B trial (and skip the encode on build)."""
-
-    def build() -> DataFrame:
-        e = kg_edges(spark, sf_dir)
-        s, d = F.col("source_id"), F.col("target_id")
-        return (
-            e.filter(s != d)
-            .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-            .distinct()
-        )
-
-    return _cached(
-        spark, sf_dir, "pairs", build, mat=lambda df: df.localCheckpoint(eager=False)
-    )
+    KG (``pairs.canonical_pairs`` over ``kg_edges``) — the shared
+    derived view every undirected graph analytic reads. Cached per
+    (SparkContext, sf_dir) like kg_nodes/kg_edges: the |E|-row distinct
+    shuffle is paid once per session instead of once per query — the
+    local-mode analog of materializing the pair list as a store table
+    next to the edge table. Recomputed from the parquet inputs by every
+    fresh session."""
+    return _cached(spark, sf_dir, "pairs", lambda: canonical_pairs(kg_edges(spark, sf_dir)))
 
 
 def kg_edges2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,14 +73,16 @@ def kg_edges2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH multi-edges (the pagerank working set: out-degree and
     contributions count edge instances, so the canonical pair view
     cannot substitute). Cached per (SparkContext, sf_dir) like
-    kg_pairs, via lazy localCheckpoint for the same scan-cost reasons;
-    recomputed from the parquet inputs by every fresh session."""
+    kg_pairs, via a lazy localCheckpoint (raw-row checkpoint scans beat
+    persist()'s columnar decode); recomputed from the parquet inputs by
+    every fresh session."""
     return _cached(
         spark,
         sf_dir,
         "edges2",
-        lambda: kg_edges(spark, sf_dir).select("source_id", "target_id"),
-        mat=lambda df: df.localCheckpoint(eager=False),
+        lambda: kg_edges(spark, sf_dir)
+        .select("source_id", "target_id")
+        .localCheckpoint(eager=False),
     )
 
 

@@ -119,15 +119,17 @@ def test_pagerank_scale_autoshrink_bounds_64bit(spark):
     assert max(got.values()) * 85 * 3 < 2**63
 
 
-def test_min_label_propagation_matches_python(spark):
+def test_min_label_propagation_matches_python(spark, monkeypatch):
     """min_label_propagation == the pure-Python replica on a hand graph
     with a hub, a chain, an isolated node, a self-loop, and duplicate/
     reversed edges, at every round count 1..4; with enough rounds the
     labels equal each component's minimum id."""
+    from kgw_spark.operators import communities
     from kgw_spark.operators.communities import (
         label_propagation_py,
         min_label_propagation,
     )
+    from kgw_spark.operators.pairs import canonical_pairs
 
     raw = [
         ("h", "a"), ("h", "b"), ("h", "c"),          # hub
@@ -137,51 +139,48 @@ def test_min_label_propagation_matches_python(spark):
     ]
     node_ids = sorted({n for e in raw for n in e} | {"iso"})
     nodes = spark.createDataFrame([(n,) for n in node_ids], "id string")
-    edges = spark.createDataFrame(raw, "source_id string, target_id string")
+    pairs = canonical_pairs(
+        spark.createDataFrame(raw, "source_id string, target_id string")
+    )
     for rounds in (1, 2, 3, 4):
         got = {
             r.id: r.label
-            for r in min_label_propagation(nodes, edges, rounds=rounds).collect()
+            for r in min_label_propagation(nodes, pairs, rounds=rounds).collect()
         }
         assert got == label_propagation_py(node_ids, raw, rounds=rounds), rounds
     # convergence: 'f' is 5 undirected hops from 'a' (f-e-d-c-h-a), so
     # 5 rounds reach the fixpoint = per-component min id ('a'; 'x'; 'iso')
     got4 = {
         r.id: r.label
-        for r in min_label_propagation(nodes, edges, rounds=5).collect()
+        for r in min_label_propagation(nodes, pairs, rounds=5).collect()
     }
     assert got4 == {
         "h": "a", "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "a",
         "x": "x", "y": "x", "iso": "iso",
     }
-    # both execution paths — dictionary-encoded long ranks and direct
-    # string aggregation — must return identical rows (the dict path's
-    # min(rank) == rank(min) by order isomorphism)
+    # far side of the node gate: the direct string aggregation with the
+    # shuffled (non-broadcast) message join returns the same rows as
+    # the default dictionary-encoded path checked above
+    monkeypatch.setattr(communities, "_BCAST_MAX_NODES", 0)
     for rounds in (1, 3):
-        a = {
+        got = {
             r.id: r.label
-            for r in min_label_propagation(
-                nodes, edges, rounds=rounds, dict_encode=True
-            ).collect()
+            for r in min_label_propagation(nodes, pairs, rounds=rounds).collect()
         }
-        b = {
-            r.id: r.label
-            for r in min_label_propagation(
-                nodes, edges, rounds=rounds, dict_encode=False
-            ).collect()
-        }
-        assert a == b == label_propagation_py(node_ids, raw, rounds=rounds)
+        assert got == label_propagation_py(node_ids, raw, rounds=rounds), rounds
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        min_label_propagation(nodes, edges, rounds=0)
+        min_label_propagation(nodes, pairs, rounds=0)
 
 
-def test_k_core_matches_python(spark):
+def test_k_core_matches_python(spark, monkeypatch):
     """k_core == the pure-Python peeling replica on a hand graph with a
     4-clique, a pendant triangle, a chain, duplicate/reversed edges and
     a self-loop, for k = 1..5 — including k where the core is empty."""
+    from kgw_spark.operators import kcore
     from kgw_spark.operators.kcore import k_core, k_core_py
+    from kgw_spark.operators.pairs import canonical_pairs
 
     raw = [
         # 4-clique (the 3-core)
@@ -191,108 +190,52 @@ def test_k_core_matches_python(spark):
         # chain (1-core only) + noise: dup, reversed dup, self-loop
         ("t3", "p"), ("p", "q"), ("b", "a"), ("a", "b"), ("q", "q"),
     ]
-    edges = spark.createDataFrame(raw, "source_id string, target_id string")
+    pairs = canonical_pairs(
+        spark.createDataFrame(raw, "source_id string, target_id string")
+    )
     for k in (1, 2, 3, 4, 5):
-        got = {r.id: r.degree for r in k_core(edges, k=k).collect()}
+        got = {r.id: r.degree for r in k_core(pairs, k=k).collect()}
         assert got == k_core_py(raw, k=k), k
     # spot-check the semantics: the 3-core is exactly the clique with
     # in-core degree 3 (the bridge to t1 does not count), the 4-core
     # is empty
-    assert {r.id for r in k_core(edges, k=3).collect()} == {"a", "b", "c", "d"}
-    assert k_core(edges, k=3).filter("degree != 3").count() == 0
-    assert k_core(edges, k=4).count() == 0
-    # dictionary-encoded and direct-string paths return identical rows
-    for k in (2, 3):
-        a = {r.id: r.degree for r in k_core(edges, k=k, dict_encode=True).collect()}
-        b = {r.id: r.degree for r in k_core(edges, k=k, dict_encode=False).collect()}
-        assert a == b == k_core_py(raw, k=k), k
+    assert {r.id for r in k_core(pairs, k=3).collect()} == {"a", "b", "c", "d"}
+    assert k_core(pairs, k=3).filter("degree != 3").count() == 0
+    assert k_core(pairs, k=4).count() == 0
+    # far side of the removed-set broadcast gate: past one peeled id
+    # the pair list is compacted (anti-join rewrite, removed set reset)
+    monkeypatch.setattr(kcore, "_BCAST_MAX_PEELED", 1)
+    for k in (1, 2, 3, 4, 5):
+        got = {r.id: r.degree for r in k_core(pairs, k=k).collect()}
+        assert got == k_core_py(raw, k=k), k
     import pytest as _p
 
     with _p.raises(ValueError):
-        k_core(edges, k=0)
-
-
-def test_shared_pairs_view_matches_internal_derivation(spark):
-    """Operators accepting a pre-materialized canonical pair list
-    (shared-derived-view contract) return exactly what they compute
-    when deriving the pair list themselves — k_core, label propagation
-    and common_neighbors on the same hand graph."""
-    from pyspark.sql import functions as F
-
-    from kgw_spark.operators.communities import min_label_propagation
-    from kgw_spark.operators.kcore import k_core
-    from kgw_spark.operators.linkpred import common_neighbors
-
-    raw = [
-        ("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d"),
-        ("d", "t1"), ("t1", "t2"), ("t2", "t3"), ("t3", "t1"),
-        ("t3", "p"), ("p", "q"), ("b", "a"), ("a", "b"), ("q", "q"),
-    ]
-    edges = spark.createDataFrame(raw, "source_id string, target_id string")
-    nodes = spark.createDataFrame(
-        [(n,) for n in sorted({x for e in raw for x in e})], "id string"
-    )
-    s, d = F.col("source_id"), F.col("target_id")
-    pairs = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .distinct()
-        .persist()
-    )
-    a = {r.id: r.degree for r in k_core(edges, k=2, pairs=pairs).collect()}
-    b = {r.id: r.degree for r in k_core(edges, k=2).collect()}
-    assert a == b
-    a = {
-        r.id: r.label
-        for r in min_label_propagation(nodes, edges, rounds=2, pairs=pairs).collect()
-    }
-    b = {
-        r.id: r.label
-        for r in min_label_propagation(nodes, edges, rounds=2).collect()
-    }
-    assert a == b
-    a = [
-        (r.u, r.v, r.n_common)
-        for r in common_neighbors(edges, deg_cap=8, top=5, pairs=pairs).collect()
-    ]
-    b = [
-        (r.u, r.v, r.n_common)
-        for r in common_neighbors(edges, deg_cap=8, top=5).collect()
-    ]
-    assert a == b
-    pairs.unpersist()
+        k_core(pairs, k=0)
 
 
 def test_label_prop_endpoints_covered_equivalence(spark):
     """endpoints_covered=True returns identical labels when the node
-    frame really covers every edge endpoint (and the flag composes with
-    the shared-pairs contract)."""
-    from pyspark.sql import functions as F
-
+    frame really covers every edge endpoint."""
     from kgw_spark.operators.communities import min_label_propagation
+    from kgw_spark.operators.pairs import canonical_pairs
 
     raw = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("x", "y")]
     nodes = spark.createDataFrame(
         [(n,) for n in sorted({x for e in raw for x in e} | {"iso"})], "id string"
     )
-    edges = spark.createDataFrame(raw, "source_id string, target_id string")
-    s, d = F.col("source_id"), F.col("target_id")
-    pairs = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .distinct()
-        .persist()
+    pairs = canonical_pairs(
+        spark.createDataFrame(raw, "source_id string, target_id string")
     )
     for rounds in (1, 3):
         a = {
             r.id: r.label
             for r in min_label_propagation(
-                nodes, edges, rounds=rounds, pairs=pairs, endpoints_covered=True
+                nodes, pairs, rounds=rounds, endpoints_covered=True
             ).collect()
         }
         b = {
             r.id: r.label
-            for r in min_label_propagation(nodes, edges, rounds=rounds).collect()
+            for r in min_label_propagation(nodes, pairs, rounds=rounds).collect()
         }
         assert a == b, rounds
-    pairs.unpersist()

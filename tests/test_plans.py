@@ -274,12 +274,10 @@ def test_neighborhood_among_join_is_broadcast(spark):
 
 
 def test_k_hop_frontier_joins_are_broadcast(spark):
-    """Per-level frontier joins against the cached edge projection use
-    broadcast (gated on the known frontier count) — no full-edge
-    shuffle at any level; the edge projection is served from the
-    persisted cache (InMemoryTableScan in the final plan)."""
-    edges = KG.kg_edges(spark, SF)
-    out = analytics.k_hop(edges, "customer:1", k=2)
+    """Per-level frontier joins against the session pair list use
+    broadcast (gated on the known frontier count) — no full pair-list
+    shuffle at any level."""
+    out = analytics.k_hop(KG.kg_pairs(spark, SF), "customer:1", k=2)
     p = plan(out)
     assert "SortMergeJoin" not in p
     # the visited union assembled from checkpointed per-level

@@ -500,11 +500,12 @@ def test_triangle_count_hand_graphs(spark):
     """Degree-ordered triangle counting on closed-form graphs: K4 has 4
     triangles, a 4-cycle has 0, duplicates/reversed pairs/self-loops
     collapse, and a pendant edge changes nothing."""
+    from kgw_spark.operators.pairs import canonical_pairs
     from kgw_spark.operators.triangles import triangle_count
 
     def count(pairs):
         df = spark.createDataFrame(pairs, "a int, b int")
-        r = triangle_count(df).first()
+        r = triangle_count(canonical_pairs(df, "a", "b")).first()
         return r.n_edges, r.n_triangles
 
     k4 = [(i, j) for i in range(4) for j in range(4) if i < j]
@@ -890,9 +891,8 @@ def test_common_neighbors_matches_bruteforce(spark):
     with a hub (deg > cap), an adjacent pair, reversed duplicates, and
     a self-loop — checked at several caps; also pins the deterministic
     (count DESC, u, v) cut and the ValueError guard."""
-    import itertools
-
-    from kgw_spark.operators.linkpred import common_neighbors
+    from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
+    from kgw_spark.operators.pairs import canonical_pairs
 
     raw = [
         ("m1", "a"), ("m1", "b"), ("m1", "c"),
@@ -900,34 +900,17 @@ def test_common_neighbors_matches_bruteforce(spark):
         ("b", "a"), ("a", "a"),
         ("h", "a"), ("h", "b"), ("h", "c"), ("h", "d"), ("h", "e"),
     ]
-
-    def brute(cap, top):
-        adj = {}
-        for s, d in raw:
-            if s != d:
-                adj.setdefault(s, set()).add(d)
-                adj.setdefault(d, set()).add(s)
-        cn = {}
-        for m, ns in adj.items():
-            if len(ns) > cap:
-                continue
-            for u, v in itertools.combinations(sorted(ns), 2):
-                cn[(u, v)] = cn.get((u, v), 0) + 1
-        rows = [
-            (u, v, n) for (u, v), n in cn.items() if v not in adj.get(u, ())
-        ]
-        rows.sort(key=lambda r: (-r[2], r[0], r[1]))
-        return rows[:top]
-
-    edges = spark.createDataFrame(raw, "source_id string, target_id string")
+    pairs = canonical_pairs(
+        spark.createDataFrame(raw, "source_id string, target_id string")
+    )
     for cap in (1, 2, 3, 5, 100):
         got = [
             (r.u, r.v, r.n_common)
-            for r in common_neighbors(edges, deg_cap=cap, top=10).collect()
+            for r in common_neighbors(pairs, deg_cap=cap, top=10).collect()
         ]
-        assert got == brute(cap, 10), cap
+        assert got == common_neighbors_py(raw, deg_cap=cap, top=10), cap
     with pytest.raises(ValueError):
-        common_neighbors(edges, deg_cap=0)
+        common_neighbors(pairs, deg_cap=0)
 
 
 def test_pq_topk_matches_reference_at_nondefault_params(emb):
