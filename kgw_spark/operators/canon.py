@@ -50,15 +50,15 @@ DRIVER_CC_THRESHOLD = 2_000_000
 # byte-based veto for the in-core path: long ids can blow the driver at
 # row counts the row gate allows (VERDICT r1 #6)
 DRIVER_CC_MAX_BYTES = 1 << 30
+# large-star/small-star rounds before the distributed path gives up
+MAX_ITERATIONS = 50
 
 
-def _driver_union_find(pairs: DataFrame) -> DataFrame:
-    """In-core union-find for equivalence sets that fit on the driver —
-    the hybrid any production pipeline uses: the alias graph is
-    typically millions of rows while the corpus is trillions, so
-    solving it exactly in one collect beats ~2·log(n) distributed
-    shuffle rounds. The distributed path below remains for dictionaries
-    that genuinely don't fit."""
+def union_find(pairs) -> dict[str, str]:
+    """In-core union-find over ``(a, b)`` equivalence pairs: every id of
+    a non-identity pair → the lexicographically smallest id of its
+    component. Identity pairs are no-ops (the distributed path drops
+    them too)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -70,46 +70,37 @@ def _driver_union_find(pairs: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in pairs.toLocalIterator():
-        if row[0] == row[1]:
-            continue  # identity pairs are no-ops (distributed path drops them too)
-        ra, rb = find(row[0]), find(row[1])
+    for a, b in pairs:
+        if a == b:
+            continue
+        ra, rb = find(a), find(b)
         if ra != rb:
-            # canonical = lexicographic min, same convention as below
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    rows = [(x, find(x)) for x in list(parent)]
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _mapping_df(spark, mapping: dict[str, str]) -> DataFrame:
     from kgw_spark.session import local_df
 
     # LocalRelation (not a parallelized python RDD): broadcasting the
     # mapping then costs zero tasks and carries real Catalyst stats
-    return local_df(
-        pairs.sparkSession, rows, "id string, canonical_id string"
-    )
+    return local_df(spark, list(mapping.items()), "id string, canonical_id string")
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 50,
-    num_partitions: int | None = None,
-    force_distributed: bool = False,
-    edge_count: int | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """``pairs(u, v)``: undirected equivalence edges between entity ids.
 
     Returns a mapping DataFrame ``(id, canonical_id)`` covering every id
     that appears in ``pairs`` (canonical roots map to themselves).
 
     Small edge sets (≤ DRIVER_CC_THRESHOLD) are solved exactly in-core
-    on the driver; larger ones run the distributed large-star/small-star
-    iteration with parallelism sized to the edge set, not the session
-    default — empty-task churn at session-level partition counts costs
-    more than the data (one partition per ~100k edges).
-
-    ``edge_count``: callers that already know the size (e.g. from a
-    committed-stage manifest) pass it to skip the sizing count job.
+    on the driver by ``union_find`` — the alias graph is typically
+    millions of rows while the corpus is trillions, so one collect beats
+    ~2·log(n) distributed shuffle rounds. Larger ones run the
+    distributed large-star/small-star iteration with parallelism sized
+    to the edge set, not the session default — empty-task churn at
+    session-level partition counts costs more than the data (one
+    partition per ~100k edges).
     """
     # the pair set is consumed at least twice (sizing count + either the
     # driver iterate or the first symmetrize) and its lineage is often
@@ -118,9 +109,7 @@ def connected_components(
     # for the duration of this call
     pairs = pairs.persist()
     try:
-        return _connected_components_impl(
-            pairs, max_iterations, num_partitions, force_distributed, edge_count
-        )
+        return _connected_components_impl(pairs)
     finally:
         # both exits (driver union-find, distributed) end with data
         # materialized off the pair lineage (local rows / eager
@@ -128,32 +117,25 @@ def connected_components(
         pairs.unpersist()
 
 
-def _connected_components_impl(
-    pairs: DataFrame,
-    max_iterations: int,
-    num_partitions: int | None,
-    force_distributed: bool,
-    edge_count: int | None,
-) -> DataFrame:
-    n = edge_count if edge_count is not None else pairs.count()
-    if n <= DRIVER_CC_THRESHOLD and not force_distributed:
+def _connected_components_impl(pairs: DataFrame) -> DataFrame:
+    spark = pairs.sparkSession
+    n = pairs.count()
+    if n <= DRIVER_CC_THRESHOLD:
         from kgw_spark.plans.hints import plan_size_bytes
 
         # rows alone don't bound driver memory — veto the in-core path
         # when Catalyst estimates the pair set beyond 1 GB (stats-less
         # sources estimate huge and fall through to distributed)
         if plan_size_bytes(pairs) <= DRIVER_CC_MAX_BYTES:
-            return _driver_union_find(pairs)
-    if num_partitions is None:
-        cap = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        num_partitions = max(1, min(cap, n // 100_000 + 1))
-    spark = pairs.sparkSession
+            return _mapping_df(spark, union_find(pairs.toLocalIterator()))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = max(1, min(cap, n // 100_000 + 1))
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
     try:
         e = _symmetrize(pairs).repartition(num_partitions).localCheckpoint(eager=True)
         prev = None
-        for _ in range(max_iterations):
+        for _ in range(MAX_ITERATIONS):
             e = _symmetrize(_large_star(e))
             e = _symmetrize(_small_star(e))
             e = e.localCheckpoint(eager=True)
@@ -215,41 +197,15 @@ def compose_mapping_local(spark, rows) -> DataFrame:
         cur = best.get(alias)
         if cur is None or cand < cur:
             best[alias] = cand
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for alias, (_negscore, canon) in best.items():
-        if alias == canon:
-            continue
-        ra, rb = find(alias), find(canon)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    out = [(x, find(x)) for x in list(parent)]
-    from kgw_spark.session import local_df
-
+    mapping = union_find((alias, canon) for alias, (_negscore, canon) in best.items())
     # LocalRelation: a plain createDataFrame(list) here scheduled a
     # cores-wide python job (~2 s serial wall on EVERY pipeline run at
     # every cluster size — measured as "job 0" in the r4 scaling
     # probes) just to pickle 34 rows through python workers
-    return F.broadcast(
-        local_df(spark, out, "id string, canonical_id string")
-    )
+    return F.broadcast(_mapping_df(spark, mapping))
 
 
-def compose_mapping(
-    alias_df: DataFrame, alias_rows=None, **cc_kwargs
-) -> DataFrame:
+def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
     """Disambiguate-then-union: the best-scoring candidate per alias
     (link semantics) feeds the equivalence pairs, and the connected
     components of those pairs give one final ``(id, canonical_id)``
@@ -277,31 +233,25 @@ def compose_mapping(
     component representative."""
     from kgw_spark.operators.link import best_candidates
 
-    if alias_rows is not None and not cc_kwargs:
+    if alias_rows is not None:
         return compose_mapping_local(alias_df.sparkSession, alias_rows)
-    probe_ok = False
-    if not cc_kwargs:
-        # ONE cheap parallel aggregate bounds BOTH budgets — rows AND
-        # bytes — before any driver collect (ADVICE r4 #1): the former
-        # limit().collect() probe ran 3-4 incremental limit jobs (the
-        # scaleUpFactor ramp — measured ~1-3 s of pure serial wall on
-        # every pipeline run at every cluster size) and still pulled up
-        # to 2M full rows to the driver with no byte veto, a driver-OOM
-        # risk for long ids. Catalyst stats can't stand in for the byte
-        # side: arrow createDataFrame frames are stats-less LogicalRDDs
-        # (sizeInBytes = Long.MaxValue).
-        st = alias_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("alias_id") + F.length("canonical_id")).alias("b"),
-        ).collect()[0]
-        probe_ok = (
-            st["n"] <= DRIVER_CC_THRESHOLD
-            and (st["b"] or 0) + 48 * st["n"] <= DRIVER_CC_MAX_BYTES
-        )
-    if probe_ok:
+    # ONE cheap parallel aggregate bounds BOTH budgets — rows AND
+    # bytes — before any driver collect (ADVICE r4 #1): the former
+    # limit().collect() probe ran 3-4 incremental limit jobs (the
+    # scaleUpFactor ramp — measured ~1-3 s of pure serial wall on
+    # every pipeline run at every cluster size) and still pulled up
+    # to 2M full rows to the driver with no byte veto, a driver-OOM
+    # risk for long ids. Catalyst stats can't stand in for the byte
+    # side: arrow createDataFrame frames are stats-less LogicalRDDs
+    # (sizeInBytes = Long.MaxValue).
+    st = alias_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.length("alias_id") + F.length("canonical_id")).alias("b"),
+    ).collect()[0]
+    if st["n"] <= DRIVER_CC_THRESHOLD and (st["b"] or 0) + 48 * st["n"] <= DRIVER_CC_MAX_BYTES:
         rows = alias_df.select("alias_id", "canonical_id", "score").collect()
         return compose_mapping_local(alias_df.sparkSession, rows)
-    return connected_components(alias_pairs(best_candidates(alias_df)), **cc_kwargs)
+    return connected_components(alias_pairs(best_candidates(alias_df)))
 
 
 def canonicalize(mentions: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -1,19 +1,18 @@
 """Entity linking: resolve raw mention ids through an alias dictionary.
 
-Two physical strategies for the same logical operator:
+The broadcast path is ``canon.compose_mapping`` + ``canon.canonicalize``:
+disambiguation and union-find are composed into one ``(id,
+canonical_id)`` mapping, which is broadcast-joined on subj and obj — no
+shuffle, immune to skew (hot entities hit every executor's local hash
+map). This is the scale-up of the reference's in-driver annotation-dict
+merge (kgw/biomedicine/_primekg.py:155-172, T7 in SURVEY §2.2).
 
-- ``link_broadcast`` — the dictionary is small enough to broadcast;
-  a broadcast hash join costs no shuffle at all and is immune to skew
-  (hot entities hit every executor's local hash map). This is the
-  scale-up of the reference's in-driver annotation-dict merge
-  (kgw/biomedicine/_primekg.py:155-172, T7 in SURVEY §2.2).
-
-- ``link_salted`` — the dictionary is too big to broadcast; a plain
-  shuffle join on the alias id would send every mention of a hot
-  entity (e.g. a function called from 60% of all files) to one
-  reducer. We salt: replicate each dictionary row K ways, key the big
-  side by (alias, pmod(hash(lineage), K)) so hot keys spread over K
-  reducers. Deterministic (hash of lineage columns, no rand()).
+``link_salted`` is the path for a dictionary too big to broadcast: a
+plain shuffle join on the alias id would send every mention of a hot
+entity (e.g. a function called from 60% of all files) to one reducer.
+We salt: replicate each dictionary row K ways, key the big side by
+(alias, pmod(hash(lineage), K)) so hot keys spread over K reducers.
+Deterministic (hash of lineage columns, no rand()).
 
 Disambiguation: when the dictionary offers multiple candidates per
 alias, the highest-scoring candidate wins (ties broken by canonical id
@@ -41,28 +40,16 @@ def best_candidates(alias_df: DataFrame) -> DataFrame:
     )
 
 
-def _apply_mapping(
-    mentions: DataFrame, mapping: DataFrame, col: str, broadcast: bool
-) -> DataFrame:
+def _apply_mapping(mentions: DataFrame, mapping: DataFrame, col: str) -> DataFrame:
     mm = mapping.select(
         F.col("alias_id").alias(f"_{col}_alias"),
         F.col("canonical_id").alias(f"_{col}_canon"),
     )
-    m = F.broadcast(mm) if broadcast else mm
     return (
-        mentions.join(m, mentions[col] == F.col(f"_{col}_alias"), "left")
+        mentions.join(mm, mentions[col] == F.col(f"_{col}_alias"), "left")
         .withColumn(col, F.coalesce(F.col(f"_{col}_canon"), F.col(col)))
         .drop(f"_{col}_alias", f"_{col}_canon")
     )
-
-
-def link_broadcast(mentions: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """Resolve subj and obj through a broadcast dictionary join.
-    Unresolved ids pass through unchanged (they are their own entity)."""
-    mapping = best_candidates(alias_df)
-    out = _apply_mapping(mentions, mapping, "subj", broadcast=True)
-    out = _apply_mapping(out, mapping, "obj", broadcast=True)
-    return out
 
 
 def link_salted(
@@ -91,4 +78,4 @@ def link_salted(
         .drop("_obj_alias", "_obj_canon", "_dsalt", "_salt")
     )
     # subj side: plain shuffle join (no hot keys among subjects)
-    return _apply_mapping(out, mapping, "subj", broadcast=False)
+    return _apply_mapping(out, mapping, "subj")

@@ -1,8 +1,9 @@
 """SparkSession builder tuned for this engine.
 
-Local-mode defaults follow the sandbox (local[32], single JVM), but every
-knob scales with ``cores`` so the identical job can run at two parallelism
-levels (the sandbox stand-in for the north rule's N vs 4N executors).
+Local mode defaults to one task slot per CPU this process may use
+(``local[<host cores>]``, single JVM), but every knob scales with
+``cores`` so the identical job can run at two parallelism levels (the
+local stand-in for N vs 4N executors).
 """
 
 from __future__ import annotations
@@ -11,7 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# ``SPARK_GRAFT_CPUS`` overrides the host's core count
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def default_driver_mem() -> str:

@@ -1,6 +1,28 @@
 import pytest
+from py4j.protocol import Py4JNetworkError
 
 from kgw_spark.session import get_spark
+
+GATEWAY_DIED = "Spark gateway died — likely OOM-killed, see dmesg"
+
+
+def _gateway_died(exc: BaseException | None) -> bool:
+    seen = set()
+    while exc is not None and id(exc) not in seen:
+        if isinstance(exc, (Py4JNetworkError, ConnectionRefusedError)):
+            return True
+        seen.add(id(exc))
+        exc = exc.__cause__ or exc.__context__
+    return False
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_makereport(item, call):
+    """Once the JVM is gone every later test fails against the dead py4j
+    gateway; stop the run at the first such error instead."""
+    yield
+    if call.excinfo is not None and _gateway_died(call.excinfo.value):
+        pytest.exit(GATEWAY_DIED, returncode=3)
 
 
 @pytest.fixture(scope="session")

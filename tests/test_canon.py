@@ -5,6 +5,7 @@ import random
 
 import pytest
 
+from kgw_spark.operators import canon
 from kgw_spark.operators.canon import connected_components
 
 
@@ -35,7 +36,7 @@ def _oracle(pairs):
     return {x: find(x) for x in parent}
 
 
-def test_driver_and_distributed_agree(spark):
+def test_driver_and_distributed_agree(spark, monkeypatch):
     pairs = _random_pairs(200, 300, seed=5)
     df = spark.createDataFrame(pairs, schema="u string, v string")
     expected = _oracle(pairs)
@@ -43,22 +44,18 @@ def test_driver_and_distributed_agree(spark):
     driver = {
         r.id: r.canonical_id for r in connected_components(df).collect()
     }
-    dist = {
-        r.id: r.canonical_id
-        for r in connected_components(df, force_distributed=True).collect()
-    }
+    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    dist = {r.id: r.canonical_id for r in connected_components(df).collect()}
     assert driver == expected
     assert dist == expected
 
 
-def test_chain_components(spark):
+def test_chain_components(spark, monkeypatch):
     # a long path graph exercises multi-round convergence
+    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
     pairs = [(f"c{i}", f"c{i+1}") for i in range(40)]
     df = spark.createDataFrame(pairs, schema="u string, v string")
-    out = {
-        r.id: r.canonical_id
-        for r in connected_components(df, force_distributed=True).collect()
-    }
+    out = {r.id: r.canonical_id for r in connected_components(df).collect()}
     assert set(out.values()) == {"c0"}
     assert len(out) == 41
 
@@ -68,6 +65,23 @@ def test_self_loops_and_duplicates(spark):
     df = spark.createDataFrame(pairs, schema="u string, v string")
     out = {r.id: r.canonical_id for r in connected_components(df).collect()}
     assert out == {"a": "a", "b": "a", "x": "x", "y": "x"}
+
+
+def test_compose_mapping_distributed_matches_local(spark, monkeypatch):
+    """The generic window→CC path of ``compose_mapping`` (forced past the
+    driver gate) equals the in-core ``compose_mapping_local`` on the
+    corpus alias dictionary, plus a losing and a null-score candidate
+    that must not union components."""
+    from kgw_spark.sources.corpus import build_alias_dict
+
+    rows = [(a, c, float(s)) for a, (c, s) in build_alias_dict(12).items()]
+    rows += [("func:log", "func:other", 0.1), ("func:logger", "func:none", None)]
+    alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
+    local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
+    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
+    assert dist == local
+    assert local["func:helper0c"] == "func:helper0a" and "func:other" not in local
 
 
 def test_pagerank_matches_python_replica_exactly(spark):

@@ -1,12 +1,14 @@
 """Graph operators vs their pure-Python replicas on adversarial small
 graphs: every undirected operator reads ``canonical_pairs`` of the raw
-edges, pagerank reads the raw directed edges, and each result must equal
-the replica computed from the raw edge list."""
+edges, pagerank and connected components read the raw directed edges,
+and each result must equal the replica computed from the raw edge
+list."""
 
 import itertools
 
 import pytest
 
+from kgw_spark.operators import canon
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
@@ -51,6 +53,21 @@ def _bfs_py(raw, start, k):
     return hops
 
 
+def _components_py(raw):
+    """Every endpoint of a non-self-loop edge → the smallest id of its
+    connected component (BFS over the undirected adjacency)."""
+    adj, out = _adjacency(raw), {}
+    for start in sorted(adj):
+        if start in out:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [m for n in frontier for m in adj[n] if m not in seen]
+            seen.update(frontier)
+        out.update((n, start) for n in seen)
+    return out
+
+
 def _triangles_py(raw):
     """(n_edges, n_wedges, n_triangles) with the operator's orientation:
     each edge points from its (degree, id)-smaller endpoint, and a wedge
@@ -92,3 +109,14 @@ def test_operators_match_replicas(spark, name):
     assert tuple(triangle_count(pairs).first()) == _triangles_py(raw)
     got = {r.id: r.rank_scaled for r in pagerank(edges, iters=4).collect()}
     assert got == pagerank_py(raw, iters=4)
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize("name", list(GRAPHS))
+def test_connected_components_match_replica(spark, monkeypatch, name, path):
+    raw, _isolated = GRAPHS[name]
+    if path == "distributed":
+        monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    pairs = spark.createDataFrame(raw, "u string, v string")
+    got = {r.id: r.canonical_id for r in canon.connected_components(pairs).collect()}
+    assert got == _components_py(raw)

@@ -104,14 +104,16 @@ def test_q1_partial_aggregation(spark):
 
 
 def test_link_broadcast_plan(spark):
+    """The pipeline's broadcast link path: the composed link∘canonicalize
+    mapping is broadcast-joined on subj and obj."""
+    from kgw_spark.operators.canon import canonicalize, compose_mapping
     from kgw_spark.operators.extract import extract_mentions
-    from kgw_spark.operators.link import link_broadcast
     from kgw_spark.sources.corpus import corpus_df, generate_corpus
     from tests.conftest import alias_df_from_truth
 
     rows, truth = generate_corpus(n_repos=2, files_per_repo=3)
     m = extract_mentions(corpus_df(spark, rows))
-    p = plan(link_broadcast(m, alias_df_from_truth(spark, truth)))
+    p = plan(canonicalize(m, compose_mapping(alias_df_from_truth(spark, truth))))
     assert p.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in p
 

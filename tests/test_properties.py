@@ -90,24 +90,12 @@ def test_informative_never_raises(value):
 @given(st.lists(st.tuples(st.integers(0, 50), st.integers(0, 50)), max_size=60))
 @settings(max_examples=100, deadline=None)
 def test_union_find_partition_properties(pairs):
-    """Driver union-find: mapping is idempotent, canonical ids are
-    component minima, and connected nodes share a canonical id."""
-    parent = {}
+    """Driver union-find (``canon.union_find``): mapping is idempotent,
+    canonical ids are component minima, and connected nodes share a
+    canonical id."""
+    from kgw_spark.operators.canon import union_find
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        if a == b:
-            continue
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    mapping = {x: find(x) for x in parent}
+    mapping = union_find(pairs)
     for x, c in mapping.items():
         assert mapping.get(c, c) == c  # canonical maps to itself
         assert c <= x  # min convention
