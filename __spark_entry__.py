@@ -191,8 +191,7 @@ def _pipeline_store_dir(tag: str) -> str:
         import shutil
         import tempfile
 
-        scratch = "/dev/shm" if _os.path.isdir("/dev/shm") else None
-        path = tempfile.mkdtemp(prefix=f"kgq_{tag}_", dir=scratch)
+        path = tempfile.mkdtemp(prefix=f"kgq_{tag}_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         _PIPELINE_STORES[tag] = path
     return _PIPELINE_STORES[tag]
@@ -2506,7 +2505,7 @@ def oracle_sql(sf_tag: str = "sf0.01") -> dict[str, str]:
             )
             SELECT COALESCE(event_type, 'ALL') AS event_type,
                    COALESCE(day, 'ALL') AS day,
-                   COUNT(*) AS n, SUM(cents) AS value_cents
+                   COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS value_cents
             FROM base GROUP BY ROLLUP(event_type, day)
         """,
         # 3-level conditional-min funnel chain; strictly-increasing
@@ -2545,7 +2544,7 @@ def oracle_sql(sf_tag: str = "sf0.01") -> dict[str, str]:
         # FLOOR-quantized cents keep the sums exact
         "orders_decile_stats": """
             SELECT CAST(decile AS INTEGER) AS decile, COUNT(*) AS n_orders,
-                   SUM(cents) AS total_cents,
+                   CAST(SUM(cents) AS BIGINT) AS total_cents,
                    MIN(o_orderkey) AS min_orderkey
             FROM (
                 SELECT o_orderkey,

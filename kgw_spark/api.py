@@ -6,7 +6,7 @@ A ``Project`` declares WHAT to build (`to_statistics()`, `to_csv()`,
 way the reference's Luigi targets are (an output that already exists
 is skipped, so a failed run resumes without re-doing completed work).
 The Luigi process-pool is replaced by Spark's own parallelism — tasks
-here are driver-side output renders over the shared nodes/edges store.
+here are output renders over the shared nodes/edges store.
 
 A user of the reference maps 1:1:
 
@@ -21,6 +21,7 @@ A user of the reference maps 1:1:
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 
@@ -86,10 +87,22 @@ class Project:
         return store.read(spark, "nodes"), store.read(spark, "edges")
 
     # -- output declarations (reference base.py:65-244) -------------------
-    def _add(self, filename: str, render: Callable):
+    def _add(self, filename: str, write: Callable):
         path = os.path.join(self.results_dir, filename)
-        self._outputs.append((path, render))
+        self._outputs.append((path, write))
         return self
+
+    def _add_text(self, filename: str, render: Callable, distributed: bool):
+        """Declare an export: ``render(nodes, edges)`` is its
+        ``export.*_text`` frame. ``distributed`` picks only the layout:
+        the file ``filename``, or a directory of part files named with
+        its dots as underscores (``kg.sql`` → ``kg_sql``) that
+        concatenate to the same bytes."""
+        name = filename if not distributed else filename.replace(".", "_")
+        return self._add(
+            name,
+            lambda n, e, p: export.write_text(render(n, e), p, distributed),
+        )
 
     def to_sqlite(self):
         return self._add(
@@ -105,38 +118,24 @@ class Project:
         return self._add("schema.html", lambda n, e, p: analytics.schema_html(n, e, p))
 
     def to_sql(self, distributed: bool = False):
-        """``distributed=True`` renders a sharded directory of the same
-        byte stream via the executor-side twin (one file per partition,
-        atomic directory rename) — the 100-TB export path. Same flag on
-        the other exporters."""
-        if distributed:
-            return self._add(
-                "kg_sql",
-                lambda n, e, p: export.sql_dump_text(n, e)
-                .write.mode("overwrite")
-                .text(p),
-            )
-        return self._add("kg.sql", lambda n, e, p: export.to_sql_dump(n, e, p))
+        """sqlite iterdump format; ``distributed=True`` (here and on the
+        other text exports) writes the same bytes as a sharded
+        directory, one file per partition, committed by one rename."""
+        return self._add_text("kg.sql", export.sql_dump_text, distributed)
 
     def to_csv(self, distributed: bool = False):
-        if distributed:
-            self._add("kg_nodes_csv", lambda n, e, p: export.to_csv_distributed(n, p))
-            return self._add(
-                "kg_edges_csv", lambda n, e, p: export.to_csv_distributed(e, p)
-            )
-        self._add("kg_nodes.csv", lambda n, e, p: export.to_csv(n, p))
-        return self._add("kg_edges.csv", lambda n, e, p: export.to_csv(e, p))
+        self._add_text("kg_nodes.csv", lambda n, e: export.csv_text(n), distributed)
+        return self._add_text(
+            "kg_edges.csv", lambda n, e: export.csv_text(e), distributed
+        )
 
     def to_jsonl(self, distributed: bool = False):
-        if distributed:
-            self._add(
-                "kg_nodes_jsonl", lambda n, e, p: export.to_jsonl_distributed(n, p)
-            )
-            return self._add(
-                "kg_edges_jsonl", lambda n, e, p: export.to_jsonl_distributed(e, p)
-            )
-        self._add("kg_nodes.jsonl", lambda n, e, p: export.to_jsonl(n, p))
-        return self._add("kg_edges.jsonl", lambda n, e, p: export.to_jsonl(e, p))
+        self._add_text(
+            "kg_nodes.jsonl", lambda n, e: export.jsonl_text(n), distributed
+        )
+        return self._add_text(
+            "kg_edges.jsonl", lambda n, e: export.jsonl_text(e), distributed
+        )
 
     def to_metta(self, representation: str = "spo", distributed: bool = False):
         if representation not in VALID_METTA:
@@ -144,36 +143,15 @@ class Project:
                 f"Unknown representation: {representation}. "
                 f"Valid: {', '.join(VALID_METTA)}"
             )
-        if distributed:
-            dfn = {
-                "spo": lambda n, e: export.triples_text(e),
-                "properties_aggregated": export.metta_properties_aggregated_text,
-                "properties_expanded": export.metta_properties_expanded_text,
-            }[representation]
-            return self._add(
-                f"kg_{representation}_metta",
-                lambda n, e, p, dfn=dfn: dfn(n, e)
-                .write.mode("overwrite")
-                .text(p),
-            )
-        fn = {
-            "spo": export.to_metta_spo,
-            "properties_aggregated": export.to_metta_properties_aggregated,
-            "properties_expanded": export.to_metta_properties_expanded,
+        render = {
+            "spo": export.metta_spo_text,
+            "properties_aggregated": export.metta_properties_aggregated_text,
+            "properties_expanded": export.metta_properties_expanded_text,
         }[representation]
-        return self._add(
-            f"kg_{representation}.metta", lambda n, e, p, fn=fn: fn(n, e, p)
-        )
+        return self._add_text(f"kg_{representation}.metta", render, distributed)
 
     def to_graphml(self, distributed: bool = False):
-        if distributed:
-            return self._add(
-                "kg_graphml",
-                lambda n, e, p: export.graphml_text(n, e)
-                .write.mode("overwrite")
-                .text(p),
-            )
-        return self._add("kg.graphml", lambda n, e, p: export.to_graphml(n, e, p))
+        return self._add_text("kg.graphml", export.graphml_text, distributed)
 
 
 class RawGraphProject(Project):
@@ -210,14 +188,11 @@ def run(
     for proj in projects:
         if not isinstance(proj, Project):
             raise ValueError(f"Invalid workflow item: {proj!r}")
-    # O5 task-event logging (reference kgw/_shared/tasks.py:34-69):
-    # colored Started/Finished/Failed lines per output task
+    # O5 task events (reference kgw/_shared/tasks.py:34-69): one JSON
+    # line per Started/Finished/Failed/Skipped output task
     def log(event: str, path: str):
-        if not verbose:
-            return
-        color = {"Started": "\033[34m", "Finished": "\033[32m",
-                 "Failed": "\033[31m", "Skipped": "\033[90m"}[event]
-        print(f"{color}{event}\033[0m {path}")
+        if verbose:
+            print(json.dumps({"event": event, "path": path}), flush=True)
 
     for proj in projects:
         if not proj._outputs:

@@ -18,7 +18,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinit
 
 def default_driver_mem() -> str:
     """Driver heap sized from the host: ~40% of ``MemTotal``, capped at
-    48g (the rest holds tmpfs scratch, Python workers and the OS).
+    48g (the rest holds Python workers, page cache and the OS).
     ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
     with open("/proc/meminfo") as f:
         kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
@@ -35,15 +35,11 @@ def get_spark(
 
     ``shuffle_partitions`` defaults to ``cores`` — on a real cluster this
     would be ~2-3x total executor cores; AQE coalesces the excess at
-    runtime either way.
+    runtime either way. Scratch space is Spark's own: ``SPARK_LOCAL_DIRS``
+    or ``extra_conf={"spark.local.dir": ...}``, else the temp dir.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cores
-    # shuffle spill / scratch on tmpfs: the sandbox's disk shows high
-    # IO-wait variance; on a real cluster this is fast local NVMe
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-local"
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -73,8 +69,6 @@ def get_spark(
         # with executor core count (see worker_daemon docstring)
         .config("spark.python.daemon.module", "kgw_spark.worker_daemon")
     )
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))

@@ -1,12 +1,13 @@
 """File exporters: unified store → sql/csv/jsonl/metta/graphml.
 
 Semantics ported exactly from kgw/_shared/load.py (cited per function);
-the architecture is not: heavy lifting (ordering, dedup, JSON encode)
-happens distributed, and only the final sequential byte stream is
-rendered driver-side through ``toLocalIterator`` (bounded memory).
-These single-file exports are a test-scale parity surface — at 100 TB
-the canonical output is the partitioned nodes/edges table store, and
-``triples_text`` below provides the distributed sharded variant.
+the architecture is not. Each format has one renderer, ``*_text``,
+which returns an ordered single-column ``value`` DataFrame: one row per
+record (ordering, dedup, JSON encode and the per-record render all run
+distributed), plus header/footer rows. ``write_text`` is the one sink:
+it streams that frame through the driver into a single file (bounded
+memory), or writes it as a directory of part files whose concatenation
+is the same bytes — the sharded layout for stores too big for one file.
 
 Deterministic order convention (the reference inherits SQLite scan
 order, which is insertion order; we must not depend on partitioning):
@@ -17,6 +18,8 @@ do not affect scoring.
 
 from __future__ import annotations
 
+import csv
+import io
 import json
 import xml.sax.saxutils as saxutils
 
@@ -64,102 +67,24 @@ def _ordered_edges(edges: DataFrame) -> DataFrame:
     return _canon(edges).orderBy("source_id", "type", "target_id")
 
 
-# --------------------------------------------------------------------------
-# L6 — MeTTa "spo": the canonical triple serialization
-# (kgw/_shared/load.py:548-607)
-# --------------------------------------------------------------------------
-def to_metta_spo(nodes: DataFrame, edges: DataFrame, filepath: str) -> None:
-    with open(filepath, "w") as f:
-        f.write("; Types\n")
-        f.write("(: NodeType Type)\n")
-        types = sorted(
-            r["type"] for r in nodes.select("type").distinct().collect()
-        )
-        for t in types:
-            f.write(f"(: {clean(t)} NodeType)\n")
-
-        f.write("; Nodes\n")
-        for row in _ordered_nodes(nodes).toLocalIterator():
-            f.write(f"(: {clean(row['id'])} {clean(row['type'])})\n")
-
-        f.write("; Edges\n")
-        for row in _ordered_edges(edges).toLocalIterator():
-            f.write(
-                f"({clean(row['source_id'])} {clean(row['type'])} "
-                f"{clean(row['target_id'])})\n"
-            )
+def _ordered(df: DataFrame) -> DataFrame:
+    return _ordered_nodes(df) if "id" in df.columns else _ordered_edges(df)
 
 
-def triples_text(edges: DataFrame) -> DataFrame:
-    """Distributed variant of the spo edge section: one `(s p o)` atom
-    per row, quoting done JVM-side (to_json of a string gives exact
-    JSON quoting, matching clean() for string inputs). Write with
-    ``df.write.text(dir)`` for a sharded export at scale."""
+def _types(df: DataFrame) -> list[str]:
+    return sorted(r["type"] for r in df.select("type").distinct().collect())
 
-    def q(c: str):
-        # to_json(struct(x)) -> {"x":"..."} ; strip the wrapper
-        return F.regexp_extract(
-            F.to_json(F.struct(F.col(c).alias("v"))), '^\\{"v":(.*)\\}$', 1
-        )
 
-    return edges.select(
-        F.concat(
-            F.lit("("), q("source_id"), F.lit(" "), q("type"), F.lit(" "),
-            q("target_id"), F.lit(")"),
-        ).alias("value")
-    )
+def _record(row, empty: str = "{}") -> dict:
+    """A node/edge row as a dict in column order, properties parsed."""
+    rec = row.asDict()
+    rec["properties"] = json.loads(rec["properties"] or empty)
+    return rec
 
 
 # --------------------------------------------------------------------------
-# L7 — MeTTa "properties_aggregated" (kgw/_shared/load.py:610-716).
-# Deliberate deviation (SURVEY §7.4): the reference's edge ids e{i}
-# restart every 10k-row fetch batch (load.py:688-694) and are thus
-# non-unique above 10k edges; we use a global sequential id, identical
-# to the reference's output whenever the store has ≤ 10k edges.
+# The text-frame contract and its one sink
 # --------------------------------------------------------------------------
-def _repr2_node_block(row) -> str:
-    nid, ntype = clean(row["id"]), clean(row["type"])
-    lines = [f"(: {nid} {ntype})"]
-    for key, val in json.loads(row["properties"] or "{}").items():
-        lines.append(f'("has_property" {nid} ({clean(key)} {clean(val)}))')
-    return "".join(line + "\n" for line in lines)
-
-
-def _repr2_edge_block(row, i: int) -> str:
-    eid = f'"e{i}"'
-    sid, tid, etype = (
-        clean(row["source_id"]),
-        clean(row["target_id"]),
-        clean(row["type"]),
-    )
-    lines = [f"(: {eid} {etype})", f"({eid} ({etype} {sid} {tid}))"]
-    for key, val in json.loads(row["properties"] or "{}").items():
-        lines.append(f'("has_property" {eid} ({clean(key)} {clean(val)}))')
-    return "".join(line + "\n" for line in lines)
-
-
-def _repr2_types_header(nodes: DataFrame, edges: DataFrame) -> str:
-    out = ["; Types", "(: NodeType Type)", "(: EdgeType Type)"]
-    for t in sorted(r["type"] for r in nodes.select("type").distinct().collect()):
-        out.append(f"(: {clean(t)} NodeType)")
-    for t in sorted(r["type"] for r in edges.select("type").distinct().collect()):
-        out.append(f"(: {clean(t)} EdgeType)")
-    return "".join(line + "\n" for line in out)
-
-
-def to_metta_properties_aggregated(
-    nodes: DataFrame, edges: DataFrame, filepath: str
-) -> None:
-    with open(filepath, "w") as f:
-        f.write(_repr2_types_header(nodes, edges))
-        f.write("; Nodes\n")
-        for row in _ordered_nodes(nodes).toLocalIterator():
-            f.write(_repr2_node_block(row))
-        f.write("; Edges\n")
-        for i, row in enumerate(_ordered_edges(edges).toLocalIterator()):
-            f.write(_repr2_edge_block(row, i))
-
-
 def _strip_nl(v: str) -> str:
     return v[:-1] if v.endswith("\n") else v
 
@@ -168,10 +93,8 @@ def _sectioned_text(spark, sections) -> DataFrame:
     """Build the ordered single-column export DataFrame from a list of
     (header_string | None, rdd_of_value_strings | None) sections; RDD
     union preserves per-section partition order. Rows carry NO trailing
-    newline (``df.write.text`` appends the line separator), so a
-    sharded ``.write.text(dir)`` — or ``"\\n".join(rows) + "\\n"`` —
-    reproduces the driver render byte-for-byte. Multi-line blocks keep
-    their INTERNAL newlines inside one row."""
+    newline (the sink appends one per row). Multi-line blocks keep their
+    INTERNAL newlines inside one row."""
     sc = spark.sparkContext
     parts = []
     for header, rdd in sections:
@@ -185,14 +108,85 @@ def _sectioned_text(spark, sections) -> DataFrame:
     return spark.createDataFrame(out.map(lambda v: (v,)), schema="value string")
 
 
+def write_text(frame: DataFrame, path: str, distributed: bool = False) -> None:
+    """Write a ``*_text`` frame, each row plus ``"\\n"``: one file at
+    ``path`` streamed through ``toLocalIterator``, or (``distributed``)
+    a directory of ``part-*`` files that concatenate to the same bytes."""
+    if distributed:
+        frame.write.mode("overwrite").text(path)
+        return
+    with open(path, "w", encoding="utf-8", newline="") as f:
+        for row in frame.toLocalIterator():
+            f.write(row.value + "\n")
+
+
+# --------------------------------------------------------------------------
+# L6 — MeTTa "spo": the canonical triple serialization
+# (kgw/_shared/load.py:548-607)
+# --------------------------------------------------------------------------
+def _spo_node(row) -> str:
+    return f"(: {clean(row['id'])} {clean(row['type'])})"
+
+
+def _spo_edge(row) -> str:
+    return (
+        f"({clean(row['source_id'])} {clean(row['type'])} "
+        f"{clean(row['target_id'])})"
+    )
+
+
+def metta_spo_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    types = "".join(f"(: {clean(t)} NodeType)\n" for t in _types(nodes))
+    return _sectioned_text(
+        nodes.sparkSession,
+        [
+            ("; Types\n(: NodeType Type)\n" + types + "; Nodes\n",
+             _ordered_nodes(nodes).rdd.map(_spo_node)),
+            ("; Edges\n", _ordered_edges(edges).rdd.map(_spo_edge)),
+        ],
+    )
+
+
+# --------------------------------------------------------------------------
+# L7 — MeTTa "properties_aggregated" (kgw/_shared/load.py:610-716).
+# Deliberate deviation (SURVEY §7.4): the reference's edge ids e{i}
+# restart every 10k-row fetch batch (load.py:688-694) and are thus
+# non-unique above 10k edges; we use a global sequential id, identical
+# to the reference's output whenever the store has ≤ 10k edges.
+# --------------------------------------------------------------------------
+def _repr2_block(subject: str, lines: list[str], properties) -> str:
+    for key, val in json.loads(properties or "{}").items():
+        lines.append(f'("has_property" {subject} ({clean(key)} {clean(val)}))')
+    return "".join(line + "\n" for line in lines)
+
+
+def _repr2_node_block(row) -> str:
+    nid = clean(row["id"])
+    return _repr2_block(nid, [f"(: {nid} {clean(row['type'])})"], row["properties"])
+
+
+def _repr2_edge_block(row, i: int) -> str:
+    eid, etype = f'"e{i}"', clean(row["type"])
+    sid, tid = clean(row["source_id"]), clean(row["target_id"])
+    lines = [f"(: {eid} {etype})", f"({eid} ({etype} {sid} {tid}))"]
+    return _repr2_block(eid, lines, row["properties"])
+
+
+def _repr2_types_header(nodes: DataFrame, edges: DataFrame) -> str:
+    out = ["; Types", "(: NodeType Type)", "(: EdgeType Type)"]
+    for t in _types(nodes):
+        out.append(f"(: {clean(t)} NodeType)")
+    for t in _types(edges):
+        out.append(f"(: {clean(t)} EdgeType)")
+    return "".join(line + "\n" for line in out)
+
+
 def metta_properties_aggregated_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Distributed L7: one text block per node/edge, global sequential
+    """L7: one text block per node/edge, global sequential
     edge ids assigned with ``zipWithIndex`` over the export order (a
-    per-partition-offset pass — no single-partition shuffle). Write
-    with ``df.write.text(dir)`` for a sharded export; concatenated
-    shards equal the driver render (parity-tested). The e{i} global-id
-    deviation from the reference's per-10k-batch reset applies as in
-    the driver version (SURVEY §7.4)."""
+    per-partition-offset pass — no single-partition shuffle). The e{i}
+    global-id deviation from the reference's per-10k-batch reset
+    applies (SURVEY §7.4)."""
     spark = nodes.sparkSession
     node_rdd = _ordered_nodes(nodes).rdd.map(_repr2_node_block)
     edge_rdd = (
@@ -253,49 +247,19 @@ def _record_to_metta(record: dict) -> list[str]:
     return out
 
 
-def _repr3_node_payload(row) -> dict:
-    return {
-        "id": row["id"],
-        "type": row["type"],
-        "properties": json.loads(row["properties"] or "{}"),
-    }
-
-
-def _repr3_edge_payload(row) -> dict:
-    return {
-        "source_id": row["source_id"],
-        "target_id": row["target_id"],
-        "type": row["type"],
-        "properties": json.loads(row["properties"] or "{}"),
-    }
-
-
 def _repr3_block(payload: dict, cnt: int) -> str:
     return "".join(line + "\n" for line in _record_to_metta({cnt: payload}))
 
 
-def to_metta_properties_expanded(
-    nodes: DataFrame, edges: DataFrame, filepath: str
-) -> None:
-    with open(filepath, "w") as f:
-        cnt = 0
-        for row in _ordered_nodes(nodes).toLocalIterator():
-            f.write(_repr3_block(_repr3_node_payload(row), cnt))
-            cnt += 1
-        for row in _ordered_edges(edges).toLocalIterator():
-            f.write(_repr3_block(_repr3_edge_payload(row), cnt))
-            cnt += 1
-
-
 def metta_properties_expanded_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Distributed L8: the global monotone record counter spans nodes
+    """L8: the global monotone record counter spans nodes
     then edges, assigned by one ``zipWithIndex`` over the unified
     ordered record stream (per-partition offsets, no global shuffle)."""
     spark = nodes.sparkSession
     records = (
         _ordered_nodes(nodes)
-        .rdd.map(_repr3_node_payload)
-        .union(_ordered_edges(edges).rdd.map(_repr3_edge_payload))
+        .rdd.map(_record)
+        .union(_ordered_edges(edges).rdd.map(_record))
         .zipWithIndex()
         .map(lambda pair: _repr3_block(pair[0], pair[1]))
     )
@@ -306,58 +270,27 @@ def metta_properties_expanded_text(nodes: DataFrame, edges: DataFrame) -> DataFr
 # L3 — CSV (kgw/_shared/load.py:294-315): excel dialect, QUOTE_ALL,
 # header row, one file per table.
 # --------------------------------------------------------------------------
-def to_csv(df: DataFrame, filepath: str) -> None:
-    import csv as _csv
-
-    cols = NODE_COLS if "id" in df.columns else EDGE_COLS
-    ordered = (
-        _ordered_nodes(df) if "id" in df.columns else _ordered_edges(df)
-    )
-    with open(filepath, "w", newline="") as f:
-        writer = _csv.writer(f, dialect="excel", quoting=_csv.QUOTE_ALL)
-        writer.writerow(cols)
-        for row in ordered.toLocalIterator():
-            writer.writerow([row[c] for c in cols])
+def _csv_line(values) -> str:
+    buf = io.StringIO()
+    csv.writer(buf, dialect="excel", quoting=csv.QUOTE_ALL).writerow(values)
+    return buf.getvalue()  # ends "\r\n"; _strip_nl keeps the "\r"
 
 
-def to_csv_distributed(df: DataFrame, dirpath: str) -> None:
-    """Sharded CSV for scale: same quoting contract, one file per
-    partition (Spark committer handles atomicity)."""
-    (
-        df.write.mode("overwrite")
-        .option("header", True)
-        .option("quoteAll", True)
-        .csv(dirpath)
+def csv_text(df: DataFrame) -> DataFrame:
+    ordered = _ordered(df)
+    return _sectioned_text(
+        df.sparkSession,
+        [(_csv_line(ordered.columns), ordered.rdd.map(_csv_line))],
     )
 
 
 # --------------------------------------------------------------------------
-# L4 — JSONL (kgw/_shared/load.py:318-364): nested properties object.
+# L4 — JSONL (kgw/_shared/load.py:318-364): nested properties object,
+# keys in their stored order.
 # --------------------------------------------------------------------------
-def to_jsonl(df: DataFrame, filepath: str) -> None:
-    cols = NODE_COLS if "id" in df.columns else EDGE_COLS
-    ordered = _ordered_nodes(df) if "id" in df.columns else _ordered_edges(df)
-    with open(filepath, "w") as f:
-        for row in ordered.toLocalIterator():
-            rec = {}
-            for c in cols:
-                rec[c] = (
-                    json.loads(row[c] or "null") if c == "properties" else row[c]
-                )
-            f.write(_jdumps(rec) + "\n")
-
-
-def to_jsonl_distributed(df: DataFrame, dirpath: str) -> None:
-    """Sharded JSONL at scale: JVM-side JSON encoding, properties
-    re-nested from the JSON string without a Python round-trip."""
-    out_cols = NODE_COLS if "id" in df.columns else EDGE_COLS
-    cols = [
-        F.parse_json(F.col(c)).alias(c) if c == "properties" else F.col(c)
-        for c in out_cols
-    ]
-    df.select(F.to_json(F.struct(*cols)).alias("value")).write.mode(
-        "overwrite"
-    ).text(dirpath)
+def jsonl_text(df: DataFrame) -> DataFrame:
+    lines = _ordered(df).rdd.map(lambda r: _jdumps(_record(r, "null")))
+    return _sectioned_text(df.sparkSession, [(None, lines)])
 
 
 # --------------------------------------------------------------------------
@@ -367,17 +300,6 @@ def _sq(s: str | None) -> str:
     if s is None:
         return "NULL"
     return "'" + s.replace("'", "''") + "'"
-
-
-def to_sql_dump(nodes: DataFrame, edges: DataFrame, filepath: str) -> None:
-    with open(filepath, "w") as f:
-        f.write(_SQL_DUMP_NODES_DDL)
-        for r in _ordered_nodes(nodes).toLocalIterator():
-            f.write(_node_insert(r))
-        f.write(_SQL_DUMP_EDGES_DDL)
-        for r in _ordered_edges(edges).toLocalIterator():
-            f.write(_edge_insert(r))
-        f.write(_SQL_DUMP_FOOTER)
 
 
 _SQL_DUMP_NODES_DDL = (
@@ -405,31 +327,21 @@ _SQL_DUMP_FOOTER = (
 )
 
 
-def _node_insert(r) -> str:
-    return (
-        f"INSERT INTO \"nodes\" VALUES({_sq(r['id'])},{_sq(r['type'])},"
-        f"{_sq(r['properties'])});\n"
-    )
-
-
-def _edge_insert(r) -> str:
-    return (
-        f"INSERT INTO \"edges\" VALUES({_sq(r['source_id'])},"
-        f"{_sq(r['target_id'])},{_sq(r['type'])},{_sq(r['properties'])});\n"
-    )
+def _insert(table: str, row) -> str:
+    return f'INSERT INTO "{table}" VALUES({",".join(map(_sq, row))});\n'
 
 
 def sql_dump_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Distributed L2: sqlite-iterdump-format INSERT statements rendered
-    executor-side, DDL/footer as single-row sections. Write with
-    ``df.write.text(dir)``; concatenated shards equal to_sql_dump's
-    byte stream (parity-tested)."""
+    """L2: sqlite-iterdump-format INSERT statements rendered
+    executor-side, DDL/footer as single-row sections."""
     spark = nodes.sparkSession
     return _sectioned_text(
         spark,
         [
-            (_SQL_DUMP_NODES_DDL, _ordered_nodes(nodes).rdd.map(_node_insert)),
-            (_SQL_DUMP_EDGES_DDL, _ordered_edges(edges).rdd.map(_edge_insert)),
+            (_SQL_DUMP_NODES_DDL,
+             _ordered_nodes(nodes).rdd.map(lambda r: _insert("nodes", r))),
+            (_SQL_DUMP_EDGES_DDL,
+             _ordered_edges(edges).rdd.map(lambda r: _insert("edges", r))),
             (_SQL_DUMP_FOOTER, None),
         ],
     )
@@ -456,22 +368,13 @@ def to_sqlite(nodes: DataFrame, edges: DataFrame, db_filepath: str) -> None:
         CREATE INDEX IF NOT EXISTS idx_edges_target ON edges (target_id);
         """
     )
-    batch = []
-    for r in _ordered_nodes(nodes).toLocalIterator():
-        batch.append((r["id"], r["type"], r["properties"]))
-        if len(batch) >= 10_000:
-            cur.executemany("INSERT INTO nodes VALUES (?,?,?)", batch)
-            batch = []
-    if batch:
-        cur.executemany("INSERT INTO nodes VALUES (?,?,?)", batch)
-    batch = []
-    for r in _ordered_edges(edges).toLocalIterator():
-        batch.append((r["source_id"], r["target_id"], r["type"], r["properties"]))
-        if len(batch) >= 10_000:
-            cur.executemany("INSERT INTO edges VALUES (?,?,?,?)", batch)
-            batch = []
-    if batch:
-        cur.executemany("INSERT INTO edges VALUES (?,?,?,?)", batch)
+    # executemany consumes the row iterator lazily: bounded memory
+    cur.executemany(
+        "INSERT INTO nodes VALUES (?,?,?)", _ordered_nodes(nodes).toLocalIterator()
+    )
+    cur.executemany(
+        "INSERT INTO edges VALUES (?,?,?,?)", _ordered_edges(edges).toLocalIterator()
+    )
     conn.commit()
     conn.close()
 
@@ -585,54 +488,38 @@ def _graphml_header(attributes: dict) -> str:
     )
 
 
-def _graphml_node_block(row, attributes: dict) -> str:
-    out = [f'<node id="{_clean_id(row["id"])}">\n']
-    attr = {"_node_type": row["type"]}
+def _graphml_element(kind: str, row, attributes: dict, open_tag: str, close_tag: str) -> str:
+    attr = {f"_{kind}_type": row["type"]}
     for k, v in json.loads(row["properties"] or "{}").items():
-        attr[f"node_{k}"] = v
-    for key, val in attr.items():
-        out.append(f' <data key="{attributes[key]["id"]}">{_clean_val(val)}</data>\n')
-    out.append(" </node>\n")
-    return "".join(out)
+        attr[f"{kind}_{k}"] = v
+    data = "".join(
+        f' <data key="{attributes[key]["id"]}">{_clean_val(val)}</data>\n'
+        for key, val in attr.items()
+    )
+    return open_tag + data + close_tag
+
+
+def _graphml_node_block(row, attributes: dict) -> str:
+    open_tag = f'<node id="{_clean_id(row["id"])}">\n'
+    return _graphml_element("node", row, attributes, open_tag, " </node>\n")
 
 
 def _graphml_edge_block(row, edge_id: int, attributes: dict) -> str:
-    out = [
+    open_tag = (
         f'<edge id="{edge_id}" source="{_clean_id(row["source_id"])}" '
         f'target="{_clean_id(row["target_id"])}">\n'
-    ]
-    attr = {"_edge_type": row["type"]}
-    for k, v in json.loads(row["properties"] or "{}").items():
-        attr[f"edge_{k}"] = v
-    for key, val in attr.items():
-        out.append(f' <data key="{attributes[key]["id"]}">{_clean_val(val)}</data>\n')
-    out.append("</edge>\n")
-    return "".join(out)
+    )
+    return _graphml_element("edge", row, attributes, open_tag, "</edge>\n")
 
 
-GRAPHML_FOOTER = "\n</graph>\n</graphml>\n"
-
-
-def to_graphml(nodes: DataFrame, edges: DataFrame, filepath: str) -> None:
-    attributes = _graphml_attributes(nodes, edges)
-    with open(filepath, "w") as f:
-        f.write(_graphml_header(attributes))
-        for row in _ordered_nodes(nodes).toLocalIterator():
-            f.write(_graphml_node_block(row, attributes))
-        edge_id = 0
-        for row in _ordered_edges(edges).toLocalIterator():
-            f.write(_graphml_edge_block(row, edge_id, attributes))
-            edge_id += 1
-        f.write(GRAPHML_FOOTER)
+_GRAPHML_FOOTER = "\n</graph>\n</graphml>\n"
 
 
 def graphml_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Distributed L5: key discovery is the existing distributed pass
+    """L5: key discovery is a distributed pass
     (_discover_attrs); element rendering runs executor-side with the
     small attribute map shipped in the closure; sequential edge ids via
-    ``zipWithIndex`` over the export order. Write with
-    ``df.write.text(dir)``; concatenated shards equal to_graphml's
-    byte stream (parity-tested)."""
+    ``zipWithIndex`` over the export order."""
     spark = nodes.sparkSession
     attributes = _graphml_attributes(nodes, edges)
     node_rdd = _ordered_nodes(nodes).rdd.map(
@@ -648,6 +535,6 @@ def graphml_text(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         [
             (_graphml_header(attributes), node_rdd),
             (None, edge_rdd),
-            (GRAPHML_FOOTER, None),
+            (_GRAPHML_FOOTER, None),
         ],
     )

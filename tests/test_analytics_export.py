@@ -6,6 +6,7 @@ clean() goldens, statistics key order, export round-trips, balanced
 parentheses, monotone counters.
 """
 
+import io
 import json
 import sqlite3
 import xml.etree.ElementTree as ET
@@ -132,11 +133,16 @@ def _balanced(line: str) -> bool:
     return depth == 0 and not in_str
 
 
+def _write(frame, path) -> str:
+    export.write_text(frame, str(path))
+    return path.read_text()
+
+
 def test_metta_spo(graph, tmp_path):
     nodes, edges = graph
-    p = tmp_path / "kg.metta"
-    export.to_metta_spo(nodes, edges, str(p))
-    lines = p.read_text().splitlines()
+    lines = _write(
+        export.metta_spo_text(nodes, edges), tmp_path / "kg.metta"
+    ).splitlines()
     assert lines[0] == "; Types"
     assert lines[1] == "(: NodeType Type)"
     assert "; Nodes" in lines and "; Edges" in lines
@@ -148,29 +154,30 @@ def test_metta_spo(graph, tmp_path):
 
 
 def test_metta_spo_distributed_matches_driver_render(graph, tmp_path):
+    """The sharded spo export carries all three sections, byte for byte
+    (it once wrote only the edge section)."""
     nodes, edges = graph
-    p = tmp_path / "kg.metta"
-    export.to_metta_spo(nodes, edges, str(p))
-    lines = p.read_text().splitlines()
-    driver_edges = set(lines[lines.index("; Edges") + 1 :])
-    dist = {r.value for r in export.triples_text(edges).collect()}
-    assert dist == driver_edges
+    frame = export.metta_spo_text(nodes, edges)
+    single = _write(frame, tmp_path / "kg.metta")
+    d = tmp_path / "kg_metta"
+    export.write_text(frame, str(d), distributed=True)
+    assert "".join(f.read_text() for f in sorted(d.glob("part-*"))) == single
 
 
 def test_metta_repr2_and_repr3(graph, tmp_path):
     nodes, edges = graph
-    p2 = tmp_path / "kg2.metta"
-    export.to_metta_properties_aggregated(nodes, edges, str(p2))
-    t2 = p2.read_text().splitlines()
+    t2 = _write(
+        export.metta_properties_aggregated_text(nodes, edges), tmp_path / "kg2.metta"
+    ).splitlines()
     assert t2[1] == "(: NodeType Type)" and t2[2] == "(: EdgeType Type)"
     assert any('"has_property"' in ln for ln in t2)
     for ln in t2:
         if not ln.startswith(";"):
             assert _balanced(ln), ln
 
-    p3 = tmp_path / "kg3.metta"
-    export.to_metta_properties_expanded(nodes, edges, str(p3))
-    t3 = p3.read_text().splitlines()
+    t3 = _write(
+        export.metta_properties_expanded_text(nodes, edges), tmp_path / "kg3.metta"
+    ).splitlines()
     # monotone counter property (reference test_workflows.py:296-354)
     counters = []
     for ln in t3:
@@ -183,22 +190,30 @@ def test_metta_repr2_and_repr3(graph, tmp_path):
 
 
 def test_csv_roundtrip(graph, tmp_path):
+    """Both layouts parse with csv.reader: one header, one row per node,
+    and every properties cell is intact JSON."""
     import csv
 
     nodes, edges = graph
-    p = tmp_path / "kg_nodes.csv"
-    export.to_csv(nodes, str(p))
-    with open(p, newline="") as f:
-        rows = list(csv.reader(f))
-    assert rows[0] == ["id", "type", "properties"]
-    assert len(rows) - 1 == nodes.count()
+    frame = export.csv_text(nodes)
+    export.write_text(frame, str(tmp_path / "kg_nodes.csv"))
+    export.write_text(frame, str(tmp_path / "kg_nodes_csv"), distributed=True)
+    for files in (
+        [tmp_path / "kg_nodes.csv"],
+        sorted((tmp_path / "kg_nodes_csv").glob("part-*")),
+    ):
+        text = b"".join(f.read_bytes() for f in files).decode()
+        rows = list(csv.reader(io.StringIO(text, newline="")))
+        assert rows[0] == ["id", "type", "properties"]
+        assert len(rows) - 1 == nodes.count()
+        for row in rows[1:]:
+            assert len(row) == 3, row
+            json.loads(row[2])
 
 
 def test_jsonl_roundtrip(graph, tmp_path):
     nodes, edges = graph
-    p = tmp_path / "kg_edges.jsonl"
-    export.to_jsonl(edges, str(p))
-    lines = p.read_text().splitlines()
+    lines = _write(export.jsonl_text(edges), tmp_path / "kg_edges.jsonl").splitlines()
     assert len(lines) == edges.count()
     rec = json.loads(lines[0])
     assert set(rec) == {"source_id", "target_id", "type", "properties"}
@@ -207,9 +222,7 @@ def test_jsonl_roundtrip(graph, tmp_path):
 
 def test_sql_dump_replays_into_sqlite(graph, tmp_path):
     nodes, edges = graph
-    p = tmp_path / "kg.sql"
-    export.to_sql_dump(nodes, edges, str(p))
-    text = p.read_text()
+    text = _write(export.sql_dump_text(nodes, edges), tmp_path / "kg.sql")
     assert text.startswith("BEGIN TRANSACTION;")
     assert text.rstrip().endswith("COMMIT;")
     conn = sqlite3.connect(":memory:")
@@ -221,7 +234,7 @@ def test_sql_dump_replays_into_sqlite(graph, tmp_path):
 def test_graphml_reparses(graph, tmp_path):
     nodes, edges = graph
     p = tmp_path / "kg.graphml"
-    export.to_graphml(nodes, edges, str(p))
+    export.write_text(export.graphml_text(nodes, edges), str(p))
     ns = {"g": "http://graphml.graphdrawing.org/xmlns"}
     tree = ET.parse(p)
     got_nodes = tree.findall(".//g:node", ns)
@@ -253,58 +266,14 @@ def test_schema_html(graph, tmp_path):
     }
 
 
-def test_jsonl_distributed_matches_driver(graph, tmp_path):
-    nodes, edges = graph
-    p = tmp_path / "kg_nodes.jsonl"
-    export.to_jsonl(nodes, str(p))
-    driver = {ln for ln in p.read_text().splitlines()}
-    d = str(tmp_path / "jsonl_dist")
-    export.to_jsonl_distributed(nodes, d)
-    import glob
-
-    dist = set()
-    for fp in glob.glob(d + "/part-*"):
-        dist.update(open(fp).read().splitlines())
-    assert {json.dumps(json.loads(x), sort_keys=True) for x in dist} == {
-        json.dumps(json.loads(x), sort_keys=True) for x in driver
-    }
-
-
 def test_graphml_distributed_matches_driver(graph, tmp_path):
-    """Concatenated graphml_text shards == to_graphml byte stream
+    """Concatenated graphml shards == the single-file byte stream
     (ordering, sequential edge ids, key table)."""
     nodes, edges = graph
-    p = tmp_path / "kg.graphml"
-    export.to_graphml(nodes, edges, str(p))
-    rows = [r.value for r in export.graphml_text(nodes, edges).collect()]
-    assert "\n".join(rows) + "\n" == p.read_text()  # == .write.text() bytes
-
-
-def test_metta_repr2_distributed_matches_driver(graph, tmp_path):
-    nodes, edges = graph
-    p = tmp_path / "kg2.metta"
-    export.to_metta_properties_aggregated(nodes, edges, str(p))
-    rows = [
-        r.value
-        for r in export.metta_properties_aggregated_text(nodes, edges).collect()
-    ]
-    assert "\n".join(rows) + "\n" == p.read_text()
-
-
-def test_metta_repr3_distributed_matches_driver(graph, tmp_path):
-    nodes, edges = graph
-    p = tmp_path / "kg3.metta"
-    export.to_metta_properties_expanded(nodes, edges, str(p))
-    rows = [
-        r.value
-        for r in export.metta_properties_expanded_text(nodes, edges).collect()
-    ]
-    assert "\n".join(rows) + "\n" == p.read_text()
-
-
-def test_sql_dump_distributed_matches_driver(graph, tmp_path):
-    nodes, edges = graph
-    p = tmp_path / "kg.sql"
-    export.to_sql_dump(nodes, edges, str(p))
-    rows = [r.value for r in export.sql_dump_text(nodes, edges).collect()]
-    assert "\n".join(rows) + "\n" == p.read_text()
+    frame = export.graphml_text(nodes, edges)
+    single = _write(frame, tmp_path / "kg.graphml")
+    d = tmp_path / "kg_graphml"
+    export.write_text(frame, str(d), distributed=True)
+    parts = sorted(d.glob("part-*"))
+    assert parts
+    assert "".join(f.read_text() for f in parts) == single

@@ -40,6 +40,11 @@ def _assert_match(name, sdf: pd.DataFrame, odf: pd.DataFrame):
     assert list(a.columns) == list(b.columns), (name, list(a.columns), list(b.columns))
     assert len(a) == len(b), (name, len(a), len(b))
     for c in a.columns:
+        # an integer Spark column needs an integer oracle column: a float
+        # one (e.g. DuckDB's HUGEINT SUM) compares equal by value below
+        # but differs in type and hash
+        if a[c].dtype.kind in "iu":
+            assert b[c].dtype.kind in "iu", (name, c, a[c].dtype, b[c].dtype)
         for i, (x, y) in enumerate(zip(a[c].tolist(), b[c].tolist())):
             if isinstance(x, (int, float)) and isinstance(y, (int, float)):
                 both_nan = (
