@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
+
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
     fwd = pairs.select(F.col("u"), F.col("v"))
@@ -46,10 +48,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     return via_neighbors.union(self_edges).filter(F.col("u") != F.col("v"))
 
 
-DRIVER_CC_THRESHOLD = 2_000_000
-# byte-based veto for the in-core path: long ids can blow the driver at
-# row counts the row gate allows (VERDICT r1 #6)
-DRIVER_CC_MAX_BYTES = 1 << 30
 # large-star/small-star rounds before the distributed path gives up
 MAX_ITERATIONS = 50
 
@@ -93,7 +91,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     Returns a mapping DataFrame ``(id, canonical_id)`` covering every id
     that appears in ``pairs`` (canonical roots map to themselves).
 
-    Small edge sets (≤ DRIVER_CC_THRESHOLD) are solved exactly in-core
+    Small edge sets (≤ ``incore.DRIVER_MAX_ROWS``) are solved exactly in-core
     on the driver by ``union_find`` — the alias graph is typically
     millions of rows while the corpus is trillions, so one collect beats
     ~2·log(n) distributed shuffle rounds. Larger ones run the
@@ -120,13 +118,14 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 def _connected_components_impl(pairs: DataFrame) -> DataFrame:
     spark = pairs.sparkSession
     n = pairs.count()
-    if n <= DRIVER_CC_THRESHOLD:
+    if n <= incore.DRIVER_MAX_ROWS:
         from kgw_spark.plans.hints import plan_size_bytes
 
         # rows alone don't bound driver memory — veto the in-core path
-        # when Catalyst estimates the pair set beyond 1 GB (stats-less
-        # sources estimate huge and fall through to distributed)
-        if plan_size_bytes(pairs) <= DRIVER_CC_MAX_BYTES:
+        # when Catalyst estimates the pair set beyond the byte budget
+        # (stats-less sources estimate huge and fall through to
+        # distributed)
+        if plan_size_bytes(pairs) <= incore.DRIVER_MAX_BYTES:
             return _mapping_df(spark, union_find(pairs.toLocalIterator()))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     num_partitions = max(1, min(cap, n // 100_000 + 1))
@@ -219,10 +218,10 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
     toLocalIterator) schedules 3-4 separate tiny Spark jobs whose
     scheduling barriers alone cost ~5 s per pipeline run — pure serial
     time that the N→4N scaling ratio pays at every cluster size. The
-    gate is ONE parallel aggregate bounding rows AND bytes, NOT a
-    Catalyst size estimate: arrow-enabled ``createDataFrame`` frames
-    are stats-less LogicalRDDs (sizeInBytes = Long.MaxValue), so a
-    stats gate silently never fires. ``alias_rows`` (driver-resident
+    gate is ``incore.fits_driver``: ONE parallel aggregate bounding
+    rows AND bytes, NOT a Catalyst size estimate (arrow-enabled
+    ``createDataFrame`` frames are stats-less, so a stats gate silently
+    never fires). ``alias_rows`` (driver-resident
     (alias, canonical, score) tuples) skips even that probe. The
     returned mapping carries an explicit broadcast hint — it is
     driver-resident by construction, and without the hint the
@@ -235,20 +234,7 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
 
     if alias_rows is not None:
         return compose_mapping_local(alias_df.sparkSession, alias_rows)
-    # ONE cheap parallel aggregate bounds BOTH budgets — rows AND
-    # bytes — before any driver collect (ADVICE r4 #1): the former
-    # limit().collect() probe ran 3-4 incremental limit jobs (the
-    # scaleUpFactor ramp — measured ~1-3 s of pure serial wall on
-    # every pipeline run at every cluster size) and still pulled up
-    # to 2M full rows to the driver with no byte veto, a driver-OOM
-    # risk for long ids. Catalyst stats can't stand in for the byte
-    # side: arrow createDataFrame frames are stats-less LogicalRDDs
-    # (sizeInBytes = Long.MaxValue).
-    st = alias_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length("alias_id") + F.length("canonical_id")).alias("b"),
-    ).collect()[0]
-    if st["n"] <= DRIVER_CC_THRESHOLD and (st["b"] or 0) + 48 * st["n"] <= DRIVER_CC_MAX_BYTES:
+    if incore.fits_driver(alias_df, "alias_id", "canonical_id"):
         rows = alias_df.select("alias_id", "canonical_id", "score").collect()
         return compose_mapping_local(alias_df.sparkSession, rows)
     return connected_components(alias_pairs(best_candidates(alias_df)))

@@ -11,7 +11,15 @@ with path-doubling stars) this exposes the bounded-round propagation
 itself: radius-k cluster seeds, the per-round convergence profile, and
 the exact primitive a fixed-budget community pass at 100 TB would run.
 
-EXECUTION: Spark plans ``min(<string>)`` as SortAggregate (a mutable
+EXECUTION below the driver budget (``incore.fits_driver`` over the
+pair list stacked with the node ids): one gate aggregate and one Arrow
+collect, then every round is an ``np.minimum.at`` over order-preserving
+int64 codes on the driver (``incore.label_propagation``) — at most 3
+Spark jobs whatever ``rounds`` is. The label domain there is always
+nodes ∪ endpoints, which equals ``distinct(nodes)`` whenever
+``endpoints_covered`` truly holds.
+
+Past the gate: Spark plans ``min(<string>)`` as SortAggregate (a mutable
 var-length min does not fit the UnsafeRow hash-agg buffer), so the
 naive string formulation SORTS the 2|E|-row message stream TWICE per
 round — measured 57-83 executor-CPU-s per 3-round run at sf0.1 vs ~8
@@ -46,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import both_directions
 
 # same gate as pagerank: a (string id, string lbl) row is ~2x a rank
@@ -86,8 +95,9 @@ def min_label_propagation(
     min over undirected neighbors u of label_{i-1}(u))``, over the
     node frame ``nodes`` (column ``id``) and the canonical pair list
     ``pairs`` (``pairs.canonical_pairs``); isolated nodes keep their
-    own id. The dictionary-encoded path runs while the node set fits
-    ``_BCAST_MAX_NODES``, the string path past it; both return
+    own id. Below the driver budget the rounds run in-core; past it
+    the dictionary-encoded path runs while the node set fits
+    ``_BCAST_MAX_NODES``, the string path past that; all three return
     identical rows (equivalence-tested). ``endpoints_covered=True``
     asserts every edge endpoint appears in ``nodes`` (referential
     integrity the caller vouches for — true for any store-built KG,
@@ -98,6 +108,9 @@ def min_label_propagation(
     set it where the invariant genuinely holds."""
     if rounds < 1:
         raise ValueError(f"min_label_propagation needs rounds >= 1, got {rounds}")
+    out = incore.label_propagation(nodes, pairs, rounds)
+    if out is not None:
+        return out
     # label domain = nodes ∪ edge endpoints, every id starting with its
     # own label (the pure-Python replica's convention; endpoints absent
     # from the node frame would otherwise never carry a self-label and

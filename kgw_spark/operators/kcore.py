@@ -8,6 +8,14 @@ integer degree counting over deterministic sets, so the result (node
 id, degree-within-core) is exactly value-oracle-able against a
 pure-Python replica.
 
+EXECUTION below the driver budget (``incore.fits_driver``: at most
+``incore.DRIVER_MAX_ROWS`` pairs and ``incore.DRIVER_MAX_BYTES``): one
+gate aggregate and one Arrow collect of the pair list, then the whole
+peel runs as numpy ``bincount`` degree decrements on the driver
+(``incore.k_core``) — at most 3 Spark jobs whatever the peel depth.
+On small graphs each distributed round's jobs cost planning, codegen
+and scheduling, not data. Past the gate the rounds below run.
+
 EXECUTION (r6 rewrite — incremental degree maintenance): the r5 shape
 re-aggregated degrees over the full 2|E|-row endpoint union and
 anti-join-rewrote (and re-checkpointed) the full pair list EVERY round,
@@ -28,7 +36,10 @@ v loses one degree per (L, v) edge. So:
   twice) is broadcast while it fits; past ``_BCAST_MAX_PEELED`` the
   pair list is COMPACTED (one anti-join rewrite, R resets to empty) —
   i.e. the operator degrades to exactly one r5-style round per gate
-  overflow instead of broadcasting unbounded state;
+  overflow instead of broadcasting unbounded state; R is a lazy union
+  of the per-round frontiers, checkpointed every
+  ``_REMOVED_CHECKPOINT_ROUNDS`` rounds so a deep peel keeps its plan
+  depth bounded;
 - termination = an empty frontier (the frontier count rides the same
   <=|V|-row materialization that updates the degree vector).
 
@@ -40,8 +51,8 @@ interleaved trial (7.2-7.9 s vs 3.6-5.9 s warm) because its ~6 fixed
 encode/decode jobs cannot amortize over a 3-round peel.
 
 Rounds are data-bounded (the peel depth, a.k.a. degeneracy diameter),
-not fixed: ``max_rounds`` is a runaway guard, and hitting it raises
-rather than returning a non-core.
+not fixed: ``max_rounds`` is a runaway guard on both paths, and
+hitting it raises rather than returning a non-core.
 
 At 100 TB: the one pair-sized shuffle is the caller's distinct; every
 round shuffles only frontier-incident decrements (<= frontier
@@ -55,12 +66,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import degrees
 
 # cumulative-removed-set broadcast gate: past this many peeled ids the
 # pair list is compacted (anti-join rewrite) and the set reset, so no
 # broadcast ever exceeds ~tens of MB of ids
 _BCAST_MAX_PEELED = 2_000_000
+# rounds between checkpoints of the removed-set union (plan-depth guard)
+_REMOVED_CHECKPOINT_ROUNDS = 16
 
 
 def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
@@ -70,10 +84,13 @@ def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
     result when no k-core exists."""
     if k < 1:
         raise ValueError(f"k_core needs k >= 1, got {k}")
+    out = incore.k_core(pairs, k, max_rounds)
+    if out is not None:
+        return out
     deg = degrees(pairs).localCheckpoint(eager=True)
     removed: DataFrame | None = None  # cumulative peeled ids (broadcast side)
     n_removed = 0
-    for _ in range(max_rounds):
+    for rnd in range(1, max_rounds + 1):
         # frontier: materialized so the termination count and the
         # decrement joins read the same tiny frame
         low = deg.filter(F.col("degree") < k).select("id").localCheckpoint(eager=True)
@@ -114,13 +131,15 @@ def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         n_removed += n_low
-        # NOT checkpointed: `gone` is a union of the (already
-        # checkpointed) per-round frontiers, so re-evaluating it inside
-        # next round's broadcast builds is a cheap cache-read union,
-        # while a checkpoint here cost one extra job per round; plan
-        # depth grows by one union per round, bounded by the peel depth
-        # and reset at every compaction
+        # checkpointed only every _REMOVED_CHECKPOINT_ROUNDS rounds:
+        # `gone` is a union of the (already checkpointed) per-round
+        # frontiers, so re-evaluating it inside next round's broadcast
+        # builds is a cheap cache-read union, while a checkpoint every
+        # round cost one extra job per round; the periodic checkpoint
+        # bounds the union's plan depth on deep peels
         removed = gone
+        if rnd % _REMOVED_CHECKPOINT_ROUNDS == 0:
+            removed = removed.localCheckpoint(eager=True)
         if n_removed > _BCAST_MAX_PEELED:
             # compact: one bounded anti-join rewrite of the pair list
             # (the r5 round body), then the removed set resets — no

@@ -22,13 +22,20 @@ keeping ANSI mode from throwing and non-ANSI from silently wrapping.
 Both engines derive the same effective scale from the same node count,
 so results remain bit-identical. A pure-Python replica
 (``pagerank_py``) computes those bit-identical results — the oracle.
-Plan shape per iteration: one join edges⋈ranks on the source id, one
-groupBy target, one left join back to the node set; each iteration
-``localCheckpoint``-ed. The out-degree rides inside the rank vector
-(8 bytes/node) instead of being pre-joined onto the edge list — the
-caller's materialized edge frame is scanned as-is every iteration and
-no second copy is materialized (A/B at sf0.1/32 cores: median 3.3 s vs
-4.4 s for the pre-joined-links plan, every interleaved trial
+
+EXECUTION below the driver budget (``incore.fits_driver`` over the
+edge list): one gate aggregate and one Arrow collect, then every
+iteration runs on the driver in the same int64 arithmetic
+(``incore.pagerank``: ``np.add.at`` integer sums, never float
+``bincount`` weights) — at most 3 Spark jobs whatever ``iters`` is.
+
+Past the gate, the plan shape per iteration: one join edges⋈ranks on the
+source id, one groupBy target, one left join back to the node set; each
+iteration ``localCheckpoint``-ed. The out-degree rides inside the rank
+vector (8 bytes/node) instead of being pre-joined onto the edge list —
+the caller's materialized edge frame is scanned as-is every iteration
+and no second copy is materialized (A/B at sf0.1/32 cores: median 3.3 s
+vs 4.4 s for the pre-joined-links plan, every interleaved trial
 disjoint).
 """
 
@@ -36,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgw_spark.operators import incore
 
 
 def effective_scale(n_nodes: int, scale: int, damping_num: int) -> int:
@@ -82,6 +91,9 @@ def pagerank(
     it is scanned every iteration and never materialized here (input
     contract: ``pairs`` module docstring)."""
     edges = edges.select("source_id", "target_id")
+    out = incore.pagerank(edges, iters, damping_num, damping_den, scale)
+    if out is not None:
+        return out
     nodes = _graph_parts(edges).localCheckpoint(eager=True)
     n_nodes = nodes.count()
     scale = effective_scale(n_nodes, scale, damping_num)

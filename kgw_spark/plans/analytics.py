@@ -13,6 +13,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
 from kgw_spark.plans.hints import broadcast_if_small
 
 
@@ -236,14 +237,21 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
     undirected distance. Iterative frontier expansion — per level, two
     directional joins against the pair list (frontier⋈u ∪ frontier⋈v).
 
-    Plan discipline: every level scans the caller-materialized pair
-    list; the frontier is force-broadcast behind an explicit count
-    gate — its count is already known from the previous level's
-    emptiness check, so no level ever shuffles the pair list while the
-    frontier is small — and only the per-level frontier is
-    checkpointed (the visited set is a cheap union of those ≤k tiny
+    Below the driver budget (``incore.fits_driver``) the pair list is
+    collected once and the BFS runs over boolean frontier masks on the
+    driver (``incore.k_hop``) — at most 3 Spark jobs for any ``k``.
+
+    Past the gate, plan discipline: every level scans the
+    caller-materialized pair list; the frontier is force-broadcast
+    behind an explicit count gate — its count is already known from the
+    previous level's emptiness check, so no level ever shuffles the pair
+    list while the frontier is small — and only the per-level frontier
+    is checkpointed (the visited set is a cheap union of those ≤k tiny
     checkpointed frames, not re-checkpointed every round).
     """
+    out = incore.k_hop(pairs, node_id, k)
+    if out is not None:
+        return out
     spark = pairs.sparkSession
     from kgw_spark.session import local_df
 

@@ -90,11 +90,16 @@ def local_df(spark: SparkSession, rows, schema: str) -> "DataFrame":
     broadcast join (alias mappings, CC results, seed frames).
 
     ``schema`` is a DDL string ("id string, n long"); column values are
-    taken positionally from ``rows`` (tuples/lists).
+    taken positionally from ``rows`` (tuples/lists, or the columns of a
+    pyarrow Table — which skips the per-row pandas build, and ships as
+    zero-copy slices of the table).
     """
+    import pyarrow as pa
     from pyspark.sql.types import _parse_datatype_string
 
     st = _parse_datatype_string(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows.rename_columns(st.fieldNames()), schema=st)
     try:
         import pandas as pd
 

@@ -5,7 +5,7 @@ import random
 
 import pytest
 
-from kgw_spark.operators import canon
+from kgw_spark.operators import canon, incore
 from kgw_spark.operators.canon import connected_components
 
 
@@ -44,7 +44,7 @@ def test_driver_and_distributed_agree(spark, monkeypatch):
     driver = {
         r.id: r.canonical_id for r in connected_components(df).collect()
     }
-    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     dist = {r.id: r.canonical_id for r in connected_components(df).collect()}
     assert driver == expected
     assert dist == expected
@@ -52,7 +52,7 @@ def test_driver_and_distributed_agree(spark, monkeypatch):
 
 def test_chain_components(spark, monkeypatch):
     # a long path graph exercises multi-round convergence
-    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     pairs = [(f"c{i}", f"c{i+1}") for i in range(40)]
     df = spark.createDataFrame(pairs, schema="u string, v string")
     out = {r.id: r.canonical_id for r in connected_components(df).collect()}
@@ -78,7 +78,7 @@ def test_compose_mapping_distributed_matches_local(spark, monkeypatch):
     rows += [("func:log", "func:other", 0.1), ("func:logger", "func:none", None)]
     alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
     local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
-    monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
     assert dist == local
     assert local["func:helper0c"] == "func:helper0a" and "func:other" not in local
@@ -172,9 +172,10 @@ def test_min_label_propagation_matches_python(spark, monkeypatch):
         "h": "a", "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "a",
         "x": "x", "y": "x", "iso": "iso",
     }
-    # far side of the node gate: the direct string aggregation with the
-    # shuffled (non-broadcast) message join returns the same rows as
-    # the default dictionary-encoded path checked above
+    # far side of the node gate, on the distributed path: the direct
+    # string aggregation with the shuffled (non-broadcast) message join
+    # returns the same rows as the default path checked above
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     monkeypatch.setattr(communities, "_BCAST_MAX_NODES", 0)
     for rounds in (1, 3):
         got = {
@@ -216,8 +217,10 @@ def test_k_core_matches_python(spark, monkeypatch):
     assert {r.id for r in k_core(pairs, k=3).collect()} == {"a", "b", "c", "d"}
     assert k_core(pairs, k=3).filter("degree != 3").count() == 0
     assert k_core(pairs, k=4).count() == 0
-    # far side of the removed-set broadcast gate: past one peeled id
-    # the pair list is compacted (anti-join rewrite, removed set reset)
+    # far side of the removed-set broadcast gate, on the distributed
+    # path: past one peeled id the pair list is compacted (anti-join
+    # rewrite, removed set reset)
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     monkeypatch.setattr(kcore, "_BCAST_MAX_PEELED", 1)
     for k in (1, 2, 3, 4, 5):
         got = {r.id: r.degree for r in k_core(pairs, k=k).collect()}
@@ -228,11 +231,36 @@ def test_k_core_matches_python(spark, monkeypatch):
         k_core(pairs, k=0)
 
 
-def test_label_prop_endpoints_covered_equivalence(spark):
+def test_k_core_deep_peel_matches_python(spark, monkeypatch):
+    """A distributed peel deeper than the removed-set checkpoint period:
+    a 20-node chain hanging off a triangle peels one node per round for
+    k=2, so the removed-set union is checkpointed mid-peel, and the
+    result still equals the replica (the triangle alone)."""
+    from kgw_spark.operators import kcore
+    from kgw_spark.operators.kcore import k_core, k_core_py
+    from kgw_spark.operators.pairs import canonical_pairs
+
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    chain = [f"c{i:02d}" for i in range(20)]
+    raw = list(zip(chain, chain[1:])) + [
+        (chain[-1], "t0"), ("t0", "t1"), ("t1", "t2"), ("t2", "t0"),
+    ]
+    assert len(chain) > kcore._REMOVED_CHECKPOINT_ROUNDS
+    pairs = canonical_pairs(
+        spark.createDataFrame(raw, "source_id string, target_id string")
+    )
+    got = {r.id: r.degree for r in k_core(pairs, k=2).collect()}
+    assert got == k_core_py(raw, k=2) == {"t0": 2, "t1": 2, "t2": 2}
+
+
+def test_label_prop_endpoints_covered_equivalence(spark, monkeypatch):
     """endpoints_covered=True returns identical labels when the node
-    frame really covers every edge endpoint."""
+    frame really covers every edge endpoint (the flag only shapes the
+    distributed path)."""
     from kgw_spark.operators.communities import min_label_propagation
     from kgw_spark.operators.pairs import canonical_pairs
+
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
 
     raw = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("x", "y")]
     nodes = spark.createDataFrame(

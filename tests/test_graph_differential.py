@@ -2,13 +2,16 @@
 graphs: every undirected operator reads ``canonical_pairs`` of the raw
 edges, pagerank and connected components read the raw directed edges,
 and each result must equal the replica computed from the raw edge
-list."""
+list — on the in-core path below the driver budget and on the
+distributed rounds past it."""
 
 import itertools
+import random
 
 import pytest
+from pyspark.sql.types import _parse_datatype_string
 
-from kgw_spark.operators import canon
+from kgw_spark.operators import canon, incore
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
@@ -33,6 +36,32 @@ GRAPHS = {
          ("w", "x"), ("x", "y"), ("y", "z"), ("z", "w"), ("w", "y")],
         [],
     ),
+}
+
+
+def _random_graph(seed, n_nodes=200, n_edges=600, n_isolated=10):
+    """Seeded random multigraph: uniform endpoint picks (self-loops by
+    chance), then extra exact and reversed duplicates and self-loops;
+    the last ``n_isolated`` ids have no edge. Id prefixes mix case and
+    non-ASCII, and ids are not zero-padded, so string order is not
+    numeric order."""
+    rng = random.Random(seed)
+    ids = [f"{rng.choice('aZé')}{i}" for i in range(n_nodes)]
+    wired = ids[: n_nodes - n_isolated]
+    raw = [(rng.choice(wired), rng.choice(wired)) for _ in range(n_edges)]
+    raw += rng.sample(raw, 20) + [(v, u) for u, v in rng.sample(raw, 20)]
+    raw += [(n, n) for n in rng.sample(wired, 5)]
+    return raw, ids[n_nodes - n_isolated:]
+
+
+GRAPHS.update({f"random_{seed}": _random_graph(seed) for seed in (1, 2, 3)})
+
+# every operator's output schema, the same on both paths
+SCHEMAS = {
+    "k_core": "id string, degree bigint not null",
+    "label_prop": "id string, label string",
+    "k_hop": "id string, hop int",
+    "pagerank": "id string, rank_scaled bigint",
 }
 
 
@@ -86,29 +115,65 @@ def _triangles_py(raw):
     return len(pairs), n_wedges, n_triangles
 
 
-@pytest.mark.parametrize("name", list(GRAPHS))
-def test_operators_match_replicas(spark, name):
+def _frames(spark, name):
     raw, isolated = GRAPHS[name]
     node_ids = sorted({n for e in raw for n in e} | set(isolated))
     edges = spark.createDataFrame(raw, "source_id string, target_id string")
     nodes = spark.createDataFrame([(n,) for n in node_ids], "id string")
-    pairs = canonical_pairs(edges)
+    return raw, node_ids, edges, nodes, canonical_pairs(edges)
+
+
+@pytest.mark.parametrize("path", ["in_core", "distributed"])
+@pytest.mark.parametrize("name", list(GRAPHS))
+def test_operators_match_replicas(spark, monkeypatch, name, path):
+    raw, node_ids, edges, nodes, pairs = _frames(spark, name)
+    if path == "distributed":
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+
+    def rows(op, df):
+        assert df.schema == _parse_datatype_string(SCHEMAS[op]), op
+        return df.collect()
 
     for k in (1, 2, 3):
-        got = {r.id: r.degree for r in k_core(pairs, k=k).collect()}
+        got = {r.id: r.degree for r in rows("k_core", k_core(pairs, k=k))}
         assert got == k_core_py(raw, k=k), k
     for rounds in (1, 3):
-        labels = min_label_propagation(nodes, pairs, rounds=rounds)
-        got = {r.id: r.label for r in labels.collect()}
+        labels = rows("label_prop", min_label_propagation(nodes, pairs, rounds=rounds))
+        got = {r.id: r.label for r in labels}
         assert got == label_propagation_py(node_ids, raw, rounds=rounds), rounds
     got = [(r.u, r.v, r.n_common) for r in common_neighbors(pairs, deg_cap=3, top=10).collect()]
     assert got == common_neighbors_py(raw, deg_cap=3, top=10)
-    start = node_ids[0] if node_ids else "a"
-    got = {r.id: r.hop for r in k_hop(pairs, start, k=2).collect()}
-    assert got == _bfs_py(raw, start, 2)
+    # the first node id (isolated in some graphs) and an edge endpoint
+    starts = {node_ids[0] if node_ids else "a"} | {u for u, _ in raw[:1]}
+    for start in sorted(starts):
+        got = {r.id: r.hop for r in rows("k_hop", k_hop(pairs, start, k=2))}
+        assert got == _bfs_py(raw, start, 2), start
     assert tuple(triangle_count(pairs).first()) == _triangles_py(raw)
-    got = {r.id: r.rank_scaled for r in pagerank(edges, iters=4).collect()}
+    got = {r.id: r.rank_scaled for r in rows("pagerank", pagerank(edges, iters=4))}
     assert got == pagerank_py(raw, iters=4)
+
+
+def test_in_core_operators_run_at_most_three_jobs(spark):
+    """Below the driver budget each iterative operator costs the gate
+    aggregate and one collect — at most 3 Spark jobs, whatever its
+    round count — and its result is read without another job."""
+    raw, node_ids, edges, nodes, pairs = _frames(spark, "random_1")
+    calls = {
+        "k_core": lambda: k_core(pairs, k=3),
+        "label_prop": lambda: min_label_propagation(nodes, pairs, rounds=3),
+        "pagerank": lambda: pagerank(edges, iters=4),
+        "k_hop": lambda: k_hop(pairs, raw[0][0], k=2),
+    }
+    sc = spark.sparkContext
+    for op, call in calls.items():
+        group = f"in_core_jobs_{op}"
+        sc.setJobGroup(group, group)
+        try:
+            assert call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 3, (op, jobs)
 
 
 @pytest.mark.parametrize("path", ["driver", "distributed"])
@@ -116,7 +181,7 @@ def test_operators_match_replicas(spark, name):
 def test_connected_components_match_replica(spark, monkeypatch, name, path):
     raw, _isolated = GRAPHS[name]
     if path == "distributed":
-        monkeypatch.setattr(canon, "DRIVER_CC_THRESHOLD", -1)
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     pairs = spark.createDataFrame(raw, "u string, v string")
     got = {r.id: r.canonical_id for r in canon.connected_components(pairs).collect()}
     assert got == _components_py(raw)

@@ -270,3 +270,39 @@ def test_fused_string_fallback_matches_dict(spark, small_corpus, tmp_path, monke
     a = {tuple(r) for r in dict_res.edges.select(*cols).collect()}
     b = {tuple(r) for r in str_res.edges.select(*cols).collect()}
     assert a == b and len(a) > 0
+
+
+def test_lineage_dict_far_side_commits_same_triples(spark, small_corpus, tmp_path, monkeypatch):
+    """Both sides of the lineage-dictionary gate commit the same triples
+    digest, equal to the generator's ground truth. The corpus is read
+    from parquet so Catalyst knows its size and the default fused run
+    really takes the dictionary path (a ``createDataFrame`` corpus is
+    stats-less and never does); the gate at -1 forces the string path."""
+    import hashlib
+
+    import kgw_spark.plans.pipeline as P
+    from kgw_spark.model import CORPUS_SCHEMA
+    from kgw_spark.plans.hints import plan_size_bytes
+
+    rows, truth = small_corpus
+    corpus_df(spark, rows).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.schema(CORPUS_SCHEMA).parquet(str(tmp_path / "corpus"))
+    assert plan_size_bytes(corpus) <= P.LINEAGE_DICT_MAX_CORPUS_BYTES
+    adf = alias_df_from_truth(spark, truth)
+
+    def digest(triples) -> str:
+        lines = "".join(f"{s}\t{p}\t{o}\n" for s, p, o in sorted(triples))
+        return hashlib.sha256(lines.encode()).hexdigest()
+
+    def committed_digest(name: str) -> str:
+        store = TableStore(str(tmp_path / name))
+        run_pipeline(
+            spark, corpus, adf, store,
+            input_fingerprint="x", materialize_intermediate=False,
+        )
+        edges = triple_view(store.read(spark, "edges")).collect()
+        return digest((r.subj, r.pred, r.obj) for r in edges)
+
+    default = committed_digest("dict")
+    monkeypatch.setattr(P, "LINEAGE_DICT_MAX_CORPUS_BYTES", -1)
+    assert committed_digest("string") == default == digest(truth.triples)

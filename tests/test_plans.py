@@ -275,10 +275,14 @@ def test_neighborhood_among_join_is_broadcast(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_k_hop_frontier_joins_are_broadcast(spark):
+def test_k_hop_frontier_joins_are_broadcast(spark, monkeypatch):
     """Per-level frontier joins against the session pair list use
     broadcast (gated on the known frontier count) — no full pair-list
-    shuffle at any level."""
+    shuffle at any level. Pinned to the distributed path: the in-core
+    result is a LocalRelation with no joins to check."""
+    from kgw_spark.operators import incore
+
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     out = analytics.k_hop(KG.kg_pairs(spark, SF), "customer:1", k=2)
     p = plan(out)
     assert "SortMergeJoin" not in p
