@@ -6,7 +6,9 @@ MapReduce and Beyond", SoCC 2014 — public paper; converges in
 O(log n) rounds, each round pure DataFrame groupBy + self-join).
 Each round is ``localCheckpoint()``-ed to cut lineage, and convergence
 is detected by edge-set stability — the "iterative DataFrame self-joins
-with checkpointed convergence" the north rule requires.
+with checkpointed convergence" the north rule requires. Below the
+driver budget the same components come from one numpy kernel on the
+driver (``incore.components``).
 
 Canonical id convention: lexicographic minimum of the component
 (documented deviation from the reference's order-dependent first-seen
@@ -52,81 +54,29 @@ def _small_star(e: DataFrame) -> DataFrame:
 MAX_ITERATIONS = 50
 
 
-def union_find(pairs) -> dict[str, str]:
-    """In-core union-find over ``(a, b)`` equivalence pairs: every id of
-    a non-identity pair → the lexicographically smallest id of its
-    component. Identity pairs are no-ops (the distributed path drops
-    them too)."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in pairs:
-        if a == b:
-            continue
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in list(parent)}
-
-
-def _mapping_df(spark, mapping: dict[str, str]) -> DataFrame:
-    from kgw_spark.session import local_df
-
-    # LocalRelation (not a parallelized python RDD): broadcasting the
-    # mapping then costs zero tasks and carries real Catalyst stats
-    return local_df(spark, list(mapping.items()), "id string, canonical_id string")
-
-
 def connected_components(pairs: DataFrame) -> DataFrame:
     """``pairs(u, v)``: undirected equivalence edges between entity ids.
 
     Returns a mapping DataFrame ``(id, canonical_id)`` covering every id
-    that appears in ``pairs`` (canonical roots map to themselves).
+    of a non-identity pair (canonical roots map to themselves).
 
-    Small edge sets (≤ ``incore.DRIVER_MAX_ROWS``) are solved exactly in-core
-    on the driver by ``union_find`` — the alias graph is typically
+    Input contract (``pairs.py``): the caller materializes; this reads
+    ``pairs`` at most three times. Below the driver budget
+    (``incore.fits_driver``) the components are solved in-core by
+    ``incore.connected_components`` — the alias graph is typically
     millions of rows while the corpus is trillions, so one collect beats
-    ~2·log(n) distributed shuffle rounds. Larger ones run the
-    distributed large-star/small-star iteration with parallelism sized
-    to the edge set, not the session default — empty-task churn at
+    ~2·log(n) distributed shuffle rounds. Past it, or when an id is
+    null (the distributed ``u != v`` filter drops that pair), the
+    large-star/small-star iteration runs with parallelism sized to the
+    edge set, not the session default — empty-task churn at
     session-level partition counts costs more than the data (one
     partition per ~100k edges).
     """
-    # the pair set is consumed at least twice (sizing count + either the
-    # driver iterate or the first symmetrize) and its lineage is often
-    # the expensive part (e.g. a full LSH verify pipeline feeding dedup
-    # clustering — recomputing it doubled that query's wall); cache it
-    # for the duration of this call
-    pairs = pairs.persist()
-    try:
-        return _connected_components_impl(pairs)
-    finally:
-        # both exits (driver union-find, distributed) end with data
-        # materialized off the pair lineage (local rows / eager
-        # localCheckpoint), so the cache is releasable (ADVICE r4 #3)
-        pairs.unpersist()
-
-
-def _connected_components_impl(pairs: DataFrame) -> DataFrame:
+    out = incore.connected_components(pairs)
+    if out is not None:
+        return out
     spark = pairs.sparkSession
     n = pairs.count()
-    if n <= incore.DRIVER_MAX_ROWS:
-        from kgw_spark.plans.hints import plan_size_bytes
-
-        # rows alone don't bound driver memory — veto the in-core path
-        # when Catalyst estimates the pair set beyond the byte budget
-        # (stats-less sources estimate huge and fall through to
-        # distributed)
-        if plan_size_bytes(pairs) <= incore.DRIVER_MAX_BYTES:
-            return _mapping_df(spark, union_find(pairs.toLocalIterator()))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     num_partitions = max(1, min(cap, n // 100_000 + 1))
     saved = spark.conf.get("spark.sql.shuffle.partitions")
@@ -182,26 +132,28 @@ def compose_mapping_local(spark, rows) -> DataFrame:
     curated dictionary loaded from a file — and what ``compose_mapping``
     collects when its budget probe passes). Runs disambiguation (best
     candidate per alias: score desc with None ranked last, canonical
-    asc) and union-find (lexicographic-min representative) with ZERO
-    Spark jobs, returning the broadcast-hinted mapping frame. Callers
-    that already hold the rows (pipelines fed from a dictionary file)
-    should pass them via ``run_pipeline(alias_local=...)`` — the probe
-    aggregate + re-collect round-trip is pure serial wall the N→4N
-    scaling ratio pays at every cluster size."""
-    best: dict[str, tuple[float, str]] = {}
+    asc) and the ``incore.components`` kernel (lexicographic-min
+    representative) with ZERO Spark jobs, returning the broadcast-hinted
+    mapping frame. A winning pair with a null id unions nothing, as on
+    the distributed path. Callers that already hold the rows (pipelines
+    fed from a dictionary file) should pass them via
+    ``run_pipeline(alias_local=...)`` — the probe aggregate + re-collect
+    round-trip is pure serial wall on every pipeline run."""
+    best: dict[str, tuple[float, bool, str]] = {}
     for alias, canon, score in rows:
-        # None score ranks below every real score — identical to the
-        # generic window path's F.desc nulls-last (ADVICE r4 #2)
-        cand = (float("inf") if score is None else -score, canon)
+        # None score ranks below every real score and a None canonical
+        # above every real one — the generic window path's F.desc
+        # nulls-last and F.asc nulls-first
+        cand = (float("inf") if score is None else -score, canon is not None, canon)
         cur = best.get(alias)
         if cur is None or cand < cur:
             best[alias] = cand
-    mapping = union_find((alias, canon) for alias, (_negscore, canon) in best.items())
-    # LocalRelation: a plain createDataFrame(list) here scheduled a
-    # cores-wide python job (~2 s serial wall on EVERY pipeline run at
-    # every cluster size — measured as "job 0" in the r4 scaling
-    # probes) just to pickle 34 rows through python workers
-    return F.broadcast(_mapping_df(spark, mapping))
+    win = [(a, c) for a, (*_key, c) in best.items() if a is not None and c is not None]
+    u, v, ids = incore.factorize([a for a, _ in win], [c for _, c in win])
+    # broadcast of a LocalRelation: zero tasks, where a plain
+    # createDataFrame(list) schedules a cores-wide python job on every
+    # pipeline run just to pickle a few dozen rows
+    return F.broadcast(incore.component_mapping(spark, u, v, ids))
 
 
 def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
@@ -214,10 +166,9 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
 
     While the alias dictionary fits the driver budget, the whole
     disambiguate+union runs in-core (``compose_mapping_local``): the
-    generic path (window row_number → persist → count →
-    toLocalIterator) schedules 3-4 separate tiny Spark jobs whose
-    scheduling barriers alone cost ~5 s per pipeline run — pure serial
-    time that the N→4N scaling ratio pays at every cluster size. The
+    generic path (window row_number → ``connected_components``)
+    schedules several separate tiny Spark jobs whose scheduling
+    barriers are pure serial time on every pipeline run. The
     gate is ``incore.fits_driver``: ONE parallel aggregate bounding
     rows AND bytes, NOT a Catalyst size estimate (arrow-enabled
     ``createDataFrame`` frames are stats-less, so a stats gate silently

@@ -20,33 +20,29 @@ nodes ∪ endpoints, which equals ``distinct(nodes)`` whenever
 ``endpoints_covered`` truly holds.
 
 Past the gate: Spark plans ``min(<string>)`` as SortAggregate (a mutable
-var-length min does not fit the UnsafeRow hash-agg buffer), so the
-naive string formulation SORTS the 2|E|-row message stream TWICE per
-round — measured 57-83 executor-CPU-s per 3-round run at sf0.1 vs ~8
-for the same-shape integer PageRank. While the node set fits the
-broadcast budget, the LABEL payload is therefore DICTIONARY-ENCODED to
-an order-preserving long (min(rank) == rank(min) by order
-isomorphism): every round's aggregate is then ``min(<long>)`` — a
-fixed-width buffer, hence HashAggregate — while the grouping key stays
-the string id (var-length KEYS hash-aggregate fine; only the BUFFER
-had to become fixed-width, which is why the r5 shape's full pair-list
-encode and id decode were dead weight and were dropped in r6). The
-final labels decode through one broadcast join. Same result,
-bit-for-bit (equivalence-tested both paths). Past the gate the exact
-string path below runs unchanged — the standard dictionary-encoding
-trade at cluster scale would shard the dictionary instead
-(range-partitioned rank is already how it is built here).
+var-length min does not fit the UnsafeRow hash-agg buffer), so a naive
+string formulation SORTS the 2|E|-row message stream TWICE per round —
+measured 57-83 executor-CPU-s per 3-round run at sf0.1 vs ~8 for the
+same-shape integer PageRank. The LABEL payload is therefore
+DICTIONARY-ENCODED to an order-preserving long (min(rank) == rank(min)
+by order isomorphism): every round's aggregate is then ``min(<long>)``
+— a fixed-width buffer, hence HashAggregate — while the grouping key
+stays the string id (var-length KEYS hash-aggregate fine; only the
+BUFFER has to be fixed-width). The final labels decode through one
+join. Same result, bit-for-bit (equivalence-tested).
 
-Plan shape per round (the measured-best variant of the pagerank-style
-iterative shape): one join edges⋈labels on the neighbor id producing
-messages, then self-rows ∪ messages through ONE min-aggregate shuffled
-by node id (partial map-side min — the shuffle carries ≤|V| rows
-regardless of |E|), each round ``localCheckpoint``-ed so plan depth
-stays O(1) in ``rounds``. While the label vector fits the broadcast
-budget it ships to the edge partitions instead of shuffling the edge
-set every round; past the gate the message join falls back to a
-hash-partitioned shuffle (of the checkpointed pair list, never the
-full edge derivation).
+Plan shape per round: one join edges⋈labels on the neighbor id
+producing messages, then self-rows ∪ messages through ONE min-aggregate
+shuffled by node id (partial map-side min — the shuffle carries ≤|V|
+rows regardless of |E|; A/B-measured at sf0.1 on 32 cores against a
+two-join nbmin + left-join-least update: 4.1 s vs 4.8 s warm, one
+broadcast build per round not two), each round ``localCheckpoint``-ed so plan
+depth stays O(1) in ``rounds``. While the node set fits
+``_BCAST_MAX_NODES`` the label vector (and the decode dictionary)
+ships to the edge partitions instead of shuffling the edge set every
+round; past it the message join falls back to a hash-partitioned
+shuffle (of the checkpointed pair list, never the full edge
+derivation).
 """
 
 from __future__ import annotations
@@ -57,8 +53,9 @@ from pyspark.sql import functions as F
 from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import both_directions
 
-# same gate as pagerank: a (string id, string lbl) row is ~2x a rank
-# row, so halve the node budget
+# broadcast gate of the label vector; pagerank's is 3M nodes, and a
+# (string id, long label) row plus the decode dictionary's (long, string)
+# row are ~2x a rank row, so halve it
 _BCAST_MAX_NODES = 1_500_000
 
 
@@ -95,10 +92,9 @@ def min_label_propagation(
     min over undirected neighbors u of label_{i-1}(u))``, over the
     node frame ``nodes`` (column ``id``) and the canonical pair list
     ``pairs`` (``pairs.canonical_pairs``); isolated nodes keep their
-    own id. Below the driver budget the rounds run in-core; past it
-    the dictionary-encoded path runs while the node set fits
-    ``_BCAST_MAX_NODES``, the string path past that; all three return
-    identical rows (equivalence-tested). ``endpoints_covered=True``
+    own id. Below the driver budget the rounds run in-core, past it as
+    dictionary-encoded DataFrame rounds; both return identical rows
+    (equivalence-tested). ``endpoints_covered=True``
     asserts every edge endpoint appears in ``nodes`` (referential
     integrity the caller vouches for — true for any store-built KG,
     whose node table is derived from the edge endpoints): the label
@@ -113,13 +109,11 @@ def min_label_propagation(
         return out
     # label domain = nodes ∪ edge endpoints, every id starting with its
     # own label (the pure-Python replica's convention; endpoints absent
-    # from the node frame would otherwise never carry a self-label and
-    # the two execution paths below could disagree on them);
+    # from the node frame would otherwise never carry a self-label);
     # endpoints_covered skips the 2|E|-row union legs (docstring).
     # The domain distinct and the rank dictionary are ONE fused
     # range-shuffle (_order_rank dedups in place), materialized once:
-    # the gate count, round-0 labels, and the decode all re-read it —
-    # the string path simply ignores the rank column.
+    # the gate count, round-0 labels, and the decode all re-read it.
     ids_raw = nodes.select("id")
     if not endpoints_covered:
         ids_raw = ids_raw.union(pairs.select(F.col("u").alias("id"))).union(
@@ -127,52 +121,26 @@ def min_label_propagation(
         )
     parts = pairs.sparkSession.sparkContext.defaultParallelism
     rank = _order_rank(ids_raw, parts).localCheckpoint(eager=True)
-    if rank.count() <= _BCAST_MAX_NODES:
-        return _dict_rounds(pairs, rank, rounds)
-    labels = rank.select("id").withColumn("label", F.col("id"))
-    return _rounds_loop(both_directions(pairs), labels, rounds, bcast=False)
+    bcast = rank.count() <= _BCAST_MAX_NODES
 
+    def hint(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if bcast else df
 
-def _rounds_loop(und: DataFrame, labels: DataFrame, rounds: int, bcast: bool) -> DataFrame:
-    """The shared round body: neighbor messages unioned with the self
-    rows, ONE min-aggregate (map-side partial min bounds the shuffle at
-    ≤|V| rows) — A/B-measured at sf0.1/32 lanes against the two-join
-    (nbmin + left-join-least) update: 4.1 s vs 4.8 s warm, one
-    broadcast build per round not two. Both callers pass ``labels`` as
-    a cheap projection of the already-checkpointed rank dictionary, so
-    no round-0 materialization is needed here."""
+    # label_0 = own rank, for EVERY ranked id (nodes ∪ endpoints); each
+    # round's min-aggregate is then min(<long>), a HashAggregate
+    und = both_directions(pairs)
+    labels = rank.select("id", F.col("r").alias("label"))
     for _ in range(rounds):
-        lbl = F.broadcast(labels) if bcast else labels
-        msgs = und.join(lbl, und["y"] == lbl["id"]).select(
-            F.col("x").alias("id"), "label"
-        )
+        lbl = hint(labels)
+        msgs = und.join(lbl, und["y"] == lbl["id"]).select(F.col("x").alias("id"), "label")
         labels = (
             labels.union(msgs)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=True)
         )
-    return labels
-
-
-def _dict_rounds(pairs: DataFrame, rank: DataFrame, rounds: int) -> DataFrame:
-    """Dictionary-encoded rounds — r6 shape: only the LABEL payload is
-    encoded to order-preserving longs; node keys stay strings. The
-    hash-agg obstruction was never the grouping KEY (var-length keys
-    hash-aggregate fine), only ``min(<string>)``'s var-length agg
-    BUFFER — so ``min(<long label>)`` grouped by the string id is
-    already a HashAggregate, and the r5 plan's pair-list encode (two
-    broadcast joins + a second |E|-row checkpoint) and the id-decode
-    join at the end bought nothing. ``rank`` is the caller's
-    checkpointed (id, r) dictionary over nodes ∪ endpoints."""
-    # label_0 = own rank, for EVERY ranked id (nodes ∪ endpoints) —
-    # matches the string path's output domain exactly
-    labels_i = rank.select("id", F.col("r").alias("label"))
-    out = _rounds_loop(both_directions(pairs), labels_i, rounds, bcast=True)
-    dec_lb = rank.select(F.col("r").alias("label"), F.col("id").alias("_lb_s"))
-    return out.join(F.broadcast(dec_lb), "label").select(
-        "id", F.col("_lb_s").alias("label")
-    )
+    dec = rank.select(F.col("r").alias("label"), F.col("id").alias("_lb_s"))
+    return labels.join(hint(dec), "label").select("id", F.col("_lb_s").alias("label"))
 
 
 def label_propagation_py(

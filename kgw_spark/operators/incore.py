@@ -1,13 +1,11 @@
 """In-core graph kernels below one driver-budget gate.
 
-The iterative graph operators (``kcore.k_core``,
+The graph operators (``canon.connected_components``, ``kcore.k_core``,
 ``communities.min_label_propagation``, ``pagerank.pagerank``,
 ``analytics.k_hop``) spend their time on a small graph planning,
 code-generating and scheduling one Spark job after another, not
 computing: every round is a handful of jobs over data that a single
-driver process holds in a few MB. ``canon.connected_components``
-already solves small graphs on the driver; this module extends that
-policy to the four iterative operators.
+driver process holds in a few MB.
 
 The gate (``fits_driver``) is ONE parallel aggregate bounding rows AND
 bytes of a two-column id list. Under it the list arrives in one Arrow
@@ -19,6 +17,8 @@ runs every round on the codes. Each kernel returns a LocalRelation
 (``session.local_df`` of a pyarrow Table) with the operator's
 distributed schema, so callers see the same frame either way. Past the
 gate the operator runs its distributed rounds unchanged.
+``canon.compose_mapping_local`` feeds its driver-resident alias pairs
+to the same components kernel, skipping the gate and the collect.
 
 The kernels are independent of the pure-Python ``*_py`` replicas,
 which stay the tests' oracles for both paths.
@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 from kgw_spark.session import local_df
 
 # driver budget of one collected id list: rows, and bytes of id text
-# plus a fixed per-row overhead (read by canon's compose_mapping and
-# connected_components too)
+# plus a fixed per-row overhead (canon's compose_mapping gates its alias
+# collect on it too)
 DRIVER_MAX_ROWS = 2_000_000
 DRIVER_MAX_BYTES = 1 << 30
 
@@ -55,27 +55,78 @@ def fits_driver(df: DataFrame, a: str, b: str) -> bool:
     return st["n"] <= DRIVER_MAX_ROWS and (st["b"] or 0) + 48 * st["n"] <= DRIVER_MAX_BYTES
 
 
-def _collect_codes(df: DataFrame, a: str, b: str):
-    """``(codes_a, codes_b, ids)`` for the string columns ``a``, ``b``
-    of ``df``: ``ids`` is the sorted distinct id array and
-    ``ids[codes_a[i]]`` is row i's ``a``. None past the driver budget,
-    and None for a null id (factorize codes it -1), which leaves Spark's
-    null semantics to the distributed path."""
-    if not fits_driver(df, a, b):
-        return None
-    pdf = df.select(a, b).toPandas()
-    n = len(pdf)
+def factorize(a, b):
+    """``(codes_a, codes_b, ids)`` for the equal-length id arrays ``a``,
+    ``b``: ``ids`` is the sorted distinct id array and ``ids[codes_a[i]]``
+    is ``a[i]``. None for a null id (factorize codes it -1)."""
     codes, ids = pd.factorize(
-        np.concatenate([pdf[a].to_numpy(object), pdf[b].to_numpy(object)]), sort=True
+        np.concatenate([np.asarray(a, object), np.asarray(b, object)]), sort=True
     )
     if (codes < 0).any():
         return None
-    return codes[:n], codes[n:], ids
+    return codes[: len(a)], codes[len(a):], ids
+
+
+def _collect_codes(df: DataFrame, a: str, b: str):
+    """``factorize`` of the string columns ``a``, ``b`` of ``df``, read
+    in one Arrow collect. None past the driver budget, and None for a
+    null id, which leaves Spark's null semantics to the distributed
+    path."""
+    if not fits_driver(df, a, b):
+        return None
+    pdf = df.select(a, b).toPandas()
+    return factorize(pdf[a].to_numpy(object), pdf[b].to_numpy(object))
 
 
 def _both_ways(u, v):
     """Each undirected pair as two directed ``x → y`` arcs."""
     return np.concatenate([u, v]), np.concatenate([v, u])
+
+
+def components(u, v, n: int):
+    """Component label of every code in ``range(n)`` — the smallest
+    code of its component — over the undirected arcs ``u[i] — v[i]``.
+    Each round hooks every root to the smallest root across its arcs
+    (``np.minimum.at``; roots only ever hook lower, so no cycle forms),
+    then pointer-jumps to a fixpoint, so every code points at its root.
+    Arcs whose endpoints share a root stay so and are dropped; the loop
+    ends when none is left."""
+    x, y = _both_ways(u, v)
+    root = np.arange(n)
+    while True:
+        rx, ry = root[x], root[y]
+        live = rx != ry
+        if not live.any():
+            return root
+        x, y = x[live], y[live]
+        np.minimum.at(root, rx[live], ry[live])
+        while True:
+            nxt = root[root]
+            if np.array_equal(nxt, root):
+                break
+            root = nxt
+
+
+def component_mapping(spark, u, v, ids) -> DataFrame:
+    """``(id, canonical_id)`` over the ids of the non-identity pairs
+    ``(ids[u[i]], ids[v[i]])``, each mapped to its component's smallest
+    id; an id in identity pairs only is absent, as on the distributed
+    path."""
+    arc = u != v
+    keep = np.zeros(len(ids), bool)
+    keep[u[arc]] = keep[v[arc]] = True
+    root = components(u, v, len(ids))
+    out = pa.table({"id": ids[keep], "canonical_id": ids[root[keep]]})
+    return local_df(spark, out, "id string, canonical_id string")
+
+
+def connected_components(pairs: DataFrame) -> DataFrame | None:
+    """``canon.connected_components`` in-core over the ``(u, v)`` pair
+    frame. None past the driver budget."""
+    got = _collect_codes(pairs, "u", "v")
+    if got is None:
+        return None
+    return component_mapping(pairs.sparkSession, *got)
 
 
 def k_core(pairs: DataFrame, k: int, max_rounds: int) -> DataFrame | None:

@@ -1,7 +1,7 @@
 """Entity linking: resolve raw mention ids through an alias dictionary.
 
 The broadcast path is ``canon.compose_mapping`` + ``canon.canonicalize``:
-disambiguation and union-find are composed into one ``(id,
+disambiguation and connected components are composed into one ``(id,
 canonical_id)`` mapping, which is broadcast-joined on subj and obj — no
 shuffle, immune to skew (hot entities hit every executor's local hash
 map). This is the scale-up of the reference's in-driver annotation-dict

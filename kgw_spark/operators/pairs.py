@@ -15,10 +15,12 @@ several times per call, so they never derive, persist or checkpoint
 their input; only their own per-round state is checkpointed.
 ``pagerank.pagerank`` follows the same contract over a directed
 ``(source_id, target_id)`` frame with multi-edges intact (out-degree
-counts edge instances), such as ``tpch_kg.kg_edges2``.
+counts edge instances), such as ``tpch_kg.kg_edges2``, and
+``canon.connected_components`` over any ``(u, v)`` equivalence-pair
+frame, duplicates and self-pairs allowed.
 
-The iterative operators (k-core, label propagation, k-hop, pagerank)
-first run one gate aggregate over that input (``incore.fits_driver``:
+The iterative operators (connected components, k-core, label
+propagation, k-hop, pagerank) first run one gate aggregate over that input (``incore.fits_driver``:
 rows and id bytes against the driver budget). Below it they read the
 input ONCE, as one Arrow collect, and iterate on the driver; past it
 they scan it every round as above (as does an input with a null id).

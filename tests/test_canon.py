@@ -1,4 +1,4 @@
-"""Connected components: driver union-find vs distributed
+"""Connected components: the in-core kernel vs distributed
 large-star/small-star must agree on random graphs."""
 
 import random
@@ -71,17 +71,22 @@ def test_compose_mapping_distributed_matches_local(spark, monkeypatch):
     """The generic window→CC path of ``compose_mapping`` (forced past the
     driver gate) equals the in-core ``compose_mapping_local`` on the
     corpus alias dictionary, plus a losing and a null-score candidate
-    that must not union components."""
+    that must not union components, and null-canonical candidates —
+    one winning on score, one tied with a real candidate (nulls sort
+    first) — whose alias then stays out of every component."""
     from kgw_spark.sources.corpus import build_alias_dict
 
     rows = [(a, c, float(s)) for a, (c, s) in build_alias_dict(12).items()]
     rows += [("func:log", "func:other", 0.1), ("func:logger", "func:none", None)]
+    rows += [("func:nullwin", "func:x", 0.3), ("func:nullwin", None, 0.9)]
+    rows += [("func:nulltie", "func:y", 0.5), ("func:nulltie", None, 0.5)]
     alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
     local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
     assert dist == local
     assert local["func:helper0c"] == "func:helper0a" and "func:other" not in local
+    assert not {"func:nullwin", "func:x", "func:nulltie", "func:y"} & local.keys()
 
 
 def test_pagerank_matches_python_replica_exactly(spark):
@@ -172,9 +177,9 @@ def test_min_label_propagation_matches_python(spark, monkeypatch):
         "h": "a", "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "a",
         "x": "x", "y": "x", "iso": "iso",
     }
-    # far side of the node gate, on the distributed path: the direct
-    # string aggregation with the shuffled (non-broadcast) message join
-    # returns the same rows as the default path checked above
+    # far side of the node gate, on the distributed path: the
+    # dictionary-encoded rounds with the shuffled (non-broadcast)
+    # message and decode joins return the same rows as checked above
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     monkeypatch.setattr(communities, "_BCAST_MAX_NODES", 0)
     for rounds in (1, 3):

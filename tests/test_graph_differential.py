@@ -62,7 +62,12 @@ SCHEMAS = {
     "label_prop": "id string, label string",
     "k_hop": "id string, hop int",
     "pagerank": "id string, rank_scaled bigint",
+    "connected_components": "id string, canonical_id string",
 }
+
+# a pair with a null id unions nothing: the distributed path's u != v
+# filter drops it, and the in-core path hands it to the distributed one
+NULL_IDS = [("a", "b"), ("b", None), (None, "c"), ("c", "d"), (None, None), ("e", "e")]
 
 
 def _adjacency(raw):
@@ -163,6 +168,7 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
         "label_prop": lambda: min_label_propagation(nodes, pairs, rounds=3),
         "pagerank": lambda: pagerank(edges, iters=4),
         "k_hop": lambda: k_hop(pairs, raw[0][0], k=2),
+        "connected_components": lambda: canon.connected_components(pairs),
     }
     sc = spark.sparkContext
     for op, call in calls.items():
@@ -177,11 +183,13 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
 
 
 @pytest.mark.parametrize("path", ["driver", "distributed"])
-@pytest.mark.parametrize("name", list(GRAPHS))
+@pytest.mark.parametrize("name", [*GRAPHS, "null_ids"])
 def test_connected_components_match_replica(spark, monkeypatch, name, path):
-    raw, _isolated = GRAPHS[name]
+    raw = NULL_IDS if name == "null_ids" else GRAPHS[name][0]
     if path == "distributed":
         monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     pairs = spark.createDataFrame(raw, "u string, v string")
-    got = {r.id: r.canonical_id for r in canon.connected_components(pairs).collect()}
-    assert got == _components_py(raw)
+    out = canon.connected_components(pairs)
+    assert out.schema == _parse_datatype_string(SCHEMAS["connected_components"])
+    got = {r.id: r.canonical_id for r in out.collect()}
+    assert got == _components_py([e for e in raw if None not in e])

@@ -89,19 +89,21 @@ def test_informative_never_raises(value):
 
 @given(st.lists(st.tuples(st.integers(0, 50), st.integers(0, 50)), max_size=60))
 @settings(max_examples=100, deadline=None)
-def test_union_find_partition_properties(pairs):
-    """Driver union-find (``canon.union_find``): mapping is idempotent,
-    canonical ids are component minima, and connected nodes share a
-    canonical id."""
-    from kgw_spark.operators.canon import union_find
+def test_components_kernel_partition_properties(pairs):
+    """In-core components kernel (``incore.components``): the labelling
+    is idempotent, labels are component minima, and connected nodes
+    share a label."""
+    import numpy as np
 
-    mapping = union_find(pairs)
-    for x, c in mapping.items():
-        assert mapping.get(c, c) == c  # canonical maps to itself
+    from kgw_spark.operators.incore import components
+
+    uv = np.array(pairs, np.int64).reshape(-1, 2)
+    label = components(uv[:, 0], uv[:, 1], 51)
+    for x, c in enumerate(label):
+        assert label[c] == c  # canonical maps to itself
         assert c <= x  # min convention
     for a, b in pairs:
-        if a != b:
-            assert mapping[a] == mapping[b]
+        assert label[a] == label[b]
 
 
 @given(
