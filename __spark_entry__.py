@@ -1,18 +1,18 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract of the engine: entry point, query suite and oracles.
 
 ``entry(spark)`` runs the flagship A4 schema query on sf0.001.
 ``queries()`` exposes one entry per implemented operator from
 SURVEY.md §2 (plus the training-data operator suite); each callable
-takes (spark, sf_dir) and returns a DataFrame. ``oracle_sql()`` gives
-a DuckDB-executable twin for EVERY query (55/55): plain ANSI SQL over
-the testdata tables where expressible; for the LSH/ANN/multimodal
-families and the full KG pipeline, the oracle reads deterministic
-parquet artifacts under ``.oracle_cache/`` — exact-result sets from
-independent reference implementations, shared signature tables
-brute-forced in SQL, or the corpus generator's ground-truth triples —
-regenerated by the query callables at oracle scale factors and
-committed to the repo (writes are skipped when content is unchanged,
-so driver runs leave git clean).
+takes (spark, sf_dir), returns a DataFrame and writes nothing.
+``oracle_sql()`` gives a DuckDB-executable twin for every query: plain
+ANSI SQL over the testdata tables where expressible; for the
+LSH/ANN/multimodal families and the full KG pipeline, the oracle reads
+deterministic parquet artifacts under ``.oracle_cache/`` — exact-result
+sets from independent reference implementations, shared signature
+tables brute-forced in SQL, or the corpus generator's ground-truth
+triples. ``oracle_inputs(spark, sf_dir)`` builds those artifacts for
+one scale factor; they are committed to the repo, and a rebuild skips
+every file whose content is unchanged, so it leaves git clean.
 
 Numeric discipline (so value-hashes match across engines): money
 aggregates are summed as DECIMAL(18,2) (exact, order-independent) and
@@ -145,16 +145,13 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # oracle-cache: deterministic expected-result / shared-input parquet
 # files for queries whose oracle is not expressible over the raw tables
 # alone (independent driver-side reference implementations, ground-truth
-# triple sets, signature tables). Regenerated on every query run (pure
-# functions of the fixed testdata + seeds) and committed to the repo so
-# the DuckDB oracle can read them even if it runs before the query.
+# triple sets, signature tables). Pure functions of the fixed testdata
+# and seeds, built by ``oracle_inputs`` and committed to the repo.
 # ---------------------------------------------------------------------------
 import os as _os
 
 _REPO_DIR = _os.path.dirname(_os.path.abspath(__file__))
 _ORACLE_CACHE = _os.path.join(_REPO_DIR, ".oracle_cache")
-# the driver runs oracles at sf0.01; local tests replay at sf0.001 too
-_ORACLED_SFS = ("sf0.001", "sf0.01")
 
 
 def _cache_parquet(tag: str, pdf) -> str:
@@ -309,28 +306,9 @@ def q_kg_pagerank(spark, sf_dir):
     """Exact-integer PageRank over the KG (order-independent 64-bit
     arithmetic — the reason it CAN be value-oracled); top 20 entities.
     Oracle: the pure-Python replica over the same edge list (fetched
-    via DuckDB, no Spark), materialized as expected-result parquet."""
+    via DuckDB, no Spark), built by ``oracle_inputs``."""
     from kgw_spark.operators import pagerank as PR
 
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import duckdb
-        import pandas as pd
-
-        con = duckdb.connect()
-        for t in ("nation", "customer", "supplier", "orders", "lineitem"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        edge_list = [
-            (r[0], r[2]) for r in con.execute(KG.KG_EDGES_SQL).fetchall()
-        ]
-        expected = PR.pagerank_py(edge_list, iters=3)
-        top = sorted(expected.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-        _cache_parquet(
-            f"kg_pagerank_{tag}",
-            pd.DataFrame(top, columns=["id", "rank_scaled"]),
-        )
     return (
         PR.pagerank(KG.kg_edges2(spark, sf_dir), iters=3)
         .orderBy(F.desc("rank_scaled"), F.asc("id"))
@@ -343,17 +321,12 @@ def q_kg_label_prop(spark, sf_dir):
     primitive) over the KG: every node's label becomes the minimum node
     id within 3 undirected hops — exact strings, so the community
     histogram (label, member count) value-oracles in pure SQL (the
-    oracle brute-forces the same 3 rounds as nested CTEs)."""
+    oracle brute-forces the same 3 rounds as nested CTEs over the node
+    set; TPC-H referential integrity puts every edge endpoint in it)."""
     from kgw_spark.operators.communities import min_label_propagation
 
     labels = min_label_propagation(
-        KG.kg_nodes(spark, sf_dir),
-        KG.kg_pairs(spark, sf_dir),
-        rounds=3,
-        # TPC-H referential integrity: every edge endpoint is a tagged
-        # entity present in kg_nodes (verified by the oracle replay,
-        # which brute-forces the same label domain from nodes alone)
-        endpoints_covered=True,
+        KG.kg_nodes(spark, sf_dir), KG.kg_pairs(spark, sf_dir), rounds=3
     )
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members")
@@ -366,27 +339,9 @@ def q_kg_kcore(spark, sf_dir):
     / graph-health primitive. Returns every surviving node with its
     degree WITHIN the core — all-integer, so exactly value-oracle-able.
     Oracle: the pure-Python peeling replica over the same edge list
-    (fetched via DuckDB, no Spark), cached as expected-result parquet."""
+    (fetched via DuckDB, no Spark), built by ``oracle_inputs``."""
     from kgw_spark.operators import kcore as KC
 
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import duckdb
-        import pandas as pd
-
-        con = duckdb.connect()
-        for t in ("nation", "customer", "supplier", "orders", "lineitem"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        edge_list = [
-            (r[0], r[2]) for r in con.execute(KG.KG_EDGES_SQL).fetchall()
-        ]
-        expected = KC.k_core_py(edge_list, k=3)
-        _cache_parquet(
-            f"kg_kcore_{tag}",
-            pd.DataFrame(sorted(expected.items()), columns=["id", "degree"]),
-        )
     return KC.k_core(KG.kg_pairs(spark, sf_dir), k=3)
 
 
@@ -1179,15 +1134,15 @@ def q_orders_decile_stats(spark, sf_dir):
     NTILE(n) over a total order is engine-independent (both Spark and
     DuckDB use the SQL-standard leftover-to-leading-buckets split), the
     tiebreak key makes the bucket assignment unique, and the FLOOR-
-    quantized cents make the sums exact. Scale shape (ADVICE r5 #1
-    correction): an UNPARTITIONED window is planned as Exchange
-    SinglePartition — every order row flows through one task for the
-    NTILE pass, unlike an ORDER BY's range partitioning — which is fine
-    at this table's size but is NOT the 100 TB shape; a cluster-scale
-    run would compute a global rank via range-partition + per-shard
-    offsets (the communities._order_rank pattern) and assign buckets
-    with the SQL-standard ntile split formula from (rank, N), paying
-    two small extra jobs instead of the unbounded single-task sort.
+    quantized cents make the sums exact. Scale shape: an UNPARTITIONED
+    window is planned as Exchange SinglePartition — every order row
+    flows through one task for the NTILE pass, unlike an ORDER BY's
+    range partitioning — which is fine at this table's size but is NOT
+    the 100 TB shape; a cluster-scale run would compute a global rank
+    via range-partition + per-shard offsets (the communities._order_rank
+    pattern) and assign buckets with the SQL-standard ntile split
+    formula from (rank, N), paying two small extra jobs instead of the
+    unbounded single-task sort.
     Kept as-is here because the result (and its certified hash) is
     identical and the rewrite only pays off past the driver-sized
     window."""
@@ -1316,18 +1271,10 @@ def q_docs_winnow_pairs(spark, sf_dir):
     keep the minimum of each sliding 4-window (guaranteed to share a
     fingerprint with any copy sharing ≥ 8 consecutive tokens), pair
     docs sharing ≥ 2 fingerprints. The fingerprint table is
-    materialized as a shared input (simhash-pattern oracle): DuckDB
-    recomputes the pairs from it by brute force with the identical
-    df-cap, certifying the banded join logic exactly."""
+    materialized as a shared input by ``oracle_inputs`` (simhash-pattern
+    oracle): DuckDB recomputes the pairs from it by brute force with the
+    identical df-cap, certifying the banded join logic exactly."""
     docs = _tp(spark, sf_dir, "documents")
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        _cache_parquet(
-            f"winnow_{tag}",
-            DD.winnow_fingerprints(docs, k=5, w=4)
-            .orderBy("doc_id", "fingerprint")
-            .toPandas(),
-        )
     return DD.winnow_pairs(docs, k=5, w=4, min_shared=2)
 
 
@@ -1456,18 +1403,11 @@ def q_docs_minhash_lsh(spark, sf_dir):
 
 def q_docs_simhash_pairs(spark, sf_dir):
     """Pigeonhole-banded SimHash near-pairs. The signature table is
-    materialized as a shared input; the oracle recomputes the pairs by
-    brute-force 64-bit hamming over it in DuckDB — verifying the
-    banded join finds exactly the pairs a quadratic scan finds (the
-    pigeonhole guarantee)."""
+    materialized as a shared input by ``oracle_inputs``; the oracle
+    recomputes the pairs by brute-force 64-bit hamming over it in
+    DuckDB — verifying the banded join finds exactly the pairs a
+    quadratic scan finds (the pigeonhole guarantee)."""
     docs = _t(spark, sf_dir, "documents")
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        # orderBy: collection order is partition-dependent, and the
-        # cache's skip-identical-rewrite compare is positional
-        _cache_parquet(
-            f"simhash_{tag}", DD.simhash(docs).orderBy("doc_id").toPandas()
-        )
     return DD.simhash_near_pairs(docs, max_hamming=6)
 
 
@@ -1475,22 +1415,9 @@ def q_emb_lsh_topk(spark, sf_dir):
     """Multi-probe LSH ANN top-k. Oracle = an independent pure-Python
     reference implementation (kgw_spark/functions/ann_reference.py)
     replicating Spark's fp evaluation order, materialized as an
-    expected-result parquet."""
-    from kgw_spark.functions import ann_reference as REF
-
+    expected-result parquet by ``oracle_inputs``."""
     emb = _t(spark, sf_dir, "embeddings")
     q = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import pandas as pd
-
-        exp = REF.ref_lsh_topk(
-            f"{sf_dir}/embeddings.parquet", query_id=0, k=10, n_planes=6,
-            seed=13, multiprobe=2,
-        )
-        _cache_parquet(
-            f"emb_lsh_topk_{tag}", pd.DataFrame(exp, columns=["vec_id", "cosine"])
-        )
     return SIM.lsh_topk(emb, q, k=10, n_planes=6, multiprobe=2)
 
 
@@ -1501,8 +1428,6 @@ def q_emb_ivf_topk(spark, sf_dir):
     order-independent, so the refined index is bit-reproducible and the
     certification covers the cell layout a 100-TB run would actually
     use, not just the trivial lowest-id init."""
-    from kgw_spark.functions import ann_reference as REF
-
     # the session default Arrow batch (128 rows) is tuned for multi-KB
     # text rows; the IVF assignment kernel runs 3 passes of a cheap
     # numpy matmul where PER-BATCH UDF machinery dominates at 128 rows
@@ -1520,17 +1445,6 @@ def q_emb_ivf_topk(spark, sf_dir):
         (i, [float(x) for x in r["embedding"]]) for i, r in enumerate(init_rows)
     ]
     q = next(c for (i, c), r in zip(cents, init_rows) if r["vec_id"] == 0)
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import pandas as pd
-
-        exp = REF.ref_ivf_topk(
-            f"{sf_dir}/embeddings.parquet", query_id=0, k=10, n_cells=16,
-            n_probe=4, kmeans_iters=2,
-        )
-        _cache_parquet(
-            f"emb_ivf_topk_{tag}", pd.DataFrame(exp, columns=["vec_id", "cosine"])
-        )
     return SIM.ivf_topk(
         emb, q, k=10, n_cells=16, n_probe=4, kmeans_iters=2,
         init_centroids=cents,
@@ -1545,25 +1459,12 @@ def q_emb_pq_topk(spark, sf_dir):
     compresses to m=4 codes, and the query scans ONLY the code table
     through a literal lookup expression — the 100-TB serving path
     (float32x64 vectors → 4 bytes/vector of codes)."""
-    from kgw_spark.functions import ann_reference as REF
-
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
     emb = _t(spark, sf_dir, "embeddings")
     # one collect serves init codebooks AND the query vector (vec_id=0)
     init_rows = emb.orderBy("vec_id").limit(16).collect()
     init_vecs = [[float(x) for x in r["embedding"]] for r in init_rows]
     q = next(v for v, r in zip(init_vecs, init_rows) if r["vec_id"] == 0)
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import pandas as pd
-
-        exp = REF.ref_pq_topk(
-            f"{sf_dir}/embeddings.parquet", query_id=0, k=10, m=4,
-            n_codes=16, kmeans_iters=2,
-        )
-        _cache_parquet(
-            f"emb_pq_topk_{tag}", pd.DataFrame(exp, columns=["vec_id", "adc"])
-        )
     return SIM.pq_topk(
         emb, q, k=10, m=4, n_codes=16, kmeans_iters=2, init_vectors=init_vecs
     )
@@ -1577,26 +1478,16 @@ def q_media_features(spark, sf_dir):
     (mapInPandas) into 16-dim features, exploded to (media_id, kind,
     dim, value). Oracle: an INDEPENDENT reference (integer-exact pixel
     statistics, direct matrix DFT instead of FFT —
-    functions/media_reference.py) materialized as truth parquet;
-    agreement is after the operator's float32 quantization + round-6,
-    where honest fp divergence between the two implementations
-    vanishes. The media set is fixed-size (24 items), independent of
-    sf."""
+    functions/media_reference.py) materialized as truth parquet by
+    ``oracle_inputs``; agreement is after the operator's float32
+    quantization + round-6, where honest fp divergence between the two
+    implementations vanishes. The media set is fixed-size (24 items),
+    independent of sf."""
     from kgw_spark.operators import multimodal as MM
     from kgw_spark.sources.media import synthetic_media_rows
 
     _ship_package(spark)
     rows = synthetic_media_rows(8)
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import pandas as pd
-
-        from kgw_spark.functions.media_reference import ref_media_features
-
-        truth = pd.DataFrame(
-            ref_media_features(rows), columns=["media_id", "kind", "dim", "value"]
-        ).astype({"dim": "int32"})
-        _cache_parquet(f"media_features_{tag}", truth)
     media = spark.createDataFrame(rows, schema=MM.MEDIA_SCHEMA)
     feats = MM.extract_features(media)
     return feats.select(
@@ -1606,49 +1497,49 @@ def q_media_features(spark, sf_dir):
     ).select("media_id", "kind", "dim", F.round(F.col("v"), 6).alias("value"))
 
 
+def _pipeline_corpus(spark, sf_dir):
+    """``(rows, truth)`` of the pipeline query's synthetic corpus: its
+    size scales with sf via the lineitem row count, so the work tracks
+    the chosen scale factor. Shared by the query and ``oracle_inputs``
+    so the two always build the same corpus."""
+    from kgw_spark.sources.corpus import generate_corpus
+
+    n_li = _t(spark, sf_dir, "lineitem").count()
+    n_repos = max(4, min(64, n_li // 2000))
+    return generate_corpus(n_repos=n_repos, files_per_repo=20, seed=42)
+
+
 def q_kg_pipeline_triples(spark, sf_dir):
     """The full north-rule pipeline (extract → link → canonicalize →
-    dedup) on the deterministic synthetic source-code corpus; returns
-    the canonical triple set. Corpus size scales with sf via lineitem
-    row count so the work tracks the chosen scale factor.
+    dedup) on the deterministic synthetic source-code corpus
+    (``_pipeline_corpus``); returns the canonical triple set.
 
     Oracle: the generator's ground-truth triple set (reference-semantics
     closure computed driver-side with no Spark, corpus.py
-    GroundTruth.canonical_map) materialized as parquet — the flagship
-    north-rule P/R check as a driver-verifiable value oracle."""
+    GroundTruth.canonical_map) materialized as parquet by
+    ``oracle_inputs`` — the flagship north-rule P/R check as a value
+    oracle."""
     from kgw_spark.model import triple_view
     from kgw_spark.plans.pipeline import run_pipeline
+    from kgw_spark.session import local_df
     from kgw_spark.sinks.store import TableStore
-    from kgw_spark.sources.corpus import corpus_df, generate_corpus
+    from kgw_spark.sources.corpus import corpus_df
 
     _ship_package(spark)
-    n_li = _t(spark, sf_dir, "lineitem").count()
-    n_repos = max(4, min(64, n_li // 2000))
-    rows, truth = generate_corpus(n_repos=n_repos, files_per_repo=20, seed=42)
-    tag = _sf_tag(sf_dir)
-    if tag in _ORACLED_SFS:
-        import pandas as pd
-
-        _cache_parquet(
-            f"truth_triples_{tag}",
-            pd.DataFrame(sorted(truth.triples), columns=["subj", "pred", "obj"]),
-        )
-    from kgw_spark.session import local_df
+    rows, truth = _pipeline_corpus(spark, sf_dir)
 
     adf = local_df(
         spark,
         [(a, c, float(s)) for a, (c, s) in truth.alias_dict.items()],
         "alias_id string, canonical_id string, score double",
     )
-    # fused plan + tmpfs store: the driver runs every query under a time
-    # budget, and the flagship row must never be the one that gets cut —
-    # intermediate materialization and sandbox-disk IO are resumability
-    # features the correctness certificate doesn't need (pytest covers
-    # resume separately). One store dir per SF, reused across
-    # invocations (the returned DF lazily reads the committed edges
-    # table, so the dir must outlive this call — reuse + atexit keeps
-    # repeated bench/driver invocations from accreting tmpfs dirs).
-    store = TableStore(_pipeline_store_dir(tag))
+    # fused plan: intermediate materialization is a resumability
+    # feature the triple-set answer does not need (tests/test_pipeline.py
+    # covers resume). One temp-dir store per SF, reused across
+    # invocations: the returned DF lazily reads the committed edges
+    # table, so the dir must outlive this call, and reuse + atexit
+    # removal keep repeated invocations from accreting store dirs.
+    store = TableStore(_pipeline_store_dir(_sf_tag(sf_dir)))
     res = run_pipeline(
         spark,
         corpus_df(spark, rows),
@@ -1661,34 +1552,10 @@ def q_kg_pipeline_triples(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every declared query, in CERTIFICATION-PRIORITY order.
-
-    ROTATION POLICY (the registration order IS the policy): the driver
-    verifies ~the first 50 entries of this dict against the DuckDB
-    oracles each round, so registration order = certification priority.
-    New queries always register in the head (they need their first
-    certificate); entries past position 50 must carry a fully-green row
-    in the most recent CORRECTNESS_r*.json that contains them (enforced
-    by tests/test_entry_oracle.py::
-    test_rotation_policy_tail_is_previously_certified), and tail
-    entries rotate back into the head the following round so every row
-    is re-certified at least every other round.
-
-    Round 6 rotation: the 18 entries that sat past the cap in r5 (all
-    driver-green in CORRECTNESS_r04 and value-checked in pytest every
-    round) move into the head for re-certification; 18 r5-green rows
-    take the tail. The two r5 hash-fail rows (events_rollup,
-    orders_decile_stats — driver-hash type artifact, semantics verified
-    identical by the r5 judge) STAY in the head so the driver re-checks
-    them rather than having them rotate out of sight.
-    """
+    """Every declared query by name; each callable takes
+    (spark, sf_dir) and returns its answer as a DataFrame."""
     return {
-        # The flagship north-rule pipeline query runs FIRST: if the
-        # driver's verification pass has a time budget, the one row that
-        # must never drop out of CORRECTNESS is this one (it was the
-        # only unverified query in round 3, as the last dict entry).
         "kg_pipeline_triples": q_kg_pipeline_triples,
-        # rotated in from the r5 tail (last driver rows: CORRECTNESS_r04)
         "docs_contamination": q_docs_contamination,
         "docs_repetition_stats": q_docs_repetition_stats,
         "docs_chunks": q_docs_chunks,
@@ -1707,14 +1574,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q6_forecast_revenue": q_q6_forecast_revenue,
         "q14_promo_revenue": q_q14_promo_revenue,
         "q22_idle_customers_anti": q_q22_idle_customers_anti,
-        # r5 hash-fail rows (type artifact, not semantics — kept in the
-        # head for an honest re-check; the oracle text is frozen this
-        # round so the artifact cannot be patched away)
         "events_rollup": q_events_rollup,
         "orders_decile_stats": q_orders_decile_stats,
-        # r5-green rows re-certifying this round (the heavy graph
-        # operators this optimization round touches sit here so their
-        # restructured plans get a fresh driver certificate)
         "docs_minhash_lsh": q_docs_minhash_lsh,
         "docs_simhash_pairs": q_docs_simhash_pairs,
         "emb_lsh_topk": q_emb_lsh_topk,
@@ -1746,9 +1607,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q1_pricing_summary": q_q1_pricing_summary,
         "q3_shipping_priority": q_q3_shipping_priority,
         "q5_region_revenue": q_q5_region_revenue,
-        # TAIL (beyond the driver's ~50-row verification budget this
-        # round, per the rotation policy in the docstring): stable rows
-        # with green CORRECTNESS_r05 entries; rotate back next round.
         "q10_top_customers": q_q10_top_customers,
         "q4_priority_semi": q_q4_priority_semi,
         "q17_small_quantity_revenue": q_q17_small_quantity_revenue,
@@ -1772,13 +1630,92 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------------------------
+# oracle inputs
+# ---------------------------------------------------------------------------
+def _kg_edge_list(sf_dir: str) -> list[tuple[str, str]]:
+    """``(source_id, target_id)`` of the KG edge set, read by DuckDB
+    from the testdata tables (no Spark): the input of the pure-Python
+    pagerank and k-core replicas."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        for t in ("nation", "customer", "supplier", "orders", "lineitem"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        return [(r[0], r[2]) for r in con.execute(KG.KG_EDGES_SQL).fetchall()]
+
+
+def oracle_inputs(spark: SparkSession, sf_dir: str) -> None:
+    """Build every ``.oracle_cache/{stem}_{tag}.parquet`` artifact that
+    ``oracle_sql(tag)`` reads, for the tables at ``sf_dir`` (``tag`` is
+    its directory name, e.g. ``sf0.01``). Each artifact is a pure
+    function of those tables and fixed seeds, computed by a reference
+    independent of the query it checks (or, for simhash and winnow, the
+    shared signature table the oracle brute-forces); a file whose
+    content is unchanged is not rewritten."""
+    import pandas as pd
+
+    from kgw_spark.functions import ann_reference as REF
+    from kgw_spark.functions.media_reference import ref_media_features
+    from kgw_spark.operators import kcore as KC
+    from kgw_spark.operators import pagerank as PR
+    from kgw_spark.sources.media import synthetic_media_rows
+
+    edge_list = _kg_edge_list(sf_dir)
+    rank = PR.pagerank_py(edge_list, iters=3)
+    emb = f"{sf_dir}/embeddings.parquet"
+    docs = _t(spark, sf_dir, "documents")
+    _rows, truth = _pipeline_corpus(spark, sf_dir)
+    frames = {
+        "kg_pagerank": pd.DataFrame(
+            sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))[:20],
+            columns=["id", "rank_scaled"],
+        ),
+        "kg_kcore": pd.DataFrame(
+            sorted(KC.k_core_py(edge_list, k=3).items()), columns=["id", "degree"]
+        ),
+        # orderBy: collection order is partition-dependent, and the
+        # skip-identical-rewrite compare is positional
+        "simhash": DD.simhash(docs).orderBy("doc_id").toPandas(),
+        "winnow": DD.winnow_fingerprints(docs, k=5, w=4)
+        .orderBy("doc_id", "fingerprint")
+        .toPandas(),
+        "emb_lsh_topk": pd.DataFrame(
+            REF.ref_lsh_topk(
+                emb, query_id=0, k=10, n_planes=6, seed=13, multiprobe=2
+            ),
+            columns=["vec_id", "cosine"],
+        ),
+        "emb_ivf_topk": pd.DataFrame(
+            REF.ref_ivf_topk(
+                emb, query_id=0, k=10, n_cells=16, n_probe=4, kmeans_iters=2
+            ),
+            columns=["vec_id", "cosine"],
+        ),
+        "emb_pq_topk": pd.DataFrame(
+            REF.ref_pq_topk(emb, query_id=0, k=10, m=4, n_codes=16, kmeans_iters=2),
+            columns=["vec_id", "adc"],
+        ),
+        "media_features": pd.DataFrame(
+            ref_media_features(synthetic_media_rows(8)),
+            columns=["media_id", "kind", "dim", "value"],
+        ).astype({"dim": "int32"}),
+        "truth_triples": pd.DataFrame(
+            sorted(truth.triples), columns=["subj", "pred", "obj"]
+        ),
+    }
+    tag = _sf_tag(sf_dir)
+    for stem, pdf in frames.items():
+        _cache_parquet(f"{stem}_{tag}", pdf)
+
+
+# ---------------------------------------------------------------------------
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 def oracle_sql(sf_tag: str = "sf0.01") -> dict[str, str]:
     """DuckDB twins for every queries() entry. ``sf_tag`` selects which
-    SF's oracle-cache artifacts the cache-backed oracles read (the
-    driver runs at sf0.01, the default; tests replay at sf0.001 by
-    passing the tag instead of string-munging the SQL)."""
+    SF's oracle-cache artifacts (built by ``oracle_inputs``) the
+    cache-backed oracles read; sf0.01 by default, and the tests replay
+    at sf0.001 by passing the tag instead of string-munging the SQL."""
     kg = KG.KG_CTE
     return {
         "kg_statistics": f"""{kg}

@@ -15,9 +15,8 @@ EXECUTION below the driver budget (``incore.fits_driver`` over the
 pair list stacked with the node ids): one gate aggregate and one Arrow
 collect, then every round is an ``np.minimum.at`` over order-preserving
 int64 codes on the driver (``incore.label_propagation``) — at most 3
-Spark jobs whatever ``rounds`` is. The label domain there is always
-nodes ∪ endpoints, which equals ``distinct(nodes)`` whenever
-``endpoints_covered`` truly holds.
+Spark jobs whatever ``rounds`` is. The label domain on both paths is
+nodes ∪ edge endpoints.
 
 Past the gate: Spark plans ``min(<string>)`` as SortAggregate (a mutable
 var-length min does not fit the UnsafeRow hash-agg buffer), so a naive
@@ -85,23 +84,16 @@ def min_label_propagation(
     nodes: DataFrame,
     pairs: DataFrame,
     rounds: int = 3,
-    endpoints_covered: bool = False,
 ) -> DataFrame:
     """Labels ``(id, label)`` after ``rounds`` synchronous min-label
     updates: ``label_0(v) = v``, ``label_i(v) = min(label_{i-1}(v),
     min over undirected neighbors u of label_{i-1}(u))``, over the
     node frame ``nodes`` (column ``id``) and the canonical pair list
     ``pairs`` (``pairs.canonical_pairs``); isolated nodes keep their
-    own id. Below the driver budget the rounds run in-core, past it as
+    own id, and an edge endpoint missing from ``nodes`` is labelled too.
+    Below the driver budget the rounds run in-core, past it as
     dictionary-encoded DataFrame rounds; both return identical rows
-    (equivalence-tested). ``endpoints_covered=True``
-    asserts every edge endpoint appears in ``nodes`` (referential
-    integrity the caller vouches for — true for any store-built KG,
-    whose node table is derived from the edge endpoints): the label
-    domain is then ``distinct(nodes)`` alone and the 2|E|-row
-    endpoint-union distinct is skipped. An endpoint missing from
-    ``nodes`` under this flag would silently receive no label, so only
-    set it where the invariant genuinely holds."""
+    (equivalence-tested)."""
     if rounds < 1:
         raise ValueError(f"min_label_propagation needs rounds >= 1, got {rounds}")
     out = incore.label_propagation(nodes, pairs, rounds)
@@ -109,16 +101,15 @@ def min_label_propagation(
         return out
     # label domain = nodes ∪ edge endpoints, every id starting with its
     # own label (the pure-Python replica's convention; endpoints absent
-    # from the node frame would otherwise never carry a self-label);
-    # endpoints_covered skips the 2|E|-row union legs (docstring).
+    # from the node frame would otherwise never carry a self-label).
     # The domain distinct and the rank dictionary are ONE fused
     # range-shuffle (_order_rank dedups in place), materialized once:
     # the gate count, round-0 labels, and the decode all re-read it.
-    ids_raw = nodes.select("id")
-    if not endpoints_covered:
-        ids_raw = ids_raw.union(pairs.select(F.col("u").alias("id"))).union(
-            pairs.select(F.col("v").alias("id"))
-        )
+    ids_raw = (
+        nodes.select("id")
+        .union(pairs.select(F.col("u").alias("id")))
+        .union(pairs.select(F.col("v").alias("id")))
+    )
     parts = pairs.sparkSession.sparkContext.defaultParallelism
     rank = _order_rank(ids_raw, parts).localCheckpoint(eager=True)
     bcast = rank.count() <= _BCAST_MAX_NODES

@@ -19,7 +19,7 @@ shuffle-friendly; no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,17 +52,12 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # --------------------------------------------------------------------------
 # shingling
 # --------------------------------------------------------------------------
-def shingles(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Distinct word n-gram shingles per document, built JVM-side as a
-    chain of zip_with over shifted slices — O(tokens) per row and ~2x
-    faster than the transform(sequence)/dynamic-getItem formulation
-    (null padding from the shorter slice marks the ragged tail, filtered
-    at the end)."""
+def _word_ngrams(text_col: str, n: int) -> Column:
+    """The word n-grams of ``text_col`` in token order, as an array
+    column, built JVM-side as a chain of zip_with over shifted slices —
+    O(tokens) per row and ~2x faster than the
+    transform(sequence)/dynamic-getItem formulation (null padding from
+    the shorter slice marks the ragged tail, filtered at the end)."""
     toks = F.split(F.trim(F.col(text_col)), "\\s+")
     acc = toks
     for j in range(1, n):
@@ -74,9 +69,43 @@ def shingles(
                 x.isNull() | y.isNull(), F.lit(None)
             ).otherwise(F.concat(x, F.lit(" "), y)),
         )
-    grams = F.filter(acc, lambda s: s.isNotNull())
-    return docs.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
+    return F.filter(acc, lambda s: s.isNotNull())
+
+
+def shingles(
+    docs: DataFrame,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Distinct word n-gram shingles per document."""
+    grams = F.array_distinct(_word_ngrams(text_col, n))
+    return docs.select(F.col(id_col), F.explode(grams).alias("shingle"))
+
+
+def _jaccard_pairs(
+    common: DataFrame, sh: DataFrame, threshold: float, id_col: str
+) -> DataFrame:
+    """``(a, b, jaccard)`` from shared-shingle counts ``(a, b, common)``
+    and the ``(id, shingle)`` table of their documents: exact Jaccard
+    ``common / (size_a + size_b - common)`` rounded to 6, kept at
+    ``>= threshold``. ``sh`` must hold each document's full shingle set
+    — it is the denominator."""
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
+    sa = sizes.select(F.col(id_col).alias("a"), F.col("_size").alias("size_a"))
+    sb = sizes.select(F.col(id_col).alias("b"), F.col("_size").alias("size_b"))
+    return (
+        common.join(sa, "a")
+        .join(sb, "b")
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
     )
 
 
@@ -109,43 +138,25 @@ def ngram_jaccard_pairs(
     # shingles because the verify phase re-reads them per candidate,
     # a different access pattern
     sh = shingles(docs, n, id_col, text_col)
-    # sizes BEFORE any df-filtering: the Jaccard denominator is over
-    # full shingle sets
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
-
     df_per_shingle = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     # exact-preserving prune: a shingle in a single document can never
     # contribute to a pair — drop it before the quadratic self-join
     keep = df_per_shingle.filter(F.col("_df") >= 2)
     if max_shingle_df is not None:
         keep = keep.filter(F.col("_df") <= max_shingle_df)
-    sh = sh.join(keep.select("shingle"), "shingle")
+    joinable = sh.join(keep.select("shingle"), "shingle")
 
-    a = sh.select(F.col(id_col).alias("a"), "shingle")
-    b = sh.select(F.col(id_col).alias("b"), "shingle")
+    a = joinable.select(F.col(id_col).alias("a"), "shingle")
+    b = joinable.select(F.col(id_col).alias("b"), "shingle")
     common = (
         a.join(b, "shingle")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("_size").alias("size_b"))
-    out = (
-        common.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common")
-                / (F.col("size_a") + F.col("size_b") - F.col("common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return out
+    # sizes over the UNFILTERED shingles: the Jaccard denominator is
+    # over full shingle sets
+    return _jaccard_pairs(common, sh, threshold, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -162,22 +173,10 @@ def positional_shingles(
 ) -> DataFrame:
     """(id, pos, shingle): word n-grams WITH their position — winnowing
     needs the gram sequence, not the gram set. Same zip-with-chain
-    construction as ``shingles`` (O(tokens) per row, JVM-side), minus
-    the distinct."""
-    toks = F.split(F.trim(F.col(text_col)), "\\s+")
-    acc = toks
-    for j in range(1, n):
-        shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
-        acc = F.zip_with(
-            acc,
-            shifted,
-            lambda x, y: F.when(
-                x.isNull() | y.isNull(), F.lit(None)
-            ).otherwise(F.concat(x, F.lit(" "), y)),
-        )
-    grams = F.filter(acc, lambda s: s.isNotNull())
+    construction as ``shingles``, minus the distinct."""
     return docs.select(
-        F.col(id_col), F.posexplode(grams).alias("pos", "shingle")
+        F.col(id_col),
+        F.posexplode(_word_ngrams(text_col, n)).alias("pos", "shingle"),
     )
 
 
@@ -202,7 +201,7 @@ def winnow_fingerprints(
     # docs with fewer than w grams have no full window — standard
     # winnowing still keeps min(h) over ALL their grams as the single
     # fingerprint (pos 0's window covers every gram then), so short
-    # docs remain matchable (ADVICE r4 #4)
+    # docs remain matchable
     # same partitioning AND ordering as `win` with an unbounded frame:
     # the per-partition count is frame-independent, but sharing the
     # (partition, order) spec lets Catalyst evaluate both window
@@ -425,7 +424,6 @@ def minhash_lsh_pairs(
         .distinct()
     )
     vsh = sh.join(F.broadcast(cand_docs), id_col, "semi")
-    sizes = vsh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
     sa = vsh.select(F.col(id_col).alias("a"), "shingle")
     sb = vsh.select(F.col(id_col).alias("b"), "shingle")
     common = (
@@ -434,27 +432,12 @@ def minhash_lsh_pairs(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    za = sizes.select(F.col(id_col).alias("a"), F.col("_size").alias("size_a"))
-    zb = sizes.select(F.col(id_col).alias("b"), F.col("_size").alias("size_b"))
-    out = (
-        common.join(za, "a")
-        .join(zb, "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
     # The verified pair set is band-collision-bounded (tiny); eagerly
     # materialize it so the shingle cache can be RELEASED here instead
-    # of living for the session (ADVICE r4 #3) — downstream consumers
-    # (clustering CC, curation anti-joins) re-read the checkpoint, not
-    # the shingle lineage.
-    out = out.localCheckpoint(eager=True)
+    # of holding executor memory for the rest of the session —
+    # downstream consumers (clustering CC, curation anti-joins) re-read
+    # the checkpoint, not the shingle lineage.
+    out = _jaccard_pairs(common, vsh, threshold, id_col).localCheckpoint(eager=True)
     sh.unpersist()
     return out
 

@@ -153,7 +153,7 @@ def neighborhood(edges: DataFrame, node_id: str) -> DataFrame:
     # Dedup key: the bare (source, type, target) triple when those are
     # the only columns (narrow codegen'd key), else EVERY column —
     # multi-edges that differ only in properties must both survive
-    # (DISTINCT-* semantics, matching the SQL oracle; ADVICE r4 #5).
+    # (DISTINCT-* semantics, matching the SQL oracle).
     triple = ["source_id", "type", "target_id"]
     dedup_cols = triple if set(edges.columns) == set(triple) else edges.columns
     return incident.union(among).dropDuplicates(dedup_cols)

@@ -256,33 +256,3 @@ def test_k_core_deep_peel_matches_python(spark, monkeypatch):
     )
     got = {r.id: r.degree for r in k_core(pairs, k=2).collect()}
     assert got == k_core_py(raw, k=2) == {"t0": 2, "t1": 2, "t2": 2}
-
-
-def test_label_prop_endpoints_covered_equivalence(spark, monkeypatch):
-    """endpoints_covered=True returns identical labels when the node
-    frame really covers every edge endpoint (the flag only shapes the
-    distributed path)."""
-    from kgw_spark.operators.communities import min_label_propagation
-    from kgw_spark.operators.pairs import canonical_pairs
-
-    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
-
-    raw = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("x", "y")]
-    nodes = spark.createDataFrame(
-        [(n,) for n in sorted({x for e in raw for x in e} | {"iso"})], "id string"
-    )
-    pairs = canonical_pairs(
-        spark.createDataFrame(raw, "source_id string, target_id string")
-    )
-    for rounds in (1, 3):
-        a = {
-            r.id: r.label
-            for r in min_label_propagation(
-                nodes, pairs, rounds=rounds, endpoints_covered=True
-            ).collect()
-        }
-        b = {
-            r.id: r.label
-            for r in min_label_propagation(nodes, pairs, rounds=rounds).collect()
-        }
-        assert a == b, rounds

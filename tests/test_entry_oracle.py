@@ -1,9 +1,11 @@
-"""Replay of the driver's correctness gate: every queries() entry with
-an oracle_sql() twin must match DuckDB on row count, sorted column
-names, and exact values (columns sorted by name, rows sorted).
+"""Oracle parity of the query contract: every queries() entry with an
+oracle_sql() twin must match DuckDB on row count, sorted column names,
+and exact values (columns sorted by name, rows sorted). The
+oracle-cache artifacts are built once by oracle_inputs(), never by a
+query.
 
 Runs at sf0.001 by default for speed; set SPARK_GRAFT_ORACLE_SF to
-/root/testdata/sf0.01 to mirror the driver exactly.
+/root/testdata/sf0.01 to check at oracle_sql()'s default scale factor.
 """
 
 import math
@@ -62,14 +64,26 @@ ORACLE_NAMES = sorted(E.oracle_sql())
 ROWS_ONLY = sorted(set(E.queries()) - set(ORACLE_NAMES))
 
 
+@pytest.fixture(scope="module")
+def oracle_tag(spark):
+    """Build the replay SF's oracle-cache artifacts once, before any
+    parity check reads them; returns the SF tag they are keyed by."""
+    E.oracle_inputs(spark, SF)
+    return os.path.basename(os.path.normpath(SF))
+
+
+def _no_cache_write(tag, pdf):
+    raise AssertionError(f"a query callable wrote oracle artifact {tag}")
+
+
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_parity(spark, ddb, name):
-    sdf = E.queries()[name](spark, SF).toPandas()
-    # the cache-backed oracles read per-SF artifacts; pass the replay
-    # SF's tag (the query callable regenerates the artifact for this
-    # SF before we get here)
-    tag = os.path.basename(os.path.normpath(SF))
-    sql = E.oracle_sql(sf_tag=tag)[name]
+def test_oracle_parity(spark, ddb, oracle_tag, monkeypatch, name):
+    # a query only answers: writing an oracle artifact during the query
+    # call would make the check depend on the query it checks
+    with monkeypatch.context() as m:
+        m.setattr(E, "_cache_parquet", _no_cache_write)
+        sdf = E.queries()[name](spark, SF).toPandas()
+    sql = E.oracle_sql(sf_tag=oracle_tag)[name]
     odf = ddb.execute(sql).df()
     _assert_match(name, sdf, odf)
 
@@ -92,53 +106,3 @@ def test_entry_smoke(spark):
 
 def test_every_oracle_key_has_query():
     assert set(E.oracle_sql()) <= set(E.queries())
-
-
-def test_rotation_policy_tail_is_previously_certified():
-    """Registration-order guard for the driver's ~50-row verification
-    budget: every queries() entry past position 50 must have a fully
-    green row (rows+schema+hash) in the MOST RECENT committed
-    CORRECTNESS_r*.json that contains it — the rotation policy
-    documented in queries(). (The r5 form of this guard demanded a
-    green row in the single latest record, which is self-defeating
-    under a 50-row cap with >50 queries: the moment a new record lands,
-    every tail entry certified the round before reads as stale. Scanning
-    records newest-first keeps the intent — no entry is ever parked in
-    the tail without a driver certificate — without the impossible
-    requirement.) New/rotated-in entries must sit in the head so they
-    get certified this round."""
-    import glob
-    import json
-    import re
-
-    repo = os.path.dirname(os.path.abspath(E.__file__))
-    records = sorted(
-        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-        reverse=True,
-    )
-    if not records:
-        pytest.skip("no driver correctness record yet (round 1)")
-    loaded = []
-    for p in records:
-        with open(p) as f:
-            loaded.append((os.path.basename(p), json.load(f)))
-    names = list(E.queries())
-    stale = []
-    for pos, name in enumerate(names, start=1):
-        if pos <= 50:
-            continue
-        row = next((rec.get(name) for _, rec in loaded if name in rec), None)
-        ok = bool(
-            row
-            and row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        )
-        if not ok:
-            stale.append((pos, name))
-    assert not stale, (
-        f"tail entries past the driver cap lack a green row in any "
-        f"committed CORRECTNESS record: {stale} — move them into the "
-        f"first 50 positions of queries()"
-    )

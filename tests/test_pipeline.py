@@ -106,9 +106,9 @@ def test_salted_link_matches_broadcast(spark, small_corpus, tmp_path):
 def test_store_commit_is_crash_safe(spark, tmp_path):
     """The commit protocol must never leave is_complete()==True with the
     table gone: the stage manifest is invalidated before the old table
-    is touched and rewritten only after the new table is in place
-    (round-1 ADVICE: rmtree-then-rename left a window where a kill
-    stranded a manifest pointing at nothing)."""
+    is touched and rewritten only after the new table is in place (an
+    rmtree-then-rename commit leaves a window where a kill strands a
+    manifest pointing at nothing)."""
     import os
 
     store = TableStore(str(tmp_path / "cs"))

@@ -3,6 +3,8 @@
 parquet scan, broadcast joins where a side is small, no shuffle in the
 extraction stage, partial (map-side) aggregation."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,7 +48,8 @@ def test_schema_triples_broadcast_is_size_gated(spark):
     """The A4/A5 broadcast is a *gated* hint: when broadcasting is
     disabled (stand-in for 'node side too large'), the forced hint must
     disappear and the plan falls back to a shuffle join — the shape a
-    14.5M-row node table needs (VERDICT r1 #1)."""
+    14.5M-row node table needs: an unconditional broadcast hint would
+    ship that table to every executor."""
     nodes, edges = KG.kg_nodes(spark, SF), KG.kg_edges(spark, SF)
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -132,8 +135,8 @@ def test_salted_link_plan_is_shuffle_hash(spark):
 
 def test_emb_near_pairs_certified_path_has_no_cartesian(spark):
     """The oracle-certified emb_near_pairs entry must be the LSH-bucketed
-    scale path: no cartesian/nested-loop join anywhere in the plan
-    (VERDICT r1 #3 flagged the old exact=True crossJoin entry)."""
+    scale path: no cartesian/nested-loop join anywhere in the plan (the
+    exact=True formulation is a quadratic crossJoin)."""
     import __spark_entry__ as E
 
     p = plan(E.queries()["emb_near_pairs"](spark, SF))
@@ -312,3 +315,44 @@ def test_common_neighbors_plan_shape(spark):
     p = plan(E.queries()["kg_common_neighbors"](spark, SF))
     assert "sort_array" in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+
+
+def test_order_rank_is_one_exchange(spark):
+    """The label-propagation rank dictionary dedups IN PLACE on its
+    range partitioning (RangePartitioning satisfies the dedup's
+    clustering requirement): one Exchange in the plan, never a second
+    hash shuffle for the distinct."""
+    from kgw_spark.operators.communities import _order_rank
+
+    ids = spark.createDataFrame([(f"n{i % 7}",) for i in range(40)], "id string")
+    p = plan(_order_rank(ids.union(ids), 4))
+    assert len(re.findall(r"^\(\d+\) Exchange\b", p, re.M)) == 1, p
+    assert "rangepartitioning" in p and "hashpartitioning" not in p
+
+
+def test_label_prop_rounds_hash_aggregate(spark, monkeypatch):
+    """Past the driver budget every label-propagation round takes
+    min(<long>) over dictionary-encoded labels: a fixed-width buffer,
+    hence HashAggregate. A string label would plan SortAggregate and
+    sort the message stream twice per round."""
+    from kgw_spark.operators import incore
+    from kgw_spark.operators.communities import min_label_propagation
+
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    nodes = KG.kg_nodes(spark, SF)
+    pairs = KG.kg_pairs(spark, SF)
+    # each round is checkpointed; record the plan of what it checkpoints
+    checkpointed = []
+    checkpoint = type(nodes).localCheckpoint
+
+    def spy(self, eager=True):
+        checkpointed.append(plan(self))
+        return checkpoint(self, eager)
+
+    monkeypatch.setattr(type(nodes), "localCheckpoint", spy)
+    min_label_propagation(nodes, pairs, rounds=2).collect()
+    rounds = [p for p in checkpointed if "min(label" in p]
+    assert len(rounds) == 2, len(checkpointed)
+    for p in rounds:
+        assert "HashAggregate" in p
+        assert "SortAggregate" not in p
