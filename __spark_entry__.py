@@ -1219,18 +1219,7 @@ def q_docs_repetition_stats(spark, sf_dir):
     high repetition marks boilerplate/spam for the curation filter.
     Pure JVM array expressions, no shuffle beyond the scan."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), "\\s+")
-    shifted = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
-    grams = F.filter(
-        F.zip_with(
-            toks,
-            shifted,
-            lambda x, y: F.when(x.isNull() | y.isNull(), F.lit(None)).otherwise(
-                F.concat(x, F.lit(" "), y)
-            ),
-        ),
-        lambda s: s.isNotNull(),
-    )
+    grams = DD.word_ngrams("text", 2)
     n = F.size(grams)
     nd = F.size(F.array_distinct(grams))
     return docs.select(

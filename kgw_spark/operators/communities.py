@@ -30,18 +30,18 @@ stays the string id (var-length KEYS hash-aggregate fine; only the
 BUFFER has to be fixed-width). The final labels decode through one
 join. Same result, bit-for-bit (equivalence-tested).
 
-Plan shape per round: one join edges⋈labels on the neighbor id
-producing messages, then self-rows ∪ messages through ONE min-aggregate
-shuffled by node id (partial map-side min — the shuffle carries ≤|V|
-rows regardless of |E|; A/B-measured at sf0.1 on 32 cores against a
-two-join nbmin + left-join-least update: 4.1 s vs 4.8 s warm, one
-broadcast build per round not two), each round ``localCheckpoint``-ed so plan
-depth stays O(1) in ``rounds``. While the node set fits
-``_BCAST_MAX_NODES`` the label vector (and the decode dictionary)
-ships to the edge partitions instead of shuffling the edge set every
-round; past it the message join falls back to a hash-partitioned
-shuffle (of the checkpointed pair list, never the full edge
-derivation).
+Plan shape per round: one ``pairs.send`` of the label vector over
+``both_directions(pairs)`` producing messages, then self-rows ∪
+messages through ONE min-aggregate shuffled by node id (partial
+map-side min — the shuffle carries ≤|V| rows regardless of |E|;
+A/B-measured at sf0.1 on 32 cores against a two-join nbmin +
+left-join-least update: 4.1 s vs 4.8 s warm, one broadcast build per
+round not two), each round ``localCheckpoint``-ed so plan depth stays
+O(1) in ``rounds``. While the node set fits ``pairs.BCAST_MAX_IDS``
+the label vector (and the decode dictionary) ships to the edge
+partitions instead of shuffling the edge set every round; past it the
+message join falls back to a hash-partitioned shuffle (of the
+checkpointed pair list, never the full edge derivation).
 """
 
 from __future__ import annotations
@@ -50,12 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
-from kgw_spark.operators.pairs import both_directions
-
-# broadcast gate of the label vector; pagerank's is 3M nodes, and a
-# (string id, long label) row plus the decode dictionary's (long, string)
-# row are ~2x a rank row, so halve it
-_BCAST_MAX_NODES = 1_500_000
+from kgw_spark.operators.pairs import both_directions, broadcast_within, send
 
 
 def _order_rank(ids_raw: DataFrame, parts: int) -> DataFrame:
@@ -112,26 +107,22 @@ def min_label_propagation(
     )
     parts = pairs.sparkSession.sparkContext.defaultParallelism
     rank = _order_rank(ids_raw, parts).localCheckpoint(eager=True)
-    bcast = rank.count() <= _BCAST_MAX_NODES
-
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast else df
-
+    n_ids = rank.count()
     # label_0 = own rank, for EVERY ranked id (nodes ∪ endpoints); each
     # round's min-aggregate is then min(<long>), a HashAggregate
-    und = both_directions(pairs)
+    arcs = both_directions(pairs)
     labels = rank.select("id", F.col("r").alias("label"))
     for _ in range(rounds):
-        lbl = hint(labels)
-        msgs = und.join(lbl, und["y"] == lbl["id"]).select(F.col("x").alias("id"), "label")
         labels = (
-            labels.union(msgs)
+            labels.union(send(arcs, labels, n_ids))
             .groupBy("id")
             .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=True)
         )
     dec = rank.select(F.col("r").alias("label"), F.col("id").alias("_lb_s"))
-    return labels.join(hint(dec), "label").select("id", F.col("_lb_s").alias("label"))
+    return labels.join(broadcast_within(dec, n_ids), "label").select(
+        "id", F.col("_lb_s").alias("label")
+    )
 
 
 def label_propagation_py(

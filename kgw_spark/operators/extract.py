@@ -171,9 +171,7 @@ def _extract_batches(
         )
 
 
-def extract_mentions(
-    corpus: DataFrame, validate: bool = True, packed_lineage: bool = False
-) -> DataFrame:
+def extract_mentions(corpus: DataFrame, packed_lineage: bool = False) -> DataFrame:
     """Corpus table → raw mention triples with lineage columns.
 
     ``packed_lineage=True`` emits one ``_lineage`` column (the
@@ -187,7 +185,7 @@ def extract_mentions(
     is embarrassingly parallel; the first shuffle happens later at
     link/dedup time).
     """
-    src = check_sha256(corpus) if validate else corpus
+    src = check_sha256(corpus)
     if packed_lineage:
         import functools
 

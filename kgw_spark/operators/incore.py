@@ -129,11 +129,13 @@ def connected_components(pairs: DataFrame) -> DataFrame | None:
     return component_mapping(pairs.sparkSession, *got)
 
 
-def k_core(pairs: DataFrame, k: int, max_rounds: int) -> DataFrame | None:
+def k_core(pairs: DataFrame, k: int) -> DataFrame | None:
     """``kcore.k_core`` in-core: peel every live node of degree < k per
     round, decrementing each surviving neighbor by a ``bincount`` of its
-    arcs from the peeled set. Raises past ``max_rounds`` like the
+    arcs from the peeled set. Raises past ``kcore.MAX_ROUNDS`` like the
     distributed loop. None past the driver budget."""
+    from kgw_spark.operators.kcore import MAX_ROUNDS
+
     got = _collect_codes(pairs, "u", "v")
     if got is None:
         return None
@@ -142,7 +144,7 @@ def k_core(pairs: DataFrame, k: int, max_rounds: int) -> DataFrame | None:
     n = len(ids)
     deg = np.bincount(x, minlength=n)
     alive = np.ones(n, bool)
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         low = alive & (deg < k)
         if not low.any():
             keep = np.flatnonzero(alive)
@@ -152,7 +154,7 @@ def k_core(pairs: DataFrame, k: int, max_rounds: int) -> DataFrame | None:
         # an arc from a node peeled now to a survivor dies now; arcs
         # between two nodes of the same frontier decrement nobody
         deg -= np.bincount(y[low[x] & alive[y]], minlength=n)
-    raise RuntimeError(f"k_core did not converge within {max_rounds} rounds")
+    raise RuntimeError(f"k_core did not converge within {MAX_ROUNDS} rounds")
 
 
 def label_propagation(nodes: DataFrame, pairs: DataFrame, rounds: int) -> DataFrame | None:

@@ -16,9 +16,9 @@ peel runs as numpy ``bincount`` degree decrements on the driver
 On small graphs each distributed round's jobs cost planning, codegen
 and scheduling, not data. Past the gate the rounds below run.
 
-EXECUTION (r6 rewrite — incremental degree maintenance): the r5 shape
-re-aggregated degrees over the full 2|E|-row endpoint union and
-anti-join-rewrote (and re-checkpointed) the full pair list EVERY round,
+EXECUTION past the gate — incremental degree maintenance: a naive peel
+re-aggregates degrees over the full 2|E|-row endpoint union and
+anti-join-rewrites (and re-checkpoints) the full pair list EVERY round,
 even though after the first round the peel frontier collapses (sf0.1:
 round 1 peels 13,788 of ~190k nodes, rounds 2-3 peel 14 — while the
 pair list stays at ~1.33M rows, >99% untouched). The peel recurrence
@@ -29,13 +29,14 @@ v loses one degree per (L, v) edge. So:
   by the caller) is never rewritten unless the removed-set gate overflows;
 - degrees are aggregated ONCE (map-side-combined groupBy; the shuffle
   carries <= |V| rows regardless of |E|), then maintained per round by
-  joining the checkpointed pairs against the broadcast frontier (a
-  map-side scan, no pair-sized shuffle or checkpoint) and applying the
+  one ``pairs.send`` of the frontier over ``both_directions(pairs)``
+  (while the frontier count fits ``pairs.BCAST_MAX_IDS``, a map-side
+  scan with no pair-sized shuffle or checkpoint) and applying the
   aggregated decrements to the <=|V|-row degree vector;
 - the cumulative removed set R (needed so a dead edge never decrements
-  twice) is broadcast while it fits; past ``_BCAST_MAX_PEELED`` the
+  twice) is broadcast while it fits; past ``pairs.BCAST_MAX_IDS`` the
   pair list is COMPACTED (one anti-join rewrite, R resets to empty) —
-  i.e. the operator degrades to exactly one r5-style round per gate
+  i.e. the operator degrades to exactly one naive round per gate
   overflow instead of broadcasting unbounded state; R is a lazy union
   of the per-round frontiers, checkpointed every
   ``_REMOVED_CHECKPOINT_ROUNDS`` rounds so a deep peel keeps its plan
@@ -51,7 +52,7 @@ interleaved trial (7.2-7.9 s vs 3.6-5.9 s warm) because its ~6 fixed
 encode/decode jobs cannot amortize over a 3-round peel.
 
 Rounds are data-bounded (the peel depth, a.k.a. degeneracy diameter),
-not fixed: ``max_rounds`` is a runaway guard on both paths, and
+not fixed: ``MAX_ROUNDS`` is a runaway guard on both paths, and
 hitting it raises rather than returning a non-core.
 
 At 100 TB: the one pair-sized shuffle is the caller's distinct; every
@@ -67,61 +68,49 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
-from kgw_spark.operators.pairs import degrees
+from kgw_spark.operators import pairs as pair_list
+from kgw_spark.operators.pairs import both_directions, broadcast_within, degrees, send
 
-# cumulative-removed-set broadcast gate: past this many peeled ids the
-# pair list is compacted (anti-join rewrite) and the set reset, so no
-# broadcast ever exceeds ~tens of MB of ids
-_BCAST_MAX_PEELED = 2_000_000
+# runaway guard on the peel depth, shared by both paths
+MAX_ROUNDS = 100
 # rounds between checkpoints of the removed-set union (plan-depth guard)
 _REMOVED_CHECKPOINT_ROUNDS = 16
 
 
-def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
+def k_core(pairs: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core of the undirected simple graph given by the
     canonical pair list ``pairs`` (``pairs.canonical_pairs``), as
     ``(id, degree)`` with ``degree`` counted WITHIN the core. Empty
     result when no k-core exists."""
     if k < 1:
         raise ValueError(f"k_core needs k >= 1, got {k}")
-    out = incore.k_core(pairs, k, max_rounds)
+    out = incore.k_core(pairs, k)
     if out is not None:
         return out
     deg = degrees(pairs).localCheckpoint(eager=True)
-    removed: DataFrame | None = None  # cumulative peeled ids (broadcast side)
+    removed: DataFrame | None = None  # cumulative peeled ids
     n_removed = 0
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(1, MAX_ROUNDS + 1):
         # frontier: materialized so the termination count and the
         # decrement joins read the same tiny frame
         low = deg.filter(F.col("degree") < k).select("id").localCheckpoint(eager=True)
         n_low = low.count()
         if n_low == 0:
             return deg
-        # decrements: for every ORIGINAL edge (u, v) with exactly one
-        # endpoint in the frontier and the other endpoint still live,
-        # the live endpoint loses one degree. Edges whose far endpoint
-        # was peeled in an earlier round already decremented then (it
-        # was live at that time... no: the far endpoint was the SURVIVOR
-        # then) — concretely: an edge dies in the round its FIRST
-        # endpoint is peeled, and decrements its other endpoint iff that
-        # endpoint is not in the same frontier; the anti-joins against
-        # removed ∪ frontier encode exactly that.
-        gone = low if removed is None else removed.union(low.select("id"))
-        lu = low.withColumnRenamed("id", "u")
-        lv = low.withColumnRenamed("id", "v")
-        touched = (
-            pairs.join(F.broadcast(lu), "u", "semi")
-            .select(F.col("v").alias("id"))
-            .union(
-                pairs.join(F.broadcast(lv), "v", "semi")
-                .select(F.col("u").alias("id"))
-            )
-            .join(F.broadcast(gone), "id", "anti")
+        # decrements: an edge dies in the round its FIRST endpoint is
+        # peeled, and decrements its other endpoint iff that endpoint is
+        # not peeled in the same round — the anti-join of the sent arcs
+        # against removed ∪ frontier encodes exactly that. Each frontier
+        # node has < k live arcs, so at most (k - 1)·n_low ids decrement.
+        gone = low if removed is None else removed.union(low)
+        n_gone = n_removed + n_low
+        touched = send(both_directions(pairs), low, n_low).join(
+            broadcast_within(gone, n_gone), "id", "anti"
         )
         decr = touched.groupBy("id").agg(F.count(F.lit(1)).alias("_dec"))
         deg = (
-            deg.join(F.broadcast(low), "id", "anti")
-            .join(F.broadcast(decr), "id", "left")
+            deg.join(broadcast_within(low, n_low), "id", "anti")
+            .join(broadcast_within(decr, (k - 1) * n_low), "id", "left")
             .select(
                 "id",
                 (F.col("degree") - F.coalesce(F.col("_dec"), F.lit(0))).alias(
@@ -130,27 +119,26 @@ def k_core(pairs: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        n_removed += n_low
         # checkpointed only every _REMOVED_CHECKPOINT_ROUNDS rounds:
         # `gone` is a union of the (already checkpointed) per-round
         # frontiers, so re-evaluating it inside next round's broadcast
         # builds is a cheap cache-read union, while a checkpoint every
         # round cost one extra job per round; the periodic checkpoint
         # bounds the union's plan depth on deep peels
-        removed = gone
+        removed, n_removed = gone, n_gone
         if rnd % _REMOVED_CHECKPOINT_ROUNDS == 0:
             removed = removed.localCheckpoint(eager=True)
-        if n_removed > _BCAST_MAX_PEELED:
+        if n_removed > pair_list.BCAST_MAX_IDS:
             # compact: one bounded anti-join rewrite of the pair list
-            # (the r5 round body), then the removed set resets — no
-            # broadcast ever carries more than the gate
+            # (the naive round body), then the removed set resets — no
+            # broadcast ever carries more than the budget
             pairs = (
                 pairs.join(removed.withColumnRenamed("id", "u"), "u", "left_anti")
                 .join(removed.withColumnRenamed("id", "v"), "v", "left_anti")
                 .localCheckpoint(eager=True)
             )
             removed, n_removed = None, 0
-    raise RuntimeError(f"k_core did not converge within {max_rounds} rounds")
+    raise RuntimeError(f"k_core did not converge within {MAX_ROUNDS} rounds")
 
 
 def k_core_py(edge_list: list[tuple[str, str]], k: int) -> dict[str, int]:

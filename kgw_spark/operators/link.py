@@ -10,8 +10,9 @@ merge (kgw/biomedicine/_primekg.py:155-172, T7 in SURVEY §2.2).
 ``link_salted`` is the path for a dictionary too big to broadcast: a
 plain shuffle join on the alias id would send every mention of a hot
 entity (e.g. a function called from 60% of all files) to one reducer.
-We salt: replicate each dictionary row K ways, key the big side by
-(alias, pmod(hash(lineage), K)) so hot keys spread over K reducers.
+We salt: replicate each dictionary row K = ``NUM_SALTS`` ways, key the
+big side by (alias, pmod(hash(lineage), K)) so hot keys spread over K
+reducers.
 Deterministic (hash of lineage columns, no rand()).
 
 Disambiguation: when the dictionary offers multiple candidates per
@@ -25,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ALIAS_COLS = ("alias_id", "canonical_id", "score")
+# salted-link fan-out: dictionary replicas, and reducers per hot alias
+NUM_SALTS = 16
 
 
 def best_candidates(alias_df: DataFrame) -> DataFrame:
@@ -52,9 +55,7 @@ def _apply_mapping(mentions: DataFrame, mapping: DataFrame, col: str) -> DataFra
     )
 
 
-def link_salted(
-    mentions: DataFrame, alias_df: DataFrame, num_salts: int = 16
-) -> DataFrame:
+def link_salted(mentions: DataFrame, alias_df: DataFrame) -> DataFrame:
     """Resolve obj via a salted repartition join (dictionary too large to
     broadcast). The subj side rarely skews (subjects are files/defs), so
     only obj — where hot entities live — gets the salted treatment here;
@@ -63,10 +64,10 @@ def link_salted(
     salted_dict = mapping.select(
         F.col("alias_id").alias("_obj_alias"),
         F.col("canonical_id").alias("_obj_canon"),
-    ).withColumn("_dsalt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))))
+    ).withColumn("_dsalt", F.explode(F.sequence(F.lit(0), F.lit(NUM_SALTS - 1))))
     big = mentions.withColumn(
         "_salt",
-        F.pmod(F.hash("repo", "path", "content_sha256"), F.lit(num_salts)).cast("int"),
+        F.pmod(F.hash("repo", "path", "content_sha256"), F.lit(NUM_SALTS)).cast("int"),
     )
     out = (
         big.join(

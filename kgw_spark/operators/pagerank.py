@@ -29,13 +29,15 @@ iteration runs on the driver in the same int64 arithmetic
 (``incore.pagerank``: ``np.add.at`` integer sums, never float
 ``bincount`` weights) — at most 3 Spark jobs whatever ``iters`` is.
 
-Past the gate, the plan shape per iteration: one join edges⋈ranks on the
-source id, one groupBy target, one left join back to the node set; each
-iteration ``localCheckpoint``-ed. The out-degree rides inside the rank
-vector (8 bytes/node) instead of being pre-joined onto the edge list —
-the caller's materialized edge frame is scanned as-is every iteration
-and no second copy is materialized (A/B at sf0.1/32 cores: median 3.3 s
-vs 4.4 s for the pre-joined-links plan, every interleaved trial
+Past the gate, the plan shape per iteration: one ``pairs.send`` of the
+rank vector over the edges (a join on the source id, broadcast while
+the node count fits ``pairs.BCAST_MAX_IDS``), one groupBy target, one
+left join back to the node set; each iteration
+``localCheckpoint``-ed. The out-degree rides inside the rank vector
+(8 bytes/node) instead of being pre-joined onto the edge list — the
+caller's materialized edge frame is scanned as-is every iteration and
+no second copy is materialized (A/B at sf0.1/32 cores: median 3.3 s vs
+4.4 s for the pre-joined-links plan, every interleaved trial
 disjoint).
 """
 
@@ -45,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
+from kgw_spark.operators.pairs import broadcast_within, send
 
 
 def effective_scale(n_nodes: int, scale: int, damping_num: int) -> int:
@@ -99,25 +102,24 @@ def pagerank(
     scale = effective_scale(n_nodes, scale, damping_num)
     teleport = ((damping_den - damping_num) * scale) // damping_den
     ranks = nodes.withColumn("rank_scaled", F.lit(scale).cast("long"))
-    # The rank vector is |nodes| (id, long, long) rows — while it fits
-    # the broadcast budget, ship IT to the edge partitions each
-    # iteration instead of shuffling the (much larger) edge set twice
-    # per round: the contribution join becomes a map-side pass over the
-    # checkpointed edges with a partial-aggregated shuffle of ~|nodes|
-    # rows, and the update join broadcasts the aggregated contributions
-    # back onto ``nodes``. The out-degree rides in the rank vector, so
-    # no degree join ever touches the edge list. Past the gate
-    # (CKG-scale: 14.5M nodes) both joins fall back to hash-partitioned
-    # shuffles — the standard frontier trade-off (the carried ``_deg``
-    # adds 8 bytes/row to the node-sized shuffle, nothing edge-sized).
-    bcast = n_nodes <= 3_000_000
+    # The out-degree rides in the rank vector, so no degree join ever
+    # touches the edge list: each iteration sends the per-edge
+    # contribution of every node with out-edges (``pairs.send``: the
+    # node-sized vector is broadcast to the edge partitions while it
+    # fits, a map-side pass with a partial-aggregated shuffle of
+    # ~|nodes| rows), and the update join takes the aggregated
+    # contributions back onto ``nodes`` under the same budget. Dangling
+    # nodes (``_deg`` = 0) send nothing, and ANSI mode would raise on
+    # their division, so they are filtered before it.
+    arcs = edges.select(F.col("source_id").alias("x"), F.col("target_id").alias("y"))
     for _ in range(iters):
-        r = F.broadcast(ranks) if bcast else ranks
         contribs = (
-            edges.join(r, edges["source_id"] == r["id"])
-            .select(
-                F.col("target_id").alias("id"),
-                F.expr("rank_scaled div _deg").alias("_c"),
+            send(
+                arcs,
+                ranks.filter("_deg > 0").select(
+                    "id", F.expr("rank_scaled div _deg").alias("_c")
+                ),
+                n_nodes,
             )
             .groupBy("id")
             .agg(F.sum("_c").alias("_s"))
@@ -129,7 +131,7 @@ def pagerank(
         # vector instead of re-deriving the whole prior chain inside a
         # deep AQE plan; it also keeps plan depth O(1) in `iters`
         ranks = (
-            nodes.join(F.broadcast(contribs) if bcast else contribs, "id", "left")
+            nodes.join(broadcast_within(contribs, n_nodes), "id", "left")
             .select(
                 "id",
                 "_deg",

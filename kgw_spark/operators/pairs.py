@@ -24,12 +24,22 @@ propagation, k-hop, pagerank) first run one gate aggregate over that input (``in
 rows and id bytes against the driver budget). Below it they read the
 input ONCE, as one Arrow collect, and iterate on the driver; past it
 they scan it every round as above (as does an input with a null id).
+
+Every distributed round of k-core, label propagation, k-hop and
+pagerank expands its node-keyed state across the arcs with ONE step,
+``send``; node-keyed state (a frontier, a label or rank vector, a
+removed set) is broadcast iff its known row count is at most ONE
+budget, ``BCAST_MAX_IDS``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# the one broadcast budget of node-keyed state: ~20-40 B per string id
+# plus a long or two of payload, so ~100 MB at the gate
+BCAST_MAX_IDS = 2_000_000
 
 
 def canonical_pairs(
@@ -69,3 +79,32 @@ def degrees(pairs: DataFrame) -> DataFrame:
         .groupBy(F.col("x").alias("id"))
         .agg(F.count(F.lit(1)).alias("degree"))
     )
+
+
+def broadcast_within(df: DataFrame, n: int) -> DataFrame:
+    """``df`` hinted for broadcast iff its ``n`` rows fit ``BCAST_MAX_IDS``
+    — ``n`` is a count the caller already holds (Catalyst cannot size
+    a checkpointed or derived node set), so the gate costs no job."""
+    return F.broadcast(df) if n <= BCAST_MAX_IDS else df
+
+
+def send(arcs: DataFrame, state: DataFrame, n_state: int) -> DataFrame:
+    """The one expansion step of the distributed graph rounds: for every
+    arc ``x → y`` of ``arcs`` whose ``x`` is a row of ``state`` (keyed
+    ``id``, distinct ids, at most ``n_state`` rows), emit ``y`` as
+    ``id`` with that row's payload columns. Undirected operators pass
+    ``both_directions(pairs)``, so one join replaces the two directional
+    joins over the ``u < v`` list; pagerank passes its directed edges.
+
+    While the state fits ``BCAST_MAX_IDS`` it ships to the arc
+    partitions: a node-sized vector broadcast once per round makes the
+    expansion a map-side pass over the caller-materialized arcs, where a
+    shuffled join would move the (much larger) arc set every round —
+    twice for a two-sided update. Past the budget the join is
+    hash-partitioned on both sides; nothing arc-sized is ever
+    materialized here, and the caller aggregates what arrives (a
+    partial map-side aggregate bounds that shuffle by the target
+    count)."""
+    payload = [c for c in state.columns if c != "id"]
+    at = broadcast_within(state.withColumnRenamed("id", "x"), n_state)
+    return arcs.join(at, "x").select(F.col("y").alias("id"), *payload)

@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+import itertools
 import math
 import random
 
@@ -165,9 +166,10 @@ def cosine_near_pairs(
     oracle/test path, never the scale path.
     """
     if probe_radius > 2:
-        # variant generation enumerates bit-flips only up to ball radius
-        # 4 (= 2·2); a larger radius would silently probe a smaller ball
-        # than the docstring contract promises
+        # the probe array holds every mask of up to 2·probe_radius
+        # flipped bits — C(n_planes, i) per radius i, one parsed struct
+        # each per round; past ball radius 4 that plan explodes, while
+        # extra rounds raise recall at linear cost
         raise ValueError(
             f"probe_radius={probe_radius} not supported (max 2); "
             "use more rounds for higher recall instead"
@@ -242,31 +244,11 @@ def cosine_near_pairs(
         # Columns cost ~0.5s of driver wall per run at any data size,
         # while the parsed plan (and therefore every certified value)
         # is identical.
-        ball_radius = 2 * probe_radius
-        masks = [0]
-        if ball_radius >= 1:
-            masks += [1 << b for b in range(n_planes)]
-        if ball_radius >= 2:
-            masks += [
-                (1 << i) | (1 << j)
-                for i in range(n_planes)
-                for j in range(i + 1, n_planes)
-            ]
-        if ball_radius >= 3:
-            masks += [
-                (1 << i) | (1 << j) | (1 << k)
-                for i in range(n_planes)
-                for j in range(i + 1, n_planes)
-                for k in range(j + 1, n_planes)
-            ]
-        if ball_radius >= 4:
-            masks += [
-                (1 << i) | (1 << j) | (1 << k) | (1 << m)
-                for i in range(n_planes)
-                for j in range(i + 1, n_planes)
-                for k in range(j + 1, n_planes)
-                for m in range(k + 1, n_planes)
-            ]
+        masks = [
+            sum(1 << b for b in bits)
+            for radius in range(2 * probe_radius + 1)
+            for bits in itertools.combinations(range(n_planes), radius)
+        ]
         probe_structs = ",".join(
             f"struct({r} as `round`, (_sigs[{r}] ^ {m}) as bucket)"
             for r in range(rounds)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
+from kgw_spark.operators.pairs import both_directions, broadcast_within, send
 from kgw_spark.plans.hints import broadcast_if_small
 
 
@@ -110,12 +111,6 @@ def compact_schema(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-# Above this many neighbors the hub's neighbor set stops being
-# broadcastable (ids ≈ 20-40 B each → ~100 MB at the gate) and the
-# among-join falls back to a shuffled semi-join.
-_NEIGHBOR_BROADCAST_GATE = 2_000_000
-
-
 def neighborhood(edges: DataFrame, node_id: str) -> DataFrame:
     """A7 (examples/downstream_analysis.ipynb): the 1-hop neighborhood
     of ``node_id`` — incident edges plus edges among the neighbors.
@@ -140,13 +135,9 @@ def neighborhood(edges: DataFrame, node_id: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    small = neighbors.count() <= _NEIGHBOR_BROADCAST_GATE
-    nb = F.broadcast(neighbors) if small else neighbors
-    nb2 = (
-        F.broadcast(neighbors.withColumnRenamed("nid", "nid2"))
-        if small
-        else neighbors.withColumnRenamed("nid", "nid2")
-    )
+    n_nb = neighbors.count()
+    nb = broadcast_within(neighbors, n_nb)
+    nb2 = broadcast_within(neighbors.withColumnRenamed("nid", "nid2"), n_nb)
     among = edges.join(nb, edges["source_id"] == F.col("nid"), "left_semi").join(
         nb2, edges["target_id"] == F.col("nid2"), "left_semi"
     )
@@ -234,20 +225,21 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
     """BFS distances ≤ k from ``node_id`` over the undirected simple
     graph given by the canonical pair list ``pairs``
     (``pairs.canonical_pairs``): ``(id, hop)`` with hop = shortest
-    undirected distance. Iterative frontier expansion — per level, two
-    directional joins against the pair list (frontier⋈u ∪ frontier⋈v).
+    undirected distance. Iterative frontier expansion — per level, one
+    ``pairs.send`` of the frontier over ``both_directions(pairs)``.
 
     Below the driver budget (``incore.fits_driver``) the pair list is
     collected once and the BFS runs over boolean frontier masks on the
     driver (``incore.k_hop``) — at most 3 Spark jobs for any ``k``.
 
     Past the gate, plan discipline: every level scans the
-    caller-materialized pair list; the frontier is force-broadcast
-    behind an explicit count gate — its count is already known from the
-    previous level's emptiness check, so no level ever shuffles the pair
-    list while the frontier is small — and only the per-level frontier
-    is checkpointed (the visited set is a cheap union of those ≤k tiny
-    checkpointed frames, not re-checkpointed every round).
+    caller-materialized pair list; ``send`` broadcasts the frontier
+    while its count fits ``pairs.BCAST_MAX_IDS`` — that count is already
+    known from the previous level's emptiness check, so no level ever
+    shuffles the pair list while the frontier is small — and only the
+    per-level frontier is checkpointed (the visited set is a cheap union
+    of those ≤k tiny checkpointed frames, not re-checkpointed every
+    round).
     """
     out = incore.k_hop(pairs, node_id, k)
     if out is not None:
@@ -256,20 +248,15 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
     from kgw_spark.session import local_df
 
     seed = local_df(spark, [(node_id, 0)], "id string, hop int")
+    arcs = both_directions(pairs)
     frames = [seed]
     frontier, frontier_n = seed, 1
     for hop in range(1, k + 1):
         visited = frames[0]
         for fr in frames[1:]:
             visited = visited.union(fr)
-        fu = frontier.select(F.col("id").alias("u"))
-        fv = frontier.select(F.col("id").alias("v"))
-        if frontier_n <= _NEIGHBOR_BROADCAST_GATE:
-            fu, fv = F.broadcast(fu), F.broadcast(fv)
-        fwd = pairs.join(fu, "u").select(F.col("v").alias("id"))
-        bwd = pairs.join(fv, "v").select(F.col("u").alias("id"))
         nxt = (
-            fwd.union(bwd)
+            send(arcs, frontier.select("id"), frontier_n)
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
             .withColumn("hop", F.lit(hop))

@@ -50,7 +50,6 @@ def run_pipeline(
     store: TableStore,
     input_fingerprint: str,
     salted: bool = False,
-    num_salts: int = 16,
     materialize_intermediate: bool = True,
     alias_local=None,
 ) -> PipelineResult:
@@ -141,7 +140,7 @@ def run_pipeline(
         # dictionary too big to broadcast: salted shuffle-hash link,
         # then CC-canonicalization as a separate rewrite
         linked = stage(
-            "linked", lambda: link_salted(mentions, alias_df, num_salts), "pred"
+            "linked", lambda: link_salted(mentions, alias_df), "pred"
         )
         canonical = stage(
             "canonical",

@@ -143,7 +143,7 @@ def test_min_label_propagation_matches_python(spark, monkeypatch):
     with a hub, a chain, an isolated node, a self-loop, and duplicate/
     reversed edges, at every round count 1..4; with enough rounds the
     labels equal each component's minimum id."""
-    from kgw_spark.operators import communities
+    from kgw_spark.operators import pairs as pair_list
     from kgw_spark.operators.communities import (
         label_propagation_py,
         min_label_propagation,
@@ -177,11 +177,11 @@ def test_min_label_propagation_matches_python(spark, monkeypatch):
         "h": "a", "a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "f": "a",
         "x": "x", "y": "x", "iso": "iso",
     }
-    # far side of the node gate, on the distributed path: the
+    # far side of the broadcast budget, on the distributed path: the
     # dictionary-encoded rounds with the shuffled (non-broadcast)
     # message and decode joins return the same rows as checked above
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
-    monkeypatch.setattr(communities, "_BCAST_MAX_NODES", 0)
+    monkeypatch.setattr(pair_list, "BCAST_MAX_IDS", 0)
     for rounds in (1, 3):
         got = {
             r.id: r.label
@@ -198,7 +198,7 @@ def test_k_core_matches_python(spark, monkeypatch):
     """k_core == the pure-Python peeling replica on a hand graph with a
     4-clique, a pendant triangle, a chain, duplicate/reversed edges and
     a self-loop, for k = 1..5 — including k where the core is empty."""
-    from kgw_spark.operators import kcore
+    from kgw_spark.operators import pairs as pair_list
     from kgw_spark.operators.kcore import k_core, k_core_py
     from kgw_spark.operators.pairs import canonical_pairs
 
@@ -222,11 +222,11 @@ def test_k_core_matches_python(spark, monkeypatch):
     assert {r.id for r in k_core(pairs, k=3).collect()} == {"a", "b", "c", "d"}
     assert k_core(pairs, k=3).filter("degree != 3").count() == 0
     assert k_core(pairs, k=4).count() == 0
-    # far side of the removed-set broadcast gate, on the distributed
-    # path: past one peeled id the pair list is compacted (anti-join
-    # rewrite, removed set reset)
+    # far side of the broadcast budget, on the distributed path: past
+    # one peeled id the pair list is compacted (anti-join rewrite,
+    # removed set reset), and larger frontiers are shuffled
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
-    monkeypatch.setattr(kcore, "_BCAST_MAX_PEELED", 1)
+    monkeypatch.setattr(pair_list, "BCAST_MAX_IDS", 1)
     for k in (1, 2, 3, 4, 5):
         got = {r.id: r.degree for r in k_core(pairs, k=k).collect()}
         assert got == k_core_py(raw, k=k), k

@@ -2,8 +2,10 @@
 graphs: every undirected operator reads ``canonical_pairs`` of the raw
 edges, pagerank and connected components read the raw directed edges,
 and each result must equal the replica computed from the raw edge
-list — on the in-core path below the driver budget and on the
-distributed rounds past it."""
+list — on the in-core path below the driver budget, on the
+distributed rounds past it, and on those rounds with every node-keyed
+state shuffled instead of broadcast (past ``pairs.BCAST_MAX_IDS``,
+which also compacts k-core's pair list every round)."""
 
 import itertools
 import random
@@ -12,6 +14,7 @@ import pytest
 from pyspark.sql.types import _parse_datatype_string
 
 from kgw_spark.operators import canon, incore
+from kgw_spark.operators import pairs as pair_list
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
@@ -128,12 +131,14 @@ def _frames(spark, name):
     return raw, node_ids, edges, nodes, canonical_pairs(edges)
 
 
-@pytest.mark.parametrize("path", ["in_core", "distributed"])
+@pytest.mark.parametrize("path", ["in_core", "distributed", "shuffled"])
 @pytest.mark.parametrize("name", list(GRAPHS))
 def test_operators_match_replicas(spark, monkeypatch, name, path):
     raw, node_ids, edges, nodes, pairs = _frames(spark, name)
-    if path == "distributed":
+    if path != "in_core":
         monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    if path == "shuffled":
+        monkeypatch.setattr(pair_list, "BCAST_MAX_IDS", -1)
 
     def rows(op, df):
         assert df.schema == _parse_datatype_string(SCHEMAS[op]), op

@@ -356,3 +356,17 @@ def test_label_prop_rounds_hash_aggregate(spark, monkeypatch):
     for p in rounds:
         assert "HashAggregate" in p
         assert "SortAggregate" not in p
+
+
+def test_simhash_join_legs_scan_checkpoint(spark):
+    """Both legs of the SimHash banded self-join scan ONE checkpointed
+    signature table: the plan has exactly two ExistingRDD scans (the
+    checkpoint, once per leg), and the per-token hashing and bit
+    assembly of the signature kernel (xxhash64, shiftleft) never
+    re-run inside the join."""
+    from kgw_spark.operators.dedup import simhash_near_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    p = plan(simhash_near_pairs(docs, max_hamming=6))
+    assert len(re.findall(r"^\(\d+\) Scan ExistingRDD", p, re.M)) == 2, p
+    assert "xxhash64" not in p and "shiftleft" not in p
