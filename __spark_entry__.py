@@ -1365,7 +1365,10 @@ def q_emb_near_pairs(spark, sf_dir):
     ≈0.9967 to their originals) are planted — expressible identically
     in Spark and the DuckDB oracle — and the multiprobe LSH-bucketed
     self-join (no crossJoin anywhere in the plan) must recover exactly
-    the pairs the oracle's exact quadratic scan finds."""
+    the pairs the oracle's exact quadratic scan finds. Below the driver
+    gate the identical signatures, probes and exact verify run in-core
+    (``incore.cosine_near_pairs``), never brute force, so the oracle
+    still certifies the LSH algorithm on both paths."""
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     twins = base.filter(F.col("vec_id") < 100).select(
@@ -1385,7 +1388,10 @@ def q_docs_minhash_lsh(spark, sf_dir):
     the exact all-pairs Jaccard SQL: equality certifies that LSH
     candidate recall is 1.0 on this data AND the verify math is exact
     (the verify step guarantees no false positives, so equality is
-    exactly a recall check)."""
+    exactly a recall check). Below the driver gate the identical
+    signatures, bands and verify run in-core
+    (``incore.minhash_lsh_pairs``), so the oracle certifies the LSH
+    algorithm on both paths."""
     docs = _tp(spark, sf_dir, "documents")
     return DD.minhash_lsh_pairs(docs, n=3, num_perm=64, bands=16, threshold=0.2)
 

@@ -14,13 +14,19 @@ Exact and near-duplicate detection over a documents table. Shapes:
 - embedding:    cosine ≥ τ via (optionally LSH-bucketed) self-join
 
 All hashing is JVM-side (xxhash64 / murmur hash) — deterministic and
-shuffle-friendly; no Python in the hot path.
+shuffle-friendly. Past the driver budget no Python runs in the hot
+path; below it MinHash+LSH collects its JVM-hashed shingle lists once
+and runs the same signatures, bands and verify as a numpy kernel on the
+driver (``incore.minhash_lsh_pairs``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kgw_spark.operators import incore
+from kgw_spark.operators.pairs import broadcast_within
 
 
 # --------------------------------------------------------------------------
@@ -94,10 +100,14 @@ def _jaccard_pairs(
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
     sa = sizes.select(F.col(id_col).alias("a"), F.col("_size").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("b"), F.col("_size").alias("size_b"))
+    return _jaccard(common.join(sa, "a").join(sb, "b"), threshold)
+
+
+def _jaccard(counts: DataFrame, threshold: float) -> DataFrame:
+    """``(a, b, jaccard)`` from ``(a, b, common, size_a, size_b)``: exact
+    Jaccard rounded to 6 (half-up), kept at ``>= threshold``."""
     return (
-        common.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
+        counts.withColumn(
             "jaccard",
             F.round(
                 F.col("common") / (F.col("size_a") + F.col("size_b") - F.col("common")),
@@ -332,13 +342,18 @@ def minhash_signatures(
     )
 
 
+def _shingle_hash(shingle: Column) -> Column:
+    """The base hash of a shingle, ``abs(xxhash64) mod M`` (JVM-side)."""
+    return F.abs(F.xxhash64(shingle)) % F.lit(_MERSENNE)
+
+
 def _signatures_from_shingles(
     sh: DataFrame, num_perm: int, seed: int, id_col: str
 ) -> DataFrame:
     """Signatures from an existing (id, shingle) table — lets callers
     that also need the shingle set for exact verification (LSH) build
     it once."""
-    hashed = sh.withColumn("h", F.abs(F.xxhash64("shingle")) % F.lit(_MERSENNE))
+    hashed = sh.withColumn("h", _shingle_hash(F.col("shingle")))
     coeffs = _perm_coeffs(num_perm, seed)
     # one aggregate pass: min per permutation. The whole array-of-mins
     # is ONE F.expr string — building num_perm Column trees through
@@ -372,9 +387,24 @@ def minhash_lsh_pairs(
     checkpointed (it is band-collision-bounded and tiny relative to
     the corpus), so the verify phase broadcasts candidates into scans
     of the cached shingles instead of shuffling the shingle table on a
-    composite key."""
+    composite key.
+
+    Below the driver budget (``incore.minhash_lsh_pairs``) one
+    projection computes each document's distinct shingles and their
+    base hashes JVM-side, one Arrow collect brings them to the driver,
+    and the same signatures, bands and exact verify run there; only the
+    Jaccard rounding and the threshold (``_jaccard``) run in Spark."""
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
+    grams = docs.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(word_ngrams(text_col, n)).alias("shingles"),
+    ).select("id", "shingles", F.transform("shingles", _shingle_hash).alias("h"))
+    counts = incore.minhash_lsh_pairs(
+        grams, _perm_coeffs(num_perm, seed), rows_per_band, threshold
+    )
+    if counts is not None:
+        return _jaccard(counts, threshold)
     sh = shingles(docs, n, id_col, text_col).persist()
     sig = _signatures_from_shingles(sh, num_perm, seed, id_col)
     # band structs as ONE parsed expression (not bands×rows_per_band
@@ -410,20 +440,21 @@ def minhash_lsh_pairs(
         .localCheckpoint(eager=True)
     )
     # verify candidates with exact jaccard — but FIRST prune the cached
-    # shingle table to docs that appear in some candidate pair (one
-    # broadcast semi-join, map-side over the cache): the verify joins
-    # and the size aggregation then run over candidate-doc shingles
-    # only, a guide-(S)3.2 semi-join reduction that also removes the
-    # (b, shingle)-keyed shuffle of the full shingle table. The
-    # candidate-doc set is band-collision-bounded like the candidate
-    # pairs themselves, so the broadcast is as safe as the runtime
-    # broadcasts AQE already chose for the candidate side.
+    # shingle table to docs that appear in some candidate pair (a
+    # semi-join, map-side over the cache while the doc set is
+    # broadcast): the verify joins and the size aggregation then run
+    # over candidate-doc shingles only, a guide-(S)3.2 semi-join
+    # reduction that also removes the (b, shingle)-keyed shuffle of the
+    # full shingle table. This plan runs past the driver budget, where
+    # heavy duplication can make the candidate-doc set approach the
+    # corpus, so the broadcast is gated on its bound — at most two docs
+    # per candidate — and the semi-join shuffles past the budget.
     cand_docs = (
         candidates.select(F.col("a").alias(id_col))
         .union(candidates.select(F.col("b").alias(id_col)))
         .distinct()
     )
-    vsh = sh.join(F.broadcast(cand_docs), id_col, "semi")
+    vsh = sh.join(broadcast_within(cand_docs, 2 * candidates.count()), id_col, "semi")
     sa = vsh.select(F.col(id_col).alias("a"), "shingle")
     sb = vsh.select(F.col(id_col).alias("b"), "shingle")
     common = (

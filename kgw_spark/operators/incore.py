@@ -1,26 +1,38 @@
-"""In-core graph kernels below one driver-budget gate.
+"""In-core kernels below one driver-budget gate.
 
 The graph operators (``canon.connected_components``, ``kcore.k_core``,
 ``communities.min_label_propagation``, ``pagerank.pagerank``,
-``analytics.k_hop``) spend their time on a small graph planning,
-code-generating and scheduling one Spark job after another, not
-computing: every round is a handful of jobs over data that a single
-driver process holds in a few MB.
+``analytics.k_hop``, ``triangles.triangle_count``) and the near-duplicate
+candidate searches (``dedup.minhash_lsh_pairs``,
+``similarity.cosine_near_pairs``) spend their time on small inputs
+planning, code-generating and scheduling one Spark job after another,
+not computing: every round or join is a handful of jobs over data that
+a single driver process holds in a few MB.
 
 The gate (``fits_driver``) is ONE parallel aggregate bounding rows AND
-bytes of a two-column id list. Under it the list arrives in one Arrow
-collect, ``pd.factorize(sort=True)`` turns the ids into
-order-preserving int64 codes (Python string order is code-point order,
-which is UTF-8 byte order, which is Spark's binary string order — so a
-min over codes is the min over strings), and a vectorized numpy kernel
-runs every round on the codes. Each kernel returns a LocalRelation
-(``session.local_df`` of a pyarrow Table) with the operator's
-distributed schema, so callers see the same frame either way. Past the
-gate the operator runs its distributed rounds unchanged.
-``canon.compose_mapping_local`` feeds its driver-resident alias pairs
-to the same components kernel, skipping the gate and the collect.
+bytes of what the driver is about to collect. Under it the input
+arrives in one Arrow collect, ``pd.factorize(sort=True)`` turns the ids
+into order-preserving int64 codes (Python string order is code-point
+order, which is UTF-8 byte order, which is Spark's binary string order
+— so a min over codes is the min over strings, and ``a < b`` over codes
+is ``a < b`` over ids), and a vectorized numpy kernel runs every round
+on the codes. Each kernel returns a LocalRelation (``session.local_df``
+of a pyarrow Table) with the operator's distributed schema, so callers
+see the same frame either way. Past the gate the operator runs its
+distributed plan unchanged. ``canon.compose_mapping_local`` feeds its
+driver-resident alias pairs to the same components kernel, skipping the
+gate and the collect.
 
-The kernels are independent of the pure-Python ``*_py`` replicas,
+The candidate kernels run the SAME algorithm as their distributed
+plans (same hashes, bands, planes and probes; no brute force), group by
+sorting (a band or bucket self-join is a hash join; sorted runs are its
+in-core form), and count the candidate pairs from the group sizes
+before expanding them: past ``DRIVER_MAX_BYTES`` at two int64 codes per
+pair they hand back to the distributed plan. They return integer counts
+or raw cosines only; the rounding and the threshold stay in the
+operators' Spark expressions, applied over the LocalRelation.
+
+The graph kernels are independent of the pure-Python ``*_py`` replicas,
 which stay the tests' oracles for both paths.
 """
 
@@ -29,8 +41,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgw_spark.session import local_df
 
@@ -48,11 +62,17 @@ def fits_driver(df: DataFrame, a: str, b: str) -> bool:
     incremental limit jobs and has no byte veto (long ids), and Catalyst
     stats cannot stand in for the byte side — arrow ``createDataFrame``
     frames are stats-less LogicalRDDs (sizeInBytes = Long.MaxValue)."""
-    st = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length(a) + F.length(b)).alias("b"),
-    ).collect()[0]
-    return st["n"] <= DRIVER_MAX_ROWS and (st["b"] or 0) + 48 * st["n"] <= DRIVER_MAX_BYTES
+    return _fits(df, F.count(F.lit(1)), F.sum(F.length(a) + F.length(b)))
+
+
+def _fits(df: DataFrame, n: Column, nbytes: Column) -> bool:
+    """``fits_driver`` over any collected shape, in ONE aggregate: ``n``
+    counts the collected values (the rows of an id list, the shingles of
+    the documents) and ``nbytes`` sums their payload bytes; each value
+    adds a fixed 48 B."""
+    st = df.agg(n.alias("n"), nbytes.alias("b")).collect()[0]
+    n = st["n"] or 0
+    return n <= DRIVER_MAX_ROWS and (st["b"] or 0) + 48 * n <= DRIVER_MAX_BYTES
 
 
 def factorize(a, b):
@@ -240,3 +260,323 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame | None:
         }
     )
     return local_df(pairs.sparkSession, out, "id string, hop int")
+
+
+# --------------------------------------------------------------------------
+# pair kernels: triangles and near-duplicate candidates, as sorted runs
+# --------------------------------------------------------------------------
+def _runs(keys):
+    """Sort the rows of the 2-D int array ``keys``: ``(order, end)``,
+    where ``order`` lists the row indices in key order (stable) and
+    ``end[p]`` is one past the last sorted position of the run of equal
+    keys that holds sorted position ``p``."""
+    order = np.lexsort(keys.T[::-1])
+    s = keys[order]
+    first = np.ones(len(s), bool)
+    first[1:] = (s[1:] != s[:-1]).any(axis=1)
+    starts = np.flatnonzero(first)
+    sizes = np.diff(np.append(starts, len(s)))
+    return order, np.repeat(starts + sizes, sizes)
+
+
+def _run_partners(end):
+    """The later positions of each sorted position's run — its pair
+    partners; their sum is ΣC(g, 2) over the runs."""
+    return end - np.arange(len(end)) - 1
+
+
+def _spans(lengths):
+    """``(rep, k)`` enumerating ``k = 0 .. lengths[i] - 1`` for every
+    ``i`` (``rep`` holds the ``i``): the one vectorized expansion behind
+    every candidate list, so no Python loop runs per pair."""
+    lengths = np.asarray(lengths, np.int64)
+    rep = np.repeat(np.arange(len(lengths)), lengths)
+    k = np.arange(len(rep)) - np.repeat(np.cumsum(lengths) - lengths, lengths)
+    return rep, k
+
+
+def _pairs_within(order, end):
+    """Every unordered pair of rows sharing a run of ``_runs``, as two
+    row-index arrays."""
+    p, k = _spans(_run_partners(end))
+    return order[p], order[p + 1 + k]
+
+
+def _distinct_pairs(parts, n: int):
+    """``(lo, hi)``, ``lo < hi``: the distinct unordered code pairs among
+    the ``(i, j)`` row-index array pairs of ``parts`` (codes below
+    ``n``), in code order."""
+    none = np.empty(0, np.int64)
+    i = np.concatenate([p[0] for p in parts] + [none])
+    j = np.concatenate([p[1] for p in parts] + [none])
+    key = np.unique(np.minimum(i, j) * n + np.maximum(i, j))
+    return key // n, key % n
+
+
+def _fits_pairs(n_pairs: int) -> bool:
+    """Whether ``n_pairs`` candidates, two int64 codes each, fit
+    ``DRIVER_MAX_BYTES`` — checked on the counts from the group sizes,
+    before any pair is expanded."""
+    return 16 * n_pairs <= DRIVER_MAX_BYTES
+
+
+def _chunks(weights):
+    """Consecutive slices over ``weights`` of at most 2^22 total weight
+    each (a heavier single item gets a slice of its own): the verify
+    passes expand one chunk of candidates at a time, a few tens of MB."""
+    cum = np.cumsum(weights)
+    i = 0
+    while i < len(cum):
+        base = cum[i - 1] if i else 0
+        j = max(int(np.searchsorted(cum, base + (1 << 22), side="right")), i + 1)
+        yield slice(i, j)
+        i = j
+
+
+def _may_pass(x, threshold: float):
+    """The raw values that may still pass the operator's Spark filter
+    ``round(x, 6) >= threshold``: rounding moves a value by at most
+    5e-7. NaN never passes: the distributed verify's pandas UDF hands a
+    NaN cosine (a zero vector's) to Spark as null, which fails the
+    filter. The rounding and the filter themselves stay in Spark."""
+    return x >= threshold - 1e-6
+
+
+def _orderable(df: DataFrame) -> bool:
+    """Whether the ``id`` column orders the same in numpy as in Spark:
+    integral or string."""
+    return isinstance(df.schema["id"].dataType, (T.IntegralType, T.StringType))
+
+
+def _id_codes(ids: pa.Array, rows):
+    """``(codes, first)`` for the non-null ids ``ids[rows]``:
+    order-preserving codes (``codes[i]`` of ``ids[rows[i]]``), and
+    ``first[c]``, the row holding code ``c``. None if an id repeats."""
+    codes, uniq = pd.factorize(ids.take(rows).to_numpy(zero_copy_only=False), sort=True)
+    if len(uniq) < len(rows):
+        return None
+    first = np.empty(len(uniq), np.int64)
+    first[codes] = rows
+    return codes, first
+
+
+def _pair_frame(df: DataFrame, ids: pa.Array, first, lo, hi, cols: dict, ddl: str):
+    """The LocalRelation ``(a, b, *cols)`` of the code pairs ``(lo, hi)``,
+    ``a`` and ``b`` typed (and nullable) as ``df``'s ``id``."""
+    f = df.schema["id"]
+    t = f.dataType.simpleString() + ("" if f.nullable else " not null")
+    out = pa.table({"a": ids.take(first[lo]), "b": ids.take(first[hi]), **cols})
+    return local_df(df.sparkSession, out, f"a {t}, b {t}, {ddl}")
+
+
+def triangle_count(pairs: DataFrame) -> DataFrame | None:
+    """``triangles.triangle_count`` in-core: the same (degree, id)
+    orientation over the codes (code order is id order), each wedge a
+    pair of out-arcs of one node (a run of equal sources), closed by a
+    sorted lookup of the pair keys. None past the driver budget: the
+    pair list, or its wedge count."""
+    got = _collect_codes(pairs, "u", "v")
+    if got is None:
+        return None
+    u, v, ids = got
+    n = max(len(ids), 1)
+    deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
+    lower_first = (deg[u] < deg[v]) | ((deg[u] == deg[v]) & (u < v))
+    src, dst = np.where(lower_first, u, v), np.where(lower_first, v, u)
+    order, end = _runs(src[:, None])
+    n_wedges = int(_run_partners(end).sum())
+    if not _fits_pairs(n_wedges):
+        return None
+    i, j = _pairs_within(order, end)
+    b1, b2 = dst[i], dst[j]
+    closing = np.sort(u * n + v)
+    wedge = np.minimum(b1, b2) * n + np.maximum(b1, b2)
+    at = np.minimum(np.searchsorted(closing, wedge), len(closing) - 1)
+    out = pa.table(
+        {
+            "n_edges": [len(u)],
+            "n_wedges": [n_wedges],
+            "n_triangles": [int((closing[at] == wedge).sum())],
+        }
+    )
+    return local_df(
+        pairs.sparkSession,
+        out,
+        "n_edges bigint not null, n_wedges bigint not null, n_triangles bigint not null",
+    )
+
+
+def minhash_lsh_pairs(
+    grams: DataFrame, coeffs, rows_per_band: int, threshold: float
+) -> DataFrame | None:
+    """``dedup.minhash_lsh_pairs`` in-core over ``grams`` = ``(id,
+    shingles, h)``: each document's distinct shingles and their
+    JVM-side base hashes (Python has no xxhash64). Returns the verified
+    candidates ``(a, b, common, size_a, size_b)``, ``a < b``, whose
+    Jaccard may pass ``threshold``; the operator rounds and filters
+    them in Spark.
+
+    The distributed algorithm on the driver: the minimum over each
+    document's shingles of ``(h·a + b) mod M`` per permutation
+    (``np.minimum.reduceat``); documents collide in a band when its
+    ``rows_per_band`` signature values are equal (the distributed plan
+    joins on their xxhash64, which differs only on a 64-bit collision);
+    each colliding pair is verified by its exact shingle overlap, over
+    dictionary codes of the shingle strings. A document without a
+    shingle or an id has no signature and never pairs. None past the
+    driver budget (the shingle lists, or the candidate count), for an
+    id without a numpy order, and for a repeated id, whose shingle sets
+    the distributed plan merges."""
+    from kgw_spark.operators.dedup import _MERSENNE
+
+    if not _orderable(grams) or not _fits(
+        grams,
+        F.sum(F.size("shingles")),
+        F.sum(F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)),
+    ):
+        return None
+    tbl = grams.toArrow()
+    ids = tbl.column("id").combine_chunks()
+    sh = tbl.column("shingles").combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(sh), 0).to_numpy().astype(np.int64)
+    h = tbl.column("h").combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    filled = np.flatnonzero(lens > 0)
+    sig = np.empty((len(filled), len(coeffs)), np.int64)
+    if len(filled):
+        starts = (np.cumsum(lens) - lens)[filled]
+        for p, (a, b) in enumerate(coeffs):
+            sig[:, p] = np.minimum.reduceat((h * a + b) % _MERSENNE, starts)
+    named = ids.is_valid().to_numpy(zero_copy_only=False)[filled]
+    docs, sig = filled[named], sig[named]
+    got = _id_codes(ids, docs)
+    if got is None:
+        return None
+    codes, first = got
+    n = max(len(docs), 1)
+    sig[codes] = sig.copy()
+
+    bands = [
+        _runs(sig[:, c : c + rows_per_band]) for c in range(0, sig.shape[1], rows_per_band)
+    ]
+    if not _fits_pairs(sum(int(_run_partners(end).sum()) for _, end in bands)):
+        return None
+    lo, hi = _distinct_pairs([_pairs_within(o, e) for o, e in bands], n)
+
+    # every document's shingle codes as ONE sorted (doc, shingle) key
+    # list: doc d's keys are keys[start[d] : start[d] + size[d]]
+    doc_of_row = np.full(len(lens), -1)
+    doc_of_row[docs] = codes
+    d = np.repeat(doc_of_row, lens)
+    enc = sh.flatten().dictionary_encode()
+    m = max(len(enc.dictionary), 1)
+    s = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    keys = np.sort(d[d >= 0] * m + s[d >= 0])
+    size = np.bincount(d[d >= 0], minlength=n)
+    start = np.cumsum(size) - size
+    # walk the smaller shingle set of each pair, looking each shingle up
+    # in the other document's keys
+    x = np.where(size[lo] <= size[hi], lo, hi)
+    y = lo + hi - x
+    common = np.zeros(len(lo), np.int64)
+    for c in _chunks(size[x]):
+        rep, k = _spans(size[x[c]])
+        q = y[c][rep] * m + keys[start[x[c]][rep] + k] % m
+        at = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+        common[c] = np.bincount(rep[keys[at] == q], minlength=c.stop - c.start)
+    union = size[lo] + size[hi] - common
+    keep = (common > 0) & _may_pass(common / union, threshold)
+    lo, hi = lo[keep], hi[keep]
+    cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
+    return _pair_frame(
+        grams, ids, first, lo, hi, cols, "common bigint, size_a bigint, size_b bigint"
+    )
+
+
+def cosine_near_pairs(
+    vecs: DataFrame,
+    threshold: float,
+    n_planes: int,
+    seed: int,
+    rounds: int,
+    probe_radius: int,
+) -> DataFrame | None:
+    """``similarity.cosine_near_pairs``' LSH path in-core over ``vecs`` =
+    ``(id, v array<double>)``. Returns the candidates ``(a, b, cosine)``,
+    ``a < b``, with their raw exact cosine where it may pass
+    ``threshold``; the operator rounds and filters them in Spark.
+
+    The distributed algorithm on the driver: the same round signatures
+    (``similarity._signatures``), and per round every pair whose
+    signatures differ by a mask of the radius-``2·probe_radius``
+    Hamming ball (``similarity._ball_masks``) — the pairs of one bucket
+    for mask 0, else each vector of bucket ``s`` with every vector of
+    bucket ``s ^ mask`` for the ``s`` below its partner (one-sided, so
+    each unordered bucket pair is expanded once). Candidates are
+    verified with ``similarity._cosines``, chunk by chunk. None past
+    the driver budget (the vectors, or the candidate count), for an id
+    without a numpy order, a repeated id, and a null or ragged vector,
+    which the distributed plan fails on."""
+    from kgw_spark.operators.similarity import (
+        _ball_masks,
+        _cosines,
+        _norms,
+        _plane_mats,
+        _signatures,
+    )
+
+    if not _orderable(vecs) or not _fits(
+        vecs, F.count(F.lit(1)), F.sum(F.length("id") + 8 * F.size("v"))
+    ):
+        return None
+    tbl = vecs.toArrow()
+    ids = tbl.column("id").combine_chunks()
+    v = tbl.column("v").combine_chunks()
+    lens = pc.list_value_length(v)
+    if lens.null_count or len(pc.unique(lens)) > 1:
+        return None
+    dim = lens[0].as_py() if len(lens) else 0
+    rows = np.flatnonzero(ids.is_valid().to_numpy(zero_copy_only=False))
+    got = _id_codes(ids, rows)
+    if got is None:
+        return None
+    codes, first = got
+    n = max(len(rows), 1)
+    V = np.empty((len(rows), dim))
+    V[codes] = v.flatten().to_numpy(zero_copy_only=False).reshape(len(v), dim)[rows]
+    sig = _signatures(V, _plane_mats(dim, n_planes, seed, rounds))
+
+    flips = np.array(_ball_masks(n_planes, probe_radius)[1:], np.int64)
+    # bucket s pairs with s ^ m from the side where m's top bit is clear
+    tops = np.array([1 << (int(f).bit_length() - 1) for f in flips], np.int64)
+    b = np.arange(1 << n_planes)
+    below = (b[None, :] & tops[:, None]) == 0
+    counts = [np.bincount(sig[:, r], minlength=len(b)) for r in range(rounds)]
+    if not _fits_pairs(
+        sum(
+            int((c * (c - 1) // 2).sum() + (c * c[b ^ flips[:, None]] * below).sum())
+            for c in counts
+        )
+    ):
+        return None
+    parts = []
+    for r, c in enumerate(counts):
+        s = sig[:, r]
+        order, end = _runs(s[:, None])
+        parts.append(_pairs_within(order, end))
+        bucket_start = np.cumsum(c) - c
+        for f, t in zip(flips, tops):
+            left = np.flatnonzero((s & t) == 0)
+            target = s[left] ^ f
+            rep, k = _spans(c[target])
+            parts.append((left[rep], order[bucket_start[target][rep] + k]))
+    lo, hi = _distinct_pairs(parts, n)
+    VT = np.ascontiguousarray(V.T)
+    norms = _norms(VT)
+    cos = np.empty(len(lo))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        for c in _chunks(np.full(len(lo), max(dim, 1))):
+            cos[c] = _cosines(VT, norms, lo[c], hi[c])
+    keep = _may_pass(cos, threshold)
+    return _pair_frame(
+        vecs, ids, first, lo[keep], hi[keep], {"cosine": cos[keep]}, "cosine double"
+    )

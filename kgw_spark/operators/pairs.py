@@ -20,8 +20,9 @@ counts edge instances), such as ``tpch_kg.kg_edges2``, and
 frame, duplicates and self-pairs allowed.
 
 The iterative operators (connected components, k-core, label
-propagation, k-hop, pagerank) first run one gate aggregate over that input (``incore.fits_driver``:
-rows and id bytes against the driver budget). Below it they read the
+propagation, k-hop, pagerank) and triangle counting first run one gate
+aggregate over that input (``incore.fits_driver``: rows and id bytes
+against the driver budget). Below it they read the
 input ONCE, as one Arrow collect, and iterate on the driver; past it
 they scan it every round as above (as does an input with a null id).
 

@@ -17,8 +17,11 @@ import itertools
 import math
 import random
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgw_spark.operators import incore
 
 
 def _dot(a, b):
@@ -68,6 +71,66 @@ def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return [
         [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
     ]
+
+
+def _plane_mats(dim: int, n_planes: int, seed: int, rounds: int):
+    """The ``(dim, n_planes)`` hyperplane matrix of every round of
+    ``cosine_near_pairs``: round ``r`` draws its planes from seed
+    ``seed + r``."""
+    return [np.array(_planes(dim, n_planes, seed + r)).T for r in range(rounds)]
+
+
+def _signatures(V, mats):
+    """``(len(V), rounds)`` int64 round signatures of the float64 rows of
+    ``V``: bit ``i`` is set iff the row's projection on plane ``i`` of
+    the round is >= 0 — one numpy matmul per round."""
+    out = np.zeros((len(V), len(mats)), dtype=np.int64)
+    for r, m in enumerate(mats):
+        bits = ((V @ m) >= 0).astype(np.int64)  # (n, n_planes) sign bits
+        out[:, r] = bits @ (1 << np.arange(m.shape[1], dtype=np.int64))
+    return out
+
+
+def _ball_masks(n_planes: int, probe_radius: int) -> list[int]:
+    """XOR masks of the full Hamming ball of radius ``2·probe_radius``
+    over ``n_planes`` bits, the unflipped mask 0 first."""
+    return [
+        sum(1 << b for b in bits)
+        for radius in range(2 * probe_radius + 1)
+        for bits in itertools.combinations(range(n_planes), radius)
+    ]
+
+
+def _norms(VT):
+    """The L2 norm of every column of the ``(dim, n)`` float64 matrix
+    ``VT``, its squares accumulated in index order."""
+    nsq = np.zeros(VT.shape[1], dtype=np.float64)
+    for row in VT:
+        nsq = nsq + row * row
+    return np.sqrt(nsq)
+
+
+def _cosines(VT, norms, lo, hi):
+    """Exact cosine of the column pairs ``(lo[k], hi[k])`` of ``VT``
+    (``norms`` from ``_norms``): the dot accumulated elementwise in index
+    order over float64 — bit-identical to the ``_dot``/``_norm`` fold
+    semantics (a zero vector gives NaN, which the pandas UDF returns to
+    Spark as null). Gathering from one row of the transposed matrix per
+    dimension keeps every pass contiguous."""
+    acc = np.zeros(len(lo), dtype=np.float64)
+    for row in VT:
+        acc = acc + row[lo] * row[hi]
+    return acc / (norms[lo] * norms[hi])
+
+
+def _near(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(a, b, cosine)`` from raw cosines: rounded to 6, kept at
+    ``>= threshold``."""
+    return (
+        pairs.withColumn("cosine", F.round(F.col("cosine"), 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("a", "b", "cosine")
+    )
 
 
 def _sql_double(x: float) -> str:
@@ -162,6 +225,12 @@ def cosine_near_pairs(
       (1 - P[Binom(n_planes, θ/π) ≤ 2·probe_radius])^rounds, vanishing
       for near-duplicate thresholds.
 
+    Below the driver budget (``incore.cosine_near_pairs``) the same
+    signatures, probes and verify run in-core on the driver after one
+    gate aggregate and one Arrow collect of the vectors; the rounding
+    and the threshold stay in the Spark expression of ``_near`` on both
+    paths.
+
     ``exact=True`` runs the full quadratic self-join — the brute-force
     oracle/test path, never the scale path.
     """
@@ -174,12 +243,16 @@ def cosine_near_pairs(
             f"probe_radius={probe_radius} not supported (max 2); "
             "use more rounds for higher recall instead"
         )
-    left = emb.select(
-        F.col(id_col).alias("a"), F.col(vec_col).cast("array<double>").alias("va")
-    )
-    right = emb.select(
-        F.col(id_col).alias("b"), F.col(vec_col).cast("array<double>").alias("vb")
-    )
+    vec = F.col(vec_col).cast("array<double>")
+    if not exact:
+        raw = incore.cosine_near_pairs(
+            emb.select(F.col(id_col).alias("id"), vec.alias("v")),
+            threshold, n_planes, seed, rounds, probe_radius,
+        )
+        if raw is not None:
+            return _near(raw, threshold)
+    left = emb.select(F.col(id_col).alias("a"), vec.alias("va"))
+    right = emb.select(F.col(id_col).alias("b"), vec.alias("vb"))
     if exact:
         joined = left.crossJoin(right).filter(F.col("a") < F.col("b"))
     else:
@@ -188,7 +261,6 @@ def cosine_near_pairs(
         # terms (×7 probe variants) into a megabyte-scale plan that
         # costs more to analyze/codegen than the data — the documented
         # exception where a vectorized pandas UDF beats built-ins.
-        import numpy as np
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
@@ -204,15 +276,8 @@ def cosine_near_pairs(
                 return pd.Series([], dtype="object")
             V = np.array(vecs.tolist(), dtype=np.float64)
             if not mats_box:
-                mats_box.extend(
-                    np.array(_planes(V.shape[1], n_planes, seed + r)).T
-                    for r in range(rounds)
-                )
-            out = np.zeros((len(V), rounds), dtype=np.int64)
-            for r, m in enumerate(mats_box):
-                bits = ((V @ m) >= 0).astype(np.int64)  # (n, n_planes) sign bits
-                out[:, r] = bits @ (1 << np.arange(m.shape[1], dtype=np.int64))
-            return pd.Series(out.tolist())
+                mats_box.extend(_plane_mats(V.shape[1], n_planes, seed, rounds))
+            return pd.Series(_signatures(V, mats_box).tolist())
 
         # explicit Series->Series hints via annotations dict: the
         # module-level `from __future__ import annotations` breaks
@@ -224,8 +289,7 @@ def cosine_near_pairs(
         # buckets): materialize it once — (id, 3 longs) per vector is
         # tiny next to re-running the signature kernel per reference.
         sigs = emb.select(
-            F.col(id_col).alias("_id"),
-            sigs_of(F.col(vec_col).cast("array<double>")).alias("_sigs"),
+            F.col(id_col).alias("_id"), sigs_of(vec).alias("_sigs")
         ).localCheckpoint(eager=True)
         # One-sided probing: the LEFT side explodes each round signature
         # into its full Hamming ball of radius 2·probe_radius, the RIGHT
@@ -238,21 +302,14 @@ def cosine_near_pairs(
         # input carries one exploded side instead of two, and the a<b
         # filter still sees every unordered pair (from either
         # direction).
-        # XOR masks for the full Hamming ball (0 = the unflipped
-        # signature itself); the whole rounds×|ball| struct array is
-        # ONE parsed expression — rounds·(1+n+C(n,2)+…) py4j-built XOR
-        # Columns cost ~0.5s of driver wall per run at any data size,
-        # while the parsed plan (and therefore every certified value)
-        # is identical.
-        masks = [
-            sum(1 << b for b in bits)
-            for radius in range(2 * probe_radius + 1)
-            for bits in itertools.combinations(range(n_planes), radius)
-        ]
+        # The whole rounds×|ball| struct array is ONE parsed expression
+        # — rounds·(1+n+C(n,2)+…) py4j-built XOR Columns cost ~0.5s of
+        # driver wall per run at any data size, while the parsed plan
+        # (and therefore every certified value) is identical.
         probe_structs = ",".join(
             f"struct({r} as `round`, (_sigs[{r}] ^ {m}) as bucket)"
             for r in range(rounds)
-            for m in masks
+            for m in _ball_masks(n_planes, probe_radius)
         )
         probes = sigs.select(
             "_id", F.expr(f"explode(array({probe_structs}))").alias("p")
@@ -277,34 +334,23 @@ def cosine_near_pairs(
     # is quadratic-ish in dense similarity neighborhoods (1.6M pairs
     # from 2100 vectors at sf0.1), and evaluating dim-length fold
     # lambdas per pair in Catalyst cost ~2x the whole query. The kernel
-    # accumulates dot and both norms elementwise in index order over
-    # float64 — bit-identical to the _dot/_norm fold semantics, so
-    # round-6 outputs are unchanged on both the LSH and exact paths.
-    import numpy as np
+    # (``_norms``, ``_cosines``) accumulates dot and norms elementwise in
+    # index order over float64 — bit-identical to the _dot/_norm fold
+    # semantics, so round-6 outputs are unchanged on both the LSH and
+    # exact paths.
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     def _cos_of(va, vb):
         if len(va) == 0:
             return pd.Series([], dtype="float64")
-        A = np.array(va.tolist(), dtype=np.float64)
-        B = np.array(vb.tolist(), dtype=np.float64)
-        acc = np.zeros(len(A), dtype=np.float64)
-        na = np.zeros(len(A), dtype=np.float64)
-        nb = np.zeros(len(A), dtype=np.float64)
-        for i in range(A.shape[1]):
-            acc = acc + A[:, i] * B[:, i]
-            na = na + A[:, i] * A[:, i]
-            nb = nb + B[:, i] * B[:, i]
-        return pd.Series(acc / (np.sqrt(na) * np.sqrt(nb)))
+        VT = np.ascontiguousarray(np.array(va.tolist() + vb.tolist(), dtype=np.float64).T)
+        k = np.arange(len(va))
+        return pd.Series(_cosines(VT, _norms(VT), k, k + len(va)))
 
     _cos_of.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}
     cos_of = pandas_udf(_cos_of, "double")
-    return (
-        joined.withColumn("cosine", F.round(cos_of(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
+    return _near(joined.select("a", "b", cos_of("va", "vb").alias("cosine")), threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,11 @@ naive 3-way self-join explodes.
 
 Everything is integer counting over deterministic orderings, so the
 result is exactly value-oracle-able in SQL.
+
+Below the driver budget (``incore.triangle_count``: one gate aggregate
+and one Arrow collect of the pair list) the same orientation and
+wedge-closing count run as numpy sorts on the driver; past it the joins
+below run.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import degrees
 
 
@@ -26,6 +32,9 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
     simple graph given by the canonical pair list ``pairs``
     (``pairs.canonical_pairs``), which feeds degree counting,
     orientation and the closing-edge lookup."""
+    out = incore.triangle_count(pairs)
+    if out is not None:
+        return out
     deg = degrees(pairs)
     du = deg.select(F.col("id").alias("u"), F.col("degree").alias("du"))
     dv = deg.select(F.col("id").alias("v"), F.col("degree").alias("dv"))

@@ -16,12 +16,15 @@ from pyspark.sql.types import _parse_datatype_string
 from kgw_spark.operators import canon, incore
 from kgw_spark.operators import pairs as pair_list
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
+from kgw_spark.operators.dedup import minhash_lsh_pairs
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
 from kgw_spark.operators.pagerank import pagerank, pagerank_py
 from kgw_spark.operators.pairs import canonical_pairs
+from kgw_spark.operators.similarity import cosine_near_pairs
 from kgw_spark.operators.triangles import triangle_count
 from kgw_spark.plans.analytics import k_hop
+from tests.test_near_dup_differential import DOCS, _vectors
 
 # name -> (raw directed edges, isolated node ids)
 GRAPHS = {
@@ -66,6 +69,7 @@ SCHEMAS = {
     "k_hop": "id string, hop int",
     "pagerank": "id string, rank_scaled bigint",
     "connected_components": "id string, canonical_id string",
+    "triangles": "n_edges bigint not null, n_wedges bigint not null, n_triangles bigint not null",
 }
 
 # a pair with a null id unions nothing: the distributed path's u != v
@@ -158,22 +162,43 @@ def test_operators_match_replicas(spark, monkeypatch, name, path):
     for start in sorted(starts):
         got = {r.id: r.hop for r in rows("k_hop", k_hop(pairs, start, k=2))}
         assert got == _bfs_py(raw, start, 2), start
-    assert tuple(triangle_count(pairs).first()) == _triangles_py(raw)
+    assert tuple(rows("triangles", triangle_count(pairs))[0]) == _triangles_py(raw)
     got = {r.id: r.rank_scaled for r in rows("pagerank", pagerank(edges, iters=4))}
     assert got == pagerank_py(raw, iters=4)
 
 
+@pytest.mark.parametrize("path", ["in_core", "distributed"])
+def test_triangle_count_int_ids(spark, monkeypatch, path):
+    """Integer ids whose numeric order is not their string order (2 <
+    9 < 10 < 100): the in-core codes must orient by the numeric (degree,
+    id) order, as the distributed joins do."""
+    if path != "in_core":
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    k4 = [(a, b) for a, b in itertools.combinations((2, 9, 10, 100), 2)]
+    raw = k4 + [(100, 2), (9, 9), (10, 7), (7, 3), (3, 10)]
+    df = spark.createDataFrame(raw, "a int, b int")
+    out = triangle_count(canonical_pairs(df, "a", "b"))
+    assert out.schema == _parse_datatype_string(SCHEMAS["triangles"])
+    assert tuple(out.first()) == _triangles_py(raw) == (9, 5, 5)
+
+
 def test_in_core_operators_run_at_most_three_jobs(spark):
-    """Below the driver budget each iterative operator costs the gate
-    aggregate and one collect — at most 3 Spark jobs, whatever its
-    round count — and its result is read without another job."""
+    """Below the driver budget each iterative operator and each
+    near-duplicate candidate search costs the gate aggregate and one
+    collect — at most 3 Spark jobs, whatever its round, band or probe
+    count — and its result is read without another job."""
     raw, node_ids, edges, nodes, pairs = _frames(spark, "random_1")
+    docs = spark.createDataFrame(DOCS["near_copies"][1], "doc_id bigint, text string")
+    emb = spark.createDataFrame(_vectors(5), "vec_id bigint, embedding array<float>")
     calls = {
         "k_core": lambda: k_core(pairs, k=3),
         "label_prop": lambda: min_label_propagation(nodes, pairs, rounds=3),
         "pagerank": lambda: pagerank(edges, iters=4),
         "k_hop": lambda: k_hop(pairs, raw[0][0], k=2),
         "connected_components": lambda: canon.connected_components(pairs),
+        "triangle_count": lambda: triangle_count(pairs),
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, threshold=0.2),
+        "cosine_near_pairs": lambda: cosine_near_pairs(emb, threshold=0.85),
     }
     sc = spark.sparkContext
     for op, call in calls.items():

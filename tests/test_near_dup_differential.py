@@ -1,0 +1,138 @@
+"""Near-duplicate candidate searches on both sides of the driver gate:
+MinHash-LSH pairs (and the cluster resolution and curation built on
+them) and multiprobe cosine-LSH pairs must return the same rows and the
+same schema — names, types, nullability — in-core below
+``incore.DRIVER_MAX_ROWS`` as on the distributed plan past it; MinHash
+also with its candidate-doc set past ``pairs.BCAST_MAX_IDS``, where the
+verify semi-join shuffles instead of broadcasting. The fixtures are the
+adversarial shapes of each: no input, one band group holding every
+document, documents without a shingle or an id, and zero vectors."""
+
+import random
+
+import pytest
+
+from kgw_spark.operators import dedup, incore, similarity
+from kgw_spark.operators import pairs as pair_list
+
+
+def _near_copies(seed, n=24, id_of=lambda i: i):
+    """``n`` documents over a 12-word vocabulary, half of them a copy of
+    another with one word changed: many shared shingles, so every band
+    holds several collisions and the verify keeps and drops pairs."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(12)]
+    texts = [[rng.choice(vocab) for _ in range(rng.randint(6, 14))] for _ in range(n // 2)]
+    for t in texts[: n // 2]:
+        copy = list(t)
+        copy[rng.randrange(len(copy))] = rng.choice(vocab)
+        texts.append(copy)
+    return [(id_of(i), " ".join(t)) for i, t in enumerate(texts)]
+
+
+# name -> (id type, rows)
+DOCS = {
+    "empty": ("bigint", []),
+    "all_identical": ("bigint", [(i, "the quick brown fox jumps over it") for i in range(9)]),
+    # under three tokens (no 3-gram), empty, null and padded text, and a
+    # null id between documents that share its shingles
+    "no_shingles": (
+        "bigint",
+        [(0, "a b"), (1, "a"), (2, ""), (3, None), (4, "x y z w"), (None, "x y z w"),
+         (5, "x y z w v"), (6, "  x   y z\tw "), (7, "a b")],
+    ),
+    "near_copies": ("bigint", _near_copies(1)),
+    # string ids whose order is not their numeric order, and int ids
+    "near_copies_str": ("string", _near_copies(2, id_of=lambda i: f"d{i}")),
+    "near_copies_int": ("int", _near_copies(3, id_of=lambda i: 1000 - 7 * i)),
+}
+
+
+# the gates' defaults: the in-core path and the broadcast side
+DRIVER_MAX_ROWS, BCAST_MAX_IDS = incore.DRIVER_MAX_ROWS, pair_list.BCAST_MAX_IDS
+
+
+def _is_local(df):
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _paths(monkeypatch, paths, call):
+    """``call()``'s (schema, rows) on each named path; the in-core result
+    must be a LocalRelation, the others not."""
+    out = {}
+    for path in paths:
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", DRIVER_MAX_ROWS if path == "in_core" else -1)
+        monkeypatch.setattr(pair_list, "BCAST_MAX_IDS", -1 if path == "shuffled" else BCAST_MAX_IDS)
+        df = call()
+        assert _is_local(df) == (path == "in_core"), path
+        out[path] = (df.schema, _rows(df))
+    return out
+
+
+@pytest.mark.parametrize("name", list(DOCS))
+def test_minhash_paths_agree(spark, monkeypatch, name):
+    id_type, rows = DOCS[name]
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    got = _paths(
+        monkeypatch,
+        ["in_core", "distributed", "shuffled"],
+        lambda: dedup.minhash_lsh_pairs(docs, n=3, num_perm=64, bands=16, threshold=0.2),
+    )
+    assert got["in_core"] == got["distributed"] == got["shuffled"]
+    if name != "empty":
+        assert got["in_core"][1], "fixture yields no pair"
+
+
+@pytest.mark.parametrize("name", ["no_shingles", "near_copies"])
+def test_dedup_near_paths_agree(spark, monkeypatch, name):
+    """Cluster resolution and curation on the pairs of either path."""
+    id_type, rows = DOCS[name]
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string").filter("doc_id IS NOT NULL")
+    for op in (dedup.near_dup_clusters, dedup.dedup_near):
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", DRIVER_MAX_ROWS)
+        below = op(docs, threshold=0.2)
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+        past = op(docs, threshold=0.2)
+        assert below.schema == past.schema, op.__name__
+        assert _rows(below) == _rows(past), op.__name__
+
+
+def _vectors(seed, n=30, dim=8):
+    """Seeded vectors plus a near twin (0.98·v + 0.01) of the first
+    third, as ``emb_near_pairs`` plants them."""
+    rng = random.Random(seed)
+    vecs = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n)]
+    twins = [[0.98 * x + 0.01 for x in v] for v in vecs[: n // 3]]
+    return [(i, v) for i, v in enumerate(vecs + twins)]
+
+
+# a zero vector's cosine is NaN; the distributed verify's pandas UDF
+# returns it to Spark as null, which fails the threshold (a NaN would
+# pass it: Spark orders NaN above every double) — both paths must drop
+# exactly those rows
+VECTORS = {
+    "empty": [],
+    "zero_vectors": _vectors(4) + [(100, [0.0] * 8), (101, [0.0] * 8)],
+    "twins": _vectors(5),
+}
+
+
+@pytest.mark.parametrize("name", list(VECTORS))
+def test_cosine_near_pairs_paths_agree(spark, monkeypatch, name):
+    emb = spark.createDataFrame(VECTORS[name], "vec_id bigint, embedding array<float>")
+    got = _paths(
+        monkeypatch,
+        ["in_core", "distributed"],
+        lambda: similarity.cosine_near_pairs(
+            emb, threshold=0.85, n_planes=6, seed=13, rounds=3, probe_radius=1
+        ),
+    )
+    assert got["in_core"] == got["distributed"]
+    pairs = got["in_core"][1]
+    assert all(100 not in (a, b) and 101 not in (a, b) for a, b, _ in pairs)
+    if name != "empty":
+        assert pairs, "fixture yields no twin"

@@ -133,13 +133,18 @@ def test_salted_link_plan_is_shuffle_hash(spark):
     assert "ShuffledHashJoin" in p
 
 
-def test_emb_near_pairs_certified_path_has_no_cartesian(spark):
+def test_emb_near_pairs_certified_path_has_no_cartesian(spark, monkeypatch):
     """The oracle-certified emb_near_pairs entry must be the LSH-bucketed
     scale path: no cartesian/nested-loop join anywhere in the plan (the
-    exact=True formulation is a quadratic crossJoin)."""
+    exact=True formulation is a quadratic crossJoin). Pinned to the
+    distributed path: the in-core result is a LocalRelation with no
+    joins to check."""
     import __spark_entry__ as E
+    from kgw_spark.operators import incore
 
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     p = plan(E.queries()["emb_near_pairs"](spark, SF))
+    assert "Join" in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
