@@ -69,10 +69,26 @@ def _fits(df: DataFrame, n: Column, nbytes: Column) -> bool:
     """``fits_driver`` over any collected shape, in ONE aggregate: ``n``
     counts the collected values (the rows of an id list, the shingles of
     the documents) and ``nbytes`` sums their payload bytes; each value
-    adds a fixed 48 B."""
+    adds a fixed 48 B. A frame ``held_on_driver`` fits with no job."""
+    if held_on_driver(df):
+        return True
     st = df.agg(n.alias("n"), nbytes.alias("b")).collect()[0]
     n = st["n"] or 0
     return n <= DRIVER_MAX_ROWS and (st["b"] or 0) + 48 * n <= DRIVER_MAX_BYTES
+
+
+def held_on_driver(df: DataFrame) -> bool:
+    """Whether ``df`` optimizes to a LocalRelation of at most
+    ``DRIVER_MAX_ROWS`` rows — the in-core kernels' own output, after
+    any deterministic projection or filter (Catalyst folds those into
+    the relation). Its rows are already in driver memory, so the budget
+    aggregate would cost 2 jobs to bound what is already held, where
+    ``collect()`` costs none. Reads the plan only: no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return (
+        plan.getClass().getSimpleName() == "LocalRelation"
+        and plan.data().size() <= DRIVER_MAX_ROWS
+    )
 
 
 def factorize(a, b):
@@ -342,10 +358,14 @@ def _may_pass(x, threshold: float):
     return x >= threshold - 1e-6
 
 
-def _orderable(df: DataFrame) -> bool:
-    """Whether the ``id`` column orders the same in numpy as in Spark:
-    integral or string."""
-    return isinstance(df.schema["id"].dataType, (T.IntegralType, T.StringType))
+def orderable(df: DataFrame, *cols: str) -> bool:
+    """Whether the columns ``cols`` of ``df`` (default ``id``) order the
+    same in numpy and Python as in Spark: integral, or strings in the
+    default (binary, code-point) collation."""
+    return all(
+        isinstance(t, T.IntegralType) or t == T.StringType()
+        for t in (df.schema[c].dataType for c in cols or ("id",))
+    )
 
 
 def _id_codes(ids: pa.Array, rows):
@@ -429,7 +449,7 @@ def minhash_lsh_pairs(
     the distributed plan merges."""
     from kgw_spark.operators.dedup import _MERSENNE
 
-    if not _orderable(grams) or not _fits(
+    if not orderable(grams) or not _fits(
         grams,
         F.sum(F.size("shingles")),
         F.sum(F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)),
@@ -524,7 +544,7 @@ def cosine_near_pairs(
         _signatures,
     )
 
-    if not _orderable(vecs) or not _fits(
+    if not orderable(vecs) or not _fits(
         vecs, F.count(F.lit(1)), F.sum(F.length("id") + 8 * F.size("v"))
     ):
         return None

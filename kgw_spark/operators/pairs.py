@@ -38,6 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
+from kgw_spark.session import local_df
+
 # the one broadcast budget of node-keyed state: ~20-40 B per string id
 # plus a long or two of payload, so ~100 MB at the gate
 BCAST_MAX_IDS = 2_000_000
@@ -53,14 +56,24 @@ def canonical_pairs(
     persist()'s columnar decode, and no encode on build). Eager, not
     lazy: when ``edges`` is an expensive pipeline (the LSH pairs of
     ``docs_similarity_triangles``) the lazy form changed that query's
-    job count and wall against the eager checkpoint it replaced."""
+    job count and wall against the eager checkpoint it replaced.
+
+    An ``edges`` frame ``incore.held_on_driver`` (the in-core MinHash
+    pairs of that query) is already on the driver: its string or
+    integer endpoints (whose Python order is Spark's) are read by
+    ``collect()``, with no job, and the list comes back as a
+    LocalRelation of the same rows and schema, instead of costing a
+    distinct and a checkpoint (2 jobs) to reach the driver again."""
     s, d = F.col(src), F.col(dst)
-    return (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    out = edges.filter(s != d).select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
+    if incore.orderable(out, "u", "v") and incore.held_on_driver(edges):
+        rows = {
+            (min(a, b), max(a, b))
+            for a, b in edges.select(src, dst).collect()
+            if a is not None and b is not None and a != b
+        }
+        return local_df(edges.sparkSession, sorted(rows), out.schema)
+    return out.distinct().localCheckpoint(eager=True)
 
 
 def both_directions(pairs: DataFrame) -> DataFrame:

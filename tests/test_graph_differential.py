@@ -24,6 +24,7 @@ from kgw_spark.operators.pairs import canonical_pairs
 from kgw_spark.operators.similarity import cosine_near_pairs
 from kgw_spark.operators.triangles import triangle_count
 from kgw_spark.plans.analytics import k_hop
+from kgw_spark.session import local_df
 from tests.test_near_dup_differential import DOCS, _vectors
 
 # name -> (raw directed edges, isolated node ids)
@@ -180,6 +181,50 @@ def test_triangle_count_int_ids(spark, monkeypatch, path):
     out = triangle_count(canonical_pairs(df, "a", "b"))
     assert out.schema == _parse_datatype_string(SCHEMAS["triangles"])
     assert tuple(out.first()) == _triangles_py(raw) == (9, 5, 5)
+
+
+@pytest.mark.parametrize("ids", ["string", "int"])
+def test_triangles_over_driver_resident_pairs(spark, tmp_path, ids):
+    """A LocalRelation pair list (the in-core MinHash pairs' shape) is
+    made canonical on the driver: ``canonical_pairs`` and
+    ``triangle_count`` over it equal the same calls over a parquet-backed
+    copy, rows and schema, and together run at most one Spark job."""
+    if ids == "string":
+        raw = GRAPHS["random_1"][0] + [("a0", None), (None, None)]
+    else:
+        raw = [(a, b) for a, b in itertools.combinations((2, 9, 10, 100), 2)]
+        raw += [(100, 2), (9, 9), (10, 7), (7, 3), (3, 10)]
+    local = local_df(spark, raw, f"a {ids}, b {ids}")
+    local.write.parquet(str(tmp_path / "pairs"))
+    stored = spark.read.parquet(str(tmp_path / "pairs"))
+
+    def rows(df):
+        return df.schema, sorted(df.collect())
+
+    assert rows(canonical_pairs(local, "a", "b")) == rows(canonical_pairs(stored, "a", "b"))
+    sc, group = spark.sparkContext, f"driver_resident_triangles_{ids}"
+    sc.setJobGroup(group, group)
+    try:
+        got = rows(triangle_count(canonical_pairs(local, "a", "b")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert got == rows(triangle_count(canonical_pairs(stored, "a", "b")))
+    assert got[1][0] == _triangles_py([e for e in raw if None not in e])
+
+
+@pytest.mark.parametrize("name", ["random_1", "random_2", "random_3"])
+def test_compose_mapping_past_the_gate_matches_local(spark, monkeypatch, name):
+    """``compose_mapping``'s window→CC path (forced past the driver gate)
+    equals ``compose_mapping_local`` on the seeded random graphs read as
+    alias rows, with seeded scores that tie and go null."""
+    rng = random.Random(int(name[-1]))
+    rows = [(a, c, rng.choice([0.2, 0.5, 0.9, None])) for a, c in GRAPHS[name][0]]
+    local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
+    dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
+    assert dist == local and len(set(local.values())) > 1
 
 
 def test_in_core_operators_run_at_most_three_jobs(spark):
