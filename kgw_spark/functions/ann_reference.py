@@ -21,17 +21,17 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-from kgw_spark.operators.similarity import _planes
+from kgw_spark.operators.similarity import ID_COL, VEC_COL, _planes
 
 
-def _load_vectors(parquet_path: str, id_col: str, vec_col: str):
+def _load_vectors(parquet_path: str):
     import pyarrow.parquet as pq
 
-    t = pq.read_table(parquet_path, columns=[id_col, vec_col])
-    ids = t.column(id_col).to_pylist()
+    t = pq.read_table(parquet_path, columns=[ID_COL, VEC_COL])
+    ids = t.column(ID_COL).to_pylist()
     # list<float32> → python floats (exact widening, same as Spark's
     # cast to array<double>)
-    vecs = [[float(x) for x in v] for v in t.column(vec_col).to_pylist()]
+    vecs = [[float(x) for x in v] for v in t.column(VEC_COL).to_pylist()]
     return list(zip(ids, vecs))
 
 
@@ -80,12 +80,10 @@ def ref_lsh_topk(
     n_planes: int = 8,
     seed: int = 13,
     multiprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Expected output of similarity.lsh_topk — same probe-set logic,
     recomputed without Spark. Returns [(id, cosine)] rows."""
-    rows = _load_vectors(parquet_path, id_col, vec_col)
+    rows = _load_vectors(parquet_path)
     query_vec = next(v for vid, v in rows if vid == query_id)
     planes = _planes(len(query_vec), n_planes, seed)
 
@@ -112,8 +110,6 @@ def ref_ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 0,
 ):
     """Expected output of similarity.ivf_topk — centroid assignment via
@@ -124,7 +120,7 @@ def ref_ivf_topk(
     rerank inside them."""
     from kgw_spark.operators.similarity import _QUANT
 
-    rows = _load_vectors(parquet_path, id_col, vec_col)
+    rows = _load_vectors(parquet_path)
     query_vec = next(v for vid, v in rows if vid == query_id)
     by_id = sorted(rows, key=lambda t: t[0])
     centroids = [(i, v) for i, (_vid, v) in enumerate(by_id[:n_cells])]
@@ -162,8 +158,6 @@ def ref_pq_topk(
     k: int = 10,
     m: int = 4,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 2,
 ):
     """Expected output of similarity.pq_topk — per-subspace codebooks
@@ -173,7 +167,7 @@ def ref_pq_topk(
     dots, rounded to 6, top-k by (adc DESC, id ASC)."""
     from kgw_spark.operators.similarity import _QUANT, _pq_csq
 
-    rows = _load_vectors(parquet_path, id_col, vec_col)
+    rows = _load_vectors(parquet_path)
     query_vec = next(v for vid, v in rows if vid == query_id)
     by_id = sorted(rows, key=lambda t: t[0])
     dim = len(query_vec)

@@ -4,8 +4,8 @@ These regex rules are THE contract of the extraction stage: the Spark
 pipeline (vectorized, ``pandas.Series.str.extractall``) and the
 reference-semantics oracle (plain pandas, ``re.findall``) both derive
 from this single table, and the synthetic corpus generator plants
-mentions that these rules recover exactly (enabling exact P/R scoring,
-per BASELINE.md "triple correctness").
+mentions that these rules recover exactly (enabling exact P/R scoring
+against BASELINE.md's P/R ≥ 0.95 target).
 
 Reference analog: the per-format row→(s,p,o) mappers in each kgw
 adapter (e.g. kgw/biomedicine/_monarchkg.py:124-179,
@@ -53,28 +53,3 @@ COMPILED: dict[str, list[tuple[str, re.Pattern, str, str]]] = {
 
 def file_id(repo: str, path: str) -> str:
     return f"file:{repo}/{path}"
-
-
-def _fill(template: str, groups: tuple, fid: str) -> str:
-    if template == "FILE":
-        return fid
-    out = template
-    for i, g in enumerate(groups, start=1):
-        out = out.replace("{%d}" % i, g if g is not None else "")
-    return out
-
-
-def extract_mentions_py(repo: str, path: str, lang: str, content: str):
-    """Reference-semantics extractor: plain Python, one file at a time.
-
-    Used by the oracle (tests) and as the ground-truth definition of the
-    rules. The Spark path in operators/extract.py must agree exactly.
-    Yields (subj, pred, obj) plus the structural in_repo triple.
-    """
-    fid = file_id(repo, path)
-    out = [(fid, "in_repo", f"repo:{repo}")]
-    for pred, rx, s_tpl, o_tpl in COMPILED.get(lang, []):
-        for m in rx.finditer(content):
-            groups = m.groups()
-            out.append((_fill(s_tpl, groups, fid), pred, _fill(o_tpl, groups, fid)))
-    return out

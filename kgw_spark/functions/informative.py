@@ -1,15 +1,11 @@
 """The reference's value filter (kgw/_shared/extract.py:356-366):
 a property value is kept only if it is not None, not "", and not NaN.
-Exact Python port for the vectorized reader UDFs, plus a Column
-predicate for flat typed columns.
+Exact Python port for the vectorized reader UDFs.
 """
 
 from __future__ import annotations
 
 import math
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def is_informative_value(value) -> bool:
@@ -19,12 +15,3 @@ def is_informative_value(value) -> bool:
         return not math.isnan(value)
     except TypeError:
         return True
-
-
-def informative(col: Column, numeric: bool = False) -> Column:
-    """Column predicate equivalent for flat columns. ``numeric=True``
-    adds the NaN check (Spark's isnan only applies to float/double)."""
-    cond = col.isNotNull() & (col.cast("string") != "")
-    if numeric:
-        cond = cond & ~F.isnan(col)
-    return cond

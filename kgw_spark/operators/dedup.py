@@ -28,31 +28,27 @@ from pyspark.sql import functions as F
 from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import broadcast_within
 
+# the documents table's columns
+ID_COL = "doc_id"
+TEXT_COL = "text"
+
 
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (keep_id, dup_id) pairs where
     keep_id is the smallest id with identical content. One shuffle on
     sha256(text) — at 100 TB, hash first so the shuffle key is 32 bytes,
     not the document."""
-    h = F.sha2(F.col(text_col), 256).alias("text_sha256")
-    by_hash = docs.select(F.col(id_col), h)
-    keepers = by_hash.groupBy("text_sha256").agg(F.min(id_col).alias("keep_id"))
+    h = F.sha2(F.col(TEXT_COL), 256).alias("text_sha256")
+    by_hash = docs.select(F.col(ID_COL), h)
+    keepers = by_hash.groupBy("text_sha256").agg(F.min(ID_COL).alias("keep_id"))
     return (
         by_hash.join(keepers, "text_sha256")
-        .filter(F.col(id_col) != F.col("keep_id"))
-        .select("keep_id", F.col(id_col).alias("dup_id"), "text_sha256")
+        .filter(F.col(ID_COL) != F.col("keep_id"))
+        .select("keep_id", F.col(ID_COL).alias("dup_id"), "text_sha256")
     )
-
-
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the min-id representative of every identical-content group."""
-    w_keep = exact_duplicates(docs, id_col, text_col).select(
-        F.col("dup_id").alias(id_col)
-    )
-    return docs.join(w_keep, id_col, "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -78,28 +74,21 @@ def word_ngrams(text_col: str, n: int) -> Column:
     return F.filter(acc, lambda s: s.isNotNull())
 
 
-def shingles(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document."""
-    grams = F.array_distinct(word_ngrams(text_col, n))
-    return docs.select(F.col(id_col), F.explode(grams).alias("shingle"))
+    grams = F.array_distinct(word_ngrams(TEXT_COL, n))
+    return docs.select(F.col(ID_COL), F.explode(grams).alias("shingle"))
 
 
-def _jaccard_pairs(
-    common: DataFrame, sh: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
+def _jaccard_pairs(common: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """``(a, b, jaccard)`` from shared-shingle counts ``(a, b, common)``
     and the ``(id, shingle)`` table of their documents: exact Jaccard
     ``common / (size_a + size_b - common)`` rounded to 6, kept at
     ``>= threshold``. ``sh`` must hold each document's full shingle set
     — it is the denominator."""
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_size"))
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("_size").alias("size_b"))
+    sizes = sh.groupBy(ID_COL).agg(F.count(F.lit(1)).alias("_size"))
+    sa = sizes.select(F.col(ID_COL).alias("a"), F.col("_size").alias("size_a"))
+    sb = sizes.select(F.col(ID_COL).alias("b"), F.col("_size").alias("size_b"))
     return _jaccard(common.join(sa, "a").join(sb, "b"), threshold)
 
 
@@ -123,8 +112,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_df: int | None = 1000,
 ) -> DataFrame:
     """All (a, b) doc pairs (a < b) with n-gram Jaccard ≥ threshold.
@@ -147,7 +134,7 @@ def ngram_jaccard_pairs(
     # r5 edges-stage persist revert; minhash_lsh_pairs persists its
     # shingles because the verify phase re-reads them per candidate,
     # a different access pattern
-    sh = shingles(docs, n, id_col, text_col)
+    sh = shingles(docs, n)
     df_per_shingle = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     # exact-preserving prune: a shingle in a single document can never
     # contribute to a pair — drop it before the quadratic self-join
@@ -156,8 +143,8 @@ def ngram_jaccard_pairs(
         keep = keep.filter(F.col("_df") <= max_shingle_df)
     joinable = sh.join(keep.select("shingle"), "shingle")
 
-    a = joinable.select(F.col(id_col).alias("a"), "shingle")
-    b = joinable.select(F.col(id_col).alias("b"), "shingle")
+    a = joinable.select(F.col(ID_COL).alias("a"), "shingle")
+    b = joinable.select(F.col(ID_COL).alias("b"), "shingle")
     common = (
         a.join(b, "shingle")
         .filter(F.col("a") < F.col("b"))
@@ -166,7 +153,7 @@ def ngram_jaccard_pairs(
     )
     # sizes over the UNFILTERED shingles: the Jaccard denominator is
     # over full shingle sets
-    return _jaccard_pairs(common, sh, threshold, id_col)
+    return _jaccard_pairs(common, sh, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -175,37 +162,28 @@ def ngram_jaccard_pairs(
 # with any copy that shares a run of at least w+k-1 tokens, while
 # storing only ~2/(w+1) of the gram hashes.
 # --------------------------------------------------------------------------
-def positional_shingles(
-    docs: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+# fingerprint document-frequency cap of ``winnow_pairs``
+MAX_FP_DF = 1000
+
+
+def positional_shingles(docs: DataFrame, n: int = 5) -> DataFrame:
     """(id, pos, shingle): word n-grams WITH their position — winnowing
     needs the gram sequence, not the gram set. Same zip-with-chain
     construction as ``shingles``, minus the distinct."""
     return docs.select(
-        F.col(id_col),
-        F.posexplode(word_ngrams(text_col, n)).alias("pos", "shingle"),
+        F.col(ID_COL),
+        F.posexplode(word_ngrams(TEXT_COL, n)).alias("pos", "shingle"),
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 5,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     """Per-doc winnowed fingerprint set: hash every word ``k``-gram
     (xxhash64, JVM-side), slide a ``w``-gram window over the hash
     sequence, keep the minimum of each window, dedup. One narrow
     pass + a per-doc sort window — no shuffle of text. Guarantee: two
     docs sharing ≥ w+k-1 consecutive tokens share ≥ 1 fingerprint."""
-    sh = positional_shingles(docs, k, id_col, text_col).withColumn(
-        "h", F.xxhash64("shingle")
-    )
-    win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+    sh = positional_shingles(docs, k).withColumn("h", F.xxhash64("shingle"))
+    win = Window.partitionBy(ID_COL).orderBy("pos").rowsBetween(0, w - 1)
     # only full windows select a fingerprint (positions past
     # n_grams - w would re-select suffix minima over short windows);
     # docs with fewer than w grams have no full window — standard
@@ -218,7 +196,7 @@ def winnow_fingerprints(
     # functions in ONE Window operator — one shuffle+sort of the
     # shingle table instead of two (it is the largest intermediate in
     # the query)
-    n_grams = Window.partitionBy(id_col).orderBy("pos").rowsBetween(
+    n_grams = Window.partitionBy(ID_COL).orderBy("pos").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     fp = (
@@ -228,7 +206,7 @@ def winnow_fingerprints(
             (F.col("pos") <= F.col("_total") - w)
             | ((F.col("_total") < w) & (F.col("pos") == 0))
         )
-        .select(F.col(id_col), F.col("_min").alias("fingerprint"))
+        .select(F.col(ID_COL), F.col("_min").alias("fingerprint"))
         .distinct()
     )
     return fp
@@ -239,13 +217,10 @@ def winnow_pairs(
     k: int = 5,
     w: int = 4,
     min_shared: int = 2,
-    max_fp_df: int | None = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(a, b, n_shared): doc pairs sharing ≥ ``min_shared`` winnowed
     fingerprints — code-clone candidates. The self-join carries only
-    (id, 8-byte fingerprint); ``max_fp_df`` caps join-key fan-out the
+    (id, 8-byte fingerprint); ``MAX_FP_DF`` caps join-key fan-out the
     same way ngram_jaccard_pairs' shingle cap does (boilerplate
     fingerprints in >cap docs are dropped before the quadratic join,
     with the same documented trade-off)."""
@@ -254,14 +229,12 @@ def winnow_pairs(
     # shingle explode + window-min pass — same discipline as
     # minhash_lsh_pairs/ngram_jaccard_pairs, released after the
     # result checkpoint below
-    fp0 = winnow_fingerprints(docs, k, w, id_col, text_col).persist()
+    fp0 = winnow_fingerprints(docs, k, w).persist()
     per_fp = fp0.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("_df"))
-    keep = per_fp.filter(F.col("_df") >= 2)
-    if max_fp_df is not None:
-        keep = keep.filter(F.col("_df") <= max_fp_df)
+    keep = per_fp.filter((F.col("_df") >= 2) & (F.col("_df") <= MAX_FP_DF))
     fp = fp0.join(keep.select("fingerprint"), "fingerprint")
-    a = fp.select(F.col(id_col).alias("a"), "fingerprint")
-    b = fp.select(F.col(id_col).alias("b"), "fingerprint")
+    a = fp.select(F.col(ID_COL).alias("a"), "fingerprint")
+    b = fp.select(F.col(ID_COL).alias("b"), "fingerprint")
     out = (
         a.join(b, "fingerprint")
         .filter(F.col("a") < F.col("b"))
@@ -273,13 +246,7 @@ def winnow_pairs(
     return out
 
 
-def ngram_containment(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_containment(train: DataFrame, eval_df: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark-decontamination primitive: for every eval document, the
     fraction of its word n-grams that appear ANYWHERE in the training
     corpus — ``(doc_id, n_grams, n_hit, containment)``. High containment
@@ -291,16 +258,16 @@ def ngram_containment(
     construction. At 100 TB, hash the shingle to 8 bytes first
     (``F.xxhash64``) on both sides — elided here so the result stays
     exactly SQL-oracle-able over raw shingles."""
-    tr = shingles(train, n, id_col, text_col).select("shingle").distinct()
-    ev = shingles(eval_df, n, id_col, text_col)
-    sizes = ev.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = ev.join(tr, "shingle").groupBy(id_col).agg(
+    tr = shingles(train, n).select("shingle").distinct()
+    ev = shingles(eval_df, n)
+    sizes = ev.groupBy(ID_COL).agg(F.count(F.lit(1)).alias("n_grams"))
+    hits = ev.join(tr, "shingle").groupBy(ID_COL).agg(
         F.count(F.lit(1)).alias("_hit")
     )
     return (
-        sizes.join(hits, id_col, "left")
+        sizes.join(hits, ID_COL, "left")
         .select(
-            F.col(id_col),
+            F.col(ID_COL),
             "n_grams",
             F.coalesce(F.col("_hit"), F.lit(0)).alias("n_hit"),
             F.round(
@@ -327,29 +294,12 @@ def _perm_coeffs(num_perm: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    num_perm: int = 64,
-    seed: int = 7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, sig array<long>) — min over shingles of (a*h+b) mod M per
-    permutation; base shingle hash is xxhash64 (JVM-side)."""
-    return _signatures_from_shingles(
-        shingles(docs, n, id_col, text_col), num_perm, seed, id_col
-    )
-
-
 def _shingle_hash(shingle: Column) -> Column:
     """The base hash of a shingle, ``abs(xxhash64) mod M`` (JVM-side)."""
     return F.abs(F.xxhash64(shingle)) % F.lit(_MERSENNE)
 
 
-def _signatures_from_shingles(
-    sh: DataFrame, num_perm: int, seed: int, id_col: str
-) -> DataFrame:
+def _signatures_from_shingles(sh: DataFrame, num_perm: int, seed: int) -> DataFrame:
     """Signatures from an existing (id, shingle) table — lets callers
     that also need the shingle set for exact verification (LSH) build
     it once."""
@@ -364,7 +314,7 @@ def _signatures_from_shingles(
     terms = ",".join(
         f"min((h * {a}L + {b}L) % {_MERSENNE}L)" for a, b in coeffs
     )
-    return hashed.groupBy(id_col).agg(F.expr(f"array({terms})").alias("sig"))
+    return hashed.groupBy(ID_COL).agg(F.expr(f"array({terms})").alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -374,8 +324,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Candidate pairs via banded LSH on the minhash signature, then
     exact n-gram-Jaccard verification of candidates only.
@@ -397,16 +345,16 @@ def minhash_lsh_pairs(
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
     grams = docs.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_ngrams(text_col, n)).alias("shingles"),
+        F.col(ID_COL).alias("id"),
+        F.array_distinct(word_ngrams(TEXT_COL, n)).alias("shingles"),
     ).select("id", "shingles", F.transform("shingles", _shingle_hash).alias("h"))
     counts = incore.minhash_lsh_pairs(
         grams, _perm_coeffs(num_perm, seed), rows_per_band, threshold
     )
     if counts is not None:
         return _jaccard(counts, threshold)
-    sh = shingles(docs, n, id_col, text_col).persist()
-    sig = _signatures_from_shingles(sh, num_perm, seed, id_col)
+    sh = shingles(docs, n).persist()
+    sig = _signatures_from_shingles(sh, num_perm, seed)
     # band structs as ONE parsed expression (not bands×rows_per_band
     # py4j Column constructions — see _signatures_from_shingles)
     band_structs = ",".join(
@@ -419,11 +367,11 @@ def minhash_lsh_pairs(
         for bi in range(bands)
     )
     banded = sig.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.expr(f"explode(array({band_structs}))").alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    a = banded.select(F.col(id_col).alias("a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("b"), "band", "bucket")
+    ).select(ID_COL, "bb.band", "bb.bucket")
+    a = banded.select(F.col(ID_COL).alias("a"), "band", "bucket")
+    b = banded.select(F.col(ID_COL).alias("b"), "band", "bucket")
     # the candidate set is band-collision-bounded and tiny relative to
     # the corpus; it is eagerly materialized because the verify phase
     # below references it TWICE (pair join + doc-set prune) — left
@@ -450,13 +398,13 @@ def minhash_lsh_pairs(
     # corpus, so the broadcast is gated on its bound — at most two docs
     # per candidate — and the semi-join shuffles past the budget.
     cand_docs = (
-        candidates.select(F.col("a").alias(id_col))
-        .union(candidates.select(F.col("b").alias(id_col)))
+        candidates.select(F.col("a").alias(ID_COL))
+        .union(candidates.select(F.col("b").alias(ID_COL)))
         .distinct()
     )
-    vsh = sh.join(broadcast_within(cand_docs, 2 * candidates.count()), id_col, "semi")
-    sa = vsh.select(F.col(id_col).alias("a"), "shingle")
-    sb = vsh.select(F.col(id_col).alias("b"), "shingle")
+    vsh = sh.join(broadcast_within(cand_docs, 2 * candidates.count()), ID_COL, "semi")
+    sa = vsh.select(F.col(ID_COL).alias("a"), "shingle")
+    sb = vsh.select(F.col(ID_COL).alias("b"), "shingle")
     common = (
         candidates.join(sa, "a")
         .join(sb, ["b", "shingle"])
@@ -468,7 +416,7 @@ def minhash_lsh_pairs(
     # of holding executor memory for the rest of the session —
     # downstream consumers (clustering CC, curation anti-joins) re-read
     # the checkpoint, not the shingle lineage.
-    out = _jaccard_pairs(common, vsh, threshold, id_col).localCheckpoint(eager=True)
+    out = _jaccard_pairs(common, vsh, threshold).localCheckpoint(eager=True)
     sh.unpersist()
     return out
 
@@ -483,15 +431,13 @@ def near_dup_clusters(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The full production dedup flow: MinHash-LSH near-dup pairs →
     connected components (near-duplication is transitive-closed so one
     survivor represents each cluster, not each pair) → ``(doc_id,
     rep_id)`` with rep = min id per cluster. Docs in no pair are
     implicitly their own representative (not emitted). Downstream:
-    ``docs.join(clusters, id_col, "left_anti" | keep rep rows)``."""
+    ``docs.join(clusters, "doc_id", "left_anti" | keep rep rows)``."""
     from kgw_spark.operators.canon import connected_components
 
     # CC ids are strings with lexicographic-min representatives:
@@ -499,7 +445,7 @@ def near_dup_clusters(
     # is order-preserving only for non-negative ids ('-…1' sorts below
     # '-…2'), so negatives fail fast instead of silently electing a
     # non-minimal representative.
-    id_type = dict(docs.dtypes)[id_col]
+    id_type = dict(docs.dtypes)[ID_COL]
     integral = id_type in ("tinyint", "smallint", "int", "bigint")
 
     def pad(c):
@@ -514,40 +460,33 @@ def near_dup_clusters(
                 )
             ),
         ).otherwise(F.format_string("%020d", F.col(c)))
-    pairs = minhash_lsh_pairs(
-        docs, n, num_perm, bands, threshold, seed, id_col, text_col
-    ).select(pad("a").alias("u"), pad("b").alias("v"))
+    pairs = minhash_lsh_pairs(docs, n, num_perm, bands, threshold, seed).select(
+        pad("a").alias("u"), pad("b").alias("v")
+    )
     mapping = connected_components(pairs)
     return mapping.select(
-        F.col("id").cast(id_type).alias(id_col),
+        F.col("id").cast(id_type).alias(ID_COL),
         F.col("canonical_id").cast(id_type).alias("rep_id"),
     )
 
 
-def dedup_near(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    **kwargs,
-) -> DataFrame:
+def dedup_near(docs: DataFrame, threshold: float = 0.5, **kwargs) -> DataFrame:
     """Keep one representative per near-dup cluster plus all unclustered
     docs — the operator a 100-TB training-data pipeline actually runs."""
-    clusters = near_dup_clusters(docs, threshold=threshold, id_col=id_col, **kwargs)
-    losers = clusters.filter(F.col(id_col) != F.col("rep_id")).select(id_col)
-    return docs.join(losers, id_col, "left_anti")
+    clusters = near_dup_clusters(docs, threshold=threshold, **kwargs)
+    losers = clusters.filter(F.col(ID_COL) != F.col("rep_id")).select(ID_COL)
+    return docs.join(losers, ID_COL, "left_anti")
 
 
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64
-) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     """64-bit SimHash over whitespace tokens, computed as one exploded
     aggregation: per bit, sum(+1/-1 by token-hash bit) > 0."""
     tok = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("tok"),
+        F.col(ID_COL),
+        F.explode(F.split(F.trim(F.col(TEXT_COL)), "\\s+")).alias("tok"),
     ).withColumn("h", F.xxhash64("tok"))
     # Per-bit ±1 sums as ONE parsed array expression and the majority
     # fold as ONE higher-order aggregate() — not 64 py4j-built Column
@@ -558,21 +497,16 @@ def simhash(
     bit_sums = ",".join(
         f"sum(if((h & shiftleft(1L, {i})) != 0, 1, -1))" for i in range(bits)
     )
-    agg = tok.groupBy(id_col).agg(F.expr(f"array({bit_sums})").alias("bs"))
+    agg = tok.groupBy(ID_COL).agg(F.expr(f"array({bit_sums})").alias("bs"))
     # unrolled OR chain (codegen-friendly, same shape Catalyst saw
     # before), just parsed from one string instead of 64 Column builds
     fold = " | ".join(
         f"if(bs[{i}] > 0, shiftleft(1L, {i}), 0L)" for i in range(bits)
     )
-    return agg.select(F.col(id_col), F.expr(fold).alias("simhash"))
+    return agg.select(F.col(ID_COL), F.expr(fold).alias("simhash"))
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by SimHash: band the 64-bit fingerprint into
     (max_hamming+1) chunks — any pair within the Hamming radius must
     agree on at least one chunk (pigeonhole), so the join is on chunk
@@ -587,9 +521,9 @@ def simhash_near_pairs(
     # corpus-count-bounded — computes it once; both join legs then scan
     # the checkpoint. Same discipline as minhash_lsh_pairs' candidate
     # checkpoint.
-    sh = simhash(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = simhash(docs).localCheckpoint(eager=True)
     banded = sh.select(
-        F.col(id_col),
+        F.col(ID_COL),
         "simhash",
         F.explode(
             F.array(
@@ -604,12 +538,12 @@ def simhash_near_pairs(
                 ]
             )
         ).alias("cb"),
-    ).select(id_col, "simhash", "cb.chunk", "cb.key")
+    ).select(ID_COL, "simhash", "cb.chunk", "cb.key")
     a = banded.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("sig_a"), "chunk", "key"
+        F.col(ID_COL).alias("a"), F.col("simhash").alias("sig_a"), "chunk", "key"
     )
     b = banded.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("sig_b"), "chunk", "key"
+        F.col(ID_COL).alias("b"), F.col("simhash").alias("sig_b"), "chunk", "key"
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ALIAS_COLS = ("alias_id", "canonical_id", "score")
 # salted-link fan-out: dictionary replicas, and reducers per hot alias
 NUM_SALTS = 16
 

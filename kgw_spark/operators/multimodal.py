@@ -2,8 +2,8 @@
 
 The Spark-side plumbing (schemas, Arrow batch shapes, partitioning) is
 real and tested. Codec scope in this environment: no PIL/ffmpeg exist
-in the container, so the fully-implemented decode/resize/frame-sample
-paths operate on binary PPM (P6) payloads — a real, public image format
+in the container, so the fully-implemented decode and feature paths
+operate on binary PPM (P6) payloads — a real, public image format
 parseable with numpy alone — on RIFF/PCM WAV audio, and on videos
 encoded as concatenated P6 frames. Compressed formats (JPEG/PNG/H.264)
 would swap the per-batch decode call for PIL/pyav with the identical
@@ -171,63 +171,25 @@ def encode_ppm(img: np.ndarray) -> bytes:
     return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
 
 
-def _resize_nn(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample (pixel-center convention)."""
-    h, w, _ = img.shape
-    ys = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
-    xs = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
-    return img[ys][:, xs]
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize every ``kind == 'image'`` P6 payload to (width, height)
-    with nearest-neighbor sampling — decode, resample, and re-encode
-    run vectorized per Arrow batch. Compressed inputs would swap
-    decode_ppm/encode_ppm for PIL calls; nothing else changes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "mime": [], "width": [], "height": [], "payload": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_ppm(bytes(payload))
-                out["media_id"].append(mid)
-                out["mime"].append("image/x-portable-pixmap")
-                out["width"].append(width)
-                out["height"].append(height)
-                out["payload"].append(encode_ppm(_resize_nn(img, width, height)))
-            yield pd.DataFrame(out)
-
-    return media.filter("kind = 'image'").mapInPandas(run, schema=RESIZED_SCHEMA)
+def split_ppm_stream(payload: bytes) -> list[bytes]:
+    """Split a concatenated-P6 'video' payload into per-frame P6 blobs."""
+    frames = []
+    pos = 0
+    while pos < len(payload):
+        if payload[pos : pos + 2] != b"P6":
+            raise ValueError(f"bad frame boundary at byte {pos}")
+        img = decode_ppm(payload[pos:])
+        blob = encode_ppm(img)
+        # frames were encoded by encode_ppm, so re-encoding is an exact
+        # length oracle for the original frame slice
+        frames.append(payload[pos : pos + len(blob)])
+        pos += len(blob)
+    return frames
 
 
 # --------------------------------------------------------------------------
 # WAV (RIFF PCM) codec — stdlib `wave` + numpy, no external libraries
 # --------------------------------------------------------------------------
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), False),
-        T.StructField("n_channels", T.IntegerType(), False),
-        T.StructField("n_samples", T.IntegerType(), False),
-        T.StructField("duration_sec", T.DoubleType(), False),
-        T.StructField("rms", T.DoubleType(), False),
-        T.StructField("zero_crossing_rate", T.DoubleType(), False),
-        T.StructField("peak", T.DoubleType(), False),
-    ]
-)
-
-
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     """RIFF/PCM WAV → (float64 mono samples in [-1, 1], sample_rate).
     16-bit and 8-bit PCM supported (stdlib `wave`); multi-channel audio
@@ -265,81 +227,3 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
         w.setframerate(sample_rate)
         w.writeframes(pcm.tobytes())
     return buf.getvalue()
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """Per-clip audio features over ``kind == 'audio'`` WAV payloads:
-    duration, RMS energy, zero-crossing rate, peak — decoded and
-    reduced with numpy per Arrow batch (compressed codecs would swap
-    decode_wav for pyav/torchaudio, same batch shape)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                import io
-                import wave
-
-                blob = bytes(payload)
-                x, rate = decode_wav(blob)
-                with wave.open(io.BytesIO(blob), "rb") as w:
-                    n_ch = w.getnchannels()
-                n = len(x)
-                zc = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))) if n > 1 else 0.0
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(n_ch)
-                out["n_samples"].append(n)
-                out["duration_sec"].append(n / rate if rate else 0.0)
-                out["rms"].append(float(np.sqrt(np.mean(x * x))) if n else 0.0)
-                out["zero_crossing_rate"].append(zc)
-                out["peak"].append(float(np.max(np.abs(x))) if n else 0.0)
-            yield pd.DataFrame(out)
-
-    return media.filter("kind = 'audio'").mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-    ]
-)
-
-
-def split_ppm_stream(payload: bytes) -> list[bytes]:
-    """Split a concatenated-P6 'video' payload into per-frame P6 blobs."""
-    frames = []
-    pos = 0
-    while pos < len(payload):
-        if payload[pos : pos + 2] != b"P6":
-            raise ValueError(f"bad frame boundary at byte {pos}")
-        img = decode_ppm(payload[pos:])
-        blob = encode_ppm(img)
-        # frames were encoded by encode_ppm, so re-encoding is an exact
-        # length oracle for the original frame slice
-        frames.append(payload[pos : pos + len(blob)])
-        pos += len(blob)
-    return frames
-
-
-def sample_frames(media: DataFrame, every_n: int) -> DataFrame:
-    """One row per sampled frame (indices 0, every_n, 2·every_n, …) of
-    every ``kind == 'video'`` concatenated-P6 payload — the posexplode
-    shape a real container decoder (pyav) would feed identically."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "payload": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for idx, frame in enumerate(split_ppm_stream(bytes(payload))):
-                    if idx % every_n == 0:
-                        out["media_id"].append(mid)
-                        out["frame_idx"].append(idx)
-                        out["payload"].append(frame)
-            yield pd.DataFrame(out)
-
-    return media.filter("kind = 'video'").mapInPandas(run, schema=FRAMES_SCHEMA)

@@ -3,7 +3,7 @@
 Training-data pipelines sample reproducibly: the same doc must land in
 the same split on every run, on any cluster, under any partitioning —
 so sampling is a pure function of the row key, never of rand() or task
-layout. ``hash_sample`` keeps a row when an LCG hash of its integral
+layout. A hash sample keeps a row when ``lcg_bucket`` of its integral
 key lands under the rate. The LCG (glibc constants) is chosen over
 xxhash/md5 because it is exactly expressible in BOTH Spark and ANSI
 SQL integer arithmetic, making every sample value-oracle-able.
@@ -22,7 +22,7 @@ _LCG_C = 12345
 _LCG_M = 1 << 31
 
 
-def lcg_bucket(key: Column, buckets: int = 100, salt: int = 0) -> Column:
+def lcg_bucket(key: Column, buckets: int = 100) -> Column:
     """Deterministic bucket in [0, buckets) from an integral key.
     64-bit safe: key * A + C stays under 2^63 for keys < ~8.4e9; larger
     key spaces should pre-fold (key % 2^31) first. Negative keys are
@@ -30,46 +30,37 @@ def lcg_bucket(key: Column, buckets: int = 100, salt: int = 0) -> Column:
     yield negative buckets, silently keeping 100% of negative-keyed
     rows at any rate); the double-mod form is written identically in
     the SQL twin so both engines agree on every 64-bit input."""
-    x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C + salt)
+    x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C)
     h = (x % F.lit(_LCG_M) + F.lit(_LCG_M)) % F.lit(_LCG_M)
     return h % F.lit(buckets)
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, rate_pct: int, salt: int = 0
-) -> DataFrame:
-    """Keep ~rate_pct% of rows, deterministically by key."""
-    return df.filter(lcg_bucket(F.col(key_col), 100, salt) < rate_pct)
-
-
-def lcg_bucket_sql(key_expr: str, buckets: int = 100, salt: int = 0) -> str:
+def lcg_bucket_sql(key_expr: str, buckets: int = 100) -> str:
     """The identical bucket computation as ANSI SQL (the oracle twin)."""
     return (
-        f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C + salt})"
+        f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C})"
         f" % {_LCG_M}) + {_LCG_M}) % {_LCG_M}) % {buckets}"
     )
 
 
-def lcg_u31(key: Column, salt: int = 0) -> Column:
+def lcg_u31(key: Column) -> Column:
     """Deterministic hash in [0, 2^31) from an integral key — the
     uniform variate behind per-row (rather than global-rate)
     sampling decisions. Same overflow/negative-key discipline as
     :func:`lcg_bucket`."""
-    x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C + salt)
+    x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C)
     return (x % F.lit(_LCG_M) + F.lit(_LCG_M)) % F.lit(_LCG_M)
 
 
-def lcg_u31_sql(key_expr: str, salt: int = 0) -> str:
+def lcg_u31_sql(key_expr: str) -> str:
     """The identical [0, 2^31) hash as ANSI SQL (the oracle twin)."""
     return (
-        f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C + salt})"
+        f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C})"
         f" % {_LCG_M}) + {_LCG_M}) % {_LCG_M})"
     )
 
 
-def weighted_sample(
-    df: DataFrame, key_col: str, weight: Column, salt: int = 0
-) -> DataFrame:
+def weighted_sample(df: DataFrame, key_col: str, weight: Column) -> DataFrame:
     """Weighted Bernoulli sampling: keep each row with probability
     equal to its ``weight`` (clamped to [0, 1]), deterministically by
     key — the corpus-mixing primitive (quality- or length-proportional
@@ -84,14 +75,14 @@ def weighted_sample(
     """
     w = F.least(F.lit(1.0), F.greatest(F.lit(0.0), weight))
     thresh = F.floor(w * F.lit(float(_LCG_M)))
-    return df.filter(lcg_u31(F.col(key_col), salt) < thresh)
+    return df.filter(lcg_u31(F.col(key_col)) < thresh)
 
 
-def weighted_sample_sql(key_expr: str, weight_expr: str, salt: int = 0) -> str:
+def weighted_sample_sql(key_expr: str, weight_expr: str) -> str:
     """The identical keep-decision as an ANSI SQL boolean expression."""
     w = f"LEAST(1.0, GREATEST(0.0, {weight_expr}))"
     return (
-        f"{lcg_u31_sql(key_expr, salt)}"
+        f"{lcg_u31_sql(key_expr)}"
         f" < CAST(FLOOR({w} * {float(_LCG_M)}) AS BIGINT)"
     )
 
@@ -101,7 +92,6 @@ def stratified_topk(
     key_col: str,
     stratum_col: str,
     k: int,
-    salt: int = 0,
     prune_margin: int = 8,
 ) -> DataFrame:
     """Deterministic stratified sample: the ``k`` rows of each stratum
@@ -126,7 +116,7 @@ def stratified_topk(
     """
     if k < 1:
         raise ValueError(f"stratified_topk needs k >= 1, got {k}")
-    h = lcg_u31(F.col(key_col), salt).alias("_h")
+    h = lcg_u31(F.col(key_col)).alias("_h")
     src = df.select("*", h)
 
     # per-stratum row counts -> integer prune thresholds (tiny frame)
@@ -162,9 +152,7 @@ def stratified_topk(
     )
 
 
-def stratified_topk_sql(
-    cols: str, key_expr: str, stratum_expr: str, k: int, salt: int = 0
-) -> str:
+def stratified_topk_sql(cols: str, key_expr: str, stratum_expr: str, k: int) -> str:
     """The identical selection as ANSI SQL (the oracle twin is the
     UNPRUNED window spec — the prune is plan, not semantics)."""
     return f"""
@@ -172,7 +160,7 @@ def stratified_topk_sql(
             SELECT {cols},
                    ROW_NUMBER() OVER (
                        PARTITION BY {stratum_expr}
-                       ORDER BY {lcg_u31_sql(key_expr, salt)}, {key_expr}
+                       ORDER BY {lcg_u31_sql(key_expr)}, {key_expr}
                    ) AS sample_rank
             FROM documents
         ) WHERE sample_rank <= {k}

@@ -23,6 +23,12 @@ from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
 
+# the embeddings table's columns
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+# hyperplane seed of ``lsh_topk``
+LSH_TOPK_SEED = 13
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -38,30 +44,22 @@ def _norm(a):
     )
 
 
-def cosine_scores(
-    emb: DataFrame, query_vec: list[float], vec_col: str = "embedding"
-) -> DataFrame:
+def cosine_scores(emb: DataFrame, query_vec: list[float]) -> DataFrame:
     q = F.expr(_sql_double_array([float(x) for x in query_vec]))
     qn = math.sqrt(sum(float(x) * float(x) for x in query_vec)) or 1.0
-    cos = _dot(F.col(vec_col).cast("array<double>"), q) / (
-        _norm(F.col(vec_col).cast("array<double>")) * F.lit(qn)
+    cos = _dot(F.col(VEC_COL).cast("array<double>"), q) / (
+        _norm(F.col(VEC_COL).cast("array<double>")) * F.lit(qn)
     )
     return emb.withColumn("cosine", F.round(cos, 6))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
     """Exact brute-force top-k: one scan, partial top-k per partition
     (Spark's TakeOrdered), no shuffle of the vectors themselves."""
     return (
-        cosine_scores(emb, query_vec, vec_col)
-        .select(id_col, "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        cosine_scores(emb, query_vec)
+        .select(ID_COL, "cosine")
+        .orderBy(F.desc("cosine"), F.asc(ID_COL))
         .limit(k)
     )
 
@@ -143,14 +141,14 @@ def _sql_double_array(xs: list[float]) -> str:
     return "array({})".format(",".join(_sql_double(x) for x in xs))
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]):
+def _bucket_expr(planes: list[list[float]]):
     # one parsed expression for the whole signature: n_planes×dim
     # py4j-built literals cost ~0.4s of driver wall per run (plan and
     # values identical — same zip_with/aggregate fold per plane)
     terms = " | ".join(
         "if(aggregate(zip_with(cast({v} as array<double>), {arr}, "
         "(x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v) "
-        ">= 0, {bit}, 0)".format(v=vec_col, arr=_sql_double_array(p), bit=1 << i)
+        ">= 0, {bit}, 0)".format(v=VEC_COL, arr=_sql_double_array(p), bit=1 << i)
         for i, p in enumerate(planes)
     )
     return F.expr(terms)
@@ -161,18 +159,15 @@ def lsh_topk(
     query_vec: list[float],
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 13,
     multiprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: restrict the exact rerank to vectors whose
     random-hyperplane signature is within ``multiprobe`` bit-flips of
     the query's signature (multi-probe LSH), then brute-force that
     bucket set. Recall grows with n_planes↓ / multiprobe↑."""
     dim = len(query_vec)
-    planes = _planes(dim, n_planes, seed)
-    bucketed = emb.withColumn("_bucket", _bucket_expr(vec_col, planes))
+    planes = _planes(dim, n_planes, LSH_TOPK_SEED)
+    bucketed = emb.withColumn("_bucket", _bucket_expr(planes))
 
     qsig = 0
     for i, p in enumerate(planes):
@@ -191,7 +186,7 @@ def lsh_topk(
     candidates = bucketed.filter(
         F.col("_bucket").isin(*[int(b) for b in probe_buckets])
     )
-    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
+    return cosine_topk(candidates, query_vec, k)
 
 
 def cosine_near_pairs(
@@ -199,8 +194,6 @@ def cosine_near_pairs(
     threshold: float = 0.9,
     n_planes: int = 6,
     seed: int = 13,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
     rounds: int = 3,
     probe_radius: int = 1,
@@ -233,6 +226,11 @@ def cosine_near_pairs(
 
     ``exact=True`` runs the full quadratic self-join — the brute-force
     oracle/test path, never the scale path.
+
+    A zero vector, or one holding a NaN, has a NaN cosine with every
+    partner, and every path drops its pairs: the in-core verify keeps
+    no NaN, and the verify UDF of the other paths returns NaN to Spark
+    as null, which fails the threshold.
     """
     if probe_radius > 2:
         # the probe array holds every mask of up to 2·probe_radius
@@ -243,16 +241,16 @@ def cosine_near_pairs(
             f"probe_radius={probe_radius} not supported (max 2); "
             "use more rounds for higher recall instead"
         )
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col(VEC_COL).cast("array<double>")
     if not exact:
         raw = incore.cosine_near_pairs(
-            emb.select(F.col(id_col).alias("id"), vec.alias("v")),
+            emb.select(F.col(ID_COL).alias("id"), vec.alias("v")),
             threshold, n_planes, seed, rounds, probe_radius,
         )
         if raw is not None:
             return _near(raw, threshold)
-    left = emb.select(F.col(id_col).alias("a"), vec.alias("va"))
-    right = emb.select(F.col(id_col).alias("b"), vec.alias("vb"))
+    left = emb.select(F.col(ID_COL).alias("a"), vec.alias("va"))
+    right = emb.select(F.col(ID_COL).alias("b"), vec.alias("vb"))
     if exact:
         joined = left.crossJoin(right).filter(F.col("a") < F.col("b"))
     else:
@@ -289,7 +287,7 @@ def cosine_near_pairs(
         # buckets): materialize it once — (id, 3 longs) per vector is
         # tiny next to re-running the signature kernel per reference.
         sigs = emb.select(
-            F.col(id_col).alias("_id"), sigs_of(vec).alias("_sigs")
+            F.col(ID_COL).alias("_id"), sigs_of(vec).alias("_sigs")
         ).localCheckpoint(eager=True)
         # One-sided probing: the LEFT side explodes each round signature
         # into its full Hamming ball of radius 2·probe_radius, the RIGHT
@@ -369,9 +367,7 @@ def cosine_near_pairs(
 _QUANT = 1 << 20
 
 
-def _lloyd_refine(
-    emb: DataFrame, centroids, vec_col: str, dim: int, kmeans_iters: int
-):
+def _lloyd_refine(emb: DataFrame, centroids, dim: int, kmeans_iters: int):
     """``kmeans_iters`` order-independent Lloyd rounds; empty cells keep
     their previous centroid. Replicated bit-for-bit by
     functions/ann_reference.ref_ivf_topk."""
@@ -401,7 +397,7 @@ def _lloyd_refine(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                V = np.array(pdf[VEC_COL].tolist(), dtype=np.float64)
                 if qsums is None:
                     qsums = np.zeros((n_cells, V.shape[1]), dtype=np.int64)
                 negd = np.empty((len(V), n_cells), dtype=np.float64)
@@ -426,7 +422,7 @@ def _lloyd_refine(
                     }
                 )
 
-        parts = emb.select(vec_col).mapInPandas(
+        parts = emb.select(VEC_COL).mapInPandas(
             _partial, schema="_cell long, _n long, _q array<long>"
         ).collect()
         agg: dict[int, tuple[int, list[int]]] = {}
@@ -440,7 +436,7 @@ def _lloyd_refine(
         }
         centroids = [(cid, updated.get(cid, c)) for cid, c in centroids]
     return centroids
-def _assign_cells(emb: DataFrame, centroids, vec_col: str) -> DataFrame:
+def _assign_cells(emb: DataFrame, centroids) -> DataFrame:
     """Nearest-centroid cell per vector — lexicographic min over
     (−dot, cell id), exactly as a chained ``F.least`` of structs would
     compute it, via ONE Arrow-batched numpy kernel. The column-
@@ -475,14 +471,12 @@ def _assign_cells(emb: DataFrame, centroids, vec_col: str) -> DataFrame:
     # `from __future__ import annotations` breaks local-UDF inference)
     _cell_of.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
     cell_of = pandas_udf(_cell_of, "long")
-    return emb.withColumn("_cell", cell_of(F.col(vec_col).cast("array<double>")))
+    return emb.withColumn("_cell", cell_of(F.col(VEC_COL).cast("array<double>")))
 
 
 def ivf_build(
     emb: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 0,
     init_centroids: list[tuple[int, list[float]]] | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
@@ -497,15 +491,15 @@ def ivf_build(
     query vector from the same rows) skip this function's init-collect
     job — it must be exactly that list, in id order, cell ids 0..n-1."""
     centroids = init_centroids if init_centroids is not None else [
-        (i, [float(x) for x in r[vec_col]])
+        (i, [float(x) for x in r[VEC_COL]])
         for i, r in enumerate(
-            emb.orderBy(id_col).limit(n_cells).collect()
+            emb.orderBy(ID_COL).limit(n_cells).collect()
         )
     ]
     dim = len(centroids[0][1]) if centroids else 0
     if kmeans_iters and centroids:
-        centroids = _lloyd_refine(emb, centroids, vec_col, dim, kmeans_iters)
-    assigned = _assign_cells(emb, centroids, vec_col)
+        centroids = _lloyd_refine(emb, centroids, dim, kmeans_iters)
+    assigned = _assign_cells(emb, centroids)
     return assigned, centroids
 
 
@@ -515,8 +509,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 0,
     init_centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
@@ -524,16 +516,14 @@ def ivf_topk(
     whose centroids are closest to the query. At scale the assigned
     table is written partitioned by cell so a probe is a partition-
     pruned scan, not a full pass."""
-    assigned, centroids = ivf_build(
-        emb, n_cells, id_col, vec_col, kmeans_iters, init_centroids
-    )
+    assigned, centroids = ivf_build(emb, n_cells, kmeans_iters, init_centroids)
     scored = sorted(
         centroids,
         key=lambda c: -sum(a * b for a, b in zip(query_vec, c[1])),
     )
     probe = [cid for cid, _ in scored[:n_probe]]
     candidates = assigned.filter(F.col("_cell").isin(probe))
-    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
+    return cosine_topk(candidates, query_vec, k)
 
 
 # ---------------------------------------------------------------------------
@@ -566,14 +556,12 @@ def pq_build(
     emb: DataFrame,
     m: int = 4,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 2,
     init_vectors: list[list[float]] | None = None,
 ) -> tuple[DataFrame, list[list[tuple[int, list[float]]]]]:
     """Train ``m`` per-subspace codebooks and encode every vector.
     Returns ``(codes_df, codebooks)`` where ``codes_df`` is
-    ``(id_col, _codes array<int>)`` and ``codebooks[j]`` is the
+    ``(vec_id, _codes array<int>)`` and ``codebooks[j]`` is the
     subspace-``j`` list of ``(code, centroid)``. Init is the
     deterministic ``n_codes`` lowest-id vectors' subvectors
     (``init_vectors`` lets a caller that already collected those rows
@@ -589,8 +577,8 @@ def pq_build(
 
     if init_vectors is None:
         init_vectors = [
-            [float(x) for x in r[vec_col]]
-            for r in emb.orderBy(id_col).limit(n_codes).collect()
+            [float(x) for x in r[VEC_COL]]
+            for r in emb.orderBy(ID_COL).limit(n_codes).collect()
         ]
     dim = len(init_vectors[0])
     if dim % m:
@@ -626,7 +614,7 @@ def pq_build(
                 if pdf.empty:
                     continue
                 seen = True
-                V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                V = np.array(pdf[VEC_COL].tolist(), dtype=np.float64)
                 for j in range(m):
                     S = V[:, j * sd : (j + 1) * sd]
                     idx = _sub_assign(S, cents_np[j])
@@ -647,7 +635,7 @@ def pq_build(
                 )
 
         parts = (
-            emb.select(F.col(vec_col).cast("array<double>").alias(vec_col))
+            emb.select(F.col(VEC_COL).cast("array<double>").alias(VEC_COL))
             .mapInPandas(_partial, schema="_sub int, _code int, _n long, _q array<long>")
             .collect()
         )
@@ -688,7 +676,7 @@ def pq_build(
 
     encode = pandas_udf(_encode, "array<int>")
     codes_df = emb.select(
-        id_col, encode(F.col(vec_col).cast("array<double>")).alias("_codes")
+        ID_COL, encode(F.col(VEC_COL).cast("array<double>")).alias("_codes")
     )
     return codes_df, codebooks
 
@@ -699,8 +687,6 @@ def pq_topk(
     k: int = 10,
     m: int = 4,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kmeans_iters: int = 2,
     init_vectors: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -708,11 +694,9 @@ def pq_topk(
     query·centroid dot products looked up by its PQ codes — one
     JVM-side expression over the (id, m-codes) table, exact float
     arithmetic in fixed subspace order, so the result value-oracles
-    against the pure-Python reference. Returns ``(id_col, adc)`` with
+    against the pure-Python reference. Returns ``(vec_id, adc)`` with
     the (adc DESC, id ASC) top ``k``."""
-    codes_df, codebooks = pq_build(
-        emb, m, n_codes, id_col, vec_col, kmeans_iters, init_vectors
-    )
+    codes_df, codebooks = pq_build(emb, m, n_codes, kmeans_iters, init_vectors)
     sd = len(query_vec) // m
     luts = []
     for j in range(m):
@@ -731,7 +715,7 @@ def pq_topk(
     )
     adc = F.expr(f"round({terms}, 6)")
     return (
-        codes_df.select(id_col, adc.alias("adc"))
-        .orderBy(F.desc("adc"), F.asc(id_col))
+        codes_df.select(ID_COL, adc.alias("adc"))
+        .orderBy(F.desc("adc"), F.asc(ID_COL))
         .limit(k)
     )

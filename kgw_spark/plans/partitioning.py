@@ -62,35 +62,29 @@ def dir_bytes(path: str) -> int:
     return total
 
 
-def byte_driven_conf(
-    input_bytes: int,
-    *,
-    shuffle_amplification: float = SHUFFLE_AMPLIFICATION,
-    split_target: int = SPLIT_TARGET_BYTES,
-    shuffle_target: int = SHUFFLE_TARGET_BYTES,
-) -> dict[str, str]:
+def byte_driven_conf(input_bytes: int) -> dict[str, str]:
     """Spark conf overrides making the physical plan a pure function of
     the input size. Use the SAME dict at every parallelism level; the
     cluster size then only determines concurrency, never the work.
 
     - scan splits: ``minPartitionNum=1`` removes the bytesPerCore term,
-      so ``maxSplitBytes`` collapses to the constant ``split_target``;
+      so ``maxSplitBytes`` collapses to the constant ``SPLIT_TARGET_BYTES``;
     - shuffle partitions: ceil(estimated shuffle bytes / target) with a
       utilization floor, and AQE's advisory size set to the same target
       so runtime coalescing cannot re-introduce a core-count dependence.
     """
-    est_shuffle = max(1, int(input_bytes * shuffle_amplification))
+    est_shuffle = max(1, int(input_bytes * SHUFFLE_AMPLIFICATION))
     # round to a multiple of MIN_SHUFFLE_PARTITIONS (a fixed quantum,
     # still core-agnostic): task waves stay even at any lane count that
     # divides the quantum. A ragged final wave is pure idle tail — at
     # sp=10 on 8 lanes the 2-task second wave of the edges stage added
     # ~2 s (13%) to the leg wall for zero work.
     q = MIN_SHUFFLE_PARTITIONS
-    sp = max(q, round(est_shuffle / shuffle_target / q) * q)
+    sp = max(q, round(est_shuffle / SHUFFLE_TARGET_BYTES / q) * q)
     return {
         "spark.sql.shuffle.partitions": str(sp),
         "spark.sql.files.minPartitionNum": "1",
-        "spark.sql.files.maxPartitionBytes": str(split_target),
+        "spark.sql.files.maxPartitionBytes": str(SPLIT_TARGET_BYTES),
         "spark.sql.files.openCostInBytes": str(OPEN_COST_BYTES),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(shuffle_target),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(SHUFFLE_TARGET_BYTES),
     }

@@ -152,12 +152,8 @@ def local_df(spark: SparkSession, rows, schema) -> "DataFrame":
 
 
 def stop_spark() -> None:
-    """Fully tear down the active session (needed between local[N] sizes)."""
+    """Fully tear down the active session (needed between local[N] sizes):
+    the next ``get_spark`` builds a new session with its own master."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-    # clear the cached session so a new master takes effect
-    try:
-        SparkSession.builder._options = {}
-    except Exception:
-        pass

@@ -1,5 +1,5 @@
 """Fetch utilities (E1-E4) against a local HTTP server — no external
-network — plus salted-aggregation equivalence on a skewed table."""
+network."""
 
 import bz2
 import functools
@@ -11,9 +11,7 @@ import threading
 import zipfile
 
 import pytest
-from pyspark.sql import functions as F
 
-from kgw_spark.operators.skew import salted_agg, salted_count
 from kgw_spark.sources import fetch
 
 
@@ -145,26 +143,3 @@ def test_decompress_all_formats(tmp_path):
     assert open(os.path.join(d, "z.txt"), "rb").read() == content
     with pytest.raises(ValueError, match="Unsupported"):
         fetch.decompress(str(tmp_path / "a.rar"))
-
-
-def test_salted_agg_matches_plain(spark):
-    # skewed table: one hot key carries 80% of rows
-    df = spark.range(0, 20000).select(
-        F.when(F.col("id") % 5 != 0, F.lit("hot"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 97).cast("string")))
-        .alias("k"),
-        (F.col("id") % 13).cast("double").alias("v"),
-    )
-    plain = {
-        (r.k): (r.n, r.sv)
-        for r in df.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"))
-        .collect()
-    }
-    salted = {
-        (r.k): (r.n, r.sv)
-        for r in salted_agg(df, ["k"], sums={"v": "sv"}, count_name="n").collect()
-    }
-    assert salted == plain
-    counts = {r.k: r.c for r in salted_count(df, ["k"], count_name="c").collect()}
-    assert counts == {k: v[0] for k, v in plain.items()}

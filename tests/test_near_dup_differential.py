@@ -110,13 +110,15 @@ def _vectors(seed, n=30, dim=8):
     return [(i, v) for i, v in enumerate(vecs + twins)]
 
 
-# a zero vector's cosine is NaN; the distributed verify's pandas UDF
-# returns it to Spark as null, which fails the threshold (a NaN would
-# pass it: Spark orders NaN above every double) — both paths must drop
-# exactly those rows
+# the cosine of a zero or NaN-holding vector is NaN; the distributed
+# verify's pandas UDF returns it to Spark as null, which fails the
+# threshold (a NaN would pass it: Spark orders NaN above every double) —
+# every path must drop exactly those rows
+DEGENERATE = {100, 101, 102}
 VECTORS = {
     "empty": [],
-    "zero_vectors": _vectors(4) + [(100, [0.0] * 8), (101, [0.0] * 8)],
+    "zero_vectors": _vectors(4)
+    + [(100, [0.0] * 8), (101, [0.0] * 8), (102, [float("nan")] + [1.0] * 7)],
     "twins": _vectors(5),
 }
 
@@ -132,7 +134,8 @@ def test_cosine_near_pairs_paths_agree(spark, monkeypatch, name):
         ),
     )
     assert got["in_core"] == got["distributed"]
-    pairs = got["in_core"][1]
-    assert all(100 not in (a, b) and 101 not in (a, b) for a, b, _ in pairs)
+    exact = _rows(similarity.cosine_near_pairs(emb, threshold=0.85, exact=True))
+    for pairs in (got["in_core"][1], got["distributed"][1], exact):
+        assert not any({a, b} & DEGENERATE for a, b, _ in pairs)
     if name != "empty":
-        assert pairs, "fixture yields no twin"
+        assert got["in_core"][1], "fixture yields no twin"

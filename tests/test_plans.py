@@ -149,41 +149,6 @@ def test_emb_near_pairs_certified_path_has_no_cartesian(spark, monkeypatch):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join via bucketing: two tables bucketed on the join
-    key produce a join plan with NO shuffle exchange (and no Sort when
-    the buckets are pre-sorted) — the write-once/join-many shape big
-    fact-to-fact joins need at 100 TB."""
-    from kgw_spark.sinks.bucketed import read_bucketed, write_bucketed
-
-    left = spark.range(10_000).selectExpr("id AS k", "id * 2 AS v1")
-    right = spark.range(10_000).selectExpr("id AS k", "id * 3 AS v2")
-    write_bucketed(left, "bk_left", "k", num_buckets=8, sort_by="k",
-                   path=str(tmp_path / "bk_left"))
-    write_bucketed(right, "bk_right", "k", num_buckets=8, sort_by="k",
-                   path=str(tmp_path / "bk_right"))
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = read_bucketed(spark, "bk_left").join(
-            read_bucketed(spark, "bk_right"), "k"
-        )
-        p = plan(j)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # co-located: bucket layout reused
-        assert j.count() == 10_000
-        # the same files read WITHOUT catalog metadata DO shuffle —
-        # proves the no-Exchange plan comes from bucketing, not size
-        raw = spark.read.parquet(str(tmp_path / "bk_left")).join(
-            spark.read.parquet(str(tmp_path / "bk_right")), "k"
-        )
-        assert "Exchange" in plan(raw)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
 def test_store_partition_pruning(spark, tmp_path):
     """Reading a type-partitioned store table with a type filter must
     prune partitions at the scan (the north rule's partition layout
@@ -247,10 +212,10 @@ def test_aqe_splits_skewed_join(spark):
 def test_hash_sample_is_scan_plus_filter(spark):
     """Deterministic sampling must stay a narrow scan + filter — zero
     shuffle, so at 100 TB it fuses into whatever pass reads the corpus."""
-    from kgw_spark.operators.sampling import hash_sample
+    from kgw_spark.operators.sampling import lcg_bucket
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan(hash_sample(docs, "doc_id", 30))
+    p = plan(docs.filter(lcg_bucket(F.col("doc_id"), 100) < 30))
     assert "Exchange" not in p
     assert "codegen id" in p  # LCG arithmetic stays in whole-stage codegen
 
@@ -261,10 +226,10 @@ def test_contamination_no_cartesian_distinct_before_join(spark):
     the train side is aggregated BEFORE the join so a duplicated
     boilerplate n-gram never multiplies join rows."""
     from kgw_spark.operators.dedup import ngram_containment
-    from kgw_spark.operators.sampling import hash_sample
+    from kgw_spark.operators.sampling import lcg_bucket
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    ev = hash_sample(docs, "doc_id", 10)
+    ev = docs.filter(lcg_bucket(F.col("doc_id"), 100) < 10)
     tr = docs.join(ev.select("doc_id"), "doc_id", "left_anti")
     p = plan(ngram_containment(tr, ev, n=5))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p

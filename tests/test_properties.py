@@ -109,25 +109,18 @@ def test_components_kernel_partition_properties(pairs):
 @given(
     st.integers(1, 12),
     st.integers(1, 12),
-    st.integers(1, 8),
-    st.integers(1, 8),
     st.integers(0, 2**32 - 1),
 )
 @settings(max_examples=30, deadline=None)
-def test_ppm_resize_roundtrip_properties(w, h, tw, th, seed):
-    """PPM codec properties: encode∘decode identity; nearest-neighbor
-    resize output contains only source pixels and has exact shape."""
+def test_ppm_resize_roundtrip_properties(w, h, seed):
+    """PPM codec property: encode∘decode identity."""
     import numpy as np
 
-    from kgw_spark.operators.multimodal import _resize_nn, decode_ppm, encode_ppm
+    from kgw_spark.operators.multimodal import decode_ppm, encode_ppm
 
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
     assert np.array_equal(decode_ppm(encode_ppm(img)), img)
-    out = _resize_nn(img, tw, th)
-    assert out.shape == (th, tw, 3)
-    src_px = {tuple(p) for p in img.reshape(-1, 3)}
-    assert {tuple(p) for p in out.reshape(-1, 3)} <= src_px
 
 
 @given(

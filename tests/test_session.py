@@ -1,5 +1,10 @@
 """Session sizing follows the host it runs on."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 from kgw_spark.session import default_driver_mem, spark_conf
 
 
@@ -31,3 +36,22 @@ def test_jit_policy_one_c2_thread(spark):
     conf = spark_conf(extra_conf={"spark.driver.extraJavaOptions": "-Xms256m"})
     assert conf["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=2"
     assert conf["spark.driver.extraJavaOptions"] == "-Xms256m"
+
+
+def test_get_spark_after_stop_spark_starts_a_new_session():
+    """``stop_spark`` ends the session, and the next ``get_spark`` builds
+    a new one on the new master (how a bench leg changes ``cores``). It
+    runs in a child process: stopping the suite's shared session would
+    strand every later test."""
+    code = (
+        "from kgw_spark.session import get_spark, stop_spark\n"
+        "a = get_spark(cores=1, extra_conf={'spark.driver.memory': '512m'})\n"
+        "stop_spark()\n"
+        "assert a.sparkContext._jsc is None\n"
+        "b = get_spark(cores=2)\n"
+        "assert b is not a and b.sparkContext.master == 'local[2]'\n"
+        "assert b.range(5).count() == 5\n"
+        "stop_spark()\n"
+    )
+    env = {**os.environ, "PYTHONPATH": str(Path(__file__).resolve().parent.parent)}
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, timeout=600)
