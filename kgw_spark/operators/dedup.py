@@ -15,9 +15,12 @@ Exact and near-duplicate detection over a documents table. Shapes:
 
 All hashing is JVM-side (xxhash64 / murmur hash) — deterministic and
 shuffle-friendly. Past the driver budget no Python runs in the hot
-path; below it MinHash+LSH collects its JVM-hashed shingle lists once
-and runs the same signatures, bands and verify as a numpy kernel on the
-driver (``incore.minhash_lsh_pairs``).
+path. Below it n-gram Jaccard and MinHash+LSH collect each document's
+distinct shingles once (MinHash with their JVM-side hashes) and run
+the same algorithm as a numpy kernel on the driver: the capped
+shingle self-join as pairs within shingle groups
+(``incore.ngram_jaccard_pairs``), and the same signatures, bands and
+verify (``incore.minhash_lsh_pairs``).
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ from kgw_spark.operators.pairs import broadcast_within
 # the documents table's columns
 ID_COL = "doc_id"
 TEXT_COL = "text"
+# seed of the MinHash permutation coefficients
+MINHASH_SEED = 7
 
 
 # --------------------------------------------------------------------------
@@ -80,6 +85,15 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return docs.select(F.col(ID_COL), F.explode(grams).alias("shingle"))
 
 
+def _shingle_sets(docs: DataFrame, n: int) -> DataFrame:
+    """``(id, shingles)``: each document's distinct word n-grams as one
+    array — the shape the in-core kernels collect."""
+    return docs.select(
+        F.col(ID_COL).alias("id"),
+        F.array_distinct(word_ngrams(TEXT_COL, n)).alias("shingles"),
+    )
+
+
 def _jaccard_pairs(common: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """``(a, b, jaccard)`` from shared-shingle counts ``(a, b, common)``
     and the ``(id, shingle)`` table of their documents: exact Jaccard
@@ -126,7 +140,15 @@ def ngram_jaccard_pairs(
     majority are sub-cap, so losses are confined to pathological
     stop-shingle-only overlaps. Pass ``None`` explicitly for exact
     semantics when the corpus is known small (the oracle/test path).
+
+    Below the driver budget (``incore.ngram_jaccard_pairs``) one Arrow
+    collect brings each document's distinct shingles to the driver,
+    where the same capped self-join counts the shared shingles; only
+    the Jaccard rounding and the threshold (``_jaccard``) run in Spark.
     """
+    counts = incore.ngram_jaccard_pairs(_shingle_sets(docs, n), threshold, max_shingle_df)
+    if counts is not None:
+        return _jaccard(counts, threshold)
     # NOTE: deliberately NOT persisted — measured A/B at sf0.1/32
     # lanes: caching the wide (id, shingle-string) table costs more in
     # memory bandwidth than the codegen-fused recompute saves (persist
@@ -323,7 +345,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    seed: int = 7,
 ) -> DataFrame:
     """Candidate pairs via banded LSH on the minhash signature, then
     exact n-gram-Jaccard verification of candidates only.
@@ -344,17 +365,16 @@ def minhash_lsh_pairs(
     Jaccard rounding and the threshold (``_jaccard``) run in Spark."""
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
-    grams = docs.select(
-        F.col(ID_COL).alias("id"),
-        F.array_distinct(word_ngrams(TEXT_COL, n)).alias("shingles"),
-    ).select("id", "shingles", F.transform("shingles", _shingle_hash).alias("h"))
+    grams = _shingle_sets(docs, n).select(
+        "id", "shingles", F.transform("shingles", _shingle_hash).alias("h")
+    )
     counts = incore.minhash_lsh_pairs(
-        grams, _perm_coeffs(num_perm, seed), rows_per_band, threshold
+        grams, _perm_coeffs(num_perm, MINHASH_SEED), rows_per_band, threshold
     )
     if counts is not None:
         return _jaccard(counts, threshold)
     sh = shingles(docs, n).persist()
-    sig = _signatures_from_shingles(sh, num_perm, seed)
+    sig = _signatures_from_shingles(sh, num_perm, MINHASH_SEED)
     # band structs as ONE parsed expression (not bands×rows_per_band
     # py4j Column constructions — see _signatures_from_shingles)
     band_structs = ",".join(
@@ -430,7 +450,6 @@ def near_dup_clusters(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    seed: int = 7,
 ) -> DataFrame:
     """The full production dedup flow: MinHash-LSH near-dup pairs →
     connected components (near-duplication is transitive-closed so one
@@ -460,7 +479,7 @@ def near_dup_clusters(
                 )
             ),
         ).otherwise(F.format_string("%020d", F.col(c)))
-    pairs = minhash_lsh_pairs(docs, n, num_perm, bands, threshold, seed).select(
+    pairs = minhash_lsh_pairs(docs, n, num_perm, bands, threshold).select(
         pad("a").alias("u"), pad("b").alias("v")
     )
     mapping = connected_components(pairs)

@@ -2,8 +2,9 @@
 
 The graph operators (``canon.connected_components``, ``kcore.k_core``,
 ``communities.min_label_propagation``, ``pagerank.pagerank``,
-``analytics.k_hop``, ``triangles.triangle_count``) and the near-duplicate
-candidate searches (``dedup.minhash_lsh_pairs``,
+``analytics.k_hop``, ``triangles.triangle_count``,
+``linkpred.common_neighbors``) and the near-duplicate searches
+(``dedup.minhash_lsh_pairs``, ``dedup.ngram_jaccard_pairs``,
 ``similarity.cosine_near_pairs``) spend their time on small inputs
 planning, code-generating and scheduling one Spark job after another,
 not computing: every round or join is a handful of jobs over data that
@@ -23,14 +24,18 @@ distributed plan unchanged. ``canon.compose_mapping_local`` feeds its
 driver-resident alias pairs to the same components kernel, skipping the
 gate and the collect.
 
-The candidate kernels run the SAME algorithm as their distributed
-plans (same hashes, bands, planes and probes; no brute force), group by
-sorting (a band or bucket self-join is a hash join; sorted runs are its
-in-core form), and count the candidate pairs from the group sizes
-before expanding them: past ``DRIVER_MAX_BYTES`` at two int64 codes per
-pair they hand back to the distributed plan. They return integer counts
-or raw cosines only; the rounding and the threshold stay in the
-operators' Spark expressions, applied over the LocalRelation.
+The pair kernels run the SAME algorithm as their distributed plans
+(same hashes, bands, planes, probes and caps; no brute force), group by
+sorting (a band, bucket or shingle self-join is a hash join; sorted
+runs are its in-core form), and count the candidate pairs from the
+group sizes before expanding them: past ``DRIVER_MAX_BYTES`` at two
+int64 codes per pair they hand back to the distributed plan. Common
+neighbors and n-gram Jaccard share one kernel, ``_pair_counts``: the
+pairs within groups (wedges through a middle node of degree ≤ cap;
+documents sharing a shingle of document frequency in [2, cap]) and how
+many groups each pair shares. The kernels return integer counts or raw
+cosines only; the rounding and the threshold stay in the operators'
+Spark expressions, applied over the LocalRelation.
 
 The graph kernels are independent of the pure-Python ``*_py`` replicas,
 which stay the tests' oracles for both paths.
@@ -218,30 +223,28 @@ def label_propagation(nodes: DataFrame, pairs: DataFrame, rounds: int) -> DataFr
     return local_df(pairs.sparkSession, out, "id string, label string")
 
 
-def pagerank(
-    edges: DataFrame, iters: int, damping_num: int, damping_den: int, scale: int
-) -> DataFrame | None:
+def pagerank(edges: DataFrame, iters: int, scale: int) -> DataFrame | None:
     """``pagerank.pagerank`` in-core, in the same exact int64
     arithmetic: per edge ``rank(u) // out_degree(u)`` summed into the
     target by ``np.add.at`` (integer adds, never float ``bincount``
     weights), then ``teleport + (num * sum) // den``. ``effective_scale``
     bounds ``num * sum`` below 2^63, so no int64 op can wrap. None past
     the driver budget."""
-    from kgw_spark.operators.pagerank import effective_scale
+    from kgw_spark.operators.pagerank import DAMPING_DEN, DAMPING_NUM, effective_scale
 
     got = _collect_codes(edges, "source_id", "target_id")
     if got is None:
         return None
     src, dst, ids = got
     n = len(ids)
-    scale = effective_scale(n, scale, damping_num)
-    teleport = ((damping_den - damping_num) * scale) // damping_den
+    scale = effective_scale(n, scale, DAMPING_NUM)
+    teleport = ((DAMPING_DEN - DAMPING_NUM) * scale) // DAMPING_DEN
     src_deg = np.bincount(src, minlength=n)[src]
     ranks = np.full(n, scale, np.int64)
     for _ in range(iters):
         sums = np.zeros(n, np.int64)
         np.add.at(sums, dst, ranks[src] // src_deg)
-        ranks = teleport + (damping_num * sums) // damping_den
+        ranks = teleport + (DAMPING_NUM * sums) // DAMPING_DEN
     out = pa.table({"id": ids, "rank_scaled": ranks})
     return local_df(edges.sparkSession, out, "id string, rank_scaled bigint")
 
@@ -336,6 +339,22 @@ def _fits_pairs(n_pairs: int) -> bool:
     return 16 * n_pairs <= DRIVER_MAX_BYTES
 
 
+def _pair_counts(groups, members, n: int):
+    """Count the pairs within groups: ``(lo, hi, count)`` for every
+    distinct pair of member codes (below ``n``) that share a group —
+    ``groups[i]`` is the group of ``members[i]`` — with ``lo < hi`` in
+    code order and the number of groups holding both. None when the
+    pairs, bounded by ΣC(size, 2) over the group sizes before any is
+    expanded, do not fit ``DRIVER_MAX_BYTES``."""
+    order, end = _runs(groups[:, None])
+    if not _fits_pairs(int(_run_partners(end).sum())):
+        return None
+    i, j = _pairs_within(order, end)
+    a, b = members[i], members[j]
+    key, count = np.unique(np.minimum(a, b) * n + np.maximum(a, b), return_counts=True)
+    return key // n, key % n, count
+
+
 def _chunks(weights):
     """Consecutive slices over ``weights`` of at most 2^22 total weight
     each (a heavier single item gets a slice of its own): the verify
@@ -426,6 +445,73 @@ def triangle_count(pairs: DataFrame) -> DataFrame | None:
     )
 
 
+def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | None:
+    """``linkpred.common_neighbors`` in-core: the wedges through every
+    middle node of degree ≤ ``deg_cap`` are the pairs within its
+    neighbor group (``_pair_counts`` over both arc directions); adjacent
+    pairs drop out by a sorted lookup of the ``(u, v)`` keys, and the
+    top ``top`` rows by ``(n_common desc, u, v)`` are cut in code order,
+    which is id order. ``u`` and ``v`` keep the input's types and are
+    not null, as on the distributed plan (whose pairs come out of
+    ``collect_list`` arrays, which hold no null). None past the driver
+    budget (the pair list, or its wedge count), and for ids without a
+    numpy order."""
+    if not orderable(pairs, "u", "v"):
+        return None
+    got = _collect_codes(pairs, "u", "v")
+    if got is None:
+        return None
+    u, v, ids = got
+    n = max(len(ids), 1)
+    x, y = _both_ways(u, v)
+    low = np.bincount(x, minlength=n)[x] <= deg_cap
+    counted = _pair_counts(x[low], y[low], n)
+    if counted is None:
+        return None
+    lo, hi, count = counted
+    adjacent = np.sort(u * n + v)
+    key = lo * n + hi
+    at = np.minimum(np.searchsorted(adjacent, key), len(adjacent) - 1)
+    keep = np.flatnonzero(adjacent[at] != key)
+    cut = keep[np.lexsort((hi[keep], lo[keep], -count[keep]))[:top]]
+    out = pa.table({"u": ids[lo[cut]], "v": ids[hi[cut]], "n_common": count[cut]})
+    t = {c: pairs.schema[c].dataType.simpleString() + " not null" for c in ("u", "v")}
+    return local_df(pairs.sparkSession, out, f"u {t['u']}, v {t['v']}, n_common bigint not null")
+
+
+def _collect_shingle_sets(grams: DataFrame):
+    """The shared prep of the shingle kernels over ``grams`` = ``(id,
+    shingles, ...)``, each document's distinct shingles: the gate on
+    the shingle count and bytes, ONE Arrow collect, order-preserving
+    codes of the documents that have an id and a shingle, and
+    dictionary codes of the shingle strings. Returns ``(tbl, ids, first,
+    lens, d, s)``: the collected table, its id column, the row of each
+    document code, the shingle count of each row, and per collected
+    shingle (row by row) its document code (-1 in a row without an id)
+    and its shingle code. None past the driver budget, for an id
+    without a numpy order, and for a repeated id, whose shingle sets
+    the distributed plans merge."""
+    if not orderable(grams) or not _fits(
+        grams,
+        F.sum(F.size("shingles")),
+        F.sum(F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)),
+    ):
+        return None
+    tbl = grams.toArrow()
+    ids = tbl.column("id").combine_chunks()
+    sh = tbl.column("shingles").combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(sh), 0).to_numpy().astype(np.int64)
+    rows = np.flatnonzero((lens > 0) & ids.is_valid().to_numpy(zero_copy_only=False))
+    got = _id_codes(ids, rows)
+    if got is None:
+        return None
+    codes, first = got
+    doc_of_row = np.full(len(lens), -1)
+    doc_of_row[rows] = codes
+    s = sh.flatten().dictionary_encode().indices.to_numpy(zero_copy_only=False)
+    return tbl, ids, first, lens, np.repeat(doc_of_row, lens), s.astype(np.int64)
+
+
 def minhash_lsh_pairs(
     grams: DataFrame, coeffs, rows_per_band: int, threshold: float
 ) -> DataFrame | None:
@@ -443,37 +529,25 @@ def minhash_lsh_pairs(
     joins on their xxhash64, which differs only on a 64-bit collision);
     each colliding pair is verified by its exact shingle overlap, over
     dictionary codes of the shingle strings. A document without a
-    shingle or an id has no signature and never pairs. None past the
-    driver budget (the shingle lists, or the candidate count), for an
-    id without a numpy order, and for a repeated id, whose shingle sets
-    the distributed plan merges."""
+    shingle or an id has no signature and never pairs. None where
+    ``_collect_shingle_sets`` is, and past the candidate count."""
     from kgw_spark.operators.dedup import _MERSENNE
 
-    if not orderable(grams) or not _fits(
-        grams,
-        F.sum(F.size("shingles")),
-        F.sum(F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)),
-    ):
+    got = _collect_shingle_sets(grams)
+    if got is None:
         return None
-    tbl = grams.toArrow()
-    ids = tbl.column("id").combine_chunks()
-    sh = tbl.column("shingles").combine_chunks()
-    lens = pc.fill_null(pc.list_value_length(sh), 0).to_numpy().astype(np.int64)
+    tbl, ids, first, lens, d, s = got
     h = tbl.column("h").combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    # signatures over every row with a shingle (reduceat needs the rows
+    # in order), then each document code's row
     filled = np.flatnonzero(lens > 0)
     sig = np.empty((len(filled), len(coeffs)), np.int64)
     if len(filled):
         starts = (np.cumsum(lens) - lens)[filled]
         for p, (a, b) in enumerate(coeffs):
             sig[:, p] = np.minimum.reduceat((h * a + b) % _MERSENNE, starts)
-    named = ids.is_valid().to_numpy(zero_copy_only=False)[filled]
-    docs, sig = filled[named], sig[named]
-    got = _id_codes(ids, docs)
-    if got is None:
-        return None
-    codes, first = got
-    n = max(len(docs), 1)
-    sig[codes] = sig.copy()
+    sig = sig[np.searchsorted(filled, first)]
+    n = max(len(first), 1)
 
     bands = [
         _runs(sig[:, c : c + rows_per_band]) for c in range(0, sig.shape[1], rows_per_band)
@@ -484,14 +558,10 @@ def minhash_lsh_pairs(
 
     # every document's shingle codes as ONE sorted (doc, shingle) key
     # list: doc d's keys are keys[start[d] : start[d] + size[d]]
-    doc_of_row = np.full(len(lens), -1)
-    doc_of_row[docs] = codes
-    d = np.repeat(doc_of_row, lens)
-    enc = sh.flatten().dictionary_encode()
-    m = max(len(enc.dictionary), 1)
-    s = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    keys = np.sort(d[d >= 0] * m + s[d >= 0])
-    size = np.bincount(d[d >= 0], minlength=n)
+    named = d >= 0
+    m = int(s.max()) + 1 if len(s) else 1
+    keys = np.sort(d[named] * m + s[named])
+    size = np.bincount(d[named], minlength=n)
     start = np.cumsum(size) - size
     # walk the smaller shingle set of each pair, looking each shingle up
     # in the other document's keys
@@ -505,6 +575,46 @@ def minhash_lsh_pairs(
         common[c] = np.bincount(rep[keys[at] == q], minlength=c.stop - c.start)
     union = size[lo] + size[hi] - common
     keep = (common > 0) & _may_pass(common / union, threshold)
+    lo, hi = lo[keep], hi[keep]
+    cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
+    return _pair_frame(
+        grams, ids, first, lo, hi, cols, "common bigint, size_a bigint, size_b bigint"
+    )
+
+
+def ngram_jaccard_pairs(
+    grams: DataFrame, threshold: float, max_shingle_df: int | None
+) -> DataFrame | None:
+    """``dedup.ngram_jaccard_pairs`` in-core over ``grams`` = ``(id,
+    shingles)``, each document's distinct shingles. Returns ``(a, b,
+    common, size_a, size_b)``, ``a < b``, for the pairs whose Jaccard
+    may pass ``threshold``; the operator rounds and filters them in
+    Spark.
+
+    The distributed self-join on the driver: a shingle's document
+    frequency counts every row holding it, a row without an id too (as
+    the distributed ``groupBy("shingle")`` does, which the cap reads);
+    the documents sharing a shingle of frequency in [2,
+    ``max_shingle_df``] (no upper bound for None) are its group, and
+    ``_pair_counts`` counts the shingles each pair shares. Sizes are
+    over the unfiltered shingles. None where ``_collect_shingle_sets``
+    is, and past the pair count."""
+    got = _collect_shingle_sets(grams)
+    if got is None:
+        return None
+    _, ids, first, _, d, s = got
+    n = max(len(first), 1)
+    freq = np.bincount(s)[s]
+    named = d >= 0
+    size = np.bincount(d[named], minlength=n)
+    joinable = named & (freq >= 2)
+    if max_shingle_df is not None:
+        joinable &= freq <= max_shingle_df
+    counted = _pair_counts(s[joinable], d[joinable], n)
+    if counted is None:
+        return None
+    lo, hi, common = counted
+    keep = _may_pass(common / (size[lo] + size[hi] - common), threshold)
     lo, hi = lo[keep], hi[keep]
     cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
     return _pair_frame(

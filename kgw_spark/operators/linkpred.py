@@ -14,6 +14,12 @@ common neighbors to ~0.
 Everything is integer counting over deterministic orderings, so the
 result (with the (count DESC, u, v) total order on the top-k cut) is
 exactly value-oracle-able in SQL.
+
+Below the driver budget (``incore.common_neighbors``) the pair list
+arrives in one Arrow collect and the same capped wedge count runs on
+the driver: the wedges through a middle node are the pairs within its
+neighbor group, adjacent pairs drop out by a sorted lookup, and the
+top-k is cut in id order. Past it the plan below runs unchanged.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import both_directions, degrees
 
 
@@ -31,6 +38,9 @@ def common_neighbors(pairs: DataFrame, deg_cap: int = 32, top: int = 20) -> Data
     (``pairs.canonical_pairs``)."""
     if deg_cap < 1 or top < 1:
         raise ValueError(f"common_neighbors needs deg_cap/top >= 1, got {deg_cap}/{top}")
+    out = incore.common_neighbors(pairs, deg_cap, top)
+    if out is not None:
+        return out
     # degree pre-filter BEFORE collect_list: a hub never reaches a
     # reducer's buffer, so per-group state is bounded by deg_cap
     low = both_directions(pairs).join(

@@ -15,7 +15,7 @@ This implementation scales all rank mass to 64-bit integers
 
 Initial rank is ``scale`` per node. OVERFLOW GUARD: total mass is
 bounded by N·scale and a single node's damped in-mass by
-``damping_num · N · scale``, so the requested scale is auto-shrunk
+``DAMPING_NUM · N · scale``, so the requested scale is auto-shrunk
 (powers of 10) until that bound stays under 2^63 — at the
 reference-CKG node count (14.5M) the default 10^12 shrinks to 10^9,
 keeping ANSI mode from throwing and non-ANSI from silently wrapping.
@@ -48,6 +48,10 @@ from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import broadcast_within, send
+
+# the damping factor as the rational num/den: 0.85
+DAMPING_NUM = 85
+DAMPING_DEN = 100
 
 
 def effective_scale(n_nodes: int, scale: int, damping_num: int) -> int:
@@ -83,8 +87,6 @@ def _graph_parts(edges: DataFrame) -> DataFrame:
 def pagerank(
     edges: DataFrame,
     iters: int = 10,
-    damping_num: int = 85,
-    damping_den: int = 100,
     scale: int = 10**12,
 ) -> DataFrame:
     """Returns ``(id, rank_scaled)`` after ``iters`` exact iterations
@@ -94,13 +96,13 @@ def pagerank(
     it is scanned every iteration and never materialized here (input
     contract: ``pairs`` module docstring)."""
     edges = edges.select("source_id", "target_id")
-    out = incore.pagerank(edges, iters, damping_num, damping_den, scale)
+    out = incore.pagerank(edges, iters, scale)
     if out is not None:
         return out
     nodes = _graph_parts(edges).localCheckpoint(eager=True)
     n_nodes = nodes.count()
-    scale = effective_scale(n_nodes, scale, damping_num)
-    teleport = ((damping_den - damping_num) * scale) // damping_den
+    scale = effective_scale(n_nodes, scale, DAMPING_NUM)
+    teleport = ((DAMPING_DEN - DAMPING_NUM) * scale) // DAMPING_DEN
     ranks = nodes.withColumn("rank_scaled", F.lit(scale).cast("long"))
     # The out-degree rides in the rank vector, so no degree join ever
     # touches the edge list: each iteration sends the per-edge
@@ -138,7 +140,7 @@ def pagerank(
                 (
                     F.lit(teleport)
                     + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L)) div {damping_den}"
+                        f"({DAMPING_NUM} * coalesce(_s, 0L)) div {DAMPING_DEN}"
                     )
                 ).cast("long").alias("rank_scaled"),
             )
@@ -150,8 +152,6 @@ def pagerank(
 def pagerank_py(
     edge_list: list[tuple[str, str]],
     iters: int = 10,
-    damping_num: int = 85,
-    damping_den: int = 100,
     scale: int = 10**12,
 ) -> dict[str, int]:
     """Pure-Python replica — bit-identical to ``pagerank`` (exact
@@ -162,15 +162,15 @@ def pagerank_py(
         nodes.add(u)
         nodes.add(v)
         out_deg[u] = out_deg.get(u, 0) + 1
-    scale = effective_scale(len(nodes), scale, damping_num)
-    teleport = ((damping_den - damping_num) * scale) // damping_den
+    scale = effective_scale(len(nodes), scale, DAMPING_NUM)
+    teleport = ((DAMPING_DEN - DAMPING_NUM) * scale) // DAMPING_DEN
     ranks = {n: scale for n in nodes}
     for _ in range(iters):
         sums: dict[str, int] = {}
         for u, v in edge_list:
             sums[v] = sums.get(v, 0) + ranks[u] // out_deg[u]
         ranks = {
-            n: teleport + (damping_num * sums.get(n, 0)) // damping_den
+            n: teleport + (DAMPING_NUM * sums.get(n, 0)) // DAMPING_DEN
             for n in nodes
         }
     return ranks

@@ -20,34 +20,20 @@ from pyspark.sql import functions as F
 _LCG_A = 1103515245
 _LCG_C = 12345
 _LCG_M = 1 << 31
-
-
-def lcg_bucket(key: Column, buckets: int = 100) -> Column:
-    """Deterministic bucket in [0, buckets) from an integral key.
-    64-bit safe: key * A + C stays under 2^63 for keys < ~8.4e9; larger
-    key spaces should pre-fold (key % 2^31) first. Negative keys are
-    folded into [0, M) first (sign-following ``%`` would otherwise
-    yield negative buckets, silently keeping 100% of negative-keyed
-    rows at any rate); the double-mod form is written identically in
-    the SQL twin so both engines agree on every 64-bit input."""
-    x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C)
-    h = (x % F.lit(_LCG_M) + F.lit(_LCG_M)) % F.lit(_LCG_M)
-    return h % F.lit(buckets)
-
-
-def lcg_bucket_sql(key_expr: str, buckets: int = 100) -> str:
-    """The identical bucket computation as ANSI SQL (the oracle twin)."""
-    return (
-        f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C})"
-        f" % {_LCG_M}) + {_LCG_M}) % {_LCG_M}) % {buckets}"
-    )
+# bucket count of ``lcg_bucket_sql``, the oracle twin of the queries'
+# ``lcg_bucket(key, 100)``
+BUCKETS = 100
 
 
 def lcg_u31(key: Column) -> Column:
     """Deterministic hash in [0, 2^31) from an integral key — the
-    uniform variate behind per-row (rather than global-rate)
-    sampling decisions. Same overflow/negative-key discipline as
-    :func:`lcg_bucket`."""
+    uniform variate behind every sampling decision. 64-bit safe:
+    key * A + C stays under 2^63 for keys < ~8.4e9; larger key spaces
+    should pre-fold (key % 2^31) first. Negative keys are folded into
+    [0, M) (sign-following ``%`` would otherwise yield negative
+    buckets, silently keeping 100% of negative-keyed rows at any rate);
+    the double-mod form is written identically in the SQL twin so both
+    engines agree on every 64-bit input."""
     x = key.cast("long") * F.lit(_LCG_A) + F.lit(_LCG_C)
     return (x % F.lit(_LCG_M) + F.lit(_LCG_M)) % F.lit(_LCG_M)
 
@@ -58,6 +44,18 @@ def lcg_u31_sql(key_expr: str) -> str:
         f"((((CAST({key_expr} AS BIGINT) * {_LCG_A} + {_LCG_C})"
         f" % {_LCG_M}) + {_LCG_M}) % {_LCG_M})"
     )
+
+
+def lcg_bucket(key: Column, buckets: int = BUCKETS) -> Column:
+    """Deterministic bucket in [0, buckets) from an integral key:
+    :func:`lcg_u31` mod ``buckets``."""
+    return lcg_u31(key) % F.lit(buckets)
+
+
+def lcg_bucket_sql(key_expr: str) -> str:
+    """The identical bucket computation as ANSI SQL (the oracle twin),
+    over ``BUCKETS`` buckets."""
+    return f"{lcg_u31_sql(key_expr)} % {BUCKETS}"
 
 
 def weighted_sample(df: DataFrame, key_col: str, weight: Column) -> DataFrame:

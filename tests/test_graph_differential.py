@@ -16,7 +16,7 @@ from pyspark.sql.types import _parse_datatype_string
 from kgw_spark.operators import canon, incore
 from kgw_spark.operators import pairs as pair_list
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
-from kgw_spark.operators.dedup import minhash_lsh_pairs
+from kgw_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
 from kgw_spark.operators.pagerank import pagerank, pagerank_py
@@ -37,6 +37,9 @@ GRAPHS = {
         [],
     ),
     "star_hub": ([("h", f"l{i}") for i in range(6)] + [("l0", "l1"), ("l2", "h")], []),
+    # a hub above every common-neighbors cap the tests pass: the wedges
+    # through it do not count, those through "t" (degree 2) do
+    "star_over_cap": ([("h", f"s{i}") for i in range(40)] + [("s0", "t"), ("s1", "t")], []),
     "isolated_nodes": ([("b", "c"), ("c", "d"), ("d", "b")], ["a", "z"]),
     "two_components": (
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "e"),
@@ -71,6 +74,7 @@ SCHEMAS = {
     "pagerank": "id string, rank_scaled bigint",
     "connected_components": "id string, canonical_id string",
     "triangles": "n_edges bigint not null, n_wedges bigint not null, n_triangles bigint not null",
+    "common_neighbors": "u string not null, v string not null, n_common bigint not null",
 }
 
 # a pair with a null id unions nothing: the distributed path's u != v
@@ -156,8 +160,9 @@ def test_operators_match_replicas(spark, monkeypatch, name, path):
         labels = rows("label_prop", min_label_propagation(nodes, pairs, rounds=rounds))
         got = {r.id: r.label for r in labels}
         assert got == label_propagation_py(node_ids, raw, rounds=rounds), rounds
-    got = [(r.u, r.v, r.n_common) for r in common_neighbors(pairs, deg_cap=3, top=10).collect()]
-    assert got == common_neighbors_py(raw, deg_cap=3, top=10)
+    for cap in (3, 32):
+        cn = rows("common_neighbors", common_neighbors(pairs, deg_cap=cap, top=10))
+        assert [tuple(r) for r in cn] == common_neighbors_py(raw, deg_cap=cap, top=10), cap
     # the first node id (isolated in some graphs) and an edge endpoint
     starts = {node_ids[0] if node_ids else "a"} | {u for u, _ in raw[:1]}
     for start in sorted(starts):
@@ -242,7 +247,9 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
         "k_hop": lambda: k_hop(pairs, raw[0][0], k=2),
         "connected_components": lambda: canon.connected_components(pairs),
         "triangle_count": lambda: triangle_count(pairs),
+        "common_neighbors": lambda: common_neighbors(pairs, deg_cap=3, top=10),
         "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, threshold=0.2),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, threshold=0.2),
         "cosine_near_pairs": lambda: cosine_near_pairs(emb, threshold=0.85),
     }
     sc = spark.sparkContext

@@ -1,12 +1,14 @@
-"""Near-duplicate candidate searches on both sides of the driver gate:
-MinHash-LSH pairs (and the cluster resolution and curation built on
-them) and multiprobe cosine-LSH pairs must return the same rows and the
-same schema — names, types, nullability — in-core below
+"""Near-duplicate searches on both sides of the driver gate: MinHash-LSH
+pairs (and the cluster resolution and curation built on them), n-gram
+Jaccard pairs and multiprobe cosine-LSH pairs must return the same rows
+and the same schema — names, types, nullability — in-core below
 ``incore.DRIVER_MAX_ROWS`` as on the distributed plan past it; MinHash
 also with its candidate-doc set past ``pairs.BCAST_MAX_IDS``, where the
 verify semi-join shuffles instead of broadcasting. The fixtures are the
 adversarial shapes of each: no input, one band group holding every
-document, documents without a shingle or an id, and zero vectors."""
+document, documents without a shingle or an id, a shingle tipped over
+the document-frequency cap by a document without an id, and zero
+vectors."""
 
 import random
 
@@ -84,6 +86,26 @@ def test_minhash_paths_agree(spark, monkeypatch, name):
     )
     assert got["in_core"] == got["distributed"] == got["shuffled"]
     if name != "empty":
+        assert got["in_core"][1], "fixture yields no pair"
+
+
+@pytest.mark.parametrize("max_df", [1000, None, 3])
+@pytest.mark.parametrize("name", list(DOCS))
+def test_ngram_jaccard_paths_agree(spark, monkeypatch, name, max_df):
+    id_type, rows = DOCS[name]
+    docs = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    got = _paths(
+        monkeypatch,
+        ["in_core", "distributed"],
+        lambda: dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2, max_shingle_df=max_df),
+    )
+    assert got["in_core"] == got["distributed"]
+    if max_df == 3 and name in ("all_identical", "no_shingles"):
+        # every shared shingle is over the cap: in nine copies, or in four
+        # rows for "x y z" and "y z w", where the id-less copy is the
+        # fourth — the document frequency counts every row
+        assert got["in_core"][1] == []
+    elif name != "empty":
         assert got["in_core"][1], "fixture yields no pair"
 
 

@@ -276,13 +276,20 @@ def test_temporal_joins_have_no_nested_loop(spark):
         assert "BroadcastNestedLoopJoin" not in p, name
 
 
-def test_common_neighbors_plan_shape(spark):
-    """kg_common_neighbors must stay on the bounded wedge path: the
-    per-node HOF pair expansion (sort_array over collected neighbor
-    lists) with no cartesian/nested-loop operator anywhere."""
+def test_common_neighbors_plan_shape(spark, monkeypatch):
+    """kg_common_neighbors runs in-core below the driver gate (its
+    result is a LocalRelation); past it, it must stay on the bounded
+    wedge path: the per-node HOF pair expansion (sort_array over
+    collected neighbor lists) with no cartesian/nested-loop operator
+    anywhere."""
     import __spark_entry__ as E
 
-    p = plan(E.queries()["kg_common_neighbors"](spark, SF))
+    from kgw_spark.operators import incore
+
+    query = E.queries()["kg_common_neighbors"]
+    assert incore.held_on_driver(query(spark, SF))
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    p = plan(query(spark, SF))
     assert "sort_array" in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
