@@ -17,6 +17,7 @@ dedup, kgw/biomedicine/_oregano.py:190-196; SURVEY §7.4).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -132,13 +133,13 @@ def compose_mapping_local(spark, rows) -> DataFrame:
     curated dictionary loaded from a file — and what ``compose_mapping``
     collects when its budget probe passes). Runs disambiguation (best
     candidate per alias: score desc with None ranked last, canonical
-    asc) and the ``incore.components`` kernel (lexicographic-min
-    representative) with ZERO Spark jobs, returning the broadcast-hinted
-    mapping frame. A winning pair with a null id unions nothing, as on
-    the distributed path. Callers that already hold the rows (pipelines
-    fed from a dictionary file) should pass them via
-    ``run_pipeline(alias_local=...)`` — the probe aggregate + re-collect
-    round-trip is pure serial wall on every pipeline run."""
+    asc), ``incore.encode`` and the ``incore.components`` kernel
+    (lexicographic-min representative) with ZERO Spark jobs, returning
+    the broadcast-hinted mapping frame. A winning pair with a null id
+    unions nothing, as on the distributed path. Callers that already
+    hold the rows (pipelines fed from a dictionary file) should pass
+    them via ``run_pipeline(alias_local=...)`` — the probe aggregate +
+    re-collect round-trip is pure serial wall on every pipeline run."""
     best: dict[str, tuple[float, bool, str]] = {}
     for alias, canon, score in rows:
         # None score ranks below every real score and a None canonical
@@ -149,11 +150,15 @@ def compose_mapping_local(spark, rows) -> DataFrame:
         if cur is None or cand < cur:
             best[alias] = cand
     win = [(a, c) for a, (*_key, c) in best.items() if a is not None and c is not None]
-    u, v, ids = incore.factorize([a for a, _ in win], [c for _, c in win])
+    # one Arrow array of the aliases then the canonicals, typed as the
+    # ids are (string for an empty dictionary)
+    col = pa.array([a for a, _ in win] + [c for _, c in win], None if win else pa.string())
+    (codes,), ids = incore.encode(col)
+    uv = codes[: len(win)], codes[len(win):]
     # broadcast of a LocalRelation: zero tasks, where a plain
     # createDataFrame(list) schedules a cores-wide python job on every
     # pipeline run just to pickle a few dozen rows
-    return F.broadcast(incore.component_mapping(spark, u, v, ids))
+    return F.broadcast(incore.component_mapping(spark, uv, ids))
 
 
 def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
@@ -195,15 +200,13 @@ def canonicalize(mentions: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subj/obj through the component mapping (left joins; ids
     outside any component are already canonical). The mapping can be as
     large as the alias graph — the very case the salted link path exists
-    for — so the broadcast is size-gated: hinted only while Catalyst
-    estimates it under the broadcast threshold, otherwise AQE chooses
-    from runtime sizes."""
-    from kgw_spark.plans.hints import broadcast_if_small
-
-    m = broadcast_if_small(mapping)
+    for — so the joins are unhinted: Catalyst broadcasts the mapping
+    while its size estimate is under the broadcast threshold (and
+    ``compose_mapping``'s driver-resident mapping carries its own
+    hint), otherwise AQE chooses from runtime sizes."""
     out = mentions
     for col in ("subj", "obj"):
-        mm = m.withColumnRenamed("id", f"_{col}_id").withColumnRenamed(
+        mm = mapping.withColumnRenamed("id", f"_{col}_id").withColumnRenamed(
             "canonical_id", f"_{col}_canon"
         )
         out = (

@@ -10,18 +10,21 @@ planning, code-generating and scheduling one Spark job after another,
 not computing: every round or join is a handful of jobs over data that
 a single driver process holds in a few MB.
 
-The gate (``fits_driver``) is ONE parallel aggregate bounding rows AND
-bytes of what the driver is about to collect. Under it the input
-arrives in one Arrow collect, ``pd.factorize(sort=True)`` turns the ids
-into order-preserving int64 codes (Python string order is code-point
-order, which is UTF-8 byte order, which is Spark's binary string order
-— so a min over codes is the min over strings, and ``a < b`` over codes
-is ``a < b`` over ids), and a vectorized numpy kernel runs every round
-on the codes. Each kernel returns a LocalRelation (``session.local_df``
-of a pyarrow Table) with the operator's distributed schema, so callers
-see the same frame either way. Past the gate the operator runs its
-distributed plan unchanged. ``canon.compose_mapping_local`` feeds its
-driver-resident alias pairs to the same components kernel, skipping the
+The gate (``_fits``) is ONE parallel aggregate bounding rows AND bytes
+of what the driver is about to collect. Every kernel enters through one
+front door (``_collect``: the gate, then ONE ``toArrow()``) and one
+encoder (``encode``): Arrow's hash ``dictionary_encode`` of the id
+columns, a sort of the dictionary and a rank remap turn the ids into
+order-preserving int64 codes. Arrow sorts strings by their UTF-8 bytes,
+which is Spark's binary string order, and integers by value — so a min
+over codes is the min over ids, and ``a < b`` over codes is ``a < b``
+over ids. A vectorized numpy kernel runs every round on the codes, and
+``ids.take(codes)`` decodes its output to the input's own id type. Each
+kernel returns a LocalRelation (``session.local_df`` of a pyarrow
+Table) with the operator's distributed schema, so callers see the same
+frame either way. Past the gate the operator runs its distributed plan
+unchanged. ``canon.compose_mapping_local`` feeds its driver-resident
+alias pairs to the same encoder and components kernel, skipping the
 gate and the collect.
 
 The pair kernels run the SAME algorithm as their distributed plans
@@ -44,12 +47,12 @@ which stay the tests' oracles for both paths.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from kgw_spark.session import local_df
 
@@ -96,27 +99,77 @@ def held_on_driver(df: DataFrame) -> bool:
     )
 
 
-def factorize(a, b):
-    """``(codes_a, codes_b, ids)`` for the equal-length id arrays ``a``,
-    ``b``: ``ids`` is the sorted distinct id array and ``ids[codes_a[i]]``
-    is ``a[i]``. None for a null id (factorize codes it -1)."""
-    codes, ids = pd.factorize(
-        np.concatenate([np.asarray(a, object), np.asarray(b, object)]), sort=True
+def orderable(df: DataFrame, *cols: str) -> bool:
+    """Whether the columns ``cols`` of ``df`` (default ``id``) order the
+    same in Arrow, numpy and Python as in Spark: integral, or strings in
+    the default (binary: UTF-8 byte, so code-point) collation."""
+    return all(
+        isinstance(t, T.IntegralType) or t == T.StringType()
+        for t in (df.schema[c].dataType for c in cols or ("id",))
     )
-    if (codes < 0).any():
-        return None
-    return codes[: len(a)], codes[len(a):], ids
 
 
-def _collect_codes(df: DataFrame, a: str, b: str):
-    """``factorize`` of the string columns ``a``, ``b`` of ``df``, read
-    in one Arrow collect. None past the driver budget, and None for a
-    null id, which leaves Spark's null semantics to the distributed
-    path."""
-    if not fits_driver(df, a, b):
+def _collect(df: DataFrame, id_cols: tuple, n: Column, nbytes: Column) -> pa.Table | None:
+    """Every kernel's one front door: ``df`` in ONE ``toArrow()``. None
+    when a column of ``id_cols`` has no Arrow order that is Spark's
+    (``orderable``), and past the driver budget (``_fits`` over ``n``
+    and ``nbytes``)."""
+    if not orderable(df, *id_cols) or not _fits(df, n, nbytes):
         return None
-    pdf = df.select(a, b).toPandas()
-    return factorize(pdf[a].to_numpy(object), pdf[b].to_numpy(object))
+    return df.toArrow()
+
+
+def encode(*cols):
+    """``(codes, ids)`` for the id columns ``cols`` (Arrow arrays or
+    chunked arrays of one type, no null): ``ids`` is the sorted distinct
+    ids over all of them, typed as they are, and ``codes[k]`` the int64
+    codes of ``cols[k]``, so ``ids.take(codes[k])`` is ``cols[k]``. ONE
+    concatenation (which also combines a collect's record batches), ONE
+    hash ``dictionary_encode``, a sort of the dictionary and a rank
+    remap."""
+    whole = pa.chunked_array(
+        [c for col in cols for c in getattr(col, "chunks", [col])], cols[0].type
+    ).combine_chunks().dictionary_encode()
+    order = pc.sort_indices(whole.dictionary).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    codes = rank[whole.indices.to_numpy()]
+    ends = np.cumsum([len(col) for col in cols])
+    return np.split(codes, ends[:-1]), whole.dictionary.take(order)
+
+
+def _graph(df: DataFrame, a: str, b: str):
+    """``((codes_a, codes_b), ids)``: ``encode`` of the id columns ``a``,
+    ``b`` of ``df``, read through ``_collect``. None where ``_collect``
+    is, and for a null id, which leaves Spark's null semantics to the
+    distributed path."""
+    tbl = _collect(df.select(a, b), (a, b), F.count(F.lit(1)), F.sum(F.length(a) + F.length(b)))
+    if tbl is None or any(col.null_count for col in tbl.columns):
+        return None
+    return encode(tbl.column(a), tbl.column(b))
+
+
+def _documents(tbl: pa.Table, keep=True):
+    """``(ids, first)`` for the documents of the collected ``tbl``, the
+    rows where ``keep`` holds and ``id`` is not null: their sorted ids,
+    and ``first[c]``, the row of code ``c``. None for a repeated id,
+    whose rows the distributed plans merge."""
+    rows = np.flatnonzero(keep & tbl.column("id").is_valid().to_numpy())
+    (codes,), ids = encode(tbl.column("id").take(rows))
+    if len(ids) < len(rows):
+        return None
+    first = np.empty(len(ids), np.int64)
+    first[codes] = rows
+    return ids, first
+
+
+def _local(spark, ids: pa.Array, cols: dict, ddl: str) -> DataFrame:
+    """A kernel's result: the LocalRelation of ``cols`` (decoded ids are
+    ``ids.take(codes)``) typed by ``ddl``, in which ``{id}`` is the
+    Spark type of ``ids`` — the input's own id type, carried through the
+    collect as its Arrow type."""
+    t = from_arrow_type(ids.type).simpleString()
+    return local_df(spark, pa.table(cols), ddl.format(id=t))
 
 
 def _both_ways(u, v):
@@ -148,23 +201,23 @@ def components(u, v, n: int):
             root = nxt
 
 
-def component_mapping(spark, u, v, ids) -> DataFrame:
-    """``(id, canonical_id)`` over the ids of the non-identity pairs
-    ``(ids[u[i]], ids[v[i]])``, each mapped to its component's smallest
-    id; an id in identity pairs only is absent, as on the distributed
-    path."""
+def component_mapping(spark, uv, ids) -> DataFrame:
+    """``(id, canonical_id)``, typed as ``ids``, over the ids of the
+    non-identity pairs ``(ids[u[i]], ids[v[i]])`` of the codes ``uv =
+    (u, v)``, each mapped to its component's smallest id; an id in
+    identity pairs only is absent, as on the distributed path."""
+    u, v = uv
     arc = u != v
-    keep = np.zeros(len(ids), bool)
-    keep[u[arc]] = keep[v[arc]] = True
+    keep = np.unique(np.concatenate([u[arc], v[arc]]))
     root = components(u, v, len(ids))
-    out = pa.table({"id": ids[keep], "canonical_id": ids[root[keep]]})
-    return local_df(spark, out, "id string, canonical_id string")
+    out = {"id": ids.take(keep), "canonical_id": ids.take(root[keep])}
+    return _local(spark, ids, out, "id {id}, canonical_id {id}")
 
 
 def connected_components(pairs: DataFrame) -> DataFrame | None:
     """``canon.connected_components`` in-core over the ``(u, v)`` pair
-    frame. None past the driver budget."""
-    got = _collect_codes(pairs, "u", "v")
+    frame. None where ``_graph`` is."""
+    got = _graph(pairs, "u", "v")
     if got is None:
         return None
     return component_mapping(pairs.sparkSession, *got)
@@ -174,13 +227,13 @@ def k_core(pairs: DataFrame, k: int) -> DataFrame | None:
     """``kcore.k_core`` in-core: peel every live node of degree < k per
     round, decrementing each surviving neighbor by a ``bincount`` of its
     arcs from the peeled set. Raises past ``kcore.MAX_ROUNDS`` like the
-    distributed loop. None past the driver budget."""
+    distributed loop. None where ``_graph`` is."""
     from kgw_spark.operators.kcore import MAX_ROUNDS
 
-    got = _collect_codes(pairs, "u", "v")
+    got = _graph(pairs, "u", "v")
     if got is None:
         return None
-    u, v, ids = got
+    (u, v), ids = got
     x, y = _both_ways(u, v)
     n = len(ids)
     deg = np.bincount(x, minlength=n)
@@ -189,8 +242,8 @@ def k_core(pairs: DataFrame, k: int) -> DataFrame | None:
         low = alive & (deg < k)
         if not low.any():
             keep = np.flatnonzero(alive)
-            out = pa.table({"id": ids[keep], "degree": deg[keep]})
-            return local_df(pairs.sparkSession, out, "id string, degree bigint not null")
+            out = {"id": ids.take(keep), "degree": deg[keep]}
+            return _local(pairs.sparkSession, ids, out, "id {id}, degree bigint not null")
         alive &= ~low
         # an arc from a node peeled now to a survivor dies now; arcs
         # between two nodes of the same frontier decrement nobody
@@ -203,15 +256,15 @@ def label_propagation(nodes: DataFrame, pairs: DataFrame, rounds: int) -> DataFr
     endpoints: every round, each code takes the min of its own label
     and its neighbors' (``np.minimum.at`` over the arcs). The node ids
     ride the same collect as ``(id, id)`` rows — a canonical pair list
-    has no self-pairs, so they are told apart by ``u == v``. None past
-    the driver budget."""
+    has no self-pairs, so they are told apart by ``u == v``. None where
+    ``_graph`` is."""
     stacked = pairs.select("u", "v").union(
         nodes.select(F.col("id").alias("u"), F.col("id").alias("v"))
     )
-    got = _collect_codes(stacked, "u", "v")
+    got = _graph(stacked, "u", "v")
     if got is None:
         return None
-    u, v, ids = got
+    (u, v), ids = got
     arc = u != v
     x, y = _both_ways(u[arc], v[arc])
     labels = np.arange(len(ids))
@@ -219,8 +272,8 @@ def label_propagation(nodes: DataFrame, pairs: DataFrame, rounds: int) -> DataFr
         nxt = labels.copy()
         np.minimum.at(nxt, x, labels[y])
         labels = nxt
-    out = pa.table({"id": ids, "label": ids[labels]})
-    return local_df(pairs.sparkSession, out, "id string, label string")
+    out = {"id": ids, "label": ids.take(labels)}
+    return _local(pairs.sparkSession, ids, out, "id {id}, label {id}")
 
 
 def pagerank(edges: DataFrame, iters: int, scale: int) -> DataFrame | None:
@@ -228,14 +281,14 @@ def pagerank(edges: DataFrame, iters: int, scale: int) -> DataFrame | None:
     arithmetic: per edge ``rank(u) // out_degree(u)`` summed into the
     target by ``np.add.at`` (integer adds, never float ``bincount``
     weights), then ``teleport + (num * sum) // den``. ``effective_scale``
-    bounds ``num * sum`` below 2^63, so no int64 op can wrap. None past
-    the driver budget."""
+    bounds ``num * sum`` below 2^63, so no int64 op can wrap. None where
+    ``_graph`` is."""
     from kgw_spark.operators.pagerank import DAMPING_DEN, DAMPING_NUM, effective_scale
 
-    got = _collect_codes(edges, "source_id", "target_id")
+    got = _graph(edges, "source_id", "target_id")
     if got is None:
         return None
-    src, dst, ids = got
+    (src, dst), ids = got
     n = len(ids)
     scale = effective_scale(n, scale, DAMPING_NUM)
     teleport = ((DAMPING_DEN - DAMPING_NUM) * scale) // DAMPING_DEN
@@ -245,24 +298,26 @@ def pagerank(edges: DataFrame, iters: int, scale: int) -> DataFrame | None:
         sums = np.zeros(n, np.int64)
         np.add.at(sums, dst, ranks[src] // src_deg)
         ranks = teleport + (DAMPING_NUM * sums) // DAMPING_DEN
-    out = pa.table({"id": ids, "rank_scaled": ranks})
-    return local_df(edges.sparkSession, out, "id string, rank_scaled bigint")
+    out = {"id": ids, "rank_scaled": ranks}
+    return _local(edges.sparkSession, ids, out, "id {id}, rank_scaled bigint")
 
 
 def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame | None:
     """``analytics.k_hop`` in-core: BFS levels as boolean masks — the
     next frontier is every arc target whose source is in the frontier,
-    minus the visited set. None past the driver budget."""
-    got = _collect_codes(pairs, "u", "v")
+    minus the visited set. ``node_id`` is of the ids' type. None where
+    ``_graph`` is."""
+    got = _graph(pairs, "u", "v")
     if got is None:
         return None
-    u, v, ids = got
+    (u, v), ids = got
     x, y = _both_ways(u, v)
     n = len(ids)
     hop = np.full(n, -1, np.int32)
     frontier = np.zeros(n, bool)
-    i = int(np.searchsorted(ids, node_id))
-    if i < n and ids[i] == node_id:
+    seed = pa.array([node_id], ids.type)
+    i = pc.index(ids, seed[0]).as_py()
+    if i >= 0:
         hop[i], frontier[i] = 0, True
     for level in range(1, k + 1):
         nxt = np.zeros(n, bool)
@@ -272,13 +327,11 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame | None:
             break
         hop[nxt], frontier = level, nxt
     reached = np.flatnonzero(hop > 0)
-    out = pa.table(
-        {
-            "id": np.concatenate([[node_id], ids[reached]]),
-            "hop": np.concatenate([[0], hop[reached]]).astype(np.int32),
-        }
-    )
-    return local_df(pairs.sparkSession, out, "id string, hop int")
+    out = {
+        "id": pa.concat_arrays([seed, ids.take(reached)]),
+        "hop": np.concatenate([[0], hop[reached]]).astype(np.int32),
+    }
+    return _local(pairs.sparkSession, ids, out, "id {id}, hop int")
 
 
 # --------------------------------------------------------------------------
@@ -377,47 +430,34 @@ def _may_pass(x, threshold: float):
     return x >= threshold - 1e-6
 
 
-def orderable(df: DataFrame, *cols: str) -> bool:
-    """Whether the columns ``cols`` of ``df`` (default ``id``) order the
-    same in numpy and Python as in Spark: integral, or strings in the
-    default (binary, code-point) collation."""
-    return all(
-        isinstance(t, T.IntegralType) or t == T.StringType()
-        for t in (df.schema[c].dataType for c in cols or ("id",))
-    )
-
-
-def _id_codes(ids: pa.Array, rows):
-    """``(codes, first)`` for the non-null ids ``ids[rows]``:
-    order-preserving codes (``codes[i]`` of ``ids[rows[i]]``), and
-    ``first[c]``, the row holding code ``c``. None if an id repeats."""
-    codes, uniq = pd.factorize(ids.take(rows).to_numpy(zero_copy_only=False), sort=True)
-    if len(uniq) < len(rows):
-        return None
-    first = np.empty(len(uniq), np.int64)
-    first[codes] = rows
-    return codes, first
-
-
-def _pair_frame(df: DataFrame, ids: pa.Array, first, lo, hi, cols: dict, ddl: str):
+def _pair_frame(df: DataFrame, ids: pa.Array, lo, hi, cols: dict, ddl: str):
     """The LocalRelation ``(a, b, *cols)`` of the code pairs ``(lo, hi)``,
     ``a`` and ``b`` typed (and nullable) as ``df``'s ``id``."""
-    f = df.schema["id"]
-    t = f.dataType.simpleString() + ("" if f.nullable else " not null")
-    out = pa.table({"a": ids.take(first[lo]), "b": ids.take(first[hi]), **cols})
-    return local_df(df.sparkSession, out, f"a {t}, b {t}, {ddl}")
+    t = "{id}" + ("" if df.schema["id"].nullable else " not null")
+    out = {"a": ids.take(lo), "b": ids.take(hi), **cols}
+    return _local(df.sparkSession, ids, out, f"a {t}, b {t}, {ddl}")
+
+
+def _jaccard_frame(grams: DataFrame, ids: pa.Array, lo, hi, common, size, threshold: float):
+    """``_pair_frame`` ``(a, b, common, size_a, size_b)`` of the pairs
+    ``(lo, hi)`` sharing ``common`` shingles (over the shingle counts
+    ``size``) whose Jaccard may pass ``threshold``."""
+    keep = (common > 0) & _may_pass(common / (size[lo] + size[hi] - common), threshold)
+    lo, hi = lo[keep], hi[keep]
+    cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
+    return _pair_frame(grams, ids, lo, hi, cols, "common bigint, size_a bigint, size_b bigint")
 
 
 def triangle_count(pairs: DataFrame) -> DataFrame | None:
     """``triangles.triangle_count`` in-core: the same (degree, id)
     orientation over the codes (code order is id order), each wedge a
     pair of out-arcs of one node (a run of equal sources), closed by a
-    sorted lookup of the pair keys. None past the driver budget: the
-    pair list, or its wedge count."""
-    got = _collect_codes(pairs, "u", "v")
+    sorted lookup of the pair keys. None where ``_graph`` is, and past
+    the driver budget of the wedge count."""
+    got = _graph(pairs, "u", "v")
     if got is None:
         return None
-    u, v, ids = got
+    (u, v), ids = got
     n = max(len(ids), 1)
     deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
     lower_first = (deg[u] < deg[v]) | ((deg[u] == deg[v]) & (u < v))
@@ -431,18 +471,10 @@ def triangle_count(pairs: DataFrame) -> DataFrame | None:
     closing = np.sort(u * n + v)
     wedge = np.minimum(b1, b2) * n + np.maximum(b1, b2)
     at = np.minimum(np.searchsorted(closing, wedge), len(closing) - 1)
-    out = pa.table(
-        {
-            "n_edges": [len(u)],
-            "n_wedges": [n_wedges],
-            "n_triangles": [int((closing[at] == wedge).sum())],
-        }
-    )
-    return local_df(
-        pairs.sparkSession,
-        out,
-        "n_edges bigint not null, n_wedges bigint not null, n_triangles bigint not null",
-    )
+    n_triangles = int((closing[at] == wedge).sum())
+    out = pa.table({"n_edges": [len(u)], "n_wedges": [n_wedges], "n_triangles": [n_triangles]})
+    ddl = "n_edges bigint not null, n_wedges bigint not null, n_triangles bigint not null"
+    return local_df(pairs.sparkSession, out, ddl)
 
 
 def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | None:
@@ -453,15 +485,12 @@ def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | No
     top ``top`` rows by ``(n_common desc, u, v)`` are cut in code order,
     which is id order. ``u`` and ``v`` keep the input's types and are
     not null, as on the distributed plan (whose pairs come out of
-    ``collect_list`` arrays, which hold no null). None past the driver
-    budget (the pair list, or its wedge count), and for ids without a
-    numpy order."""
-    if not orderable(pairs, "u", "v"):
-        return None
-    got = _collect_codes(pairs, "u", "v")
+    ``collect_list`` arrays, which hold no null). None where ``_graph``
+    is, and past the driver budget of the wedge count."""
+    got = _graph(pairs, "u", "v")
     if got is None:
         return None
-    u, v, ids = got
+    (u, v), ids = got
     n = max(len(ids), 1)
     x, y = _both_ways(u, v)
     low = np.bincount(x, minlength=n)[x] <= deg_cap
@@ -474,42 +503,35 @@ def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | No
     at = np.minimum(np.searchsorted(adjacent, key), len(adjacent) - 1)
     keep = np.flatnonzero(adjacent[at] != key)
     cut = keep[np.lexsort((hi[keep], lo[keep], -count[keep]))[:top]]
-    out = pa.table({"u": ids[lo[cut]], "v": ids[hi[cut]], "n_common": count[cut]})
-    t = {c: pairs.schema[c].dataType.simpleString() + " not null" for c in ("u", "v")}
-    return local_df(pairs.sparkSession, out, f"u {t['u']}, v {t['v']}, n_common bigint not null")
+    out = {"u": ids.take(lo[cut]), "v": ids.take(hi[cut]), "n_common": count[cut]}
+    ddl = "u {id} not null, v {id} not null, n_common bigint not null"
+    return _local(pairs.sparkSession, ids, out, ddl)
 
 
 def _collect_shingle_sets(grams: DataFrame):
     """The shared prep of the shingle kernels over ``grams`` = ``(id,
-    shingles, ...)``, each document's distinct shingles: the gate on
-    the shingle count and bytes, ONE Arrow collect, order-preserving
-    codes of the documents that have an id and a shingle, and
-    dictionary codes of the shingle strings. Returns ``(tbl, ids, first,
-    lens, d, s)``: the collected table, its id column, the row of each
-    document code, the shingle count of each row, and per collected
-    shingle (row by row) its document code (-1 in a row without an id)
-    and its shingle code. None past the driver budget, for an id
-    without a numpy order, and for a repeated id, whose shingle sets
-    the distributed plans merge."""
-    if not orderable(grams) or not _fits(
-        grams,
-        F.sum(F.size("shingles")),
-        F.sum(F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)),
-    ):
+    shingles, ...)``, each document's distinct shingles: ``_collect``
+    gated on the shingle count and bytes, ``_documents`` over the rows
+    that have an id and a shingle, and ``encode`` of the shingle
+    strings. Returns ``(tbl, ids, first, lens, d, s)``: the collected
+    table, the sorted document ids, the row of each document code, the
+    shingle count of each row, and per collected shingle (row by row)
+    its document code (-1 in a row without an id) and its shingle code.
+    None where ``_collect`` or ``_documents`` is."""
+    nbytes = F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)
+    tbl = _collect(grams, ("id",), F.sum(F.size("shingles")), F.sum(nbytes))
+    if tbl is None:
         return None
-    tbl = grams.toArrow()
-    ids = tbl.column("id").combine_chunks()
     sh = tbl.column("shingles").combine_chunks()
     lens = pc.fill_null(pc.list_value_length(sh), 0).to_numpy().astype(np.int64)
-    rows = np.flatnonzero((lens > 0) & ids.is_valid().to_numpy(zero_copy_only=False))
-    got = _id_codes(ids, rows)
+    got = _documents(tbl, lens > 0)
     if got is None:
         return None
-    codes, first = got
+    ids, first = got
     doc_of_row = np.full(len(lens), -1)
-    doc_of_row[rows] = codes
-    s = sh.flatten().dictionary_encode().indices.to_numpy(zero_copy_only=False)
-    return tbl, ids, first, lens, np.repeat(doc_of_row, lens), s.astype(np.int64)
+    doc_of_row[first] = np.arange(len(first))
+    (s,), _ = encode(sh.flatten())
+    return tbl, ids, first, lens, np.repeat(doc_of_row, lens), s
 
 
 def minhash_lsh_pairs(
@@ -547,7 +569,7 @@ def minhash_lsh_pairs(
         for p, (a, b) in enumerate(coeffs):
             sig[:, p] = np.minimum.reduceat((h * a + b) % _MERSENNE, starts)
     sig = sig[np.searchsorted(filled, first)]
-    n = max(len(first), 1)
+    n = max(len(ids), 1)
 
     bands = [
         _runs(sig[:, c : c + rows_per_band]) for c in range(0, sig.shape[1], rows_per_band)
@@ -573,13 +595,7 @@ def minhash_lsh_pairs(
         q = y[c][rep] * m + keys[start[x[c]][rep] + k] % m
         at = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
         common[c] = np.bincount(rep[keys[at] == q], minlength=c.stop - c.start)
-    union = size[lo] + size[hi] - common
-    keep = (common > 0) & _may_pass(common / union, threshold)
-    lo, hi = lo[keep], hi[keep]
-    cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
-    return _pair_frame(
-        grams, ids, first, lo, hi, cols, "common bigint, size_a bigint, size_b bigint"
-    )
+    return _jaccard_frame(grams, ids, lo, hi, common, size, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -602,8 +618,8 @@ def ngram_jaccard_pairs(
     got = _collect_shingle_sets(grams)
     if got is None:
         return None
-    _, ids, first, _, d, s = got
-    n = max(len(first), 1)
+    _, ids, _, _, d, s = got
+    n = max(len(ids), 1)
     freq = np.bincount(s)[s]
     named = d >= 0
     size = np.bincount(d[named], minlength=n)
@@ -613,13 +629,7 @@ def ngram_jaccard_pairs(
     counted = _pair_counts(s[joinable], d[joinable], n)
     if counted is None:
         return None
-    lo, hi, common = counted
-    keep = _may_pass(common / (size[lo] + size[hi] - common), threshold)
-    lo, hi = lo[keep], hi[keep]
-    cols = {"common": common[keep], "size_a": size[lo], "size_b": size[hi]}
-    return _pair_frame(
-        grams, ids, first, lo, hi, cols, "common bigint, size_a bigint, size_b bigint"
-    )
+    return _jaccard_frame(grams, ids, *counted, size, threshold)
 
 
 def cosine_near_pairs(
@@ -642,37 +652,27 @@ def cosine_near_pairs(
     for mask 0, else each vector of bucket ``s`` with every vector of
     bucket ``s ^ mask`` for the ``s`` below its partner (one-sided, so
     each unordered bucket pair is expanded once). Candidates are
-    verified with ``similarity._cosines``, chunk by chunk. None past
-    the driver budget (the vectors, or the candidate count), for an id
-    without a numpy order, a repeated id, and a null or ragged vector,
-    which the distributed plan fails on."""
+    verified with ``similarity._cosines``, chunk by chunk. None where
+    ``_collect`` or ``_documents`` is, past the candidate count, and for
+    a null or ragged vector, which the distributed plan fails on."""
     from kgw_spark.operators.similarity import (
-        _ball_masks,
-        _cosines,
-        _norms,
-        _plane_mats,
-        _signatures,
+        _ball_masks, _cosines, _norms, _plane_mats, _signatures
     )
 
-    if not orderable(vecs) or not _fits(
-        vecs, F.count(F.lit(1)), F.sum(F.length("id") + 8 * F.size("v"))
-    ):
+    tbl = _collect(vecs, ("id",), F.count(F.lit(1)), F.sum(F.length("id") + 8 * F.size("v")))
+    if tbl is None:
         return None
-    tbl = vecs.toArrow()
-    ids = tbl.column("id").combine_chunks()
     v = tbl.column("v").combine_chunks()
     lens = pc.list_value_length(v)
     if lens.null_count or len(pc.unique(lens)) > 1:
         return None
     dim = lens[0].as_py() if len(lens) else 0
-    rows = np.flatnonzero(ids.is_valid().to_numpy(zero_copy_only=False))
-    got = _id_codes(ids, rows)
+    got = _documents(tbl)
     if got is None:
         return None
-    codes, first = got
-    n = max(len(rows), 1)
-    V = np.empty((len(rows), dim))
-    V[codes] = v.flatten().to_numpy(zero_copy_only=False).reshape(len(v), dim)[rows]
+    ids, first = got
+    n = max(len(ids), 1)
+    V = v.flatten().to_numpy(zero_copy_only=False).reshape(len(v), dim)[first]
     sig = _signatures(V, _plane_mats(dim, n_planes, seed, rounds))
 
     flips = np.array(_ball_masks(n_planes, probe_radius)[1:], np.int64)
@@ -707,6 +707,4 @@ def cosine_near_pairs(
         for c in _chunks(np.full(len(lo), max(dim, 1))):
             cos[c] = _cosines(VT, norms, lo[c], hi[c])
     keep = _may_pass(cos, threshold)
-    return _pair_frame(
-        vecs, ids, first, lo[keep], hi[keep], {"cosine": cos[keep]}, "cosine double"
-    )
+    return _pair_frame(vecs, ids, lo[keep], hi[keep], {"cosine": cos[keep]}, "cosine double")

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from kgw_spark.operators import incore
 from kgw_spark.operators.pairs import both_directions, broadcast_within, send
-from kgw_spark.plans.hints import broadcast_if_small
 
 
 def node_type_counts(nodes: DataFrame) -> DataFrame:
@@ -63,18 +62,15 @@ def write_statistics(nodes: DataFrame, edges: DataFrame, filepath: str) -> dict:
 
 def schema_triples(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """A4 (load.py:109-132): (source_type, edge_type, target_type) →
-    triple_count. Physical plan: two hash joins — ``nodes`` is
-    broadcast on both sides only while Catalyst estimates it under the
-    broadcast threshold (size-gated: at reference-CKG scale the node
-    table is 14.5M rows and a forced broadcast would OOM); past the
-    gate, AQE picks SMJ/shuffled-hash from runtime sizes, so the only
-    guaranteed shuffle is the final 3-column aggregation."""
-    src = broadcast_if_small(
-        nodes.select(F.col("id").alias("_sid"), F.col("type").alias("source_type"))
-    )
-    tgt = broadcast_if_small(
-        nodes.select(F.col("id").alias("_tid"), F.col("type").alias("target_type"))
-    )
+    triple_count. Physical plan: two hash joins, unhinted — Catalyst's
+    JoinSelection broadcasts ``nodes`` on both sides while its size
+    estimate is under ``spark.sql.autoBroadcastJoinThreshold`` (at
+    reference-CKG scale the node table is 14.5M rows and a forced
+    broadcast would OOM); past it, AQE picks SMJ/shuffled-hash from
+    runtime sizes, so the only guaranteed shuffle is the final 3-column
+    aggregation."""
+    src = nodes.select(F.col("id").alias("_sid"), F.col("type").alias("source_type"))
+    tgt = nodes.select(F.col("id").alias("_tid"), F.col("type").alias("target_type"))
     return (
         edges.join(src, edges["source_id"] == F.col("_sid"))
         .join(tgt, edges["target_id"] == F.col("_tid"))
@@ -91,14 +87,10 @@ def schema_triples(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 def compact_schema(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """A5 (load.py:218-241): (source_type, target_type) with COUNT(*)
-    and COUNT(DISTINCT edge type). Same size-gated join strategy as
+    and COUNT(DISTINCT edge type). Same join strategy as
     ``schema_triples``."""
-    src = broadcast_if_small(
-        nodes.select(F.col("id").alias("_sid"), F.col("type").alias("source_type"))
-    )
-    tgt = broadcast_if_small(
-        nodes.select(F.col("id").alias("_tid"), F.col("type").alias("target_type"))
-    )
+    src = nodes.select(F.col("id").alias("_sid"), F.col("type").alias("source_type"))
+    tgt = nodes.select(F.col("id").alias("_tid"), F.col("type").alias("target_type"))
     return (
         edges.join(src, edges["source_id"] == F.col("_sid"))
         .join(tgt, edges["target_id"] == F.col("_tid"))
@@ -247,7 +239,8 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
     spark = pairs.sparkSession
     from kgw_spark.session import local_df
 
-    seed = local_df(spark, [(node_id, 0)], "id string, hop int")
+    t = pairs.schema["u"].dataType.simpleString()
+    seed = local_df(spark, [(node_id, 0)], f"id {t}, hop int")
     arcs = both_directions(pairs)
     frames = [seed]
     frontier, frontier_n = seed, 1

@@ -33,6 +33,16 @@ from kgw_spark.sinks.store import TableStore
 LINEAGE_DICT_MAX_CORPUS_BYTES = 4 << 30
 
 
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for ``df`` (optimized logical plan stats).
+    Returns a huge sentinel when stats are unavailable, so callers fail
+    toward NOT taking a broadcast-sized path."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return 1 << 62
+
+
 @dataclass
 class PipelineResult:
     nodes: DataFrame
@@ -107,7 +117,6 @@ def run_pipeline(
     packed = not materialize_intermediate
     if packed and not store.is_complete("edges", input_fingerprint):
         from pyspark.sql import Window, functions as F
-        from kgw_spark.plans.hints import plan_size_bytes
 
         if plan_size_bytes(corpus) <= LINEAGE_DICT_MAX_CORPUS_BYTES:
             lcols = ["repo", "path", "commit", "content_sha256"]

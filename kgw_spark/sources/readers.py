@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from kgw_spark.functions.informative import is_informative_value
 from kgw_spark.model import EDGES_SCHEMA, NODES_SCHEMA
-from kgw_spark.plans.hints import broadcast_if_small
 
 
 def _jdumps(d) -> str:
@@ -316,9 +315,10 @@ def read_primekg_csv(
         .select("id", "type", "properties")
     )
     if annotation_paths:
-        # size-gated broadcast (T7): annotation maps are usually small,
-        # but nothing bounds them — gate on Catalyst's estimate
-        ann = broadcast_if_small(_annotation_map_df(spark, annotation_paths, ","))
+        # unhinted join (T7): annotation maps are usually small, but
+        # nothing bounds them — Catalyst broadcasts while its size
+        # estimate is under the broadcast threshold
+        ann = _annotation_map_df(spark, annotation_paths, ",")
         nodes = (
             nodes.join(ann, nodes["id"] == ann["ann_id"], "left")
             .withColumn("properties", _merge_json("properties", "ann_json"))
@@ -372,10 +372,8 @@ def read_oregano_tsv(
     nodes = ids.select("id", node_type.alias("type"), F.lit("{}").alias("properties"))
     if annotation_paths:
         # oregano strips whitespace on keys and values (_oregano.py:160-164);
-        # size-gated broadcast as in read_primekg_csv
-        ann = broadcast_if_small(
-            _annotation_map_df_stripped(spark, annotation_paths)
-        )
+        # unhinted join as in read_primekg_csv
+        ann = _annotation_map_df_stripped(spark, annotation_paths)
         nodes = (
             nodes.join(ann, nodes["id"] == ann["ann_id"], "left")
             .withColumn(

@@ -264,6 +264,80 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
         assert 0 < len(jobs) <= 3, (op, jobs)
 
 
+@pytest.mark.parametrize("ids", ["string", "int"])
+@pytest.mark.parametrize("name", ["star_over_cap", "isolated_nodes", "random_1"])
+def test_paths_agree_on_id_type(spark, monkeypatch, name, ids):
+    """Every graph operator over string and over integer ids returns the
+    same rows and schema — names, types, nullability — in-core as on the
+    distributed plan: integer ids stay integers on both paths. The
+    integers are a seeded shuffle, so their order is not the names'."""
+    raw, isolated = GRAPHS[name]
+    if ids == "int":
+        names = sorted({n for e in raw for n in e} | set(isolated))
+        num = dict(zip(names, random.Random(0).sample(range(10**6), len(names))))
+        raw, isolated = [(num[u], num[v]) for u, v in raw], [num[n] for n in isolated]
+    node_ids = sorted({n for e in raw for n in e} | set(isolated))
+    edges = spark.createDataFrame(raw, f"source_id {ids}, target_id {ids}")
+    nodes = spark.createDataFrame([(n,) for n in node_ids], f"id {ids}")
+    pairs = canonical_pairs(edges)
+    calls = {
+        "k_core": lambda: k_core(pairs, k=2),
+        "label_prop": lambda: min_label_propagation(nodes, pairs, rounds=3),
+        "pagerank": lambda: pagerank(edges, iters=4),
+        "k_hop": lambda: k_hop(pairs, raw[0][0], k=2),
+        "connected_components": lambda: canon.connected_components(pairs),
+        "triangles": lambda: triangle_count(pairs),
+        "common_neighbors": lambda: common_neighbors(pairs, deg_cap=3, top=10),
+    }
+    for op, call in calls.items():
+        df = call()
+        assert incore.held_on_driver(df), op
+        in_core = df.schema, sorted(df.collect())
+        with monkeypatch.context() as m:
+            m.setattr(incore, "DRIVER_MAX_ROWS", -1)
+            df = call()
+            assert (df.schema, sorted(df.collect())) == in_core, op
+        assert in_core[0] == _parse_datatype_string(SCHEMAS[op].replace("string", ids)), op
+
+
+@pytest.mark.parametrize("op", ["k_core", "ngram_jaccard_pairs"])
+def test_collect_byte_veto_matches_default(spark, monkeypatch, op):
+    """Past ``incore.DRIVER_MAX_BYTES`` (the byte side of the collect
+    gate, ``_fits``; the row side still passes) the operator runs its
+    distributed plan, with the default run's rows and schema."""
+    if op == "k_core":
+        call = lambda: k_core(_frames(spark, "random_1")[4], k=2)  # noqa: E731
+    else:
+        docs = spark.createDataFrame(DOCS["near_copies"][1], "doc_id bigint, text string")
+        call = lambda: ngram_jaccard_pairs(docs, threshold=0.2)  # noqa: E731
+    df = call()
+    assert incore.held_on_driver(df)
+    default = df.schema, sorted(df.collect())
+    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 1)
+    df = call()
+    assert not incore.held_on_driver(df)
+    assert (df.schema, sorted(df.collect())) == default
+
+
+def test_candidate_count_veto_matches_default(spark, monkeypatch):
+    """A dense graph whose pair list fits the byte budget but whose
+    wedge count does not (``_fits_pairs``): common neighbors hands back
+    to the distributed plan, with the default run's rows and schema.
+    K(10,10) has 100 pairs, under 6 KB collected, and 900 wedges, 14.4
+    KB at two int64 codes each."""
+    raw = [(f"a{i}", f"b{j}") for i in range(10) for j in range(10)]
+    pairs = canonical_pairs(spark.createDataFrame(raw, "source_id string, target_id string"))
+    df = common_neighbors(pairs, deg_cap=32, top=10)
+    assert incore.held_on_driver(df)
+    default = df.schema, sorted(df.collect())
+    assert len(default[1]) == 10 and {r.n_common for r in default[1]} == {10}
+    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 8_000)
+    assert incore.fits_driver(pairs, "u", "v")
+    df = common_neighbors(pairs, deg_cap=32, top=10)
+    assert not incore.held_on_driver(df)
+    assert (df.schema, sorted(df.collect())) == default
+
+
 @pytest.mark.parametrize("path", ["driver", "distributed"])
 @pytest.mark.parametrize("name", [*GRAPHS, "null_ids"])
 def test_connected_components_match_replica(spark, monkeypatch, name, path):

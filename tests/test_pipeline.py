@@ -282,12 +282,11 @@ def test_lineage_dict_far_side_commits_same_triples(spark, small_corpus, tmp_pat
 
     import kgw_spark.plans.pipeline as P
     from kgw_spark.model import CORPUS_SCHEMA
-    from kgw_spark.plans.hints import plan_size_bytes
 
     rows, truth = small_corpus
     corpus_df(spark, rows).write.parquet(str(tmp_path / "corpus"))
     corpus = spark.read.schema(CORPUS_SCHEMA).parquet(str(tmp_path / "corpus"))
-    assert plan_size_bytes(corpus) <= P.LINEAGE_DICT_MAX_CORPUS_BYTES
+    assert P.plan_size_bytes(corpus) <= P.LINEAGE_DICT_MAX_CORPUS_BYTES
     adf = alias_df_from_truth(spark, truth)
 
     def digest(triples) -> str:

@@ -45,9 +45,9 @@ def test_schema_triples_uses_broadcast_joins(spark):
 
 
 def test_schema_triples_broadcast_is_size_gated(spark):
-    """The A4/A5 broadcast is a *gated* hint: when broadcasting is
-    disabled (stand-in for 'node side too large'), the forced hint must
-    disappear and the plan falls back to a shuffle join — the shape a
+    """The A4/A5 broadcast is Catalyst's size-gated choice, not a forced
+    hint: when broadcasting is disabled (stand-in for 'node side too
+    large'), the plan falls back to a shuffle join — the shape a
     14.5M-row node table needs: an unconditional broadcast hint would
     ship that table to every executor."""
     nodes, edges = KG.kg_nodes(spark, SF), KG.kg_edges(spark, SF)
@@ -64,27 +64,19 @@ def test_schema_triples_broadcast_is_size_gated(spark):
 
 
 def test_broadcast_gate_rejects_large_estimates(spark):
-    """A side Catalyst estimates over the threshold must not be hinted
-    (the estimate propagates through projections and mapInPandas, so
-    this is exactly the 14.5M-row node table case)."""
-    from kgw_spark.plans.hints import broadcast_if_small, parse_byte_conf
-
-    assert parse_byte_conf("10485760") == 10485760
-    assert parse_byte_conf("64MB") == 64 * 1024 * 1024
-    assert parse_byte_conf("1k") == 1024
-    assert parse_byte_conf("-1") == -1
-
+    """Catalyst's own JoinSelection gate on unhinted joins: a side it
+    estimates over the threshold is not broadcast (the estimate
+    propagates through projections and mapInPandas, so this is exactly
+    the 14.5M-row node table case), and a tiny parquet-backed side is."""
     base = spark.range(10)
-    # 100M rows x 8 bytes = ~800MB estimate >> 64MB threshold → unhinted
+    # 100M rows x 8 bytes = ~800MB estimate >> 64MB threshold; a left
+    # join can only build its right side
     huge = spark.range(100_000_000).mapInPandas(
         lambda it: (pdf.assign(x=1) for pdf in it), schema="id long, x int"
     )
-    assert broadcast_if_small(huge) is huge
-    # broadcasting disabled (-1) → never hinted, however small
+    assert "BroadcastHashJoin" not in plan(base.join(huge, "id", "left"))
     small = spark.read.parquet(f"{SF}/nation.parquet")
-    assert broadcast_if_small(small, threshold_bytes=-1) is small
-    # tiny parquet-backed side does get the hint
-    p = plan(base.join(broadcast_if_small(small), base.id == small.n_nationkey))
+    p = plan(base.join(small, base.id == small.n_nationkey))
     assert "BroadcastHashJoin" in p
 
 
