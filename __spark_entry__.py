@@ -1398,10 +1398,14 @@ def q_docs_minhash_lsh(spark, sf_dir):
 
 def q_docs_simhash_pairs(spark, sf_dir):
     """Pigeonhole-banded SimHash near-pairs. The signature table is
-    materialized as a shared input by ``oracle_inputs``; the oracle
-    recomputes the pairs by brute-force 64-bit hamming over it in
-    DuckDB — verifying the banded join finds exactly the pairs a
-    quadratic scan finds (the pigeonhole guarantee)."""
+    materialized as a shared input by ``oracle_inputs`` (the
+    distributed ``simhash``); the oracle recomputes the pairs by
+    brute-force 64-bit hamming over it in DuckDB — verifying the banded
+    search finds exactly the pairs a quadratic scan finds (the
+    pigeonhole guarantee). Below the driver gate the fingerprints,
+    chunks and Hamming filter run in-core
+    (``incore.simhash_near_pairs``), so the oracle certifies the
+    banding, and the in-core fingerprints, on both paths."""
     docs = _t(spark, sf_dir, "documents")
     return DD.simhash_near_pairs(docs, max_hamming=6)
 

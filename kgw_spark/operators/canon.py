@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from kgw_spark.operators import incore
 
@@ -126,7 +127,7 @@ def alias_pairs(alias_df: DataFrame) -> DataFrame:
     )
 
 
-def compose_mapping_local(spark, rows) -> DataFrame:
+def compose_mapping_local(spark, rows, id_type: pa.DataType) -> DataFrame:
     """The in-core link∘canonicalize mapping for a DRIVER-RESIDENT
     alias dictionary: ``rows`` iterates (alias_id, canonical_id, score)
     tuples already in driver memory (the common production shape — a
@@ -139,7 +140,9 @@ def compose_mapping_local(spark, rows) -> DataFrame:
     unions nothing, as on the distributed path. Callers that already
     hold the rows (pipelines fed from a dictionary file) should pass
     them via ``run_pipeline(alias_local=...)`` — the probe aggregate +
-    re-collect round-trip is pure serial wall on every pipeline run."""
+    re-collect round-trip is pure serial wall on every pipeline run.
+    ``id_type`` is the Arrow type of the ids, the dictionary's own
+    (Python ints alone do not say int from bigint)."""
     best: dict[str, tuple[float, bool, str]] = {}
     for alias, canon, score in rows:
         # None score ranks below every real score and a None canonical
@@ -151,8 +154,8 @@ def compose_mapping_local(spark, rows) -> DataFrame:
             best[alias] = cand
     win = [(a, c) for a, (*_key, c) in best.items() if a is not None and c is not None]
     # one Arrow array of the aliases then the canonicals, typed as the
-    # ids are (string for an empty dictionary)
-    col = pa.array([a for a, _ in win] + [c for _, c in win], None if win else pa.string())
+    # ids are
+    col = pa.array([a for a, _ in win] + [c for _, c in win], id_type)
     (codes,), ids = incore.encode(col)
     uv = codes[: len(win)], codes[len(win):]
     # broadcast of a LocalRelation: zero tasks, where a plain
@@ -188,11 +191,12 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
     component representative."""
     from kgw_spark.operators.link import best_candidates
 
+    id_type = to_arrow_type(alias_df.schema["alias_id"].dataType)
     if alias_rows is not None:
-        return compose_mapping_local(alias_df.sparkSession, alias_rows)
+        return compose_mapping_local(alias_df.sparkSession, alias_rows, id_type)
     if incore.fits_driver(alias_df, "alias_id", "canonical_id"):
         rows = alias_df.select("alias_id", "canonical_id", "score").collect()
-        return compose_mapping_local(alias_df.sparkSession, rows)
+        return compose_mapping_local(alias_df.sparkSession, rows, id_type)
     return connected_components(alias_pairs(best_candidates(alias_df)))
 
 

@@ -15,12 +15,14 @@ Exact and near-duplicate detection over a documents table. Shapes:
 
 All hashing is JVM-side (xxhash64 / murmur hash) — deterministic and
 shuffle-friendly. Past the driver budget no Python runs in the hot
-path. Below it n-gram Jaccard and MinHash+LSH collect each document's
-distinct shingles once (MinHash with their JVM-side hashes) and run
-the same algorithm as a numpy kernel on the driver: the capped
-shingle self-join as pairs within shingle groups
-(``incore.ngram_jaccard_pairs``), and the same signatures, bands and
-verify (``incore.minhash_lsh_pairs``).
+path. Below it n-gram Jaccard, MinHash+LSH and SimHash collect each
+document's distinct shingles or its token hashes once (hashes always
+JVM-side) and run the same algorithm as a numpy kernel on the driver:
+the capped shingle self-join as pairs within shingle groups
+(``incore.ngram_jaccard_pairs``), the same signatures, bands and
+verify (``incore.minhash_lsh_pairs``), and the same fingerprints,
+chunks and Hamming filter (``incore.simhash_near_pairs``). The other
+searches always run their distributed plans.
 """
 
 from __future__ import annotations
@@ -500,13 +502,18 @@ def dedup_near(docs: DataFrame, threshold: float = 0.5, **kwargs) -> DataFrame:
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
+def _token_hashes() -> Column:
+    """Each document's whitespace tokens as their xxhash64s, JVM-side
+    (Python has no xxhash64): THE token-hash expression of both SimHash
+    paths — ``simhash`` explodes it, the in-core kernel collects it.
+    Null text gives a null array, so no token."""
+    return F.transform(F.split(F.trim(F.col(TEXT_COL)), "\\s+"), lambda t: F.xxhash64(t))
+
+
 def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     """64-bit SimHash over whitespace tokens, computed as one exploded
     aggregation: per bit, sum(+1/-1 by token-hash bit) > 0."""
-    tok = docs.select(
-        F.col(ID_COL),
-        F.explode(F.split(F.trim(F.col(TEXT_COL)), "\\s+")).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
+    tok = docs.select(F.col(ID_COL), F.explode(_token_hashes()).alias("h"))
     # Per-bit ±1 sums as ONE parsed array expression and the majority
     # fold as ONE higher-order aggregate() — not 64 py4j-built Column
     # trees plus a 64-term bitwiseOR chain, which cost ~1.4s of driver
@@ -529,7 +536,20 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by SimHash: band the 64-bit fingerprint into
     (max_hamming+1) chunks — any pair within the Hamming radius must
     agree on at least one chunk (pigeonhole), so the join is on chunk
-    equality, never all-pairs."""
+    equality, never all-pairs.
+
+    Below the driver budget (``incore.simhash_near_pairs``) one Arrow
+    collect brings each document's token hashes to the driver, where
+    the same fingerprints, chunks and Hamming filter run as a numpy
+    kernel. A null text has no token (``explode`` drops it), so its row
+    stays out of the collect: the gate's token count then bounds the
+    collected rows too."""
+    toks = docs.where(F.col(TEXT_COL).isNotNull()).select(
+        F.col(ID_COL).alias("id"), _token_hashes().alias("h")
+    )
+    near = incore.simhash_near_pairs(toks, max_hamming)
+    if near is not None:
+        return near
     chunks = max_hamming + 1
     width = 64 // chunks
     # the signature table feeds BOTH sides of the banded self-join; left

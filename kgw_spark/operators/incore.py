@@ -5,10 +5,11 @@ The graph operators (``canon.connected_components``, ``kcore.k_core``,
 ``analytics.k_hop``, ``triangles.triangle_count``,
 ``linkpred.common_neighbors``) and the near-duplicate searches
 (``dedup.minhash_lsh_pairs``, ``dedup.ngram_jaccard_pairs``,
-``similarity.cosine_near_pairs``) spend their time on small inputs
-planning, code-generating and scheduling one Spark job after another,
-not computing: every round or join is a handful of jobs over data that
-a single driver process holds in a few MB.
+``dedup.simhash_near_pairs``, ``similarity.cosine_near_pairs``) spend
+their time on small inputs planning, code-generating and scheduling
+one Spark job after another, not computing: every round or join is a
+handful of jobs over data that a single driver process holds in a few
+MB.
 
 The gate (``_fits``) is ONE parallel aggregate bounding rows AND bytes
 of what the driver is about to collect. Every kernel enters through one
@@ -36,9 +37,13 @@ int64 codes per pair they hand back to the distributed plan. Common
 neighbors and n-gram Jaccard share one kernel, ``_pair_counts``: the
 pairs within groups (wedges through a middle node of degree ≤ cap;
 documents sharing a shingle of document frequency in [2, cap]) and how
-many groups each pair shares. The kernels return integer counts or raw
-cosines only; the rounding and the threshold stay in the operators'
-Spark expressions, applied over the LocalRelation.
+many groups each pair shares. SimHash filters each chunk's candidates
+by Hamming distance before de-duplicating the pairs found in several
+chunks, so only near pairs are ever de-duplicated; its Hamming bound is
+an integer test, exact in the kernel. The other pair kernels return
+integer counts or raw cosines only; the rounding and the threshold
+stay in the operators' Spark expressions, applied over the
+LocalRelation.
 
 The graph kernels are independent of the pure-Python ``*_py`` replicas,
 which stay the tests' oracles for both paths.
@@ -508,29 +513,61 @@ def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | No
     return _local(pairs.sparkSession, ids, out, ddl)
 
 
-def _collect_shingle_sets(grams: DataFrame):
-    """The shared prep of the shingle kernels over ``grams`` = ``(id,
-    shingles, ...)``, each document's distinct shingles: ``_collect``
-    gated on the shingle count and bytes, ``_documents`` over the rows
-    that have an id and a shingle, and ``encode`` of the shingle
-    strings. Returns ``(tbl, ids, first, lens, d, s)``: the collected
-    table, the sorted document ids, the row of each document code, the
-    shingle count of each row, and per collected shingle (row by row)
-    its document code (-1 in a row without an id) and its shingle code.
-    None where ``_collect`` or ``_documents`` is."""
-    nbytes = F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)
-    tbl = _collect(grams, ("id",), F.sum(F.size("shingles")), F.sum(nbytes))
+def _list_rows(df: DataFrame, col: str, nbytes: Column):
+    """The shared prep of the document kernels over ``df`` = ``(id,
+    col, ...)``, whose ``col`` lists each document's values: ``_collect``
+    gated on the total list length and on ``nbytes``, then
+    ``_documents`` over the rows that have an id and a value. Returns
+    ``(tbl, ids, first, lens, flat)``: the collected table, the sorted
+    document ids, the row of each document code, each row's list length
+    (0 for a null list) and every row's values in row order. None where
+    ``_collect`` or ``_documents`` is."""
+    tbl = _collect(df, ("id",), F.sum(F.size(col)), nbytes)
     if tbl is None:
         return None
-    sh = tbl.column("shingles").combine_chunks()
-    lens = pc.fill_null(pc.list_value_length(sh), 0).to_numpy().astype(np.int64)
+    lst = tbl.column(col).combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy().astype(np.int64)
     got = _documents(tbl, lens > 0)
     if got is None:
         return None
-    ids, first = got
+    return tbl, *got, lens, lst.flatten()
+
+
+def _segments(lens, first):
+    """``(starts, at)`` for a per-document ``ufunc.reduceat(values,
+    starts)[at]`` over the flat values of ``_list_rows``: the start of
+    every row with a value (reduceat needs all of them, in order) and
+    the position among them of each document code's row ``first``."""
+    filled = np.flatnonzero(lens > 0)
+    return (np.cumsum(lens) - lens)[filled], np.searchsorted(filled, first)
+
+
+def _bands(keys):
+    """``_runs`` of each band's 2-D key array in ``keys``; None past the
+    driver budget of the candidates they pair (ΣC(g, 2) over every
+    band's runs, counted before any pair is expanded)."""
+    bands = [_runs(k) for k in keys]
+    if not _fits_pairs(sum(int(_run_partners(end).sum()) for _, end in bands)):
+        return None
+    return bands
+
+
+def _collect_shingle_sets(grams: DataFrame):
+    """The shared prep of the shingle kernels over ``grams`` = ``(id,
+    shingles, ...)``, each document's distinct shingles: ``_list_rows``
+    gated on the shingle bytes and ``encode`` of the shingle strings.
+    Returns ``(tbl, ids, first, lens, d, s)``: ``_list_rows``'s table,
+    ids, rows and lengths, and per collected shingle (row by row) its
+    document code (-1 in a row without an id) and its shingle code. None
+    where ``_list_rows`` is."""
+    nbytes = F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)
+    got = _list_rows(grams, "shingles", F.sum(nbytes))
+    if got is None:
+        return None
+    tbl, ids, first, lens, flat = got
     doc_of_row = np.full(len(lens), -1)
     doc_of_row[first] = np.arange(len(first))
-    (s,), _ = encode(sh.flatten())
+    (s,), _ = encode(flat)
     return tbl, ids, first, lens, np.repeat(doc_of_row, lens), s
 
 
@@ -552,7 +589,7 @@ def minhash_lsh_pairs(
     each colliding pair is verified by its exact shingle overlap, over
     dictionary codes of the shingle strings. A document without a
     shingle or an id has no signature and never pairs. None where
-    ``_collect_shingle_sets`` is, and past the candidate count."""
+    ``_collect_shingle_sets`` or ``_bands`` is."""
     from kgw_spark.operators.dedup import _MERSENNE
 
     got = _collect_shingle_sets(grams)
@@ -560,21 +597,14 @@ def minhash_lsh_pairs(
         return None
     tbl, ids, first, lens, d, s = got
     h = tbl.column("h").combine_chunks().flatten().to_numpy(zero_copy_only=False)
-    # signatures over every row with a shingle (reduceat needs the rows
-    # in order), then each document code's row
-    filled = np.flatnonzero(lens > 0)
-    sig = np.empty((len(filled), len(coeffs)), np.int64)
-    if len(filled):
-        starts = (np.cumsum(lens) - lens)[filled]
-        for p, (a, b) in enumerate(coeffs):
-            sig[:, p] = np.minimum.reduceat((h * a + b) % _MERSENNE, starts)
-    sig = sig[np.searchsorted(filled, first)]
+    starts, at = _segments(lens, first)
+    sig = np.empty((len(first), len(coeffs)), np.int64)
+    for p, (a, b) in enumerate(coeffs):
+        sig[:, p] = np.minimum.reduceat((h * a + b) % _MERSENNE, starts)[at]
     n = max(len(ids), 1)
 
-    bands = [
-        _runs(sig[:, c : c + rows_per_band]) for c in range(0, sig.shape[1], rows_per_band)
-    ]
-    if not _fits_pairs(sum(int(_run_partners(end).sum()) for _, end in bands)):
+    bands = _bands(sig[:, c : c + rows_per_band] for c in range(0, sig.shape[1], rows_per_band))
+    if bands is None:
         return None
     lo, hi = _distinct_pairs([_pairs_within(o, e) for o, e in bands], n)
 
@@ -630,6 +660,62 @@ def ngram_jaccard_pairs(
     if counted is None:
         return None
     return _jaccard_frame(grams, ids, *counted, size, threshold)
+
+
+# the bits set in every 16-bit value: numpy 1.26 has no bitwise_count
+_POP16 = np.unpackbits(np.arange(1 << 16, dtype=">u2").view(np.uint8)).reshape(-1, 16).sum(
+    1, dtype=np.uint8
+)
+
+
+def _popcount(x):
+    """The bits set in each value of the uint64 array ``x``: the table
+    looked up once per 16-bit quarter."""
+    q = x.view(np.uint16).reshape(-1, 4)
+    return _POP16[q[:, 0]] + _POP16[q[:, 1]] + _POP16[q[:, 2]] + _POP16[q[:, 3]]
+
+
+def simhash_near_pairs(toks: DataFrame, max_hamming: int) -> DataFrame | None:
+    """``dedup.simhash_near_pairs`` in-core over ``toks`` = ``(id, h)``,
+    each document's JVM-side token xxhash64s. Returns ``(a, b,
+    hamming)``, ``a < b``, for the pairs within ``max_hamming`` bits.
+
+    The distributed algorithm on the driver: bit ``i`` of a fingerprint
+    is set iff more than half the document's tokens have it set (the
+    plan's ``sum(±1) > 0``), counted per bit by ``np.add.reduceat``; the
+    fingerprint is cut into the same ``max_hamming + 1`` chunks of ``64
+    // chunks`` bits, documents sharing a chunk value are candidates,
+    and each chunk's candidates are filtered by Hamming distance BEFORE
+    the pairs found in several chunks are de-duplicated. A document
+    without an id has no fingerprint and never pairs. None where
+    ``_list_rows`` or ``_bands`` is."""
+    got = _list_rows(toks, "h", F.sum(8 * F.size("h")))
+    if got is None:
+        return None
+    _, ids, first, lens, flat = got
+    flat = flat.to_numpy(zero_copy_only=False).view(np.uint64)
+    starts, at = _segments(lens, first)
+    n_tokens = lens[first]
+    sig = np.zeros(len(first), np.uint64)
+    for i in range(64):
+        bit = np.uint64(i)
+        ones = np.add.reduceat(((flat >> bit) & np.uint64(1)).view(np.int64), starts)[at]
+        sig |= (2 * ones > n_tokens).astype(np.uint64) << bit
+
+    chunks = max_hamming + 1
+    width = 64 // chunks
+    mask = np.uint64((1 << width) - 1)
+    bands = _bands(((sig >> np.uint64(c * width)) & mask)[:, None] for c in range(chunks))
+    if bands is None:
+        return None
+    parts = []
+    for order, end in bands:
+        i, j = _pairs_within(order, end)
+        near = _popcount(sig[i] ^ sig[j]) <= max_hamming
+        parts.append((i[near], j[near]))
+    lo, hi = _distinct_pairs(parts, max(len(ids), 1))
+    hamming = _popcount(sig[lo] ^ sig[hi]).astype(np.int32)
+    return _pair_frame(toks, ids, lo, hi, {"hamming": hamming}, "hamming int not null")
 
 
 def cosine_near_pairs(

@@ -3,6 +3,7 @@ large-star/small-star must agree on random graphs."""
 
 import random
 
+import pyarrow as pa
 import pytest
 
 from kgw_spark.operators import canon, incore
@@ -73,7 +74,8 @@ def test_compose_mapping_distributed_matches_local(spark, monkeypatch):
     corpus alias dictionary, plus a losing and a null-score candidate
     that must not union components, and null-canonical candidates —
     one winning on score, one tied with a real candidate (nulls sort
-    first) — whose alias then stays out of every component."""
+    first) — whose alias then stays out of every component. Over an
+    ``int`` dictionary both sides return the same rows and schema."""
     from kgw_spark.sources.corpus import build_alias_dict
 
     rows = [(a, c, float(s)) for a, (c, s) in build_alias_dict(12).items()]
@@ -81,12 +83,22 @@ def test_compose_mapping_distributed_matches_local(spark, monkeypatch):
     rows += [("func:nullwin", "func:x", 0.3), ("func:nullwin", None, 0.9)]
     rows += [("func:nulltie", "func:y", 0.5), ("func:nulltie", None, 0.5)]
     alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
-    local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
+    local = canon.compose_mapping_local(spark, rows, pa.string())
+    local = {r.id: r.canonical_id for r in local.collect()}
+    # int ids stay int on both sides of the gate
+    int_df = spark.createDataFrame(
+        [(1, 2, 0.9), (3, 2, 0.8), (5, 6, 0.7)], "alias_id int, canonical_id int, score double"
+    )
+    below = canon.compose_mapping(int_df)
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
     assert dist == local
     assert local["func:helper0c"] == "func:helper0a" and "func:other" not in local
     assert not {"func:nullwin", "func:x", "func:nulltie", "func:y"} & local.keys()
+    past = canon.compose_mapping(int_df)
+    assert below.schema == past.schema
+    assert [f.dataType.simpleString() for f in below.schema] == ["int", "int"]
+    assert sorted(below.collect()) == sorted(past.collect()) == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
 
 
 def test_pagerank_matches_python_replica_exactly(spark):

@@ -10,13 +10,14 @@ which also compacts k-core's pair list every round)."""
 import itertools
 import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql.types import _parse_datatype_string
 
 from kgw_spark.operators import canon, incore
 from kgw_spark.operators import pairs as pair_list
 from kgw_spark.operators.communities import label_propagation_py, min_label_propagation
-from kgw_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+from kgw_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_near_pairs
 from kgw_spark.operators.kcore import k_core, k_core_py
 from kgw_spark.operators.linkpred import common_neighbors, common_neighbors_py
 from kgw_spark.operators.pagerank import pagerank, pagerank_py
@@ -225,7 +226,8 @@ def test_compose_mapping_past_the_gate_matches_local(spark, monkeypatch, name):
     alias rows, with seeded scores that tie and go null."""
     rng = random.Random(int(name[-1]))
     rows = [(a, c, rng.choice([0.2, 0.5, 0.9, None])) for a, c in GRAPHS[name][0]]
-    local = {r.id: r.canonical_id for r in canon.compose_mapping_local(spark, rows).collect()}
+    local = canon.compose_mapping_local(spark, rows, pa.string())
+    local = {r.id: r.canonical_id for r in local.collect()}
     monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     alias_df = spark.createDataFrame(rows, "alias_id string, canonical_id string, score double")
     dist = {r.id: r.canonical_id for r in canon.compose_mapping(alias_df).collect()}
@@ -250,6 +252,7 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
         "common_neighbors": lambda: common_neighbors(pairs, deg_cap=3, top=10),
         "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, threshold=0.2),
         "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, threshold=0.2),
+        "simhash_near_pairs": lambda: simhash_near_pairs(docs),
         "cosine_near_pairs": lambda: cosine_near_pairs(emb, threshold=0.85),
     }
     sc = spark.sparkContext

@@ -1,14 +1,15 @@
 """Near-duplicate searches on both sides of the driver gate: MinHash-LSH
 pairs (and the cluster resolution and curation built on them), n-gram
-Jaccard pairs and multiprobe cosine-LSH pairs must return the same rows
-and the same schema — names, types, nullability — in-core below
-``incore.DRIVER_MAX_ROWS`` as on the distributed plan past it; MinHash
-also with its candidate-doc set past ``pairs.BCAST_MAX_IDS``, where the
-verify semi-join shuffles instead of broadcasting. The fixtures are the
-adversarial shapes of each: no input, one band group holding every
-document, documents without a shingle or an id, a shingle tipped over
-the document-frequency cap by a document without an id, and zero
-vectors."""
+Jaccard pairs, SimHash near-pairs and multiprobe cosine-LSH pairs must
+return the same rows and the same schema — names, types, nullability —
+in-core below ``incore.DRIVER_MAX_ROWS`` as on the distributed plan
+past it; MinHash also with its candidate-doc set past
+``pairs.BCAST_MAX_IDS``, where the verify semi-join shuffles instead of
+broadcasting. The fixtures are the adversarial shapes of each: no
+input, one band group holding every document, documents without a
+shingle, a token or an id, a shingle tipped over the
+document-frequency cap by a document without an id, a repeated id, a
+fingerprint with its sign bit set, and zero vectors."""
 
 import random
 
@@ -121,6 +122,97 @@ def test_dedup_near_paths_agree(spark, monkeypatch, name):
         past = op(docs, threshold=0.2)
         assert below.schema == past.schema, op.__name__
         assert _rows(below) == _rows(past), op.__name__
+
+
+# SimHash adds two shapes: a repeated id, whose rows the distributed
+# aggregate merges (so the kernel hands it back at any budget), and
+# fingerprints with bit 63 set — negative bigints
+SIMHASH_DOCS = {
+    **DOCS,
+    "repeated_id": (
+        "bigint",
+        [(0, "a b c d"), (0, "a b c e"), (1, "a b c d e"), (2, "a b c d"), (3, None), (3, "a b")],
+    ),
+    "bit_63": (
+        "bigint",
+        [(0, "beta"), (1, "beta beta"), (2, "beta gamma sigma"), (3, "beta gamma sigma zeta"),
+         (4, "alpha"), (5, "gamma sigma zeta beta beta"), (6, "alpha beta")],
+    ),
+}
+
+
+def _simhash_docs(spark, name):
+    id_type, rows = SIMHASH_DOCS[name]
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+@pytest.mark.parametrize("max_hamming", [3, 6, 8, 20])
+@pytest.mark.parametrize("name", list(SIMHASH_DOCS))
+def test_simhash_paths_agree(spark, monkeypatch, name, max_hamming):
+    """Widths 16, 9, 7 and 3 bits; at 20 nearly every pair's Hamming
+    distance is compared, so every fingerprint bit is too."""
+    docs = _simhash_docs(spark, name)
+    got = {}
+    for path in ("in_core", "distributed"):
+        monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", DRIVER_MAX_ROWS if path == "in_core" else -1)
+        df = dedup.simhash_near_pairs(docs, max_hamming=max_hamming)
+        assert _is_local(df) == (path == "in_core" and name != "repeated_id"), path
+        got[path] = (df.schema, _rows(df))
+    assert got["in_core"] == got["distributed"]
+    if name == "bit_63":
+        assert any(r.simhash < 0 for r in dedup.simhash(docs).collect())
+    if name != "empty":
+        assert got["in_core"][1], "fixture yields no pair"
+
+
+def test_simhash_candidate_veto(spark, monkeypatch):
+    """A byte budget that passes the token collect (56 B per token, 9 × 7
+    tokens) but not the candidate pairs (16 B each, ΣC(g, 2) over the
+    chunk groups: 36 pairs in each of 21 chunks) hands back to the
+    distributed plan, with the default run's rows and schema."""
+    docs = _simhash_docs(spark, "all_identical")
+    default = dedup.simhash_near_pairs(docs, max_hamming=20)
+    assert _is_local(default)
+    fits = []
+    fits_pairs = incore._fits_pairs
+
+    def spy(n_pairs):
+        fits.append(fits_pairs(n_pairs))
+        return fits[-1]
+
+    monkeypatch.setattr(incore, "_fits_pairs", spy)
+    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 56 * 9 * 7)
+    vetoed = dedup.simhash_near_pairs(docs, max_hamming=20)
+    # the token collect passed, so the candidate count was checked
+    assert fits == [False]
+    assert not _is_local(vetoed)
+    assert (vetoed.schema, _rows(vetoed)) == (default.schema, _rows(default))
+
+
+def test_simhash_collect_skips_null_text(spark, monkeypatch):
+    """Rows with a null text never reach the collect, so under a row
+    budget of 20 the 12 tokens of 4 documents fit and the 60 null-text
+    rows beside them are not brought to the driver: the kernel sees 4
+    rows and returns the distributed plan's rows and schema."""
+    rows = [(0, "a b c"), (1, "a b c"), (2, "a b d"), (3, "x y z")]
+    rows += [(i, None) for i in range(4, 64)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    seen = []
+    documents = incore._documents
+
+    def spy(tbl, keep=True):
+        seen.append(tbl.num_rows)
+        return documents(tbl, keep)
+
+    monkeypatch.setattr(incore, "_documents", spy)
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", 20)
+    below = dedup.simhash_near_pairs(docs, max_hamming=6)
+    assert _is_local(below) and seen == [4]
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
+    past = dedup.simhash_near_pairs(docs, max_hamming=6)
+    assert not _is_local(past)
+    assert (below.schema, _rows(below)) == (past.schema, _rows(past))
+    assert _rows(below)
 
 
 def _vectors(seed, n=30, dim=8):

@@ -327,14 +327,20 @@ def test_label_prop_rounds_hash_aggregate(spark, monkeypatch):
         assert "SortAggregate" not in p
 
 
-def test_simhash_join_legs_scan_checkpoint(spark):
-    """Both legs of the SimHash banded self-join scan ONE checkpointed
-    signature table: the plan has exactly two ExistingRDD scans (the
-    checkpoint, once per leg), and the per-token hashing and bit
-    assembly of the signature kernel (xxhash64, shiftleft) never
-    re-run inside the join."""
+def test_simhash_join_legs_scan_checkpoint(spark, monkeypatch):
+    """docs_simhash_pairs runs in-core below the driver gate (its result
+    is a LocalRelation). Past it, both legs of the SimHash banded
+    self-join scan ONE checkpointed signature table: the plan has
+    exactly two ExistingRDD scans (the checkpoint, once per leg), and
+    the per-token hashing and bit assembly of the signature kernel
+    (xxhash64, shiftleft) never re-run inside the join."""
+    import __spark_entry__ as E
+
+    from kgw_spark.operators import incore
     from kgw_spark.operators.dedup import simhash_near_pairs
 
+    assert incore.held_on_driver(E.queries()["docs_simhash_pairs"](spark, SF))
+    monkeypatch.setattr(incore, "DRIVER_MAX_ROWS", -1)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     p = plan(simhash_near_pairs(docs, max_hamming=6))
     assert len(re.findall(r"^\(\d+\) Scan ExistingRDD", p, re.M)) == 2, p
