@@ -14,7 +14,9 @@ K = 3 trials after a warm-up:
 - kg: the fused pipeline's triples/s at ``local[session.DEFAULT_CPUS]``;
 - scaling: the same pipeline at ``(n, 4n)`` cores with ``n = nproc // 4``,
   run only when the host has at least 4 cores;
-- scale_up: the pipeline on a 10x corpus at the session's core count.
+- scale_up: the pipeline on a 10x corpus at the session's core count,
+  one leg in each of the K rounds of the 1x legs; its ratio is the
+  median over the rounds of 10x over 1x triples/s at the session's cores.
 
 Every pipeline leg runs in a fresh session pinned to its cores, warms the
 Python workers and the JIT on a small same-shape corpus, then times one
@@ -233,13 +235,17 @@ def main(names: list[str]) -> None:
         # byte-driven partitioning: the physical plan depends on the input
         # size only, so legs at different core counts do identical work
         conf = byte_driven_conf(dir_bytes(corpus))
+        big_conf = byte_driven_conf(dir_bytes(big_corpus))
 
         pair = (NPROC // 4, NPROC // 4 * 4) if NPROC >= 4 else None
         sizes = sorted({CPUS, *(pair or ())})
         legs: dict[int, list[dict]] = {c: [] for c in sizes}
-        for _ in range(K):  # interleaved: round t runs every size once
+        big: list[dict] = []
+        # interleaved: round t runs every size once, then the 10x leg
+        for _ in range(K):
             for c in sizes:
                 legs[c].append(pipeline_leg(sampler, c, conf, corpus, warm_corpus, alias_rows))
+            big.append(pipeline_leg(sampler, CPUS, big_conf, big_corpus, warm_corpus, alias_rows))
         kg = {"cores": CPUS, "files": n_files, **_leg_summary(legs[CPUS])}
         detail["kg"] = {**kg, "trials": legs[CPUS]}
 
@@ -257,13 +263,12 @@ def main(names: list[str]) -> None:
             }
             detail["scaling"] = {**scaling, "legs": {str(c): legs[c] for c in pair}}
 
-        big_conf = byte_driven_conf(dir_bytes(big_corpus))
-        big = [pipeline_leg(sampler, CPUS, big_conf, big_corpus, warm_corpus, alias_rows) for _ in range(K)]
         scale_up = {
             "mult": SCALEUP_MULT,
             "files": big_files,
+            # paired per round, as the scaling ratio is
             "ratio": round(
-                statistics.median(r["triples_per_s"] for r in big) / kg["triples_per_s"]["median"], 3
+                statistics.median(b["triples_per_s"] / a["triples_per_s"] for a, b in zip(legs[CPUS], big)), 3
             ),
             **_leg_summary(big),
         }

@@ -63,8 +63,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     of a non-identity pair (canonical roots map to themselves).
 
     Input contract (``pairs.py``): the caller materializes; this reads
-    ``pairs`` at most three times. Below the driver budget
-    (``incore.fits_driver``) the components are solved in-core by
+    ``pairs`` at most three times. Below the driver budget (one Arrow
+    collect, ``incore._collect``) the components are solved in-core by
     ``incore.connected_components`` — the alias graph is typically
     millions of rows while the corpus is trillions, so one collect beats
     ~2·log(n) distributed shuffle rounds. Past it, or when an id is
@@ -132,15 +132,16 @@ def compose_mapping_local(spark, rows, id_type: pa.DataType) -> DataFrame:
     alias dictionary: ``rows`` iterates (alias_id, canonical_id, score)
     tuples already in driver memory (the common production shape — a
     curated dictionary loaded from a file — and what ``compose_mapping``
-    collects when its budget probe passes). Runs disambiguation (best
+    collects below the driver budget). Runs disambiguation (best
     candidate per alias: score desc with None ranked last, canonical
     asc), ``incore.encode`` and the ``incore.components`` kernel
     (lexicographic-min representative) with ZERO Spark jobs, returning
     the broadcast-hinted mapping frame. A winning pair with a null id
     unions nothing, as on the distributed path. Callers that already
     hold the rows (pipelines fed from a dictionary file) should pass
-    them via ``run_pipeline(alias_local=...)`` — the probe aggregate +
-    re-collect round-trip is pure serial wall on every pipeline run.
+    them via ``run_pipeline(alias_local=...)`` — the collect of a
+    dictionary that is not driver-resident is serial wall on every
+    pipeline run.
     ``id_type`` is the Arrow type of the ids, the dictionary's own
     (Python ints alone do not say int from bigint)."""
     best: dict[str, tuple[float, bool, str]] = {}
@@ -176,12 +177,14 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
     disambiguate+union runs in-core (``compose_mapping_local``): the
     generic path (window row_number → ``connected_components``)
     schedules several separate tiny Spark jobs whose scheduling
-    barriers are pure serial time on every pipeline run. The
-    gate is ``incore.fits_driver``: ONE parallel aggregate bounding
-    rows AND bytes, NOT a Catalyst size estimate (arrow-enabled
-    ``createDataFrame`` frames are stats-less, so a stats gate silently
-    never fires). ``alias_rows`` (driver-resident
-    (alias, canonical, score) tuples) skips even that probe. The
+    barriers are pure serial time on every pipeline run. A dictionary
+    ``incore.held_on_driver`` is read by ``collect()``, with no job; any
+    other goes through ``incore._collect``: ONE Arrow collect, vetoed
+    past ``spark.driver.maxResultSize`` and then bounded by
+    ``incore.DRIVER_MAX_ROWS`` rows — NOT a Catalyst size estimate
+    (arrow-enabled ``createDataFrame`` frames are stats-less, so a stats
+    gate silently never fires). ``alias_rows`` (driver-resident
+    (alias, canonical, score) tuples) skips even that collect. The
     returned mapping carries an explicit broadcast hint — it is
     driver-resident by construction, and without the hint the
     stats-less plan would cost ``canonicalize`` a full shuffle-write of
@@ -194,8 +197,12 @@ def compose_mapping(alias_df: DataFrame, alias_rows=None) -> DataFrame:
     id_type = to_arrow_type(alias_df.schema["alias_id"].dataType)
     if alias_rows is not None:
         return compose_mapping_local(alias_df.sparkSession, alias_rows, id_type)
-    if incore.fits_driver(alias_df, "alias_id", "canonical_id"):
-        rows = alias_df.select("alias_id", "canonical_id", "score").collect()
+    cols = alias_df.select("alias_id", "canonical_id", "score")
+    if incore.held_on_driver(cols):
+        return compose_mapping_local(alias_df.sparkSession, cols.collect(), id_type)
+    tbl = incore._collect(cols, "alias_id", "canonical_id")
+    if tbl is not None and tbl.num_rows <= incore.DRIVER_MAX_ROWS:
+        rows = zip(*(c.to_pylist() for c in tbl.columns))
         return compose_mapping_local(alias_df.sparkSession, rows, id_type)
     return connected_components(alias_pairs(best_candidates(alias_df)))
 

@@ -11,11 +11,10 @@ with path-doubling stars) this exposes the bounded-round propagation
 itself: radius-k cluster seeds, the per-round convergence profile, and
 the exact primitive a fixed-budget community pass at 100 TB would run.
 
-EXECUTION below the driver budget (``incore.fits_driver`` over the
-pair list stacked with the node ids): one gate aggregate and one Arrow
-collect, then every round is an ``np.minimum.at`` over order-preserving
-int64 codes on the driver (``incore.label_propagation``) — at most 3
-Spark jobs whatever ``rounds`` is. The label domain on both paths is
+EXECUTION below the driver budget (``incore.label_propagation``): one
+Arrow collect of the pair list stacked with the node ids, then every
+round is an ``np.minimum.at`` over order-preserving int64 codes on the
+driver — at most 2 Spark jobs whatever ``rounds`` is. The label domain on both paths is
 nodes ∪ edge endpoints.
 
 Past the gate: Spark plans ``min(<string>)`` as SortAggregate (a mutable

@@ -542,8 +542,8 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     collect brings each document's token hashes to the driver, where
     the same fingerprints, chunks and Hamming filter run as a numpy
     kernel. A null text has no token (``explode`` drops it), so its row
-    stays out of the collect: the gate's token count then bounds the
-    collected rows too."""
+    stays out of the collect: the row bound's token count then bounds
+    the collected rows too."""
     toks = docs.where(F.col(TEXT_COL).isNotNull()).select(
         F.col(ID_COL).alias("id"), _token_hashes().alias("h")
     )

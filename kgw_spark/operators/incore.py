@@ -1,4 +1,4 @@
-"""In-core kernels below one driver-budget gate.
+"""In-core kernels below one driver budget.
 
 The graph operators (``canon.connected_components``, ``kcore.k_core``,
 ``communities.min_label_propagation``, ``pagerank.pagerank``,
@@ -11,22 +11,22 @@ one Spark job after another, not computing: every round or join is a
 handful of jobs over data that a single driver process holds in a few
 MB.
 
-The gate (``_fits``) is ONE parallel aggregate bounding rows AND bytes
-of what the driver is about to collect. Every kernel enters through one
-front door (``_collect``: the gate, then ONE ``toArrow()``) and one
-encoder (``encode``): Arrow's hash ``dictionary_encode`` of the id
-columns, a sort of the dictionary and a rank remap turn the ids into
-order-preserving int64 codes. Arrow sorts strings by their UTF-8 bytes,
-which is Spark's binary string order, and integers by value — so a min
-over codes is the min over ids, and ``a < b`` over codes is ``a < b``
-over ids. A vectorized numpy kernel runs every round on the codes, and
-``ids.take(codes)`` decodes its output to the input's own id type. Each
-kernel returns a LocalRelation (``session.local_df`` of a pyarrow
-Table) with the operator's distributed schema, so callers see the same
-frame either way. Past the gate the operator runs its distributed plan
-unchanged. ``canon.compose_mapping_local`` feeds its driver-resident
-alias pairs to the same encoder and components kernel, skipping the
-gate and the collect.
+Every kernel enters through one front door (``_collect``: ONE
+``toArrow()``, whose bytes Spark's ``spark.driver.maxResultSize``
+vetoes and whose rows are checked against ``DRIVER_MAX_ROWS``, with no
+second pass over the input) and one encoder (``encode``): Arrow's hash
+``dictionary_encode`` of the id columns, a sort of the dictionary and a
+rank remap turn the ids into order-preserving int64 codes. Arrow sorts
+strings by their UTF-8 bytes, which is Spark's binary string order, and
+integers by value — so a min over codes is the min over ids, and ``a <
+b`` over codes is ``a < b`` over ids. A vectorized numpy kernel runs
+every round on the codes, and ``ids.take(codes)`` decodes its output
+to the input's own id type. Each kernel returns a LocalRelation
+(``session.local_df`` of a pyarrow Table) with the operator's
+distributed schema, so callers see the same frame either way. Past the
+budget the operator runs its distributed plan unchanged.
+``canon.compose_mapping_local`` feeds its driver-resident alias pairs
+to the same encoder and components kernel, skipping the collect.
 
 The pair kernels run the SAME algorithm as their distributed plans
 (same hashes, bands, planes, probes and caps; no brute force), group by
@@ -54,49 +54,28 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from kgw_spark.session import local_df
 
-# driver budget of one collected id list: rows, and bytes of id text
-# plus a fixed per-row overhead (canon's compose_mapping gates its alias
-# collect on it too)
+# driver budget of one in-core collect: rows (list values, for documents)
+# and bytes, enforced as spark.driver.maxResultSize (default 1g); a context
+# allowing more, or no limit, collects nothing
 DRIVER_MAX_ROWS = 2_000_000
 DRIVER_MAX_BYTES = 1 << 30
-
-
-def fits_driver(df: DataFrame, a: str, b: str) -> bool:
-    """Whether the ``(a, b)`` string columns of ``df`` fit the driver
-    budget. ONE cheap parallel aggregate bounds BOTH rows and bytes
-    before any driver collect: a ``limit().collect()`` probe runs 3-4
-    incremental limit jobs and has no byte veto (long ids), and Catalyst
-    stats cannot stand in for the byte side — arrow ``createDataFrame``
-    frames are stats-less LogicalRDDs (sizeInBytes = Long.MaxValue)."""
-    return _fits(df, F.count(F.lit(1)), F.sum(F.length(a) + F.length(b)))
-
-
-def _fits(df: DataFrame, n: Column, nbytes: Column) -> bool:
-    """``fits_driver`` over any collected shape, in ONE aggregate: ``n``
-    counts the collected values (the rows of an id list, the shingles of
-    the documents) and ``nbytes`` sums their payload bytes; each value
-    adds a fixed 48 B. A frame ``held_on_driver`` fits with no job."""
-    if held_on_driver(df):
-        return True
-    st = df.agg(n.alias("n"), nbytes.alias("b")).collect()[0]
-    n = st["n"] or 0
-    return n <= DRIVER_MAX_ROWS and (st["b"] or 0) + 48 * n <= DRIVER_MAX_BYTES
 
 
 def held_on_driver(df: DataFrame) -> bool:
     """Whether ``df`` optimizes to a LocalRelation of at most
     ``DRIVER_MAX_ROWS`` rows — the in-core kernels' own output, after
     any deterministic projection or filter (Catalyst folds those into
-    the relation). Its rows are already in driver memory, so the budget
-    aggregate would cost 2 jobs to bound what is already held, where
-    ``collect()`` costs none. Reads the plan only: no job."""
+    the relation). Its rows are already in driver memory: ``collect()``
+    reads them with no job, where ``toArrow()`` runs one. Reads the plan
+    only: no job."""
     plan = df._jdf.queryExecution().optimizedPlan()
     return (
         plan.getClass().getSimpleName() == "LocalRelation"
@@ -114,14 +93,30 @@ def orderable(df: DataFrame, *cols: str) -> bool:
     )
 
 
-def _collect(df: DataFrame, id_cols: tuple, n: Column, nbytes: Column) -> pa.Table | None:
-    """Every kernel's one front door: ``df`` in ONE ``toArrow()``. None
-    when a column of ``id_cols`` has no Arrow order that is Spark's
-    (``orderable``), and past the driver budget (``_fits`` over ``n``
-    and ``nbytes``)."""
-    if not orderable(df, *id_cols) or not _fits(df, n, nbytes):
+def _collect(df: DataFrame, *id_cols: str) -> pa.Table | None:
+    """Every kernel's one front door: ``df`` in ONE ``toArrow()``, in
+    10,000-row Arrow batches for this collect only (the session's 128
+    suit the extraction's multi-KB rows). None when a column of
+    ``id_cols`` has no Arrow order that is Spark's (``orderable``), when
+    the context's ``spark.driver.maxResultSize`` is 0 (unlimited) or
+    above ``DRIVER_MAX_BYTES``, and when the collect aborts past it —
+    Spark's own byte veto, at the cost of the tasks run until then. Any
+    other failure raises. Callers check ``DRIVER_MAX_ROWS``."""
+    spark = df.sparkSession
+    limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if not orderable(df, *id_cols) or not 0 < limit <= DRIVER_MAX_BYTES:
         return None
-    return df.toArrow()
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch)
+    spark.conf.set(batch, "10000")
+    try:
+        return df.toArrow()
+    except Py4JJavaError as e:
+        if "bigger than spark.driver.maxResultSize" in str(e):
+            return None
+        raise
+    finally:
+        spark.conf.set(batch, saved)
 
 
 def encode(*cols):
@@ -146,10 +141,10 @@ def encode(*cols):
 def _graph(df: DataFrame, a: str, b: str):
     """``((codes_a, codes_b), ids)``: ``encode`` of the id columns ``a``,
     ``b`` of ``df``, read through ``_collect``. None where ``_collect``
-    is, and for a null id, which leaves Spark's null semantics to the
-    distributed path."""
-    tbl = _collect(df.select(a, b), (a, b), F.count(F.lit(1)), F.sum(F.length(a) + F.length(b)))
-    if tbl is None or any(col.null_count for col in tbl.columns):
+    is, past ``DRIVER_MAX_ROWS`` rows, and for a null id, which leaves
+    Spark's null semantics to the distributed path."""
+    tbl = _collect(df.select(a, b), a, b)
+    if tbl is None or tbl.num_rows > DRIVER_MAX_ROWS or any(c.null_count for c in tbl.columns):
         return None
     return encode(tbl.column(a), tbl.column(b))
 
@@ -513,20 +508,22 @@ def common_neighbors(pairs: DataFrame, deg_cap: int, top: int) -> DataFrame | No
     return _local(pairs.sparkSession, ids, out, ddl)
 
 
-def _list_rows(df: DataFrame, col: str, nbytes: Column):
+def _list_rows(df: DataFrame, col: str):
     """The shared prep of the document kernels over ``df`` = ``(id,
-    col, ...)``, whose ``col`` lists each document's values: ``_collect``
-    gated on the total list length and on ``nbytes``, then
-    ``_documents`` over the rows that have an id and a value. Returns
-    ``(tbl, ids, first, lens, flat)``: the collected table, the sorted
-    document ids, the row of each document code, each row's list length
-    (0 for a null list) and every row's values in row order. None where
-    ``_collect`` or ``_documents`` is."""
-    tbl = _collect(df, ("id",), F.sum(F.size(col)), nbytes)
+    col, ...)``, whose ``col`` lists each document's values: ``_collect``,
+    the row bound on the total list length, then ``_documents`` over the
+    rows that have an id and a value. Returns ``(tbl, ids, first, lens,
+    flat)``: the collected table, the sorted document ids, the row of
+    each document code, each row's list length (0 for a null list) and
+    every row's values in row order. None where ``_collect`` or
+    ``_documents`` is, and past ``DRIVER_MAX_ROWS`` values."""
+    tbl = _collect(df, "id")
     if tbl is None:
         return None
     lst = tbl.column(col).combine_chunks()
     lens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy().astype(np.int64)
+    if lens.sum() > DRIVER_MAX_ROWS:
+        return None
     got = _documents(tbl, lens > 0)
     if got is None:
         return None
@@ -555,13 +552,12 @@ def _bands(keys):
 def _collect_shingle_sets(grams: DataFrame):
     """The shared prep of the shingle kernels over ``grams`` = ``(id,
     shingles, ...)``, each document's distinct shingles: ``_list_rows``
-    gated on the shingle bytes and ``encode`` of the shingle strings.
+    and ``encode`` of the shingle strings.
     Returns ``(tbl, ids, first, lens, d, s)``: ``_list_rows``'s table,
     ids, rows and lengths, and per collected shingle (row by row) its
     document code (-1 in a row without an id) and its shingle code. None
     where ``_list_rows`` is."""
-    nbytes = F.aggregate("shingles", F.lit(0), lambda acc, s: acc + F.length(s) + 8)
-    got = _list_rows(grams, "shingles", F.sum(nbytes))
+    got = _list_rows(grams, "shingles")
     if got is None:
         return None
     tbl, ids, first, lens, flat = got
@@ -689,7 +685,7 @@ def simhash_near_pairs(toks: DataFrame, max_hamming: int) -> DataFrame | None:
     the pairs found in several chunks are de-duplicated. A document
     without an id has no fingerprint and never pairs. None where
     ``_list_rows`` or ``_bands`` is."""
-    got = _list_rows(toks, "h", F.sum(8 * F.size("h")))
+    got = _list_rows(toks, "h")
     if got is None:
         return None
     _, ids, first, lens, flat = got
@@ -739,14 +735,15 @@ def cosine_near_pairs(
     bucket ``s ^ mask`` for the ``s`` below its partner (one-sided, so
     each unordered bucket pair is expanded once). Candidates are
     verified with ``similarity._cosines``, chunk by chunk. None where
-    ``_collect`` or ``_documents`` is, past the candidate count, and for
-    a null or ragged vector, which the distributed plan fails on."""
+    ``_collect`` or ``_documents`` is, past ``DRIVER_MAX_ROWS`` vectors,
+    past the candidate count, and for a null or ragged vector, which the
+    distributed plan fails on."""
     from kgw_spark.operators.similarity import (
         _ball_masks, _cosines, _norms, _plane_mats, _signatures
     )
 
-    tbl = _collect(vecs, ("id",), F.count(F.lit(1)), F.sum(F.length("id") + 8 * F.size("v")))
-    if tbl is None:
+    tbl = _collect(vecs, "id")
+    if tbl is None or tbl.num_rows > DRIVER_MAX_ROWS:
         return None
     v = tbl.column("v").combine_chunks()
     lens = pc.list_value_length(v)

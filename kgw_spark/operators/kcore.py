@@ -8,11 +8,11 @@ integer degree counting over deterministic sets, so the result (node
 id, degree-within-core) is exactly value-oracle-able against a
 pure-Python replica.
 
-EXECUTION below the driver budget (``incore.fits_driver``: at most
-``incore.DRIVER_MAX_ROWS`` pairs and ``incore.DRIVER_MAX_BYTES``): one
-gate aggregate and one Arrow collect of the pair list, then the whole
-peel runs as numpy ``bincount`` degree decrements on the driver
-(``incore.k_core``) — at most 3 Spark jobs whatever the peel depth.
+EXECUTION below the driver budget (at most ``incore.DRIVER_MAX_ROWS``
+pairs, collected within ``spark.driver.maxResultSize``): one Arrow
+collect of the pair list, then the whole peel runs as numpy
+``bincount`` degree decrements on the driver (``incore.k_core``) — at
+most 2 Spark jobs whatever the peel depth.
 On small graphs each distributed round's jobs cost planning, codegen
 and scheduling, not data. Past the gate the rounds below run.
 

@@ -23,11 +23,10 @@ Both engines derive the same effective scale from the same node count,
 so results remain bit-identical. A pure-Python replica
 (``pagerank_py``) computes those bit-identical results — the oracle.
 
-EXECUTION below the driver budget (``incore.fits_driver`` over the
-edge list): one gate aggregate and one Arrow collect, then every
-iteration runs on the driver in the same int64 arithmetic
-(``incore.pagerank``: ``np.add.at`` integer sums, never float
-``bincount`` weights) — at most 3 Spark jobs whatever ``iters`` is.
+EXECUTION below the driver budget (``incore.pagerank``): one Arrow
+collect of the edge list, then every iteration runs on the driver in
+the same int64 arithmetic (``np.add.at`` integer sums, never float
+``bincount`` weights) — at most 2 Spark jobs whatever ``iters`` is.
 
 Past the gate, the plan shape per iteration: one ``pairs.send`` of the
 rank vector over the edges (a join on the source id, broadcast while

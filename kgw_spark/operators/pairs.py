@@ -20,11 +20,12 @@ counts edge instances), such as ``tpch_kg.kg_edges2``, and
 frame, duplicates and self-pairs allowed.
 
 The iterative operators (connected components, k-core, label
-propagation, k-hop, pagerank) and triangle counting first run one gate
-aggregate over that input (``incore.fits_driver``: rows and id bytes
-against the driver budget). Below it they read the
-input ONCE, as one Arrow collect, and iterate on the driver; past it
-they scan it every round as above (as does an input with a null id).
+propagation, k-hop, pagerank) and triangle counting first read that
+input ONCE, as one Arrow collect (``incore._collect``), and iterate on
+the driver. A collect past ``spark.driver.maxResultSize`` or
+``incore.DRIVER_MAX_ROWS`` rows hands back to the distributed rounds,
+which scan the input every round as above (as does an input with a
+null id).
 
 Every distributed round of k-core, label propagation, k-hop and
 pagerank expands its node-keyed state across the arcs with ONE step,

@@ -220,7 +220,7 @@ def cosine_near_pairs(
 
     Below the driver budget (``incore.cosine_near_pairs``) the same
     signatures, probes and verify run in-core on the driver after one
-    gate aggregate and one Arrow collect of the vectors; the rounding
+    Arrow collect of the vectors; the rounding
     and the threshold stay in the Spark expression of ``_near`` on both
     paths.
 

@@ -12,8 +12,8 @@ naive 3-way self-join explodes.
 Everything is integer counting over deterministic orderings, so the
 result is exactly value-oracle-able in SQL.
 
-Below the driver budget (``incore.triangle_count``: one gate aggregate
-and one Arrow collect of the pair list) the same orientation and
+Below the driver budget (``incore.triangle_count``: one Arrow collect
+of the pair list) the same orientation and
 wedge-closing count run as numpy sorts on the driver; past it the joins
 below run.
 """

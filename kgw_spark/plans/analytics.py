@@ -220,9 +220,9 @@ def k_hop(pairs: DataFrame, node_id: str, k: int) -> DataFrame:
     undirected distance. Iterative frontier expansion — per level, one
     ``pairs.send`` of the frontier over ``both_directions(pairs)``.
 
-    Below the driver budget (``incore.fits_driver``) the pair list is
+    Below the driver budget (``incore.k_hop``) the pair list is
     collected once and the BFS runs over boolean frontier masks on the
-    driver (``incore.k_hop``) — at most 3 Spark jobs for any ``k``.
+    driver — one collect, at most 2 Spark jobs, for any ``k``.
 
     Past the gate, plan discipline: every level scans the
     caller-materialized pair list; ``send`` broadcasts the frontier

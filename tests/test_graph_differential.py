@@ -8,11 +8,17 @@ state shuffled instead of broadcast (past ``pairs.BCAST_MAX_IDS``,
 which also compacts k-core's pair list every round)."""
 
 import itertools
+import json
+import os
 import random
+import subprocess
+import sys
+from pathlib import Path
 
 import pyarrow as pa
 import pytest
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from kgw_spark.operators import canon, incore
 from kgw_spark.operators import pairs as pair_list
@@ -25,8 +31,8 @@ from kgw_spark.operators.pairs import canonical_pairs
 from kgw_spark.operators.similarity import cosine_near_pairs
 from kgw_spark.operators.triangles import triangle_count
 from kgw_spark.plans.analytics import k_hop
-from kgw_spark.session import local_df
-from tests.test_near_dup_differential import DOCS, _vectors
+from kgw_spark.session import get_spark, local_df
+from tests.test_near_dup_differential import DOCS, _near_copies, _vectors
 
 # name -> (raw directed edges, isolated node ids)
 GRAPHS = {
@@ -234,14 +240,20 @@ def test_compose_mapping_past_the_gate_matches_local(spark, monkeypatch, name):
     assert dist == local and len(set(local.values())) > 1
 
 
-def test_in_core_operators_run_at_most_three_jobs(spark):
+def test_in_core_operators_run_at_most_two_jobs(spark):
     """Below the driver budget each iterative operator and each
-    near-duplicate candidate search costs the gate aggregate and one
-    collect — at most 3 Spark jobs, whatever its round, band or probe
-    count — and its result is read without another job."""
+    near-duplicate candidate search costs ONE collect — at most 2 Spark
+    jobs (AQE may split it into a shuffle-map job and a result job),
+    whatever its round, band or probe count — and its result is read
+    without another job. ``canon.compose_mapping`` reads an alias frame
+    held on the driver with no job, and any other through the same
+    collect."""
     raw, node_ids, edges, nodes, pairs = _frames(spark, "random_1")
     docs = spark.createDataFrame(DOCS["near_copies"][1], "doc_id bigint, text string")
     emb = spark.createDataFrame(_vectors(5), "vec_id bigint, embedding array<float>")
+    alias = [(a, c, 0.5) for a, c in raw]
+    ddl = "alias_id string, canonical_id string, score double"
+    alias_df, held_alias = spark.createDataFrame(alias, ddl), local_df(spark, alias, ddl)
     calls = {
         "k_core": lambda: k_core(pairs, k=3),
         "label_prop": lambda: min_label_propagation(nodes, pairs, rounds=3),
@@ -254,8 +266,11 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
         "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, threshold=0.2),
         "simhash_near_pairs": lambda: simhash_near_pairs(docs),
         "cosine_near_pairs": lambda: cosine_near_pairs(emb, threshold=0.85),
+        "compose_mapping": lambda: canon.compose_mapping(alias_df),
+        "compose_mapping_held": lambda: canon.compose_mapping(held_alias),
     }
     sc = spark.sparkContext
+    jobs = {}
     for op, call in calls.items():
         group = f"in_core_jobs_{op}"
         sc.setJobGroup(group, group)
@@ -263,8 +278,9 @@ def test_in_core_operators_run_at_most_three_jobs(spark):
             assert call().collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert 0 < len(jobs) <= 3, (op, jobs)
+        jobs[op] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs.pop("compose_mapping_held") == 0
+    assert all(0 < n <= 2 for n in jobs.values()), jobs
 
 
 @pytest.mark.parametrize("ids", ["string", "int"])
@@ -303,40 +319,145 @@ def test_paths_agree_on_id_type(spark, monkeypatch, name, ids):
         assert in_core[0] == _parse_datatype_string(SCHEMAS[op].replace("string", ids)), op
 
 
-@pytest.mark.parametrize("op", ["k_core", "ngram_jaccard_pairs"])
-def test_collect_byte_veto_matches_default(spark, monkeypatch, op):
-    """Past ``incore.DRIVER_MAX_BYTES`` (the byte side of the collect
-    gate, ``_fits``; the row side still passes) the operator runs its
-    distributed plan, with the default run's rows and schema."""
-    if op == "k_core":
-        call = lambda: k_core(_frames(spark, "random_1")[4], k=2)  # noqa: E731
-    else:
-        docs = spark.createDataFrame(DOCS["near_copies"][1], "doc_id bigint, text string")
-        call = lambda: ngram_jaccard_pairs(docs, threshold=0.2)  # noqa: E731
-    df = call()
+# a spark.driver.maxResultSize that every job of the distributed plans
+# fits (broadcasts are off) and the collects of the byte-veto inputs
+# (over 100 KB each) do not
+MAX_RESULT_SIZE = 32 * 1024
+
+
+def _veto_calls(spark):
+    """op -> the call whose collect passes ``MAX_RESULT_SIZE`` (k-core
+    on 20× the ``random_1`` graph, n-gram Jaccard on 40× the
+    ``near_copies`` documents), and ``"small"``, n-gram Jaccard on
+    ``near_copies`` itself, whose collect fits it."""
+    raw, _ = _random_graph(1, n_nodes=4000, n_edges=12000)
+    pairs = canonical_pairs(spark.createDataFrame(raw, "source_id string, target_id string"))
+    ddl = "doc_id bigint, text string"
+    docs = spark.createDataFrame(_near_copies(1, n=960), ddl)
+    small = spark.createDataFrame(DOCS["near_copies"][1], ddl)
+    return {
+        "k_core": lambda: k_core(pairs, k=2),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, threshold=0.2),
+        "small": lambda: ngram_jaccard_pairs(small, threshold=0.2),
+    }
+
+
+def _past_max_result_size(out: str):
+    """The child process of the collect-veto tests, in a session whose
+    ``spark.driver.maxResultSize`` is ``MAX_RESULT_SIZE``: writes to
+    ``out`` each veto call's result (parquet), its schema, whether it is
+    held on the driver and how many ``toArrow()`` collects it ran — the
+    big inputs as they are, ``small`` under a ``DRIVER_MAX_BYTES`` below
+    that size — and what a collect failing on ``raise_error`` raised."""
+    spark = get_spark(
+        cores=2,
+        extra_conf={
+            "spark.driver.memory": "1g",
+            "spark.driver.maxResultSize": str(MAX_RESULT_SIZE),
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    )
+    pair_list.BCAST_MAX_IDS = -1
+    frame = type(spark.range(1))
+    to_arrow, collects = frame.toArrow, []
+    frame.toArrow = lambda self: collects.append(1) or to_arrow(self)
+    meta, budget = {}, incore.DRIVER_MAX_BYTES
+    for op, call in _veto_calls(spark).items():
+        incore.DRIVER_MAX_BYTES = MAX_RESULT_SIZE - 1 if op == "small" else budget
+        collects.clear()
+        df = call()
+        meta[op] = {"held": incore.held_on_driver(df), "collects": len(collects)}
+        meta[op]["schema"] = df.schema.json()
+        df.write.parquet(f"{out}/{op}")
+    incore.DRIVER_MAX_BYTES = budget
+    try:
+        incore._collect(spark.range(3).select("id", F.raise_error(F.lit("boom")).alias("x")), "id")
+        meta["raised"] = None
+    except Exception as e:  # noqa: BLE001 - the message is the subject
+        meta["raised"] = str(e)
+    with open(f"{out}/meta.json", "w") as f:
+        json.dump(meta, f)
+
+
+@pytest.fixture(scope="module")
+def past_max_result_size(tmp_path_factory):
+    """``(out, meta)`` of ONE child process running
+    ``_past_max_result_size``: the context's maxResultSize is fixed when
+    it starts, and the suite's shared session keeps the default."""
+    out = tmp_path_factory.mktemp("max_result_size")
+    root = Path(__file__).resolve().parent.parent
+    code = "import sys; from tests.test_graph_differential import _past_max_result_size; "
+    code += "_past_max_result_size(sys.argv[1])"
+    env = {**os.environ, "PYTHONPATH": str(root)}
+    cmd = [sys.executable, "-c", code, str(out)]
+    subprocess.run(cmd, env=env, cwd=root, check=True, timeout=900)
+    return out, json.loads((out / "meta.json").read_text())
+
+
+def _matches_default(spark, past_max_result_size, op):
+    """The child's ``op`` result has the default run's rows and schema;
+    the default run is in-core, in the suite's session."""
+    out, meta = past_max_result_size
+    df = _veto_calls(spark)[op]()
     assert incore.held_on_driver(df)
-    default = df.schema, sorted(df.collect())
-    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 1)
-    df = call()
-    assert not incore.held_on_driver(df)
-    assert (df.schema, sorted(df.collect())) == default
+    got = spark.read.parquet(str(out / op)).select(*df.columns).collect()
+    assert StructType.fromJson(json.loads(meta[op]["schema"])) == df.schema
+    assert sorted(got) == sorted(df.collect())
+
+
+@pytest.mark.parametrize("op", ["k_core", "ngram_jaccard_pairs"])
+def test_collect_byte_veto_matches_default(spark, past_max_result_size, op):
+    """A collect past ``spark.driver.maxResultSize`` (Spark's own byte
+    veto, which aborts it) hands back to the operator's distributed
+    plan, with the default run's rows and schema."""
+    meta = past_max_result_size[1][op]
+    assert meta["collects"] == 1 and not meta["held"]
+    _matches_default(spark, past_max_result_size, op)
+
+
+def test_collect_byte_budget_below_max_result_size(spark, past_max_result_size):
+    """A ``DRIVER_MAX_BYTES`` below the context's maxResultSize collects
+    nothing: the operator runs its distributed plan, with the default
+    run's rows and schema."""
+    meta = past_max_result_size[1]["small"]
+    assert meta["collects"] == 0 and not meta["held"]
+    _matches_default(spark, past_max_result_size, "small")
+
+
+def test_collect_failure_raises(past_max_result_size):
+    """A collect that fails for any reason but its size raises; it does
+    not fall back to the distributed plan."""
+    raised = past_max_result_size[1]["raised"]
+    assert raised is not None and "boom" in raised
 
 
 def test_candidate_count_veto_matches_default(spark, monkeypatch):
-    """A dense graph whose pair list fits the byte budget but whose
-    wedge count does not (``_fits_pairs``): common neighbors hands back
+    """A dense graph whose pair list is collected but whose wedge count
+    does not fit a byte budget (``_fits_pairs``): common neighbors hands back
     to the distributed plan, with the default run's rows and schema.
-    K(10,10) has 100 pairs, under 6 KB collected, and 900 wedges, 14.4
-    KB at two int64 codes each."""
+    K(10,10) has 100 pairs and 900 wedges, 14.4 KB at two int64 codes
+    each: past an 8,000-B budget."""
     raw = [(f"a{i}", f"b{j}") for i in range(10) for j in range(10)]
     pairs = canonical_pairs(spark.createDataFrame(raw, "source_id string, target_id string"))
     df = common_neighbors(pairs, deg_cap=32, top=10)
     assert incore.held_on_driver(df)
     default = df.schema, sorted(df.collect())
     assert len(default[1]) == 10 and {r.n_common for r in default[1]} == {10}
-    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 8_000)
-    assert incore.fits_driver(pairs, "u", "v")
+    fits = []
+    fits_pairs = incore._fits_pairs
+
+    def spy(n_pairs):
+        # an 8,000-B budget for the candidates only; the pair list is
+        # collected under the context's
+        with monkeypatch.context() as m:
+            m.setattr(incore, "DRIVER_MAX_BYTES", 8_000)
+            fits.append(fits_pairs(n_pairs))
+        return fits[-1]
+
+    monkeypatch.setattr(incore, "_fits_pairs", spy)
     df = common_neighbors(pairs, deg_cap=32, top=10)
+    # the pair list was collected, so the wedge count was checked
+    assert fits == [False]
     assert not incore.held_on_driver(df)
     assert (df.schema, sorted(df.collect())) == default
 

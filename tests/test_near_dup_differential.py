@@ -166,10 +166,10 @@ def test_simhash_paths_agree(spark, monkeypatch, name, max_hamming):
 
 
 def test_simhash_candidate_veto(spark, monkeypatch):
-    """A byte budget that passes the token collect (56 B per token, 9 × 7
-    tokens) but not the candidate pairs (16 B each, ΣC(g, 2) over the
-    chunk groups: 36 pairs in each of 21 chunks) hands back to the
-    distributed plan, with the default run's rows and schema."""
+    """A byte budget that the candidate pairs do not fit (16 B each,
+    ΣC(g, 2) over the chunk groups: 36 pairs in each of 21 chunks, past
+    56 × 9 × 7 B) hands back to the distributed plan, with the default
+    run's rows and schema."""
     docs = _simhash_docs(spark, "all_identical")
     default = dedup.simhash_near_pairs(docs, max_hamming=20)
     assert _is_local(default)
@@ -177,11 +177,14 @@ def test_simhash_candidate_veto(spark, monkeypatch):
     fits_pairs = incore._fits_pairs
 
     def spy(n_pairs):
-        fits.append(fits_pairs(n_pairs))
+        # the budget bounds the candidates only; the tokens are collected
+        # under the context's
+        with monkeypatch.context() as m:
+            m.setattr(incore, "DRIVER_MAX_BYTES", 56 * 9 * 7)
+            fits.append(fits_pairs(n_pairs))
         return fits[-1]
 
     monkeypatch.setattr(incore, "_fits_pairs", spy)
-    monkeypatch.setattr(incore, "DRIVER_MAX_BYTES", 56 * 9 * 7)
     vetoed = dedup.simhash_near_pairs(docs, max_hamming=20)
     # the token collect passed, so the candidate count was checked
     assert fits == [False]
